@@ -292,9 +292,6 @@ object SuffixArray {
       // forced pins in the CONSTRUCTION loop is bounded here: the nest
       // is log2(maxLen/8) levels deep per query, not iterative across
       // queries, and the initial pairs pin carries a MEASURED size.
-      // Env-overridable (GRAFT_SA_PIN_LEVELS=1) for A/B measurement.
-      if (sys.env.get("GRAFT_SA_PIN_LEVELS").contains("1"))
-        pairs = pinned(pairs)
     }
     // remainder < BaseLen: one bounded 8-token slice compare (same
     // zip_with convention as the slice variant, cost capped at 8 cells)

@@ -1437,9 +1437,9 @@ object TxnLake extends LakeFormat {
              operation: String, maxAttempts: Int = 10,
              bloomCols: Seq[String] = Seq.empty): Long = {
     requirePublicOp("commit", operation)
-    commitImpl(spark, df, table, operation, None, maxAttempts,
-      bloomCols = bloomCols)
-      .getOrElse(sys.error("unreachable: txn-less commit cannot be skipped"))
+    transact(spark, table, "commit", maxAttempts)(base =>
+      Some(commitImpl(spark, df, table, operation, None, base,
+        bloomCols = bloomCols))).get
   }
 
   private def requirePublicOp(api: String, operation: String): Unit =
@@ -1467,13 +1467,98 @@ object TxnLake extends LakeFormat {
                  extraTxns: Map[String, Long] = Map.empty,
                  bloomCols: Seq[String] = Seq.empty): Option[Long] = {
     requirePublicOp("commitOnce", operation)
-    commitImpl(spark, df, table, operation, Some((appId, batchId)), maxAttempts,
-      extraTxns = extraTxns, bloomCols = bloomCols)
+    val txn = Some((appId, batchId))
+    transact(spark, table, "commitOnce", maxAttempts)(base =>
+      if (replayed(spark, table, base, txn)) None
+      else Some(commitImpl(spark, df, table, operation, txn, base,
+        extraTxns = extraTxns, bloomCols = bloomCols)))
   }
 
-  /** Raised (internally) when `requireBase` no longer matches the log —
-    * the caller's read snapshot is stale and it must recompute. */
+  /** Raised (internally) when a commit's base version is no longer the
+    * latest — the caller's read snapshot is stale and it must recompute. */
   private[sources] final class CommitConflict extends Exception
+
+  /** Test seam: runs once per [[transact]] attempt, after the attempt
+    * pins its base version and before it computes and publishes — lets
+    * specs land a concurrent writer deterministically inside any writer.
+    * Thread-local, and cleared while it runs, so a racer it commits does
+    * not re-enter it. */
+  private val beforeCommitHook = new ThreadLocal[() => Unit] {
+    override def initialValue(): () => Unit = () => ()
+  }
+
+  private[sources] def withBeforeCommit[T](hook: () => Unit)(body: => T): T = {
+    val prior = beforeCommitHook.get
+    beforeCommitHook.set(hook)
+    try body finally beforeCommitHook.set(prior)
+  }
+
+  /** The optimistic write loop every writer runs: each attempt pins the
+    * latest committed version (None on an absent table) and hands it to
+    * `attempt`, which computes against exactly that snapshot and
+    * publishes through [[commitImpl]] — or returns without committing (a
+    * no-op, a replayed txn). A [[CommitConflict]] means another writer
+    * won the version: the attempt re-runs against the fresh log, and
+    * after `maxAttempts` straight conflicts the write fails loudly,
+    * naming the API and the table. */
+  private def transact(spark: SparkSession, table: String, api: String,
+                       maxAttempts: Int)
+                      (attempt: Option[Long] => Option[Long]): Option[Long] = {
+    var conflicts = 0
+    while (conflicts < maxAttempts) {
+      val base = latestVersion(spark, table)
+      val hook = beforeCommitHook.get
+      withBeforeCommit(() => ())(hook())
+      try return attempt(base)
+      catch { case _: CommitConflict => conflicts += 1 }
+    }
+    throw new java.util.ConcurrentModificationException(
+      s"TxnLake.$api: $maxAttempts consecutive concurrent commits on $table")
+  }
+
+  /** [[transact]] for the writers that need an existing table. */
+  private def transactOn(spark: SparkSession, table: String, api: String,
+                         maxAttempts: Int)
+                        (attempt: Long => Option[Long]): Option[Long] =
+    transact(spark, table, api, maxAttempts)(base => attempt(base.getOrElse(
+      sys.error(s"TxnLake.$api: no committed version in $table"))))
+
+  /** Has (appId, batchId) already committed as of `base`? Checked against
+    * the cumulative txn map in the base entry only (O(1) log reads).
+    * Batch ids per app are monotone (the foreachBatch contract), so seen
+    * means batchId <= recorded — Delta's exact SetTransaction semantics.
+    * Entries written before the map existed fall back to the full-log
+    * scan. Must be judged at the same base the commit publishes on: a
+    * twin that committed after `base` makes that publish conflict, and
+    * the retry re-judges at the fresh base — so a replay is always
+    * caught either here or by the version conflict. */
+  private def replayed(spark: SparkSession, table: String, base: Option[Long],
+                       txn: Option[(String, Long)]): Boolean =
+    txn.exists { case (app, batch) =>
+      base.exists { b =>
+        val e = readEntry(spark, table, b)
+        if (e.hasTxns) e.txns.get(app).exists(_ >= batch)
+        else committedVersions(spark, table).filter(_ <= b).exists(v =>
+          readEntry(spark, table, v).txn.contains((app, batch)))
+      }
+    }
+
+  /** The cumulative app → latest-batch map as of version `v`. Every entry
+    * carries it forward, so this is one entry read — except on a log
+    * written before the map existed, whose per-entry markers fold once
+    * (linear scan) into the first commit that introduces the map. */
+  private def carriedTxns(spark: SparkSession, table: String,
+                          v: Long): Map[String, Long] = {
+    val e = readEntry(spark, table, v)
+    if (e.hasTxns) e.txns
+    else committedVersions(spark, table).filter(_ <= v)
+      .foldLeft(Map.empty[String, Long]) { (m, u) =>
+        readEntry(spark, table, u).txn match {
+          case Some((a, b)) if m.get(a).forall(_ < b) => m + (a -> b)
+          case _ => m
+        }
+      }
+  }
 
   /** The session's column-name resolver (honors spark.sql.caseSensitive,
     * default case-INSENSITIVE) — every tombstone/duplicate-column guard
@@ -1495,10 +1580,15 @@ object TxnLake extends LakeFormat {
     Some(math.max(System.currentTimeMillis(),
       prev.flatMap(_.ts).map(_ + 1).getOrElse(Long.MinValue)))
 
+  /** ONE publish attempt of `df` as version `base + 1` (0 on an absent
+    * table), computed against exactly the `base` snapshot [[transact]]
+    * pinned. Throws [[CommitConflict]] when any writer committed after
+    * `base` — before the data write when the next version is already
+    * visible, else when the exclusive publish loses the race. Returns
+    * the committed version. */
   private def commitImpl(spark: SparkSession, df: DataFrame, table: String,
                          operation: String, txn: Option[(String, Long)],
-                         maxAttempts: Int,
-                         requireBase: Option[Option[Long]] = None,
+                         base: Option[Long],
                          removePaths: Option[Seq[String]] = None,
                          extraTxns: Map[String, Long] = Map.empty,
                          gcTxnPrefixes: Seq[String] = Seq.empty,
@@ -1516,8 +1606,7 @@ object TxnLake extends LakeFormat {
                          dropIdentityColNames: Seq[String] = Seq.empty,
                          carryRids: Boolean = false,
                          newRenames: Map[String, String] = Map.empty,
-                         dropRenames: Seq[String] = Seq.empty)
-                        : Option[Long] = {
+                         dropRenames: Seq[String] = Seq.empty): Long = {
     require(operation == "overwrite" || operation == "append"
       || operation == "optimize" || operation == "delete"
       || operation == "merge" || operation == "update"
@@ -1535,384 +1624,355 @@ object TxnLake extends LakeFormat {
         "materializes it on rewrites; writers may not supply it")
     val tablePath = new Path(table)
     val f = fs(spark, tablePath)
-    f.mkdirs(logDir(table))
+    if (base.isEmpty) f.mkdirs(logDir(table))
     val salt = java.util.UUID.randomUUID().toString.take(8)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      // Snapshot the log ONCE per attempt; the txn check must cover exactly
-      // the versions that determined `next`. Checking before (or separately
-      // from) reading `next` reopens the replay race: a twin that lists the
-      // log after the winner's commit would target a fresh version and
-      // double-apply the batch. With check and `next` derived from the same
-      // listing, any commit that lands in between makes our exclusive
-      // publish at `next` FAIL, and the retry re-lists — so a replay twin
-      // is always caught either by the check or by the version conflict.
-      val committed = committedVersions(spark, table)
-      // optimistic read-set check: the caller pinned its read at a version;
-      // any commit since then means its computation is stale
-      requireBase.foreach { rb =>
-        if (committed.lastOption != rb) throw new CommitConflict }
-      val lastEntry = committed.lastOption.map(readEntry(spark, table, _))
-      // Replay check against the cumulative txn map in the LAST entry only
-      // (O(1) log reads). Batch ids per app are monotone (the foreachBatch
-      // contract), so seen means batchId <= recorded — Delta's exact
-      // SetTransaction semantics. Entries written before the map existed
-      // (no "txns" field at all) fall back to the full-log scan.
-      val replayed = txn.exists { case (app, batch) =>
-        lastEntry match {
-          case Some(e) if e.hasTxns => e.txns.get(app).exists(_ >= batch)
-          case Some(_) => committed.exists(v =>
-            readEntry(spark, table, v).txn.contains((app, batch)))
-          case None => false
-        }
-      }
-      if (replayed) return None
-      val next = committed.lastOption.map(_ + 1).getOrElse(0L)
-      // drop tombstones ride the entry cumulatively (like txns/schema):
-      // a column dropped metadata-only still has its BYTES in old files,
-      // so re-introducing the name would silently resurrect them under
-      // the widened read schema — the guard below makes that loud.
-      // Overwrite clears the tombstones: it removes every current file,
-      // so there is nothing left to resurrect. Checked BEFORE the data
-      // write (it needs only df.columns and the last entry) so a refused
-      // commit pays no parquet write and orphans no data dir; compared
-      // through the session RESOLVER because default-case-insensitive
-      // analysis would bind a re-cased name to the old files' bytes.
-      val dropped =
-        (if (operation == "overwrite") Seq.empty
-         else lastEntry.map(_.droppedCols).getOrElse(Seq.empty)) ++
-          tombstoneCols
-      // COLUMN MAPPING: the cumulative rename overlay (physical →
-      // display), carried like the tombstones; overwrite retires it with
-      // the files whose physical names it described
-      val renamesAll =
-        (((if (operation == "overwrite") Map.empty[String, String]
-           else lastEntry.map(_.renames).getOrElse(Map.empty)) ++ newRenames)
-          -- dropRenames)
-          .filterNot { case (p, d) => p == d } // rename-back collapses
-      if (!noData) {
-        val res = resolver(spark)
-        // tombstones are PHYSICAL names — compare the incoming display
-        // names through the overlay
-        val resurrect = df.columns.filter(c =>
-          dropped.exists(res(_, physicalOf(spark, renamesAll, c))))
-        require(resurrect.isEmpty,
-          s"TxnLake: column(s) ${resurrect.mkString(", ")} were DROPPED " +
-            "from this table; committing data under the same name would " +
-            "resurrect the old files' bytes — use a different name, or " +
-            "overwrite the table to retire the tombstone")
-      }
-      // GENERATED columns fill at WRITE time when the caller omits them
-      // (GENERATED ALWAYS): a table property carried like the schema;
-      // engine rewrites that already carry the column pass through and
-      // are VALIDATED below, never silently regenerated
-      val genColsAll =
-        (lastEntry.map(_.genCols).getOrElse(Map.empty) ++
-          newGenCols) -- dropGenColNames
-      val dfGen =
-        if (noData || genColsAll.isEmpty) df
-        else genColsAll.toSeq.sortBy(_._1).foldLeft(df) {
-          case (d, (c, x)) =>
-            if (d.columns.contains(c)) d
-            else d.withColumn(c, org.apache.spark.sql.functions.expr(x))
-        }
-      // IDENTITY columns assign at WRITE time (Delta's GENERATED ALWAYS
-      // AS IDENTITY): fresh values are hwm + step*(mid+1) with mid =
-      // monotonically_increasing_id() — parallel tasks reserve disjoint
-      // ranges through its partition-id spacing, so assignment needs NO
-      // extra pass, no shuffle, and no driver coordination; unconsumed
-      // reservations become gaps, which is Delta's own documented
-      // contract. Writers may not supply the column on append/overwrite
-      // (ALWAYS); engine rewrites (merge/update/optimize/delete) carry
-      // existing values and NULL-fill only the rows they mint (merge
-      // inserts). Re-derived per attempt: a commit retry re-reads the
-      // advanced hwm.
-      val idColsAll =
-        (lastEntry.map(_.identityCols).getOrElse(Map.empty) ++
-          newIdentityCols) -- dropIdentityColNames
-      val dfOut =
-        if (noData || idColsAll.isEmpty) dfGen
-        else idColsAll.toSeq.sortBy(_._1).foldLeft(dfGen) {
-          case (d, (c, sp)) =>
-            import org.apache.spark.sql.functions.{coalesce, col, lit,
-              monotonically_increasing_id, raise_error, try_add,
-              try_multiply, when}
-            require(math.abs(sp.hwm) < (1L << 61),
-              s"TxnLake: identity column $c's high-water mark ${sp.hwm} " +
-                "is within range-reservation overflow distance — " +
-                "re-found the table with a wider step plan")
-            // overflow-CHECKED reservation: step * (partition_ordinal
-            // << 33) alone can wrap Long for a large step or a high
-            // partition ordinal, and non-ANSI arithmetic would wrap
-            // SILENTLY — minting duplicate or direction-regressed ids
-            // instead of the promised loud refusal. try_* returns NULL
-            // on overflow; a NULL reservation raises per-row, aborting
-            // the write job before the entry publishes.
-            val reserved = try_add(lit(sp.hwm),
-              try_multiply(lit(sp.step), monotonically_increasing_id() + 1))
-            val next = when(reserved.isNull, raise_error(lit(
-                s"TxnLake: identity column $c range reservation " +
-                  s"overflowed Long (hwm=${sp.hwm}, step=${sp.step}) — " +
-                  "re-found the table with a narrower step")))
-              .otherwise(reserved)
-            if (!d.columns.contains(c)) d.withColumn(c, next)
-            else {
-              require(operation != "append" && operation != "overwrite",
-                s"TxnLake: column $c is GENERATED ALWAYS AS IDENTITY — " +
-                  "writers may not supply it; omit the column and the " +
-                  "engine assigns it")
-              d.withColumn(c, coalesce(col(c), next))
-            }
-        }
-      // translate the frame to PHYSICAL names for the write: files and
-      // their footer stats are immutable, so they must carry the names
-      // that never change. A column that is not any current display name
-      // but matches a renamed column's retired physical name is REFUSED —
-      // it would silently alias the renamed column's storage.
-      val dfPhys =
-        if (noData || renamesAll.isEmpty) dfOut
-        else {
-          val res = resolver(spark)
-          dfOut.columns.foreach { c =>
-            val isDisplay = renamesAll.values.exists(res(_, c))
-            val retired = renamesAll.collectFirst {
-              case (p, d) if res(p, c) && !res(d, c) => d }
-            require(isDisplay || retired.isEmpty,
-              s"TxnLake: column $c was RENAMED to ${retired.getOrElse("")}" +
-                " — writing under the retired name would alias the " +
-                "renamed column's storage; use the new name")
-          }
-          // translate with the SAME resolver the guards above used: a
-          // case-variant display name passed them, so it must translate
-          renamesAll.foldLeft(dfOut) { case (d, (p, disp)) =>
-            d.columns.find(res(_, disp))
-              .map(c => d.withColumnRenamed(c, p)).getOrElse(d) }
-        }
-      // 1. land the data in a fresh immutable dir (never seen by readers
-      //    until the log entry that names it is published). A metadata-
-      //    only commit (noData — a deletion-vector delta) writes nothing:
-      //    even an empty frame would land a 0-row part file, and a DV
-      //    delete's contract is that NO data file moves.
-      val dataRel = s"data/v$next-$salt-$attempt"
-      val added0 =
-        if (noData) Seq.empty[FileMeta]
-        else {
-          graft.plans.JobLabel.labeled(spark, s"txn:$operation write " +
-              new Path(table).getName) {
-            dfPhys.write.mode("overwrite")
-              .parquet(new Path(tablePath, dataRel).toString)
-          }
-          // add actions: one per written file, with footer-harvested stats
-          // (distributed above DriverHarvestMax files — see harvestAll)
-          val written = f.listStatus(new Path(tablePath, dataRel))
-            .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-            .sortBy(_.getPath.getName)
-            .map(s => (s.getPath.toString, s"$dataRel/${s.getPath.getName}"))
-            .toSeq
-          // the materialized row-id column is engine plumbing, not table
-          // data: its footer stats never feed user-predicate pruning, so
-          // they stay out of the entry
-          harvestAll(spark, written, dfPhys.schema)
-            .map(fm => fm.copy(stats = fm.stats - RidCol))
-        }
-      // Bloom-indexed columns are a TABLE property (like the cumulative
-      // schema): declared on any commit, inherited by every later one —
-      // including the engine's own maintenance/DML rewrites, which would
-      // otherwise silently strip the index from whatever they touch and
-      // quietly un-prune every future key probe.
-      // bloom declarations are stored PHYSICAL (their sidecars are named
-      // for the bytes, which never rename); incoming display names map
-      val allBloomCols =
-        (lastEntry.map(_.bloomCols).getOrElse(Seq.empty)
-          ++ bloomCols.map(physicalOf(spark, renamesAll, _)))
-          .distinct
-          .filterNot(dropBloomCols.map(physicalOf(spark, renamesAll, _)).contains)
-      // every commit carries the CUMULATIVE table schema forward (Delta's
-      // metaData action): appends merge new columns in, overwrite resets —
-      // so readers resolve the snapshot schema from ONE log entry instead
-      // of merging footers across the whole file list. Computed before
-      // the post-write pass, which reads the fresh files under it.
-      val tableSchema = schemaOverride.getOrElse(mergedSchema(
-        lastEntry.flatMap(_.schemaJson)
-          .map(DataType.fromJson(_).asInstanceOf[StructType]),
-        // the materialized row-id column is PHYSICAL only — never part
-        // of the logical table schema (plain reads must not see it)
-        StructType(dfPhys.schema.fields.filterNot(_.name == RidCol)),
-        operation))
-      // CHECK constraints are a table property (Delta's ADD CONSTRAINT):
-      // carried cumulatively, enforced on every data-bearing commit by
-      // scanning ONLY the just-written delta (O(delta), under the merged
-      // schema so evolution-era rows null-fill — SQL CHECK semantics:
-      // NULL passes, only a FALSE verdict violates) — in the SAME
-      // distributed pass that builds the bloom sidecars, so a
-      // constrained + bloom-indexed table reads its fresh bytes ONCE per
-      // commit. A violating commit aborts before the entry publishes,
-      // with nothing visible and the unpublished data dir removed.
-      // GENERATED columns validate on the same pass as the null-safe
-      // invariant `c <=> expr`. Maintenance ("optimize": data-preserving
-      // by the tag's own contract) and CoW DELETE (kept rows are a
-      // subset of already-validated rows) cannot introduce a violating
-      // row — their enforcement is skipped, so a constrained 100 TB
-      // table's compaction never pays a second read of what it rewrites.
-      val tableConstraints =
-        (lastEntry.map(_.constraints).getOrElse(Map.empty)
-          -- dropConstraintNames) ++ newConstraints
-      val checks: Seq[(String, org.apache.spark.sql.Column)] = {
-        import org.apache.spark.sql.functions.{coalesce, col, lit, not}
-        // stored expressions are DISPLAY-named (the domain the user
-        // declared them in); the enforcement scan reads physical files,
-        // so renamed references translate through the overlay here
-        tableConstraints.toSeq.sortBy(_._1).map { case (n, x) =>
-          (s"$n (`$x`)",
-            not(coalesce(exprUnder(spark, x, renamesAll), lit(true)))) } ++
-          genColsAll.toSeq.sortBy(_._1).map { case (c, x) =>
-            (s"generated column $c (`$x`)",
-              !(col(c) <=> exprUnder(spark, x, renamesAll))) }
-      }
-      val enforce = checks.nonEmpty && added0.nonEmpty &&
-        operation != "optimize" && operation != "delete"
-      val (added, violations) = postWritePass(spark, tablePath, f, added0,
-        allBloomCols, dfPhys.schema, tableSchema,
-        if (enforce) checks else Seq.empty)
-      if (violations.exists(_ > 0)) {
-        f.delete(new Path(tablePath, dataRel), true)
-        val violated = checks.zip(violations).collect {
-          case ((label, _), n) if n > 0 => s"$label: $n row(s)" }
-        throw new IllegalStateException(
-          "TxnLake: commit violates CHECK constraint(s) — " +
-            violated.mkString("; ") + "; nothing was committed")
-      }
-      // remove actions: append removes nothing (O(1) log reads — the
-      // streaming-sink hot path never resolves the snapshot); overwrite
-      // and optimize remove every current file, unless the caller scoped
-      // the rewrite to an explicit subset (incremental compaction — the
-      // untouched files carry over into the new snapshot verbatim)
-      val removed: Seq[String] = removePaths.getOrElse {
-        if (operation == "append") Seq.empty
-        else committed.lastOption
-          .map(resolveFiles(spark, table, _).map(_.path)).getOrElse(Seq.empty)
-      }
-      // carry the cumulative txn state through EVERY commit (plain commits
-      // included) so the O(1) replay check above stays sound. UPGRADE
-      // path: a log written before the map existed carries per-entry txn
-      // markers only — fold ALL of them in the one commit that introduces
-      // the map (one-time linear scan), otherwise the first new-format
-      // commit would orphan every legacy marker and a legacy app's replay
-      // would slip past the has-map fast path above.
-      val legacy: Map[String, Long] = lastEntry match {
-        case Some(e) if !e.hasTxns =>
-          committed.foldLeft(Map.empty[String, Long]) { (m, v) =>
-            readEntry(spark, table, v).txn match {
-              case Some((a, b)) if m.get(a).forall(_ < b) => m + (a -> b)
-              case _ => m
-            }
-          }
-        case _ => Map.empty
-      }
-      // extraTxns are auxiliary watermarks a caller piggybacks on the same
-      // atomic commit (e.g. the index-coverage markers the streaming sinks
-      // record — see CurationStream.indexCovered). Monotone merge: a stale
-      // caller must never regress a marker another commit already advanced.
-      val prior = legacy ++ lastEntry.map(_.txns).getOrElse(Map.empty)
-      val extra = extraTxns.map { case (a, b) =>
-        a -> math.max(b, prior.getOrElse(a, Long.MinValue)) }
-      // gcTxnPrefixes: retire auxiliary markers whose purpose this very
-      // commit completes (a sliced hop's per-slice markers, dropped by
-      // the hop's completion commit) — without GC they would ride every
-      // later entry's cumulative map forever. Prefix-matched so a
-      // cap-namespaced family (`app#v3@2`, `app#v3@5`, …) retires as
-      // one; callers end prefixes with their namespace separator so
-      // `app#v3@` can never swallow `app#v30@…`.
-      val txns = prior.filter { case (k, _) =>
-        !gcTxnPrefixes.exists(k.startsWith) } ++ extra ++ txn.toMap
-      // deletion vectors: the live map is (previous live -- removed) ++
-      // fresh — a removed file's DV dies with it, and this commit's
-      // masks (deleteWhereDv/updateWhereDv) overlay the survivors. The
-      // ENTRY stores only this commit's delta (O(commit)) unless it is
-      // an anchor — empty live map (the DV-free common case), or the
-      // CheckpointInterval cadence — where the full map lands so replay
-      // stays bounded (see resolveDvs).
-      val dvLive = (committed.lastOption
-        .map(resolveDvs(spark, table, _))
-        .getOrElse(Map.empty[String, DvRef]) -- removed) ++ newDvs
-      val dvAnchor = dvLive.isEmpty || next % CheckpointInterval == 0
-      // advance each identity hwm from the freshly-HARVESTED file stats —
-      // zero extra I/O (parquet int64 footers always carry exact min/max;
-      // our own harvest just read them). Monotone: a data-preserving
-      // rewrite's carried values never regress the mark, and a commit
-      // that minted rows must surface a stat or fail loudly (a silently
-      // unadvanced hwm would reissue ids on the next commit).
-      val idColsOut = idColsAll.map { case (c, sp) =>
-        val vals = added.flatMap(_.stats.get(c))
-          .flatMap(s => if (sp.step > 0) s.max else s.min)
-          .flatMap(v => scala.util.Try(v.toLong).toOption)
-        require(vals.nonEmpty || added.forall(_.rows == 0L),
-          s"TxnLake: identity column $c has no harvested stats on a " +
-            "row-minting commit — cannot advance the high-water mark")
-        // belt to the try_*-checked reservation's suspenders: on a pure
-        // engine assignment (append/overwrite — writers may not supply
-        // the column), EVERY landed value is fresh, so the harvested
-        // extremes must sit strictly beyond the prior mark in step
-        // direction; a value on the wrong side means wrapped/duplicate
-        // ids and must refuse before the mark advances past them.
-        if ((operation == "append" || operation == "overwrite") &&
-            added.exists(_.rows > 0L)) {
-          val inner = added.flatMap(_.stats.get(c))
-            .flatMap(s => if (sp.step > 0) s.min else s.max)
-            .flatMap(v => scala.util.Try(v.toLong).toOption)
-          require(inner.nonEmpty && (if (sp.step > 0) inner.min > sp.hwm
-                                     else inner.max < sp.hwm),
-            s"TxnLake: identity column $c landed values on the wrong " +
-              s"side of the high-water mark ${sp.hwm} — refusing to " +
-              "advance (possible reservation overflow)")
-        }
-        val hw =
-          if (vals.isEmpty) sp.hwm
-          else if (sp.step > 0) math.max(sp.hwm, vals.max)
-          else math.min(sp.hwm, vals.min)
-        c -> sp.copy(hwm = hw)
-      }
-      // ROW TRACKING (Delta's baseRowId): every added file reserves a
-      // fresh contiguous base-row-id range from the table's cumulative
-      // high-water mark — pure driver arithmetic over the row counts the
-      // harvest already produced, zero extra I/O. Fresh rows expose
-      // `brid + row_index` at read time (nothing materializes on
-      // append); engine rewrites carry the ids they read as a physical
-      // `__graft_rid` column, which takes precedence. The mark is
-      // monotone across every commit (restore/clone merge it the same
-      // way), so a row id, once handed out, is never reissued.
-      val ridBase = lastEntry.map(_.ridHwm).filter(_ >= 0L).getOrElse(0L)
-      var ridCursor = ridBase
-      val addedRid = added.map { fm =>
-        val b = ridCursor
-        ridCursor += math.max(0L, fm.rows)
-        fm.copy(brid = b)
-      }
-      // 2. publish: tmp write + atomic link IS the commit
-      val entry = render(Entry(next, operation, addedRid, removed, None, txn,
-        txns,
-        hasTxns = true, schemaJson = Some(tableSchema.json),
-        bloomCols = allBloomCols,
-        dvs = if (dvAnchor) dvLive else newDvs, dvDelta = !dvAnchor,
-        droppedCols = dropped.distinct, constraints = tableConstraints,
-        genCols = genColsAll, ts = nextTs(lastEntry),
-        identityCols = idColsOut, ridHwm = ridCursor,
-        renames = renamesAll))
-      val tmp = new Path(logDir(table), s"v$next.json.tmp-$salt")
-      val out = f.create(tmp, false)
-      try out.write(entry.getBytes("UTF-8")) finally out.close()
-      val dst = new Path(logDir(table), s"v$next.json")
-      if (publishExclusive(f, tmp, dst)) {
-        maybeCheckpoint(spark, f, table, next)
-        return Some(next)
-      }
-      f.delete(tmp, false) // lost the race: discard and retry at N+1
-      // under a pinned read set, losing the race IS a read conflict —
-      // surface it now rather than burning the remaining attempts
-      if (requireBase.isDefined) throw new CommitConflict
-      attempt += 1
+    val next = base.map(_ + 1).getOrElse(0L)
+    // optimistic read-set check: any commit since `base` means the
+    // caller's computation is stale — refuse before paying the write
+    if (f.exists(new Path(logDir(table), s"v$next.json")))
+      throw new CommitConflict
+    val lastEntry = base.map(readEntry(spark, table, _))
+    // drop tombstones ride the entry cumulatively (like txns/schema):
+    // a column dropped metadata-only still has its BYTES in old files,
+    // so re-introducing the name would silently resurrect them under
+    // the widened read schema — the guard below makes that loud.
+    // Overwrite clears the tombstones: it removes every current file,
+    // so there is nothing left to resurrect. Checked BEFORE the data
+    // write (it needs only df.columns and the last entry) so a refused
+    // commit pays no parquet write and orphans no data dir; compared
+    // through the session RESOLVER because default-case-insensitive
+    // analysis would bind a re-cased name to the old files' bytes.
+    val dropped =
+      (if (operation == "overwrite") Seq.empty
+       else lastEntry.map(_.droppedCols).getOrElse(Seq.empty)) ++
+        tombstoneCols
+    // COLUMN MAPPING: the cumulative rename overlay (physical →
+    // display), carried like the tombstones; overwrite retires it with
+    // the files whose physical names it described
+    val renamesAll =
+      (((if (operation == "overwrite") Map.empty[String, String]
+         else lastEntry.map(_.renames).getOrElse(Map.empty)) ++ newRenames)
+        -- dropRenames)
+        .filterNot { case (p, d) => p == d } // rename-back collapses
+    if (!noData) {
+      val res = resolver(spark)
+      // tombstones are PHYSICAL names — compare the incoming display
+      // names through the overlay
+      val resurrect = df.columns.filter(c =>
+        dropped.exists(res(_, physicalOf(spark, renamesAll, c))))
+      require(resurrect.isEmpty,
+        s"TxnLake: column(s) ${resurrect.mkString(", ")} were DROPPED " +
+          "from this table; committing data under the same name would " +
+          "resurrect the old files' bytes — use a different name, or " +
+          "overwrite the table to retire the tombstone")
     }
-    sys.error(s"TxnLake: gave up after $maxAttempts commit conflicts on $table")
+    // GENERATED columns fill at WRITE time when the caller omits them
+    // (GENERATED ALWAYS): a table property carried like the schema;
+    // engine rewrites that already carry the column pass through and
+    // are VALIDATED below, never silently regenerated
+    val genColsAll =
+      (lastEntry.map(_.genCols).getOrElse(Map.empty) ++
+        newGenCols) -- dropGenColNames
+    val dfGen =
+      if (noData || genColsAll.isEmpty) df
+      else genColsAll.toSeq.sortBy(_._1).foldLeft(df) {
+        case (d, (c, x)) =>
+          if (d.columns.contains(c)) d
+          else d.withColumn(c, org.apache.spark.sql.functions.expr(x))
+      }
+    // IDENTITY columns assign at WRITE time (Delta's GENERATED ALWAYS
+    // AS IDENTITY): fresh values are hwm + step*(mid+1) with mid =
+    // monotonically_increasing_id() — parallel tasks reserve disjoint
+    // ranges through its partition-id spacing, so assignment needs NO
+    // extra pass, no shuffle, and no driver coordination; unconsumed
+    // reservations become gaps, which is Delta's own documented
+    // contract. Writers may not supply the column on append/overwrite
+    // (ALWAYS); engine rewrites (merge/update/optimize/delete) carry
+    // existing values and NULL-fill only the rows they mint (merge
+    // inserts). Re-derived per attempt: a commit retry re-reads the
+    // advanced hwm.
+    val idColsAll =
+      (lastEntry.map(_.identityCols).getOrElse(Map.empty) ++
+        newIdentityCols) -- dropIdentityColNames
+    val dfOut =
+      if (noData || idColsAll.isEmpty) dfGen
+      else idColsAll.toSeq.sortBy(_._1).foldLeft(dfGen) {
+        case (d, (c, sp)) =>
+          import org.apache.spark.sql.functions.{coalesce, col, lit,
+            monotonically_increasing_id, raise_error, try_add,
+            try_multiply, when}
+          require(math.abs(sp.hwm) < (1L << 61),
+            s"TxnLake: identity column $c's high-water mark ${sp.hwm} " +
+              "is within range-reservation overflow distance — " +
+              "re-found the table with a wider step plan")
+          // overflow-CHECKED reservation: step * (partition_ordinal
+          // << 33) alone can wrap Long for a large step or a high
+          // partition ordinal, and non-ANSI arithmetic would wrap
+          // SILENTLY — minting duplicate or direction-regressed ids
+          // instead of the promised loud refusal. try_* returns NULL
+          // on overflow; a NULL reservation raises per-row, aborting
+          // the write job before the entry publishes.
+          val reserved = try_add(lit(sp.hwm),
+            try_multiply(lit(sp.step), monotonically_increasing_id() + 1))
+          val next = when(reserved.isNull, raise_error(lit(
+              s"TxnLake: identity column $c range reservation " +
+                s"overflowed Long (hwm=${sp.hwm}, step=${sp.step}) — " +
+                "re-found the table with a narrower step")))
+            .otherwise(reserved)
+          if (!d.columns.contains(c)) d.withColumn(c, next)
+          else {
+            require(operation != "append" && operation != "overwrite",
+              s"TxnLake: column $c is GENERATED ALWAYS AS IDENTITY — " +
+                "writers may not supply it; omit the column and the " +
+                "engine assigns it")
+            d.withColumn(c, coalesce(col(c), next))
+          }
+      }
+    // translate the frame to PHYSICAL names for the write: files and
+    // their footer stats are immutable, so they must carry the names
+    // that never change. A column that is not any current display name
+    // but matches a renamed column's retired physical name is REFUSED —
+    // it would silently alias the renamed column's storage.
+    val dfPhys =
+      if (noData || renamesAll.isEmpty) dfOut
+      else {
+        val res = resolver(spark)
+        dfOut.columns.foreach { c =>
+          val isDisplay = renamesAll.values.exists(res(_, c))
+          val retired = renamesAll.collectFirst {
+            case (p, d) if res(p, c) && !res(d, c) => d }
+          require(isDisplay || retired.isEmpty,
+            s"TxnLake: column $c was RENAMED to ${retired.getOrElse("")}" +
+              " — writing under the retired name would alias the " +
+              "renamed column's storage; use the new name")
+        }
+        // translate with the SAME resolver the guards above used: a
+        // case-variant display name passed them, so it must translate
+        renamesAll.foldLeft(dfOut) { case (d, (p, disp)) =>
+          d.columns.find(res(_, disp))
+            .map(c => d.withColumnRenamed(c, p)).getOrElse(d) }
+      }
+    // 1. land the data in a fresh immutable dir (never seen by readers
+    //    until the log entry that names it is published). A metadata-
+    //    only commit (noData — a deletion-vector delta) writes nothing:
+    //    even an empty frame would land a 0-row part file, and a DV
+    //    delete's contract is that NO data file moves.
+    val dataRel = s"data/v$next-$salt"
+    val added0 =
+      if (noData) Seq.empty[FileMeta]
+      else {
+        graft.plans.JobLabel.labeled(spark, s"txn:$operation write " +
+            new Path(table).getName) {
+          dfPhys.write.mode("overwrite")
+            .parquet(new Path(tablePath, dataRel).toString)
+        }
+        // add actions: one per written file, with footer-harvested stats
+        // (distributed above DriverHarvestMax files — see harvestAll)
+        val written = f.listStatus(new Path(tablePath, dataRel))
+          .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+          .sortBy(_.getPath.getName)
+          .map(s => (s.getPath.toString, s"$dataRel/${s.getPath.getName}"))
+          .toSeq
+        // the materialized row-id column is engine plumbing, not table
+        // data: its footer stats never feed user-predicate pruning, so
+        // they stay out of the entry
+        harvestAll(spark, written, dfPhys.schema)
+          .map(fm => fm.copy(stats = fm.stats - RidCol))
+      }
+    // Bloom-indexed columns are a TABLE property (like the cumulative
+    // schema): declared on any commit, inherited by every later one —
+    // including the engine's own maintenance/DML rewrites, which would
+    // otherwise silently strip the index from whatever they touch and
+    // quietly un-prune every future key probe.
+    // bloom declarations are stored PHYSICAL (their sidecars are named
+    // for the bytes, which never rename); incoming display names map
+    val allBloomCols =
+      (lastEntry.map(_.bloomCols).getOrElse(Seq.empty)
+        ++ bloomCols.map(physicalOf(spark, renamesAll, _)))
+        .distinct
+        .filterNot(dropBloomCols.map(physicalOf(spark, renamesAll, _)).contains)
+    // every commit carries the CUMULATIVE table schema forward (Delta's
+    // metaData action): appends merge new columns in, overwrite resets —
+    // so readers resolve the snapshot schema from ONE log entry instead
+    // of merging footers across the whole file list. Computed before
+    // the post-write pass, which reads the fresh files under it.
+    val tableSchema = schemaOverride.getOrElse(mergedSchema(
+      lastEntry.flatMap(_.schemaJson)
+        .map(DataType.fromJson(_).asInstanceOf[StructType]),
+      // the materialized row-id column is PHYSICAL only — never part
+      // of the logical table schema (plain reads must not see it)
+      StructType(dfPhys.schema.fields.filterNot(_.name == RidCol)),
+      operation))
+    // CHECK constraints are a table property (Delta's ADD CONSTRAINT):
+    // carried cumulatively, enforced on every data-bearing commit by
+    // scanning ONLY the just-written delta (O(delta), under the merged
+    // schema so evolution-era rows null-fill — SQL CHECK semantics:
+    // NULL passes, only a FALSE verdict violates) — in the SAME
+    // distributed pass that builds the bloom sidecars, so a
+    // constrained + bloom-indexed table reads its fresh bytes ONCE per
+    // commit. A violating commit aborts before the entry publishes,
+    // with nothing visible and the unpublished data dir removed.
+    // GENERATED columns validate on the same pass as the null-safe
+    // invariant `c <=> expr`. Maintenance ("optimize": data-preserving
+    // by the tag's own contract) and CoW DELETE (kept rows are a
+    // subset of already-validated rows) cannot introduce a violating
+    // row — their enforcement is skipped, so a constrained 100 TB
+    // table's compaction never pays a second read of what it rewrites.
+    val tableConstraints =
+      (lastEntry.map(_.constraints).getOrElse(Map.empty)
+        -- dropConstraintNames) ++ newConstraints
+    val checks: Seq[(String, org.apache.spark.sql.Column)] = {
+      import org.apache.spark.sql.functions.{coalesce, col, lit, not}
+      // stored expressions are DISPLAY-named (the domain the user
+      // declared them in); the enforcement scan reads physical files,
+      // so renamed references translate through the overlay here
+      tableConstraints.toSeq.sortBy(_._1).map { case (n, x) =>
+        (s"$n (`$x`)",
+          not(coalesce(exprUnder(spark, x, renamesAll), lit(true)))) } ++
+        genColsAll.toSeq.sortBy(_._1).map { case (c, x) =>
+          (s"generated column $c (`$x`)",
+            !(col(c) <=> exprUnder(spark, x, renamesAll))) }
+    }
+    val enforce = checks.nonEmpty && added0.nonEmpty &&
+      operation != "optimize" && operation != "delete"
+    val (added, violations) = postWritePass(spark, tablePath, f, added0,
+      allBloomCols, dfPhys.schema, tableSchema,
+      if (enforce) checks else Seq.empty)
+    if (violations.exists(_ > 0)) {
+      f.delete(new Path(tablePath, dataRel), true)
+      val violated = checks.zip(violations).collect {
+        case ((label, _), n) if n > 0 => s"$label: $n row(s)" }
+      throw new IllegalStateException(
+        "TxnLake: commit violates CHECK constraint(s) — " +
+          violated.mkString("; ") + "; nothing was committed")
+    }
+    // remove actions: append removes nothing (O(1) log reads — the
+    // streaming-sink hot path never resolves the snapshot); overwrite
+    // and optimize remove every current file, unless the caller scoped
+    // the rewrite to an explicit subset (incremental compaction — the
+    // untouched files carry over into the new snapshot verbatim)
+    val removed: Seq[String] = removePaths.getOrElse {
+      if (operation == "append") Seq.empty
+      else base.map(resolveFiles(spark, table, _).map(_.path))
+        .getOrElse(Seq.empty)
+    }
+    // carry the cumulative txn state through EVERY commit (plain commits
+    // included) so the O(1) replay check stays sound. UPGRADE path: a
+    // log written before the map existed carries per-entry txn markers
+    // only — carriedTxns folds ALL of them into the one commit that
+    // introduces the map, otherwise the first new-format commit would
+    // orphan every legacy marker and a legacy app's replay would slip
+    // past the has-map fast path.
+    val prior = base.map(carriedTxns(spark, table, _)).getOrElse(Map.empty)
+    // extraTxns are auxiliary watermarks a caller piggybacks on the same
+    // atomic commit (e.g. the index-coverage markers the streaming sinks
+    // record — see CurationStream.indexCovered). Monotone merge: a stale
+    // caller must never regress a marker another commit already advanced.
+    val extra = extraTxns.map { case (a, b) =>
+      a -> math.max(b, prior.getOrElse(a, Long.MinValue)) }
+    // gcTxnPrefixes: retire auxiliary markers whose purpose this very
+    // commit completes (a sliced hop's per-slice markers, dropped by
+    // the hop's completion commit) — without GC they would ride every
+    // later entry's cumulative map forever. Prefix-matched so a
+    // cap-namespaced family (`app#v3@2`, `app#v3@5`, …) retires as
+    // one; callers end prefixes with their namespace separator so
+    // `app#v3@` can never swallow `app#v30@…`.
+    val txns = prior.filter { case (k, _) =>
+      !gcTxnPrefixes.exists(k.startsWith) } ++ extra ++ txn.toMap
+    // deletion vectors: the live map is (previous live -- removed) ++
+    // fresh — a removed file's DV dies with it, and this commit's
+    // masks (deleteWhereDv/updateWhereDv) overlay the survivors. The
+    // ENTRY stores only this commit's delta (O(commit)) unless it is
+    // an anchor — empty live map (the DV-free common case), or the
+    // CheckpointInterval cadence — where the full map lands so replay
+    // stays bounded (see resolveDvs).
+    val dvLive = (base
+      .map(resolveDvs(spark, table, _))
+      .getOrElse(Map.empty[String, DvRef]) -- removed) ++ newDvs
+    val dvAnchor = dvLive.isEmpty || next % CheckpointInterval == 0
+    // advance each identity hwm from the freshly-HARVESTED file stats —
+    // zero extra I/O (parquet int64 footers always carry exact min/max;
+    // our own harvest just read them). Monotone: a data-preserving
+    // rewrite's carried values never regress the mark, and a commit
+    // that minted rows must surface a stat or fail loudly (a silently
+    // unadvanced hwm would reissue ids on the next commit).
+    val idColsOut = idColsAll.map { case (c, sp) =>
+      val vals = added.flatMap(_.stats.get(c))
+        .flatMap(s => if (sp.step > 0) s.max else s.min)
+        .flatMap(v => scala.util.Try(v.toLong).toOption)
+      require(vals.nonEmpty || added.forall(_.rows == 0L),
+        s"TxnLake: identity column $c has no harvested stats on a " +
+          "row-minting commit — cannot advance the high-water mark")
+      // belt to the try_*-checked reservation's suspenders: on a pure
+      // engine assignment (append/overwrite — writers may not supply
+      // the column), EVERY landed value is fresh, so the harvested
+      // extremes must sit strictly beyond the prior mark in step
+      // direction; a value on the wrong side means wrapped/duplicate
+      // ids and must refuse before the mark advances past them.
+      if ((operation == "append" || operation == "overwrite") &&
+          added.exists(_.rows > 0L)) {
+        val inner = added.flatMap(_.stats.get(c))
+          .flatMap(s => if (sp.step > 0) s.min else s.max)
+          .flatMap(v => scala.util.Try(v.toLong).toOption)
+        require(inner.nonEmpty && (if (sp.step > 0) inner.min > sp.hwm
+                                   else inner.max < sp.hwm),
+          s"TxnLake: identity column $c landed values on the wrong " +
+            s"side of the high-water mark ${sp.hwm} — refusing to " +
+            "advance (possible reservation overflow)")
+      }
+      val hw =
+        if (vals.isEmpty) sp.hwm
+        else if (sp.step > 0) math.max(sp.hwm, vals.max)
+        else math.min(sp.hwm, vals.min)
+      c -> sp.copy(hwm = hw)
+    }
+    // ROW TRACKING (Delta's baseRowId): every added file reserves a
+    // fresh contiguous base-row-id range from the table's cumulative
+    // high-water mark — pure driver arithmetic over the row counts the
+    // harvest already produced, zero extra I/O. Fresh rows expose
+    // `brid + row_index` at read time (nothing materializes on
+    // append); engine rewrites carry the ids they read as a physical
+    // `__graft_rid` column, which takes precedence. The mark is
+    // monotone across every commit (restore/clone merge it the same
+    // way), so a row id, once handed out, is never reissued.
+    val ridBase = lastEntry.map(_.ridHwm).filter(_ >= 0L).getOrElse(0L)
+    var ridCursor = ridBase
+    val addedRid = added.map { fm =>
+      val b = ridCursor
+      ridCursor += math.max(0L, fm.rows)
+      fm.copy(brid = b)
+    }
+    // 2. publish: tmp write + atomic link IS the commit
+    val entry = render(Entry(next, operation, addedRid, removed, None, txn,
+      txns,
+      hasTxns = true, schemaJson = Some(tableSchema.json),
+      bloomCols = allBloomCols,
+      dvs = if (dvAnchor) dvLive else newDvs, dvDelta = !dvAnchor,
+      droppedCols = dropped.distinct, constraints = tableConstraints,
+      genCols = genColsAll, ts = nextTs(lastEntry),
+      identityCols = idColsOut, ridHwm = ridCursor,
+      renames = renamesAll))
+    publishEntry(f, table, next, entry)
+    maybeCheckpoint(spark, f, table, next)
+    next
+  }
+
+  /** Write `entry` as version `next`: a tmp file, then the atomic
+    * exclusive publish that IS the commit. A lost race discards the tmp
+    * and throws [[CommitConflict]] — [[transact]] retries at N+1.
+    * `beforePublish` is a test seam between the two steps. */
+  private def publishEntry(f: FileSystem, table: String, next: Long,
+                           entry: String,
+                           beforePublish: () => Unit = () => ()): Unit = {
+    val salt = java.util.UUID.randomUUID().toString.take(8)
+    val tmp = new Path(logDir(table), s"v$next.json.tmp-$salt")
+    val out = f.create(tmp, false)
+    try out.write(entry.getBytes("UTF-8")) finally out.close()
+    beforePublish()
+    if (!publishExclusive(f, tmp, new Path(logDir(table), s"v$next.json"))) {
+      f.delete(tmp, false)
+      throw new CommitConflict
+    }
   }
 
   /** Write the periodic checkpoint after a successful publish. Only the
@@ -2164,8 +2224,7 @@ object TxnLake extends LakeFormat {
     import org.apache.spark.sql.functions.{col, element_at, explode,
       regexp_replace, split}
     import spark.implicits._
-    val cap = spark.conf.getOption("graft.probe.maxDriverKeys")
-      .map(_.toLong).getOrElse(1000000L)
+    val cap = graft.plans.ProbePlanner.maxDriverKeys(spark)
     val f = fs(spark, new Path(table))
     def missing(relPath: String) = new IllegalStateException(
       s"TxnLake: deletion-vector sidecar $relPath of $table is missing — " +
@@ -2912,19 +2971,9 @@ object TxnLake extends LakeFormat {
     * rewrite to the touched files only; this whole-snapshot form remains
     * for deltas wide enough that every file is touched anyway. */
   def merge(spark: SparkSession, delta: DataFrame, table: String,
-            key: String, maxAttempts: Int = 10): Long =
-    mergeImpl(spark, delta, table, key, maxAttempts, () => ())
-
-  /** Test seam: `beforeCommit` runs between the snapshot read and the
-    * commit attempt, letting specs interleave a concurrent writer
-    * deterministically. */
-  private[sources] def mergeImpl(spark: SparkSession, delta: DataFrame,
-                                 table: String, key: String, maxAttempts: Int,
-                                 beforeCommit: () => Unit): Long = {
+            key: String, maxAttempts: Int = 10): Long = {
     import org.apache.spark.sql.functions.{col, lit, when}
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val base = latestVersion(spark, table)
+    transact(spark, table, "merge", maxAttempts) { base =>
       // read the PINNED version, not latest: base and snapshot must agree
       // even if a commit lands between the two calls
       val cur = base.map(readVersion(spark, table, _))
@@ -2944,14 +2993,8 @@ object TxnLake extends LakeFormat {
             .select(col(key) +: others.map(n =>
               when(col("__d"), col(s"d.$n")).otherwise(col(s"c.$n")).as(n)): _*)
         }
-      beforeCommit()
-      try return commitImpl(spark, merged, table, "overwrite", None,
-          maxAttempts = 1, requireBase = Some(base))
-        .getOrElse(sys.error("unreachable: txn-less commit cannot be skipped"))
-      catch { case _: CommitConflict => attempt += 1 }
-    }
-    throw new java.util.ConcurrentModificationException(
-      s"TxnLake.merge: $maxAttempts consecutive concurrent commits on $table")
+      Some(commitImpl(spark, merged, table, "overwrite", None, base))
+    }.get
   }
 
   /** MERGE INTO in its COPY-ON-WRITE form — the production upsert a
@@ -2981,24 +3024,15 @@ object TxnLake extends LakeFormat {
     * ConcurrentModificationException only after `maxAttempts` straight
     * conflicts. Returns the committed version. */
   def mergeInto(spark: SparkSession, delta: DataFrame, table: String,
-                key: String, maxAttempts: Int = 10): Long =
-    mergeIntoImpl(spark, delta, table, key, maxAttempts, () => ())
-
-  /** Test seam: `beforeCommit` runs between the snapshot read and the
-    * commit attempt (interleave a concurrent writer deterministically).
-    *
-    * Since the clause engine landed, this IS
-    * `mergeIntoClauses(matched → UPDATE SET *, not-matched → INSERT *)`
-    * — one rewrite path to audit, spec-pinned equivalent ("two-clause
-    * mergeIntoClauses reproduces mergeInto exactly"). Only the
-    * UPDATE-SET-star / INSERT-star contract lives here: the delta's schema must
-    * match the table's exactly, duplicate keys are refused even on a
-    * keys-only table, and an EMPTY delta still commits its (empty)
-    * founding version — the historical behaviour callers pin. */
-  private[sources] def mergeIntoImpl(spark: SparkSession, delta: DataFrame,
-                                     table: String, key: String,
-                                     maxAttempts: Int,
-                                     beforeCommit: () => Unit): Long = {
+                key: String, maxAttempts: Int = 10): Long = {
+    // Since the clause engine landed, this IS
+    // `mergeIntoClauses(matched → UPDATE SET *, not-matched → INSERT *)`
+    // — one rewrite path to audit, spec-pinned equivalent ("two-clause
+    // mergeIntoClauses reproduces mergeInto exactly"). Only the
+    // UPDATE-SET-star / INSERT-star contract lives here: the delta's
+    // schema must match the table's exactly, duplicate keys are refused
+    // even on a keys-only table, and an EMPTY delta still commits its
+    // (empty) founding version — the historical behaviour callers pin.
     import org.apache.spark.sql.functions.{col, count, lit}
     require(delta.columns.contains(key),
       s"TxnLake.mergeInto: no column $key in ${delta.columns.toSeq}")
@@ -3033,18 +3067,17 @@ object TxnLake extends LakeFormat {
         delta.columns.toIndexedSeq.map(c =>
           c -> org.apache.spark.sql.functions.col(c)).toMap)),
       notMatchedBySource = Seq.empty,
-      maxAttempts = maxAttempts, beforeCommit = beforeCommit,
-      perAttempt = schemaCheck)
-      .getOrElse {
+      maxAttempts = maxAttempts, perAttempt = schemaCheck)
+      .orElse {
         // historical contract: mergeInto always returns a committed
         // version. The clause engine's no-op None arises only when
         // nothing touches and nothing inserts (an empty delta, or a
         // keys-only delta whose keys all exist) — commit an EMPTY merge
         // version, never the delta itself (its rows already exist)
-        commitImpl(spark, delta.limit(0), table, "merge", None, maxAttempts,
-          removePaths = Some(Seq.empty))
-          .getOrElse(sys.error("unreachable: txn-less commit cannot be skipped"))
-      }
+        transact(spark, table, "mergeInto", maxAttempts)(base =>
+          Some(commitImpl(spark, delta.limit(0), table, "merge", None, base,
+            removePaths = Some(Seq.empty))))
+      }.get
   }
 
   // ---- clause-based MERGE ---------------------------------------------
@@ -3188,19 +3221,18 @@ object TxnLake extends LakeFormat {
                        evolveSchema: Boolean = false,
                        gcTxnPrefixes: Seq[String] = Seq.empty): Option[Long] =
     mergeIntoClausesImpl(spark, source, table, key, matched, notMatched,
-      notMatchedBySource, maxAttempts, () => (), txn,
+      notMatchedBySource, maxAttempts, txn,
       evolveSchema = evolveSchema, gcTxnPrefixes = gcTxnPrefixes)
 
-  /** Test seam: `beforeCommit` runs between the snapshot read and the
-    * commit attempt (interleave a concurrent writer deterministically). */
-  private[sources] def mergeIntoClausesImpl(spark: SparkSession,
+  /** `perAttempt` re-validates a caller contract against each attempt's
+    * base ([[mergeInto]]'s exact-schema check). */
+  private def mergeIntoClausesImpl(spark: SparkSession,
                                             source: DataFrame, table: String,
                                             key: String,
                                             matched: Seq[MergeAction],
                                             notMatched: Seq[MergeInsert],
                                             notMatchedBySource: Seq[MergeAction],
                                             maxAttempts: Int,
-                                            beforeCommit: () => Unit,
                                             txn: Option[(String, Long)] = None,
                                             perAttempt: Option[Long] => Unit = _ => (),
                                             evolveSchema: Boolean = false,
@@ -3277,8 +3309,7 @@ object TxnLake extends LakeFormat {
     // (backfill-sized source, keys = None), the page we saw can't prove
     // no-dup, so the old dedicated dup job runs — the rare path keeps
     // the exact semantics at its pre-existing cost.
-    val keyCap = spark.conf.getOption("graft.probe.maxDriverKeys")
-      .map(_.toLong).getOrElse(1000000L)
+    val keyCap = graft.plans.ProbePlanner.maxDriverKeys(spark)
     // clamp BEFORE the +1: a Long.MaxValue cap must mean "collect up to
     // the Int ceiling", not overflow to limit(0) and misread every
     // source row as new
@@ -3334,9 +3365,7 @@ object TxnLake extends LakeFormat {
         }.reduce(_ unionByName _)
       }
     }
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val base = latestVersion(spark, table)
+    transact(spark, table, "mergeIntoClauses", maxAttempts) { base =>
       // caller-contract re-validation under the CURRENT base — a retry
       // after a concurrent commit must re-check what the first attempt
       // checked (mergeInto's exact-schema contract), not trust a
@@ -3372,15 +3401,12 @@ object TxnLake extends LakeFormat {
           if (txn.isDefined || !ins.isEmpty) Some((ins, Seq.empty, false))
           else None
         case Some(b) =>
-          val files = resolveFiles(spark, table, b)
-          requireLive(spark, table, b, files)
-          val baseEntry = readEntry(spark, table, b)
-          val schema = baseEntry.schemaStruct
-          val ren = baseEntry.renames
-          val readSchema = subsetReadSchema(spark, table, schema, files)
+          val snap = new PinnedSnapshot(spark, table, b)
+          val files = snap.files
+          val ren = snap.ren
           // the clause surface speaks DISPLAY names; physical stays in
           // the files/stats and commitImpl translates the result back
-          val displaySchema = toDisplaySchema(readSchema, ren)
+          val displaySchema = toDisplaySchema(snap.readSchema, ren)
           val targetCols = displaySchema.fieldNames.toIndexedSeq
           require(targetCols.contains(key),
             s"TxnLake.mergeIntoClauses: no column $key in target $targetCols")
@@ -3419,17 +3445,10 @@ object TxnLake extends LakeFormat {
             else {
               val conds = notMatchedBySource.map(condOf)
               if (conds.exists(_.isEmpty)) files
-              else {
-                val pred = conds.flatten.reduce(_ || _)
-                val sample = new Path(table, files.head.path).toString
-                // a sourceCol-referencing condition cannot resolve against
-                // a bare target file — conservative full scope
-                try {
-                  val p = resolvedPredicate(spark, sample, pred,
-                    schema.map(toDisplaySchema(_, ren)))
-                  files.filter(fm => mayMatch(displayMeta(ren)(fm), p))
-                } catch { case _: Exception => files }
-              }
+              // a sourceCol-referencing condition cannot resolve against
+              // a bare target file — conservative full scope
+              else try snap.scoped(conds.flatten.reduce(_ || _))
+              catch { case _: Exception => files }
             }
           // files that REWRITE: matched clauses can only change rows in
           // key-scoped files, NMBS clauses only in condition-scoped files
@@ -3447,8 +3466,8 @@ object TxnLake extends LakeFormat {
             val anti =
               if (keyTouched.isEmpty) src
               else src.join(
-                scanFiles(spark, table, keyTouched, Some(readSchema),
-                  resolveDvs(spark, table, b), ren).select(col(key)),
+                scanFiles(spark, table, keyTouched, Some(snap.readSchema),
+                  snap.dvs, ren).select(col(key)),
                 Seq(key), "left_anti")
             insertRows(anti, displaySchema, newCols)
           }
@@ -3470,8 +3489,7 @@ object TxnLake extends LakeFormat {
                 (spark.createDataFrame(
                   spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
                   displaySchema), false)
-              else scanForRewrite(spark, table, rewriteFiles, readSchema,
-                resolveDvs(spark, table, b), ren)
+              else snap.scanForRewrite(rewriteFiles)
             val srcRenamed = src.columns.foldLeft(src)((d, c) =>
               d.withColumnRenamed(c, MergeSourcePrefix + c))
             // without MATCHED clauses the join only needs the MARKER, so
@@ -3530,26 +3548,14 @@ object TxnLake extends LakeFormat {
             Some((out1, rewriteFiles.map(_.path), carry))
           }
       }
-      out match {
-        case None => return None
-        case Some((df, removed, carry)) =>
-          beforeCommit()
-          try return commitImpl(spark, df, table, "merge", txn,
-              maxAttempts = 1, requireBase = Some(base),
-              removePaths = Some(removed), carryRids = carry,
-              gcTxnPrefixes = gcTxnPrefixes) match {
-            case Some(v) => Some(v)
-            case None => // replay: the (appId, batchId) marker exists
-              require(txn.isDefined,
-                "unreachable: txn-less commit cannot be skipped")
-              None
-          }
-          catch { case _: CommitConflict => attempt += 1 }
+      out.flatMap { case (df, removed, carry) =>
+        // a replayed (appId, batchId) finds its marker: skip, never re-apply
+        if (replayed(spark, table, base, txn)) None
+        else Some(commitImpl(spark, df, table, "merge", txn, base,
+          removePaths = Some(removed), carryRids = carry,
+          gcTxnPrefixes = gcTxnPrefixes))
       }
     }
-    throw new java.util.ConcurrentModificationException(
-      s"TxnLake.mergeIntoClauses: $maxAttempts consecutive concurrent " +
-        s"commits on $table")
   }
 
   // ---- optimize -------------------------------------------------------
@@ -3574,16 +3580,9 @@ object TxnLake extends LakeFormat {
     * partition-grain to file-grain. */
   def optimize(spark: SparkSession, table: String,
                zorderBy: Seq[String] = Seq.empty, numFiles: Int = 4,
-               maxAttempts: Int = 10): Long = {
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val base = latestVersion(spark, table)
-        .getOrElse(sys.error(s"TxnLake.optimize: no committed version in $table"))
-      val files = resolveFiles(spark, table, base)
-      requireLive(spark, table, base, files)
-      val baseEntry = readEntry(spark, table, base)
-      val schema = subsetReadSchema(spark, table,
-        baseEntry.schemaStruct, files)
+               maxAttempts: Int = 10): Long =
+    transactOn(spark, table, "optimize", maxAttempts) { base =>
+      val snap = new PinnedSnapshot(spark, table, base)
       // a whole-snapshot OPTIMIZE is also how a pre-tracking table
       // BACKFILLS row ids — with all-or-nothing semantics (the
       // scanForRewrite seam's contract): if EVERY file already tracks,
@@ -3595,18 +3594,10 @@ object TxnLake extends LakeFormat {
       // in one rewrite would make "ids are stable from version V on" a
       // per-row property instead of a table property, and mixed-era
       // snapshots only arise from pre-r18 logs in the first place.
-      val (snap, carry) = scanForRewrite(spark, table, files, schema,
-        resolveDvs(spark, table, base), baseEntry.renames)
-      val rewritten = clusterFor(snap, zorderBy, numFiles)
-      try return commitImpl(spark, rewritten, table, "optimize", None,
-          maxAttempts = 1, requireBase = Some(Some(base)),
-          carryRids = carry)
-        .getOrElse(sys.error("unreachable: txn-less commit cannot be skipped"))
-      catch { case _: CommitConflict => attempt += 1 }
-    }
-    throw new java.util.ConcurrentModificationException(
-      s"TxnLake.optimize: $maxAttempts consecutive concurrent commits on $table")
-  }
+      val (scan, carry) = snap.scanForRewrite(snap.files)
+      Some(commitImpl(spark, clusterFor(scan, zorderBy, numFiles), table,
+        "optimize", None, Some(base), carryRids = carry))
+    }.get
 
   /** The layout a (scoped or whole-snapshot) OPTIMIZE writes: K-dim
     * Z-order interleave for 2+ cluster keys ([[graft.operators.ZOrder]]
@@ -3643,36 +3634,18 @@ object TxnLake extends LakeFormat {
     * [[compactSmallFiles]] does for size-scoped packing. */
   def optimizeWhere(spark: SparkSession, table: String, predicate: Column,
                     zorderBy: Seq[String] = Seq.empty, numFiles: Int = 4,
-                    maxAttempts: Int = 10): Option[Long] = {
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val base = latestVersion(spark, table).getOrElse(
-        sys.error(s"TxnLake.optimizeWhere: no committed version in $table"))
-      val files = resolveFiles(spark, table, base)
-      if (files.isEmpty) return None
-      requireLive(spark, table, base, files)
-      val entry = readEntry(spark, table, base)
-      val schema = entry.schemaStruct
-      val ren = entry.renames
-      val sample = new Path(table, files.head.path).toString
-      val pred = resolvedPredicate(spark, sample, predicate,
-        schema.map(toDisplaySchema(_, ren)))
-      val scoped = files.filter(fm => mayMatch(displayMeta(ren)(fm), pred))
-      if (scoped.size < 2) return None
-      val (snap, carry) = scanForRewrite(spark, table, scoped,
-        subsetReadSchema(spark, table, schema, files),
-        resolveDvs(spark, table, base), ren)
-      val rewritten = clusterFor(snap, zorderBy, numFiles)
-      try return Some(commitImpl(spark, rewritten, table, "optimize", None,
-          maxAttempts = 1, requireBase = Some(Some(base)),
-          removePaths = Some(scoped.map(_.path)), carryRids = carry)
-        .getOrElse(sys.error("unreachable: txn-less commit cannot be skipped")))
-      catch { case _: CommitConflict => attempt += 1 }
+                    maxAttempts: Int = 10): Option[Long] =
+    transactOn(spark, table, "optimizeWhere", maxAttempts) { base =>
+      val snap = new PinnedSnapshot(spark, table, base)
+      val scoped = snap.scoped(predicate)
+      if (scoped.size < 2) None
+      else {
+        val (scan, carry) = snap.scanForRewrite(scoped)
+        Some(commitImpl(spark, clusterFor(scan, zorderBy, numFiles), table,
+          "optimize", None, Some(base), removePaths = Some(scoped.map(_.path)),
+          carryRids = carry))
+      }
     }
-    throw new java.util.ConcurrentModificationException(
-      s"TxnLake.optimizeWhere: $maxAttempts consecutive concurrent commits " +
-        s"on $table")
-  }
 
   /** Schema for a PARTIAL-snapshot read inside a scoped rewrite
     * ([[optimizeWhere]], [[compactSmallFiles]]): the logged schema when
@@ -3692,6 +3665,44 @@ object TxnLake extends LakeFormat {
         .parquet(snapshot.map(fm => new Path(table, fm.path).toString): _*)
         .schema)
 
+  /** The snapshot a rewrite attempt works on, pinned at `base`: its live
+    * files (liveness-checked), its entry, and — lazily, so each caller
+    * pays only what it uses — the read schema, the deletion-vector map
+    * (resolved ONCE per attempt: per-file resolveDvs calls would replay
+    * the log O(files) times), and the predicate scope. */
+  private final class PinnedSnapshot(spark: SparkSession, table: String,
+                                     base: Long) {
+    val files: Seq[FileMeta] = resolveFiles(spark, table, base)
+    requireLive(spark, table, base, files)
+    val entry: Entry = readEntry(spark, table, base)
+    def ren: Map[String, String] = entry.renames
+    lazy val readSchema: StructType =
+      subsetReadSchema(spark, table, entry.schemaStruct, files)
+    lazy val displayFields: Seq[String] =
+      toDisplaySchema(readSchema, ren).fieldNames.toSeq
+    lazy val dvs: Map[String, DvRef] = resolveDvs(spark, table, base)
+
+    /** The files whose commit-time stats admit `predicate` — the
+      * [[readWhere]] skipping matcher, so the scope is conservative (an
+      * unstatted file counts as in scope). */
+    def scoped(predicate: Column): Seq[FileMeta] =
+      if (files.isEmpty) Seq.empty
+      else {
+        val pred = resolvedPredicate(spark,
+          new Path(table, files.head.path).toString, predicate,
+          entry.schemaStruct.map(toDisplaySchema(_, ren)))
+        files.filter(fm => mayMatch(displayMeta(ren)(fm), pred))
+      }
+
+    /** Refuse a SET clause naming a column the snapshot lacks. */
+    def requireSetColumns(api: String, set: Map[String, Column]): Unit =
+      set.keys.foreach(k => require(displayFields.contains(k),
+        s"TxnLake.$api: SET references unknown column $k"))
+
+    def scanForRewrite(fms: Seq[FileMeta]): (DataFrame, Boolean) =
+      TxnLake.this.scanForRewrite(spark, table, fms, readSchema, dvs, ren)
+  }
+
   /** Row-level DELETE — Delta's `DELETE FROM t WHERE …` in its
     * copy-on-write form: files whose commit-time stats admit the
     * predicate are REWRITTEN without the matching rows; every other file
@@ -3710,43 +3721,8 @@ object TxnLake extends LakeFormat {
     * sibling indexes (their keys would over-mask rows the corpus no
     * longer has). */
   def deleteWhere(spark: SparkSession, table: String, predicate: Column,
-                  maxAttempts: Int = 10): Option[Long] = {
-    import org.apache.spark.sql.functions.{coalesce, lit, not}
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val base = latestVersion(spark, table).getOrElse(
-        sys.error(s"TxnLake.deleteWhere: no committed version in $table"))
-      val files = resolveFiles(spark, table, base)
-      if (files.isEmpty) return None
-      requireLive(spark, table, base, files)
-      val entry = readEntry(spark, table, base)
-      val schema = entry.schemaStruct
-      val ren = entry.renames
-      val sample = new Path(table, files.head.path).toString
-      val pred = resolvedPredicate(spark, sample, predicate,
-        schema.map(toDisplaySchema(_, ren)))
-      val touched = files.filter(fm => mayMatch(displayMeta(ren)(fm), pred))
-      if (touched.isEmpty) return None
-      // read UNDER the live masks: a rewritten file's deletion vector
-      // dies with it, so its masked rows must not be resurrected here —
-      // and WITH row ids when the files track them, so surviving rows
-      // keep their identity through the rewrite
-      val (scanned, carry) = scanForRewrite(spark, table, touched,
-        subsetReadSchema(spark, table, schema, files),
-        resolveDvs(spark, table, base), ren)
-      val kept = scanned
-        .where(not(coalesce(predicate, lit(false))))
-        .repartition(touched.size)
-      try return Some(commitImpl(spark, kept, table, "delete", None,
-          maxAttempts = 1, requireBase = Some(Some(base)),
-          removePaths = Some(touched.map(_.path)), carryRids = carry)
-        .getOrElse(sys.error("unreachable: txn-less commit cannot be skipped")))
-      catch { case _: CommitConflict => attempt += 1 }
-    }
-    throw new java.util.ConcurrentModificationException(
-      s"TxnLake.deleteWhere: $maxAttempts consecutive concurrent commits " +
-        s"on $table")
-  }
+                  maxAttempts: Int = 10): Option[Long] =
+    rewriteWhere(spark, table, predicate, None, maxAttempts)
 
   /** Row-level DELETE in MERGE-ON-READ form — Delta's deletion vectors:
     * where [[deleteWhere]] REWRITES every touched file without the
@@ -3779,119 +3755,8 @@ object TxnLake extends LakeFormat {
     * with recompute on conflict, provable no-op → None. The hop
     * surfaces in [[tableChanges]] as exactly the newly masked rows. */
   def deleteWhereDv(spark: SparkSession, table: String, predicate: Column,
-                    maxAttempts: Int = 10): Option[Long] = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit}
-    val cap = spark.conf.getOption("graft.probe.maxDriverKeys")
-      .map(_.toLong).getOrElse(1000000L)
-    val lim = (math.min(math.max(cap, 0L), (Int.MaxValue - 2).toLong) + 1).toInt
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val base = latestVersion(spark, table).getOrElse(
-        sys.error(s"TxnLake.deleteWhereDv: no committed version in $table"))
-      val files = resolveFiles(spark, table, base)
-      if (files.isEmpty) return None
-      requireLive(spark, table, base, files)
-      val entry = readEntry(spark, table, base)
-      val schema = entry.schemaStruct
-      val ren = entry.renames
-      val sample = new Path(table, files.head.path).toString
-      val pred = resolvedPredicate(spark, sample, predicate,
-        schema.map(toDisplaySchema(_, ren)))
-      val touched = files.filter(fm => mayMatch(displayMeta(ren)(fm), pred))
-      if (touched.isEmpty) return None
-      val f = fs(spark, new Path(table))
-      val byName = touched.map(fm => new Path(fm.path).getName -> fm.path)
-        .toMap
-      require(byName.size == touched.size,
-        s"TxnLake.deleteWhereDv: duplicate data-file names in $table")
-      // matching LIVE positions: scan touched with the row index, drop
-      // already-masked positions (a row never double-deletes), keep TRUE
-      val readSchema = subsetReadSchema(spark, table, schema, files)
-      // one DV resolution per attempt: resolveDvs replays up to
-      // CheckpointInterval log entries since the per-commit-delta change,
-      // so calling it inside per-file loops would pay
-      // O(files x CheckpointInterval) log reads on exactly the DV-heavy
-      // tables this path exists for
-      val dvsBase = resolveDvs(spark, table, base)
-      val baseDf = toDisplay(spark.read.schema(readSchema)
-        .parquet(touched.map(fm => new Path(table, fm.path).toString): _*)
-        .withColumn("__graft_dv_fn", col("_metadata.file_name"))
-        .withColumn("__graft_dv_ri", col("_metadata.row_index")), ren)
-      val priorRefs = touched.flatMap(fm =>
-        dvsBase.get(fm.path).map(new Path(fm.path).getName -> _))
-      val live =
-        if (priorRefs.isEmpty) baseDf
-        else baseDf.join(dvPairsDf(spark, table, priorRefs),
-          Seq("__graft_dv_fn", "__graft_dv_ri"), "left_anti")
-      val hits = live.where(coalesce(predicate, lit(false)))
-        .select(col("__graft_dv_fn"), col("__graft_dv_ri"))
-        .limit(lim).collect()
-      if (hits.length > cap)
-        return deleteWhere(spark, table, predicate, maxAttempts)
-      if (hits.isEmpty) return None
-      val positions: Map[String, Seq[Long]] = hits.groupBy(_.getString(0))
-        .map { case (name, rows) =>
-          val rel = byName(name)
-          val old = dvsBase.get(rel).map(r =>
-            readDvFile(f, new Path(table, r.path))).getOrElse(Seq.empty)
-          rel -> (old ++ rows.map(_.getLong(1)).toSeq).distinct
-        }
-      // the cap bounds the CUMULATIVE per-file mask, not just this
-      // delete's hits: repeated selective deletes must not grow one
-      // file's sidecar past what the scan machinery budgets for — an
-      // over-cap UNION takes the copy-on-write plan instead, which also
-      // retires that file's mask as a side effect
-      if (positions.values.exists(_.size.toLong > cap))
-        return deleteWhere(spark, table, predicate, maxAttempts)
-      val salt = java.util.UUID.randomUUID().toString.take(8)
-      val dvDir = new Path(table, s"_dv/$salt")
-      f.mkdirs(dvDir)
-      val newDvs: Map[String, DvRef] = positions.map { case (rel, all) =>
-        val name = new Path(rel).getName
-        writeDvFile(f, new Path(dvDir, s"$name.dv"), all)
-        rel -> DvRef(s"_dv/$salt/$name.dv", all.size.toLong)
-      }
-      // dvs-only commit: a noData commit writes no data file, so the
-      // entry advances ONLY the DV map (its delta)
-      val emptyDf = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], readSchema)
-      // cleanup is scoped to PRE-PUBLISH failures only: once the entry
-      // is visible, deleting the salt dir would take live sidecars with
-      // it (the post-publish re-verify below must never trip cleanup)
-      var published: Option[Long] = None
-      try published = Some(commitImpl(spark, emptyDf, table, "delete", None,
-          maxAttempts = 1, requireBase = Some(Some(base)),
-          removePaths = Some(Seq.empty), newDvs = newDvs, noData = true)
-        .getOrElse(
-          sys.error("unreachable: txn-less commit cannot be skipped")))
-      catch {
-        case _: CommitConflict =>
-          f.delete(dvDir, true) // recompute writes a fresh salt dir
-          attempt += 1
-        case e: Throwable =>
-          f.delete(dvDir, true) // failed commit must not orphan sidecars
-          throw e
-      }
-      published.foreach { v =>
-        // post-publish re-verify (the restore/vacuum pattern): a vacuum
-        // that resolved its orphan set before our entry became visible
-        // may have swept the just-written sidecars; their bytes are a
-        // pure function of the positions we still hold, so recreate —
-        // once the entry is published, any NEW vacuum sees them as live
-        newDvs.foreach { case (rel, ref) =>
-          val p = new Path(table, ref.path)
-          if (!f.exists(p)) {
-            f.mkdirs(p.getParent)
-            writeDvFile(f, p, positions(rel))
-          }
-        }
-        return Some(v)
-      }
-    }
-    throw new java.util.ConcurrentModificationException(
-      s"TxnLake.deleteWhereDv: $maxAttempts consecutive concurrent " +
-        s"commits on $table")
-  }
+                    maxAttempts: Int = 10): Option[Long] =
+    maskWhere(spark, table, predicate, None, maxAttempts)
 
   /** Materialize every live deletion vector away — Delta's
     * `REORG TABLE ... APPLY (PURGE)`: rewrite ONLY the masked files
@@ -3901,32 +3766,18 @@ object TxnLake extends LakeFormat {
     * so sibling-index trust (x40) survives a purge, exactly as it
     * survives compaction. No-op (None) when nothing is masked. */
   def purgeDeletionVectors(spark: SparkSession, table: String,
-                           maxAttempts: Int = 10): Option[Long] = {
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val base = latestVersion(spark, table).getOrElse(
-        sys.error(s"TxnLake.purgeDeletionVectors: no committed version"))
-      val files = resolveFiles(spark, table, base)
-      requireLive(spark, table, base, files)
-      val entry = readEntry(spark, table, base)
-      val dvsBase = resolveDvs(spark, table, base) // once per attempt
-      val masked = files.filter(fm => dvsBase.contains(fm.path))
-      if (masked.isEmpty) return None
-      val schema = entry.schemaStruct
-      val (cleanScan, carry) = scanForRewrite(spark, table, masked,
-        subsetReadSchema(spark, table, schema, files), dvsBase,
-        entry.renames)
-      val clean = cleanScan.repartition(masked.size)
-      try return Some(commitImpl(spark, clean, table, "optimize", None,
-          maxAttempts = 1, requireBase = Some(Some(base)),
-          removePaths = Some(masked.map(_.path)), carryRids = carry)
-        .getOrElse(sys.error("unreachable: txn-less commit cannot be skipped")))
-      catch { case _: CommitConflict => attempt += 1 }
+                           maxAttempts: Int = 10): Option[Long] =
+    transactOn(spark, table, "purgeDeletionVectors", maxAttempts) { base =>
+      val snap = new PinnedSnapshot(spark, table, base)
+      val masked = snap.files.filter(fm => snap.dvs.contains(fm.path))
+      if (masked.isEmpty) None
+      else {
+        val (clean, carry) = snap.scanForRewrite(masked)
+        Some(commitImpl(spark, clean.repartition(masked.size), table,
+          "optimize", None, Some(base),
+          removePaths = Some(masked.map(_.path)), carryRids = carry))
+      }
     }
-    throw new java.util.ConcurrentModificationException(
-      s"TxnLake.purgeDeletionVectors: $maxAttempts consecutive concurrent " +
-        s"commits on $table")
-  }
 
   /** Row-level UPDATE — Delta's `UPDATE t SET … WHERE …` in its
     * copy-on-write form, the scalar-DML sibling of [[deleteWhere]] and
@@ -3946,50 +3797,8 @@ object TxnLake extends LakeFormat {
   def updateWhere(spark: SparkSession, table: String, predicate: Column,
                   set: Map[String, Column],
                   maxAttempts: Int = 10): Option[Long] = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit, when}
     require(set.nonEmpty, "TxnLake.updateWhere: empty SET clause")
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val base = latestVersion(spark, table).getOrElse(
-        sys.error(s"TxnLake.updateWhere: no committed version in $table"))
-      val files = resolveFiles(spark, table, base)
-      if (files.isEmpty) return None
-      requireLive(spark, table, base, files)
-      val entry = readEntry(spark, table, base)
-      val schema = entry.schemaStruct
-      val ren = entry.renames
-      val readSchema = subsetReadSchema(spark, table, schema, files)
-      val displayFields = toDisplaySchema(readSchema, ren).fieldNames
-      set.keys.foreach(k => require(displayFields.contains(k),
-        s"TxnLake.updateWhere: SET references unknown column $k"))
-      val sample = new Path(table, files.head.path).toString
-      val pred = resolvedPredicate(spark, sample, predicate,
-        schema.map(toDisplaySchema(_, ren)))
-      val touched = files.filter(fm => mayMatch(displayMeta(ren)(fm), pred))
-      if (touched.isEmpty) return None
-      val hit = coalesce(predicate, lit(false))
-      // an UPDATE changes values, never identity: carried row ids ride
-      // the rewrite verbatim (Delta row tracking's update semantics)
-      val (scanned, carry) = scanForRewrite(spark, table, touched,
-        readSchema, resolveDvs(spark, table, base), ren)
-      val rewritten = scanned
-        .select((displayFields.map { n =>
-          set.get(n) match {
-            case Some(v) => when(hit, v).otherwise(col(n)).as(n)
-            case None => col(n)
-          }
-        }.toIndexedSeq
-          ++ (if (carry) Seq(col(RidCol)) else Seq.empty)): _*)
-        .repartition(touched.size)
-      try return Some(commitImpl(spark, rewritten, table, "update", None,
-          maxAttempts = 1, requireBase = Some(Some(base)),
-          removePaths = Some(touched.map(_.path)), carryRids = carry)
-        .getOrElse(sys.error("unreachable: txn-less commit cannot be skipped")))
-      catch { case _: CommitConflict => attempt += 1 }
-    }
-    throw new java.util.ConcurrentModificationException(
-      s"TxnLake.updateWhere: $maxAttempts consecutive concurrent commits " +
-        s"on $table")
+    rewriteWhere(spark, table, predicate, Some(set), maxAttempts)
   }
 
   /** Row-level UPDATE in MERGE-ON-READ form — the DV sibling of
@@ -4017,128 +3826,165 @@ object TxnLake extends LakeFormat {
   def updateWhereDv(spark: SparkSession, table: String, predicate: Column,
                     set: Map[String, Column],
                     maxAttempts: Int = 10): Option[Long] = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit}
     require(set.nonEmpty, "TxnLake.updateWhereDv: empty SET clause")
-    val cap = spark.conf.getOption("graft.probe.maxDriverKeys")
-      .map(_.toLong).getOrElse(1000000L)
-    val lim = (math.min(math.max(cap, 0L), (Int.MaxValue - 2).toLong) + 1).toInt
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val base = latestVersion(spark, table).getOrElse(
-        sys.error(s"TxnLake.updateWhereDv: no committed version in $table"))
-      val files = resolveFiles(spark, table, base)
-      if (files.isEmpty) return None
-      requireLive(spark, table, base, files)
-      val entry = readEntry(spark, table, base)
-      val schema = entry.schemaStruct
-      val ren = entry.renames
-      val readSchema = subsetReadSchema(spark, table, schema, files)
-      val displayFields = toDisplaySchema(readSchema, ren).fieldNames
-      set.keys.foreach(k => require(displayFields.contains(k),
-        s"TxnLake.updateWhereDv: SET references unknown column $k"))
-      val sample = new Path(table, files.head.path).toString
-      val pred = resolvedPredicate(spark, sample, predicate,
-        schema.map(toDisplaySchema(_, ren)))
-      val touched = files.filter(fm => mayMatch(displayMeta(ren)(fm), pred))
-      if (touched.isEmpty) return None
-      val f = fs(spark, new Path(table))
-      val byName = touched.map(fm => new Path(fm.path).getName -> fm.path)
-        .toMap
-      require(byName.size == touched.size,
-        s"TxnLake.updateWhereDv: duplicate data-file names in $table")
-      // one DV resolution per attempt (see deleteWhereDv): per-file
-      // resolveDvs calls would replay the log O(files) times
-      val dvsBase = resolveDvs(spark, table, base)
-      // a DV update REWRITES nothing, but its appended post-images must
-      // still carry the pre-images' row ids (an update never changes a
-      // row's identity) — the id-resolving scan is scanFilesWithRid's,
-      // with the (file, position) coordinates kept (keepMeta) for the
-      // prior-mask anti-join and the fresh-position collect below; the
-      // masks themselves apply HERE, not in the scan, because this path
-      // needs the raw positions first
-      val carryR = touched.forall(_.brid >= 0L)
-      val baseDf =
-        if (carryR) scanFilesWithRid(spark, table, touched, readSchema,
-          Map.empty, ren, keepMeta = true)
-        else toDisplay(spark.read.schema(readSchema)
-          .parquet(touched.map(fm => new Path(table, fm.path).toString): _*)
-          .withColumn("__graft_dv_fn", col("_metadata.file_name"))
-          .withColumn("__graft_dv_ri", col("_metadata.row_index")), ren)
-      val priorRefs = touched.flatMap(fm =>
-        dvsBase.get(fm.path).map(new Path(fm.path).getName -> _))
-      val live =
-        if (priorRefs.isEmpty) baseDf
-        else baseDf.join(dvPairsDf(spark, table, priorRefs),
-          Seq("__graft_dv_fn", "__graft_dv_ri"), "left_anti")
-      val hit = live.where(coalesce(predicate, lit(false)))
-      val hits = hit.select(col("__graft_dv_fn"), col("__graft_dv_ri"))
-        .limit(lim).collect()
-      if (hits.length > cap)
-        return updateWhere(spark, table, predicate, set, maxAttempts)
-      if (hits.isEmpty) return None
-      val positions: Map[String, Seq[Long]] = hits.groupBy(_.getString(0))
-        .map { case (name, rows) =>
-          val rel = byName(name)
-          val old = dvsBase.get(rel).map(r =>
-            readDvFile(f, new Path(table, r.path))).getOrElse(Seq.empty)
-          rel -> (old ++ rows.map(_.getLong(1)).toSeq).distinct
+    maskWhere(spark, table, predicate, Some(set), maxAttempts)
+  }
+
+  /** The copy-on-write DML body of [[deleteWhere]] (`set` = None) and
+    * [[updateWhere]]: rewrite the stats-scoped files with the TRUE rows
+    * dropped, or with `set` applied to them, and carry every other file
+    * verbatim. None when no file's stats admit the predicate. */
+  private def rewriteWhere(spark: SparkSession, table: String,
+                           predicate: Column,
+                           set: Option[Map[String, Column]],
+                           maxAttempts: Int): Option[Long] = {
+    import org.apache.spark.sql.functions.{coalesce, col, lit, not, when}
+    val op = if (set.isEmpty) "delete" else "update"
+    transactOn(spark, table, s"${op}Where", maxAttempts) { base =>
+      val snap = new PinnedSnapshot(spark, table, base)
+      if (snap.files.nonEmpty)
+        set.foreach(snap.requireSetColumns(s"${op}Where", _))
+      val touched = snap.scoped(predicate)
+      if (touched.isEmpty) None
+      else {
+        val hit = coalesce(predicate, lit(false))
+        // read UNDER the live masks: a rewritten file's deletion vector
+        // dies with it, so its masked rows must not be resurrected here —
+        // and WITH row ids when the files track them, so surviving rows
+        // keep their identity through the rewrite (an UPDATE changes
+        // values, never identity — Delta row tracking's update semantics)
+        val (scanned, carry) = snap.scanForRewrite(touched)
+        val rewritten = set match {
+          case None => scanned.where(not(hit))
+          case Some(s) => scanned.select((snap.displayFields.map { n =>
+            s.get(n) match {
+              case Some(v) => when(hit, v).otherwise(col(n)).as(n)
+              case None => col(n)
+            }
+          } ++ (if (carry) Seq(col(RidCol)) else Seq.empty)): _*)
         }
-      if (positions.values.exists(_.size.toLong > cap))
-        return updateWhere(spark, table, predicate, set, maxAttempts)
-      val salt = java.util.UUID.randomUUID().toString.take(8)
-      val dvDir = new Path(table, s"_dv/$salt")
-      f.mkdirs(dvDir)
-      val newDvs: Map[String, DvRef] = positions.map { case (rel, all) =>
-        val name = new Path(rel).getName
-        writeDvFile(f, new Path(dvDir, s"$name.dv"), all)
-        rel -> DvRef(s"_dv/$salt/$name.dv", all.size.toLong)
-      }
-      // the post-images: the matched live rows with SET applied —
-      // written as the commit's (small) added file, carrying the
-      // pre-images' row ids so identity survives the merge-on-read hop
-      val post = hit.select((displayFields.map { n =>
-        set.get(n) match {
-          case Some(v) => v.as(n)
-          case None => col(n)
-        }
-      }.toIndexedSeq
-        ++ (if (carryR) Seq(col(RidCol)) else Seq.empty)): _*)
-        .repartition(1)
-      // cleanup scoped to PRE-PUBLISH failures (see deleteWhereDv) — and
-      // a CHECK-constraint refusal lands here too: the violating commit
-      // aborts inside commitImpl, so its masks must not linger as
-      // orphans until a vacuum
-      var published: Option[Long] = None
-      try published = Some(commitImpl(spark, post, table, "update", None,
-          maxAttempts = 1, requireBase = Some(Some(base)),
-          removePaths = Some(Seq.empty), newDvs = newDvs,
-          carryRids = carryR)
-        .getOrElse(
-          sys.error("unreachable: txn-less commit cannot be skipped")))
-      catch {
-        case _: CommitConflict =>
-          f.delete(dvDir, true) // recompute writes a fresh salt dir
-          attempt += 1
-        case e: Throwable =>
-          f.delete(dvDir, true)
-          throw e
-      }
-      published.foreach { v =>
-        // post-publish re-verify (the deleteWhereDv pattern): recreate
-        // any sidecar a racing vacuum swept before our entry published
-        newDvs.foreach { case (rel, ref) =>
-          val p = new Path(table, ref.path)
-          if (!f.exists(p)) {
-            f.mkdirs(p.getParent)
-            writeDvFile(f, p, positions(rel))
-          }
-        }
-        return Some(v)
+        Some(commitImpl(spark, rewritten.repartition(touched.size), table,
+          op, None, Some(base), removePaths = Some(touched.map(_.path)),
+          carryRids = carry))
       }
     }
-    throw new java.util.ConcurrentModificationException(
-      s"TxnLake.updateWhereDv: $maxAttempts consecutive concurrent " +
-        s"commits on $table")
+  }
+
+  /** The merge-on-read DML body of [[deleteWhereDv]] (`set` = None) and
+    * [[updateWhereDv]]: mask the matched live positions in fresh per-file
+    * sidecars and commit, in one entry, the masks plus the post-images —
+    * nothing for a delete (a noData commit: no data file moves), the
+    * matched rows with `set` applied for an update. Over the
+    * `graft.probe.maxDriverKeys` cap — this DML's matches or any file's
+    * cumulative mask — it takes [[rewriteWhere]]'s copy-on-write plan
+    * instead. */
+  private def maskWhere(spark: SparkSession, table: String,
+                        predicate: Column, set: Option[Map[String, Column]],
+                        maxAttempts: Int): Option[Long] = {
+    import org.apache.spark.sql.functions.{coalesce, col, lit}
+    val op = if (set.isEmpty) "delete" else "update"
+    val api = s"${op}WhereDv"
+    val cap = graft.plans.ProbePlanner.maxDriverKeys(spark)
+    val lim = (math.min(math.max(cap, 0L), (Int.MaxValue - 2).toLong) + 1).toInt
+    transactOn(spark, table, api, maxAttempts) { base =>
+      val snap = new PinnedSnapshot(spark, table, base)
+      if (snap.files.nonEmpty) set.foreach(snap.requireSetColumns(api, _))
+      val touched = snap.scoped(predicate)
+      if (touched.isEmpty) None
+      else {
+        val f = fs(spark, new Path(table))
+        val byName = touched.map(fm => new Path(fm.path).getName -> fm.path)
+          .toMap
+        require(byName.size == touched.size,
+          s"TxnLake.$api: duplicate data-file names in $table")
+        // an update's appended post-images must carry the pre-images' row
+        // ids (an update never changes a row's identity) — the
+        // id-resolving scan is scanFilesWithRid's, with the (file,
+        // position) coordinates kept (keepMeta) for the prior-mask
+        // anti-join and the fresh-position collect below; the masks
+        // themselves apply HERE, not in the scan, because this path needs
+        // the raw positions first
+        val carry = set.isDefined && touched.forall(_.brid >= 0L)
+        val baseDf =
+          if (carry) scanFilesWithRid(spark, table, touched, snap.readSchema,
+            Map.empty, snap.ren, keepMeta = true)
+          else toDisplay(spark.read.schema(snap.readSchema)
+            .parquet(touched.map(fm => new Path(table, fm.path).toString): _*)
+            .withColumn("__graft_dv_fn", col("_metadata.file_name"))
+            .withColumn("__graft_dv_ri", col("_metadata.row_index")), snap.ren)
+        // matching LIVE positions: drop already-masked positions (a row
+        // never double-deletes), keep TRUE
+        val priorRefs = touched.flatMap(fm =>
+          snap.dvs.get(fm.path).map(new Path(fm.path).getName -> _))
+        val live =
+          if (priorRefs.isEmpty) baseDf
+          else baseDf.join(dvPairsDf(spark, table, priorRefs),
+            Seq("__graft_dv_fn", "__graft_dv_ri"), "left_anti")
+        val hit = live.where(coalesce(predicate, lit(false)))
+        val hits = hit.select(col("__graft_dv_fn"), col("__graft_dv_ri"))
+          .limit(lim).collect()
+        lazy val positions: Map[String, Seq[Long]] =
+          hits.groupBy(_.getString(0)).map { case (name, rows) =>
+            val rel = byName(name)
+            val old = snap.dvs.get(rel).map(r =>
+              readDvFile(f, new Path(table, r.path))).getOrElse(Seq.empty)
+            rel -> (old ++ rows.map(_.getLong(1)).toSeq).distinct
+          }
+        // the cap bounds the CUMULATIVE per-file mask, not just this
+        // DML's hits: repeated selective deletes must not grow one file's
+        // sidecar past what the scan machinery budgets for — an over-cap
+        // UNION takes the copy-on-write plan instead, which also retires
+        // that file's mask as a side effect
+        if (hits.length > cap || positions.values.exists(_.size.toLong > cap))
+          rewriteWhere(spark, table, predicate, set, maxAttempts)
+        else if (hits.isEmpty) None
+        else {
+          val salt = java.util.UUID.randomUUID().toString.take(8)
+          val dvDir = new Path(table, s"_dv/$salt")
+          f.mkdirs(dvDir)
+          val newDvs: Map[String, DvRef] = positions.map { case (rel, all) =>
+            val name = new Path(rel).getName
+            writeDvFile(f, new Path(dvDir, s"$name.dv"), all)
+            rel -> DvRef(s"_dv/$salt/$name.dv", all.size.toLong)
+          }
+          // the post-images: the matched live rows with SET applied —
+          // written as the commit's (small) added file, carrying the
+          // pre-images' row ids so identity survives the merge-on-read hop
+          val post = set match {
+            case None => spark.createDataFrame(
+              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+              snap.readSchema)
+            case Some(s) => hit.select((snap.displayFields.map(n =>
+                s.get(n).map(_.as(n)).getOrElse(col(n)))
+              ++ (if (carry) Seq(col(RidCol)) else Seq.empty)): _*)
+              .repartition(1)
+          }
+          // cleanup is scoped to PRE-PUBLISH failures only — a conflict
+          // (the recompute writes a fresh salt dir) or a refused commit
+          // (a CHECK-constraint violation aborts inside commitImpl) must
+          // not orphan sidecars, but once the entry is visible, deleting
+          // the salt dir would take live sidecars with it
+          val v =
+            try commitImpl(spark, post, table, op, None, Some(base),
+              removePaths = Some(Seq.empty), newDvs = newDvs,
+              noData = set.isEmpty, carryRids = carry)
+            catch { case e: Throwable => f.delete(dvDir, true); throw e }
+          // post-publish re-verify (the restore/vacuum pattern): a vacuum
+          // that resolved its orphan set before our entry became visible
+          // may have swept the just-written sidecars; their bytes are a
+          // pure function of the positions we still hold, so recreate —
+          // once the entry is published, any NEW vacuum sees them as live
+          newDvs.foreach { case (rel, ref) =>
+            val p = new Path(table, ref.path)
+            if (!f.exists(p)) {
+              f.mkdirs(p.getParent)
+              writeDvFile(f, p, positions(rel))
+            }
+          }
+          Some(v)
+        }
+      }
+    }
   }
 
   /** On-disk byte size of every file in the snapshot, table-relative path
@@ -4165,7 +4011,7 @@ object TxnLake extends LakeFormat {
     * under a periodic scheduler.
     *
     * Transactionally identical to [[optimize]]: the rewrite is pinned to
-    * its read version (requireBase), so a concurrent append/overwrite
+    * its read version ([[transact]]), so a concurrent append/overwrite
     * forces a recompute from the fresh snapshot rather than resurrecting
     * the files the concurrent writer removed — and the small files are
     * re-chosen from that fresh snapshot. Reads the small files under the
@@ -4183,40 +4029,28 @@ object TxnLake extends LakeFormat {
                         minFileBytes: Long,
                         targetFileBytes: Long = 128L << 20,
                         maxAttempts: Int = 10,
-                        within: Option[Set[String]] = None): Option[Long] = {
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val base = latestVersion(spark, table).getOrElse(
-        sys.error(s"TxnLake.compactSmallFiles: no committed version in $table"))
+                        within: Option[Set[String]] = None): Option[Long] =
+    transactOn(spark, table, "compactSmallFiles", maxAttempts) { base =>
       // ONE snapshot resolution per attempt feeds the size listing, the
       // pack-set filter, and the legacy-schema fallback alike
-      val snapFiles = resolveFiles(spark, table, base)
+      val snap = new PinnedSnapshot(spark, table, base)
       val fsys = fs(spark, new Path(table))
-      val sized = snapFiles.map(fm => fm.path ->
-        fsys.getFileStatus(new Path(table, fm.path)).getLen)
-      val small = sized.filter { case (p, bytes) =>
-        bytes < minFileBytes && within.forall(_.contains(p)) }
-      if (small.size < 2) return None
-      val numOut = math.max(1L,
-        (small.map(_._2).sum + targetFileBytes - 1) / targetFileBytes).toInt
-      val entry = readEntry(spark, table, base)
-      val schema = entry.schemaStruct
-      val smallSet = small.map(_._1).toSet
-      val (packedScan, carry) = scanForRewrite(spark, table,
-        snapFiles.filter(fm => smallSet(fm.path)),
-        subsetReadSchema(spark, table, schema, snapFiles),
-        resolveDvs(spark, table, base), entry.renames)
-      val packed = packedScan.repartition(numOut)
-      try return Some(commitImpl(spark, packed, table, "optimize", None,
-          maxAttempts = 1, requireBase = Some(Some(base)),
-          removePaths = Some(small.map(_._1)), carryRids = carry)
-        .getOrElse(sys.error("unreachable: txn-less commit cannot be skipped")))
-      catch { case _: CommitConflict => attempt += 1 }
+      val small = snap.files.map(fm => fm.path ->
+          fsys.getFileStatus(new Path(table, fm.path)).getLen)
+        .filter { case (p, bytes) =>
+          bytes < minFileBytes && within.forall(_.contains(p)) }
+      if (small.size < 2) None
+      else {
+        val numOut = math.max(1L,
+          (small.map(_._2).sum + targetFileBytes - 1) / targetFileBytes).toInt
+        val smallSet = small.map(_._1).toSet
+        val (packed, carry) =
+          snap.scanForRewrite(snap.files.filter(fm => smallSet(fm.path)))
+        Some(commitImpl(spark, packed.repartition(numOut), table, "optimize",
+          None, Some(base), removePaths = Some(small.map(_._1)),
+          carryRids = carry))
+      }
     }
-    throw new java.util.ConcurrentModificationException(
-      s"TxnLake.compactSmallFiles: $maxAttempts consecutive concurrent " +
-        s"commits on $table")
-  }
 
   // ---- restore --------------------------------------------------------
 
@@ -4267,12 +4101,12 @@ object TxnLake extends LakeFormat {
                                    beforePublish: () => Unit,
                                    beforeCompensate: () => Unit = () => ()): Long = {
     val f = fs(spark, new Path(table))
-    val salt = java.util.UUID.randomUUID().toString.take(8)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val committed = committedVersions(spark, table)
-      require(committed.contains(toVersion),
+    transact(spark, table, "restore", maxAttempts) { base =>
+      // the log is gap-free (a published entry is never deleted), so
+      // every version up to the latest is in it
+      require(toVersion >= 0 && base.exists(toVersion <= _),
         s"TxnLake.restore: version $toVersion is not in $table's log")
+      val lastV = base.get
       val target = resolveFiles(spark, table, toVersion)
       requireLive(spark, table, toVersion, target)
       // the restored snapshot's deletion-vector sidecars must be as live
@@ -4285,61 +4119,48 @@ object TxnLake extends LakeFormat {
               s"TxnLake.restore: version $toVersion's deletion-vector " +
                 s"sidecar ${r.path} has been vacuumed")
         }
-      val lastV = committed.last
-      if (lastV == toVersion) return lastV
-      val lastEntry = readEntry(spark, table, lastV)
-      // carry the cumulative txn state forward; a legacy log (no map yet)
-      // gets the same one-time marker fold commitImpl performs
-      val txns =
-        if (lastEntry.hasTxns) lastEntry.txns
-        else committed.foldLeft(Map.empty[String, Long]) { (m, v) =>
-          readEntry(spark, table, v).txn match {
-            case Some((a, b)) if m.get(a).forall(_ < b) => m + (a -> b)
-            case _ => m
-          }
-        }
-      // remove EVERYTHING current and add the full target list: delta
-      // replay then can't double-count files the two snapshots share
-      val currentMeta = resolveFiles(spark, table, lastV)
-      val current = currentMeta.map(_.path)
-      val next = lastV + 1
-      val targetEntry = readEntry(spark, table, toVersion)
-      val targetDvs = resolveDvs(spark, table, toVersion)
-      requireDvLive(targetDvs)
-      val entry = render(Entry(next, "restore", target, current, None, None,
-        txns, hasTxns = true,
-        schemaJson = targetEntry.schemaJson,
-        // the bloom-column declaration is a table property — carry the
-        // union so a restore never silently un-indexes later commits
-        bloomCols = (lastEntry.bloomCols ++ targetEntry.bloomCols).distinct,
-        // the restored snapshot's deletion vectors come back with it —
-        // its logical rows are files MINUS masks, both or neither
-        dvs = targetDvs,
-        // drop tombstones restore with their schema: the target's old
-        // files are back in the snapshot, so ITS tombstone set is the
-        // one that guards them; constraints likewise restore with the
-        // data they were validated against
-        droppedCols = targetEntry.droppedCols,
-        constraints = targetEntry.constraints,
-        genCols = targetEntry.genCols,
-        // identity properties restore with their start/step, but the hwm
-        // MONOTONE-merges against the latest entry's: values handed out
-        // by rolled-past commits are never reissued
-        identityCols = mergeIdentityMonotone(targetEntry.identityCols,
-          lastEntry.identityCols),
-        // the row-id mark is monotone like the identity hwm: ids handed
-        // out by rolled-past commits are never reissued after a restore
-        ridHwm = math.max(targetEntry.ridHwm, lastEntry.ridHwm),
-        // display names restore with their snapshot (era-correct, like
-        // the schema itself)
-        renames = targetEntry.renames,
-        ts = nextTs(Some(lastEntry))))
-      val tmp = new Path(logDir(table), s"v$next.json.tmp-$salt")
-      val out = f.create(tmp, false)
-      try out.write(entry.getBytes("UTF-8")) finally out.close()
-      beforePublish()
-      val dst = new Path(logDir(table), s"v$next.json")
-      if (publishExclusive(f, tmp, dst)) {
+      if (lastV == toVersion) Some(lastV)
+      else {
+        val lastEntry = readEntry(spark, table, lastV)
+        // carry the cumulative txn state forward (a legacy log gets the
+        // same one-time marker fold commitImpl performs)
+        val txns = carriedTxns(spark, table, lastV)
+        // remove EVERYTHING current and add the full target list: delta
+        // replay then can't double-count files the two snapshots share
+        val currentMeta = resolveFiles(spark, table, lastV)
+        val current = currentMeta.map(_.path)
+        val next = lastV + 1
+        val targetEntry = readEntry(spark, table, toVersion)
+        val targetDvs = resolveDvs(spark, table, toVersion)
+        requireDvLive(targetDvs)
+        publishEntry(f, table, next, render(Entry(next, "restore", target,
+          current, None, None, txns, hasTxns = true,
+          schemaJson = targetEntry.schemaJson,
+          // the bloom-column declaration is a table property — carry the
+          // union so a restore never silently un-indexes later commits
+          bloomCols = (lastEntry.bloomCols ++ targetEntry.bloomCols).distinct,
+          // the restored snapshot's deletion vectors come back with it —
+          // its logical rows are files MINUS masks, both or neither
+          dvs = targetDvs,
+          // drop tombstones restore with their schema: the target's old
+          // files are back in the snapshot, so ITS tombstone set is the
+          // one that guards them; constraints likewise restore with the
+          // data they were validated against
+          droppedCols = targetEntry.droppedCols,
+          constraints = targetEntry.constraints,
+          genCols = targetEntry.genCols,
+          // identity properties restore with their start/step, but the
+          // hwm MONOTONE-merges against the latest entry's: values handed
+          // out by rolled-past commits are never reissued
+          identityCols = mergeIdentityMonotone(targetEntry.identityCols,
+            lastEntry.identityCols),
+          // the row-id mark is monotone like the identity hwm: ids handed
+          // out by rolled-past commits are never reissued after a restore
+          ridHwm = math.max(targetEntry.ridHwm, lastEntry.ridHwm),
+          // display names restore with their snapshot (era-correct, like
+          // the schema itself)
+          renames = targetEntry.renames,
+          ts = nextTs(Some(lastEntry)))), beforePublish)
         // Re-verify the target's files AFTER the publish: a vacuum that
         // resolved its live set between our pre-check and this publish may
         // have reclaimed them (the restore/vacuum TOCTOU). Once our entry
@@ -4365,8 +4186,7 @@ object TxnLake extends LakeFormat {
             // with the pre-restore snapshot is still that snapshot's —
             // removing it would vanish live rows from the log
             compensateRestore(spark, f, table, next, currentMeta,
-              target.map(_.path)
-                .filterNot(currentMeta.map(_.path).toSet),
+              target.map(_.path).filterNot(current.toSet),
               txns, lastEntry.schemaJson, maxAttempts,
               priorDvs = resolveDvs(spark, table, lastV))
             throw new IllegalStateException(
@@ -4375,12 +4195,9 @@ object TxnLake extends LakeFormat {
                 s"commit restored the pre-restore snapshot", e)
         }
         maybeCheckpoint(spark, f, table, next)
-        return next
+        Some(next)
       }
-      f.delete(tmp, false) // lost the race: re-list and retry at N+1
-      attempt += 1
-    }
-    sys.error(s"TxnLake: gave up after $maxAttempts commit conflicts on $table")
+    }.get
   }
 
   /** Publish the metadata-only commit that undoes a restore whose target
@@ -4407,11 +4224,8 @@ object TxnLake extends LakeFormat {
                                 txns: Map[String, Long],
                                 schemaJson: Option[String],
                                 maxAttempts: Int,
-                                priorDvs: Map[String, DvRef] = Map.empty): Unit = {
-    val salt = java.util.UUID.randomUUID().toString.take(8)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val lastV = committedVersions(spark, table).last
+                                priorDvs: Map[String, DvRef] = Map.empty): Unit =
+    try transactOn(spark, table, "restore", maxAttempts) { lastV =>
       val next = lastV + 1
       val lastEntry =
         if (lastV == failedVersion) None
@@ -4421,56 +4235,55 @@ object TxnLake extends LakeFormat {
       val stillReferenced = removePaths.filter(currentPaths)
       // a chained snapshot replacement already superseded the failed
       // restore — nothing live references the reclaimed files
-      if (stillReferenced.isEmpty && lastV != failedVersion) return
-      val addBack = priorSnapshot.filterNot(fm => currentPaths(fm.path))
-      val carried = lastEntry.map(_.txns).getOrElse(txns)
-      val mergedTxns = (carried.keySet ++ txns.keySet).map { k =>
-        k -> math.max(carried.getOrElse(k, Long.MinValue),
-          txns.getOrElse(k, Long.MinValue))
-      }.toMap
-      val latestSchema = lastEntry.flatMap(_.schemaJson).orElse(schemaJson)
-      val outSchema = (latestSchema, schemaJson) match {
-        case (Some(l), Some(p)) if l != p =>
-          Some(mergedSchema(
-            Some(DataType.fromJson(l).asInstanceOf[StructType]),
-            DataType.fromJson(p).asInstanceOf[StructType], "append").json)
-        case (l, p) => l.orElse(p)
-      }
-      val entry = render(Entry(next, "restore", addBack, stillReferenced,
-        None, None, mergedTxns, hasTxns = true, schemaJson = outSchema,
-        bloomCols = readEntry(spark, table, lastV).bloomCols,
-        // masks follow their files: survivors keep the current map's,
-        // added-back files return with the pre-restore snapshot's
-        dvs = (resolveDvs(spark, table, lastV)
-          -- stillReferenced) ++
-          priorDvs.filter(kv => addBack.exists(_.path == kv._1)),
-        // conservative union: the compensated snapshot carries files
-        // from both lineages, so both tombstone sets guard it
-        droppedCols = (lastEntry.map(_.droppedCols).getOrElse(Seq.empty) ++
-          readEntry(spark, table, lastV).droppedCols).distinct,
-        constraints = readEntry(spark, table, lastV).constraints,
-        genCols = readEntry(spark, table, lastV).genCols,
-        identityCols = readEntry(spark, table, lastV).identityCols,
-        ridHwm = readEntry(spark, table, lastV).ridHwm,
-        renames = readEntry(spark, table, lastV).renames,
-        // monotone vs the ACTUAL last entry — lastEntry is None exactly
-        // when the failed restore's own entry is latest, and that entry
-        // carries a ts the compensation must still exceed
-        ts = nextTs(lastEntry.orElse(Some(readEntry(spark, table, lastV))))))
-      val tmp = new Path(logDir(table), s"v$next.json.tmp-$salt")
-      val out = f.create(tmp, false)
-      try out.write(entry.getBytes("UTF-8")) finally out.close()
-      if (publishExclusive(f, tmp, new Path(logDir(table), s"v$next.json"))) {
+      if (stillReferenced.isEmpty && lastV != failedVersion) None
+      else {
+        val addBack = priorSnapshot.filterNot(fm => currentPaths(fm.path))
+        val carried = lastEntry.map(_.txns).getOrElse(txns)
+        val mergedTxns = (carried.keySet ++ txns.keySet).map { k =>
+          k -> math.max(carried.getOrElse(k, Long.MinValue),
+            txns.getOrElse(k, Long.MinValue))
+        }.toMap
+        val latestSchema = lastEntry.flatMap(_.schemaJson).orElse(schemaJson)
+        val outSchema = (latestSchema, schemaJson) match {
+          case (Some(l), Some(p)) if l != p =>
+            Some(mergedSchema(
+              Some(DataType.fromJson(l).asInstanceOf[StructType]),
+              DataType.fromJson(p).asInstanceOf[StructType], "append").json)
+          case (l, p) => l.orElse(p)
+        }
+        val latest = readEntry(spark, table, lastV)
+        publishEntry(f, table, next, render(Entry(next, "restore", addBack,
+          stillReferenced, None, None, mergedTxns, hasTxns = true,
+          schemaJson = outSchema,
+          bloomCols = latest.bloomCols,
+          // masks follow their files: survivors keep the current map's,
+          // added-back files return with the pre-restore snapshot's
+          dvs = (resolveDvs(spark, table, lastV)
+            -- stillReferenced) ++
+            priorDvs.filter(kv => addBack.exists(_.path == kv._1)),
+          // conservative union: the compensated snapshot carries files
+          // from both lineages, so both tombstone sets guard it
+          droppedCols = (lastEntry.map(_.droppedCols).getOrElse(Seq.empty) ++
+            latest.droppedCols).distinct,
+          constraints = latest.constraints,
+          genCols = latest.genCols,
+          identityCols = latest.identityCols,
+          ridHwm = latest.ridHwm,
+          renames = latest.renames,
+          // monotone vs the ACTUAL last entry — lastEntry is None exactly
+          // when the failed restore's own entry is latest, and that entry
+          // carries a ts the compensation must still exceed
+          ts = nextTs(Some(latest)))))
         maybeCheckpoint(spark, f, table, next)
-        return
+        Some(next)
       }
-      f.delete(tmp, false)
-      attempt += 1
+    } catch {
+      case e: java.util.ConcurrentModificationException =>
+        throw new RuntimeException(s"TxnLake: compensating restore on " +
+          s"$table gave up after $maxAttempts conflicts — manual log " +
+          "repair required (latest snapshot references vacuum-reclaimed " +
+          "files)", e)
     }
-    sys.error(s"TxnLake: compensating restore on $table gave up after " +
-      s"$maxAttempts conflicts — manual log repair required (latest " +
-      s"snapshot references vacuum-reclaimed files)")
-  }
 
   // ---- ALTER TABLE (metadata-only schema changes) ---------------------
 
@@ -4932,37 +4745,28 @@ object TxnLake extends LakeFormat {
   private def alterSchemaWith(spark: SparkSession, table: String, api: String,
                               maxAttempts: Int)
                              (change: (StructType, Entry) => AlterSpec)
-      : Long = {
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val base = latestVersion(spark, table).getOrElse(
-        sys.error(s"TxnLake.$api: no committed version in $table"))
+      : Long =
+    transactOn(spark, table, api, maxAttempts) { base =>
       val entry = readEntry(spark, table, base)
       val cur = subsetReadSchema(spark, table, entry.schemaStruct,
         resolveFiles(spark, table, base))
       val spec = change(cur, entry)
       val emptyDf = spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], spec.schema)
-      try return commitImpl(spark, emptyDf, table, "metadata", None,
-          maxAttempts = 1, requireBase = Some(Some(base)),
-          removePaths = Some(Seq.empty), noData = true,
-          schemaOverride = Some(spec.schema),
-          dropBloomCols = spec.dropBlooms,
-          tombstoneCols = spec.tombstones,
-          newConstraints = spec.addConstraints,
-          dropConstraintNames = spec.dropConstraints,
-          newGenCols = spec.addGenCols,
-          dropGenColNames = spec.dropGenCols,
-          newIdentityCols = spec.addIdentity,
-          dropIdentityColNames = spec.dropIdentity,
-          newRenames = spec.addRenames,
-          dropRenames = spec.dropRenames)
-        .getOrElse(sys.error("unreachable: txn-less commit cannot be skipped"))
-      catch { case _: CommitConflict => attempt += 1 }
-    }
-    throw new java.util.ConcurrentModificationException(
-      s"TxnLake.$api: $maxAttempts consecutive concurrent commits on $table")
-  }
+      Some(commitImpl(spark, emptyDf, table, "metadata", None, Some(base),
+        removePaths = Some(Seq.empty), noData = true,
+        schemaOverride = Some(spec.schema),
+        dropBloomCols = spec.dropBlooms,
+        tombstoneCols = spec.tombstones,
+        newConstraints = spec.addConstraints,
+        dropConstraintNames = spec.dropConstraints,
+        newGenCols = spec.addGenCols,
+        dropGenColNames = spec.dropGenCols,
+        newIdentityCols = spec.addIdentity,
+        dropIdentityColNames = spec.dropIdentity,
+        newRenames = spec.addRenames,
+        dropRenames = spec.dropRenames))
+    }.get
 
   // ---- introspection --------------------------------------------------
 
@@ -5180,11 +4984,8 @@ object TxnLake extends LakeFormat {
       ridHwm = srcEntry.ridHwm,
       renames = srcEntry.renames,
       ts = nextTs(None)))
-    val tmp = new Path(logDir(target), s"v0.json.tmp-$salt")
-    val out = f.create(tmp, false)
-    try out.write(entry.getBytes("UTF-8")) finally out.close()
-    if (!publishExclusive(f, tmp, new Path(logDir(target), "v0.json"))) {
-      f.delete(tmp, false)
+    try publishEntry(f, target, 0L, entry)
+    catch { case _: CommitConflict =>
       sys.error(s"TxnLake.cloneTable: a concurrent writer founded $target " +
         "first — clone refuses to merge into an existing table")
     }

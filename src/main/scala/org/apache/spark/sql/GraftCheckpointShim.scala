@@ -64,12 +64,8 @@ object GraftCheckpointShim {
     * broadcast payload, so the threshold comparison errs conservative.
     * Falls back to the unknown-stats leaf when the blocks cannot be
     * found (nothing cached — e.g. a lazy checkpoint). */
-  private val measuredPins: Boolean =
-    !sys.env.get("SPARK_GRAFT_MEASURED_PINS").contains("0")
-
   def pinWithMeasuredStats(df: Dataset[Row]): Dataset[Row] = {
     val ck = df.localCheckpoint()
-    if (!measuredPins) return dropCarriedStats(ck)
     ck.queryExecution.logical match {
       case lr: LogicalRDD =>
         val session = ck.sparkSession.asInstanceOf[CSparkSession]

@@ -13,7 +13,10 @@ import scala.util.chaining._
   * their own suites (TxnLakeIdentitySpec, TxnLakeRenameSpec); this
   * matrix drives the remaining pairs the verdict named through one
   * shared race harness: DV-delete vs merge, update vs OPTIMIZE,
-  * rename vs a CDF reader, restore vs append. */
+  * rename vs a CDF reader, restore vs append. A deterministic row
+  * drives every writer of the optimistic loop through the
+  * `withBeforeCommit` seam: one racing append, then a racer on every
+  * attempt. */
 class TxnLakeConflictMatrixSpec extends SparkSpec {
 
   private def fresh(): String =
@@ -128,6 +131,107 @@ class TxnLakeConflictMatrixSpec extends SparkSpec {
           s"(A=${ea.map(_.getClass.getSimpleName)}, " +
           s"B=${eb.map(_.getClass.getSimpleName)}): got ${got.take(8)}… " +
           s"size ${got.size}, allowed sizes ${allowed.map(_.size)}")
+    }
+  }
+
+  /** One writer routed through the optimistic loop: `run(t, n)` drives it
+    * with `maxAttempts = n` on a [[found]] table (after `prep`), and
+    * `expect` maps the rows the table holds when it starts to the rows
+    * the writer must leave. `dv` writers land `_dv/<salt>` sidecars. */
+  private case class Writer(api: String, run: (String, Int) => Unit,
+                            expect: Seq[(Long, String)] => Seq[(Long, String)],
+                            prep: String => Unit = _ => (),
+                            dv: Boolean = false)
+
+  private def saltDirs(t: String): Int = {
+    val dv = new java.io.File(t, "_dv")
+    if (dv.isDirectory) dv.listFiles().count(_.isDirectory) else 0
+  }
+
+  test("conflict matrix: every routed writer recomputes over an append " +
+    "racing its first attempt, and refuses loudly — naming op and table " +
+    "— when a racer beats every attempt") {
+    import spark.implicits._
+    val race = (1000L, "race")
+    def append(t: String): Long = TxnLake.commit(spark,
+      Seq(race).toDF("k", "v").coalesce(1), t, "append")
+    val fresh2k = Seq((2000L, "c"))
+    val writers = Seq(
+      Writer("commit", (t, n) => TxnLake.commit(spark,
+          fresh2k.toDF("k", "v").coalesce(1), t, "append", maxAttempts = n),
+        _ ++ fresh2k),
+      Writer("commitOnce", (t, n) => TxnLake.commitOnce(spark,
+          fresh2k.toDF("k", "v").coalesce(1), t, "append", "app", 1L,
+          maxAttempts = n),
+        _ ++ fresh2k),
+      Writer("optimize",
+        (t, n) => TxnLake.optimize(spark, t, numFiles = 2, maxAttempts = n),
+        identity),
+      Writer("optimizeWhere",
+        (t, n) => TxnLake.optimizeWhere(spark, t, col("k") < 40L,
+          maxAttempts = n), identity),
+      Writer("compactSmallFiles",
+        (t, n) => TxnLake.compactSmallFiles(spark, t, 1L << 30,
+          maxAttempts = n), identity),
+      Writer("deleteWhere",
+        (t, n) => TxnLake.deleteWhere(spark, t, col("k") === 5L, n),
+        _.filterNot(_._1 == 5L)),
+      Writer("deleteWhereDv",
+        (t, n) => TxnLake.deleteWhereDv(spark, t, col("k") === 5L, n),
+        _.filterNot(_._1 == 5L), dv = true),
+      Writer("updateWhere",
+        (t, n) => TxnLake.updateWhere(spark, t, col("k") === 5L,
+          Map("v" -> lit("u")), n),
+        updated(_, 5L, 5L)),
+      Writer("updateWhereDv",
+        (t, n) => TxnLake.updateWhereDv(spark, t, col("k") === 5L,
+          Map("v" -> lit("u")), n),
+        updated(_, 5L, 5L), dv = true),
+      Writer("purgeDeletionVectors",
+        (t, n) => TxnLake.purgeDeletionVectors(spark, t, n),
+        identity, prep = t => TxnLake.deleteWhereDv(spark, t, col("k") === 7L)),
+      Writer("addColumn",
+        (t, n) => TxnLake.addColumn(spark, t, "extra",
+          org.apache.spark.sql.types.StringType, n), identity),
+      // restore-to-v0 recomputed AFTER the append is the serial order
+      // append-then-restore: the racer's rows leave the snapshot, its
+      // commit stays in the history
+      Writer("restore", (t, n) => TxnLake.restore(spark, t, 0L, n),
+        _ => base.take(20)))
+    writers.foreach { w =>
+      val t = fresh()
+      found(t)
+      w.prep(t)
+      val pre = rowsOf(t)
+      var racer = -1L
+      var attempts = 0
+      TxnLake.withBeforeCommit { () =>
+        attempts += 1
+        if (racer < 0) racer = append(t)
+      } { w.run(t, 10) }
+      assert(attempts == 2 &&
+        TxnLake.latestVersion(spark, t).contains(racer + 1),
+        s"[${w.api}] must conflict once and recompute on top of the " +
+          s"racer (attempts=$attempts, racer=v$racer, " +
+          s"latest=${TxnLake.latestVersion(spark, t)})")
+      assert(rowsOf(t) == w.expect((pre :+ race).sortBy(_._1)),
+        s"[${w.api}] lost or mangled rows: ${rowsOf(t).take(8)}…")
+      assert(TxnLake.readVersion(spark, t, racer).collect().length ==
+        pre.size + 1, s"[${w.api}] the racer's commit must stay in history")
+      if (w.dv) assert(saltDirs(t) == 1,
+        s"[${w.api}] the conflicted attempt's sidecars must be removed")
+
+      val t2 = fresh()
+      found(t2)
+      w.prep(t2)
+      val dvBefore = saltDirs(t2)
+      val e = intercept[java.util.ConcurrentModificationException] {
+        TxnLake.withBeforeCommit(() => { append(t2); () }) { w.run(t2, 2) }
+      }
+      assert(e.getMessage.contains(s"TxnLake.${w.api}:") &&
+        e.getMessage.contains(t2), s"[${w.api}] ${e.getMessage}")
+      assert(saltDirs(t2) == dvBefore,
+        s"[${w.api}] an exhausted writer must leave no sidecar dir behind")
     }
   }
 

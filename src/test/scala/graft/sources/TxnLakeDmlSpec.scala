@@ -89,14 +89,15 @@ class TxnLakeDmlSpec extends SparkSpec {
     val t = freshTable()
     twoFileTable(t)
     var raced = false
-    TxnLake.mergeIntoImpl(spark,
-      Seq((60L, "U60"), (200L, "I200")).toDF("k", "v"), t, "k",
-      maxAttempts = 10,
-      beforeCommit = () => if (!raced) {
+    TxnLake.withBeforeCommit(() => if (!raced) {
         raced = true
         TxnLake.commit(spark,
           Seq((300L, "C300")).toDF("k", "v").coalesce(1), t, "append")
-      })
+      }) {
+      TxnLake.mergeInto(spark,
+        Seq((60L, "U60"), (200L, "I200")).toDF("k", "v"), t, "k",
+        maxAttempts = 10)
+    }
     val got = TxnLake.read(spark, t).collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(got(300L) == "C300", "concurrent append lost by the merge retry")
@@ -354,15 +355,17 @@ class TxnLakeDmlSpec extends SparkSpec {
     val t = freshTable()
     twoFileTable(t)
     var fired = false
-    val v = TxnLake.mergeIntoClausesImpl(spark,
-      Seq((60L, "U60")).toDF("k", "v"), t, "k",
-      matched = Seq(MergeUpdate(Map("v" -> sourceCol("v")))),
-      notMatched = Seq.empty, notMatchedBySource = Seq.empty,
-      maxAttempts = 10, beforeCommit = () => {
+    val v = TxnLake.withBeforeCommit(() => {
         if (!fired) { fired = true
           TxnLake.commit(spark,
             Seq((200L, "race")).toDF("k", "v").coalesce(1), t, "append") }
-      })
+      }) {
+      TxnLake.mergeIntoClauses(spark,
+        Seq((60L, "U60")).toDF("k", "v"), t, "k",
+        matched = Seq(MergeUpdate(Map("v" -> sourceCol("v")))),
+        notMatched = Seq.empty, notMatchedBySource = Seq.empty,
+        maxAttempts = 10)
+    }
     assert(v.isDefined, "the retry must recompute, not give up")
     val got = TxnLake.read(spark, t).collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap

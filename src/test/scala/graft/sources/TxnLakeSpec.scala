@@ -275,15 +275,16 @@ class TxnLakeSpec extends SparkSpec {
     // lost-update merge would publish its stale recompute over it; the
     // conflict-checked merge must refuse, re-read, and carry k=5 through.
     var raced = false
-    TxnLake.mergeImpl(spark,
-      Seq((2L, Option("B")), (3L, Option("c"))).toDF("k", "v"), t, "k",
-      maxAttempts = 10,
-      beforeCommit = () => if (!raced) {
+    TxnLake.withBeforeCommit(() => if (!raced) {
         raced = true
         TxnLake.commit(spark,
           Seq((1L, Option("a")), (2L, Option("b")), (5L, Option("e")))
             .toDF("k", "v"), t, "overwrite")
-      })
+      }) {
+      TxnLake.merge(spark,
+        Seq((2L, Option("B")), (3L, Option("c"))).toDF("k", "v"), t, "k",
+        maxAttempts = 10)
+    }
     val got = TxnLake.read(spark, t).collect()
       .map(r => r.getLong(0) -> Option(r.getString(1))).toMap
     assert(got == Map(1L -> Some("a"), 2L -> Some("B"),

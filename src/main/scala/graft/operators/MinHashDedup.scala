@@ -246,10 +246,8 @@ object MinHashDedup {
     * O(files that truly share a band hash) — the x39 `vecprune` shape for
     * the text tier. Delta-side driver collects are bounded by the DELTA
     * (4 band keys per doc; candidate ids by true collisions) — the
-    * production daily-ingest contract. `shouldPrune(bandKeyCount)` is the
-    * caller's planner rule (driver-collectable AND small relative to the
-    * index — see CurationStream.pruneWorthwhile; null = the unified
-    * [[graft.plans.ProbePlanner.maxDriverKeys]] bound); when it refuses
+    * production daily-ingest contract. Beyond the
+    * [[graft.plans.ProbePlanner.maxDriverKeys]] bound on band keys
     * (a backfill replaying months at once, a bootstrap wave that IS the
     * corpus) and the caller supplied the DISTRIBUTED loaders, the probe
     * keeps its scan pruning with the membership decision on the
@@ -266,12 +264,9 @@ object MinHashDedup {
                                       indexFull: => DataFrame,
                                       corpusFull: => DataFrame,
                                       threshold: Double = 0.7,
-                                      shouldPrune: Long => Boolean = null,
                                       indexForKeysDf: DataFrame => DataFrame = null,
                                       corpusForIdsDf: DataFrame => DataFrame = null): DataFrame = {
     val cap = graft.plans.ProbePlanner.maxDriverKeys(delta.sparkSession)
-    val sp: Long => Boolean =
-      if (shouldPrune != null) shouldPrune else _ <= cap
     val shD = shingleTable(delta).cache()
     // delta bands materialized ONCE: they feed the size probe, the key
     // collect, AND the broadcast build (an unpinned plan would re-minhash
@@ -282,7 +277,7 @@ object MinHashDedup {
       org.apache.spark.sql.GraftCheckpointShim
         .pinWithMeasuredStats(bandTable(shD)) }
     val nBands = labeled(sess, "neardup:band-count") { bandsD.count() }
-    if (!sp(nBands)) {
+    if (nBands > cap) {
       lastProbeCandShuffleFree = false
       // distributed-loader regime: prune the index files on the
       // executors, then shrink the candidate join's index side

@@ -1,11 +1,12 @@
 package graft.queries
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.multimodal.MultimodalPipeline
 import graft.operators.SimilaritySearch
 import graft.sources.Tables
-import graft.streaming.EventStream
+import graft.streaming.{CurationStream, EventStream}
+import graft.streaming.CurationStream.{Gate, Maintenance}
 
 /** The operator-tier registry: approximate similarity search (SRP-LSH,
   * IVF), the multimodal feature pipeline, the Structured Streaming rollup,
@@ -239,6 +240,59 @@ object OperatorQueries {
     sourceLanding(s, d, "documents.parquet",
       graft.streaming.CurationStream.docSchema.json, variant,
       () => build(Tables.documents(s, d)).coalesce(1))
+
+  /** The two-wave curated-ingest fixture (x32–x34, x37, x40, x42, x43,
+    * x46, x47, x63, x64): lands the `curwave1` (doc_id % 3 != 0) and
+    * `curwave2` (doc_id % 3 == 0) document waves, runs
+    * [[graft.streaming.CurationStream.ingest]] over them into
+    * `Scratch.dir(scratch)/t` under `appId`, and returns that table path. */
+  private def curatedTwoWave(s: SparkSession, d: String, scratch: String, appId: String,
+      gate: Gate = Gate.Exact, maintenance: Maintenance = Maintenance.Off): String = {
+    val w1 = docLanding(s, d, "curwave1", _.filter(col("doc_id") % 3 =!= 0))
+    val w2 = docLanding(s, d, "curwave2", _.filter(col("doc_id") % 3 === 0))
+    val base = Scratch.dir(scratch)
+    CurationStream.ingest(s, CurationStream.Landing.TwoWaves(w1, w2), s"$base/t",
+      s"$base/ckpt", appId, gate, maintenance)
+    s"$base/t"
+  }
+
+  /** A (doc_id, text) probe batch for the third-day probes. */
+  private def probeDocs(s: SparkSession, docs: (Long, String)*): DataFrame = {
+    import org.apache.spark.sql.types._
+    s.createDataFrame(java.util.Arrays.asList(
+      docs.map { case (id, text) => org.apache.spark.sql.Row(id, text) }: _*),
+      StructType(Seq(StructField("doc_id", LongType), StructField("text", StringType))))
+  }
+
+  /** The x46/x63 near-dup probe against a committed x33-shape corpus:
+    * doc 900001 is the first wave-1 doc plus one token (a near-dup it
+    * must drop), doc 900002 the second wave-1 doc reversed (fresh). */
+  private def nearDupProbe(s: SparkSession, table: String): DataFrame = {
+    val committed = graft.sources.TxnLake.read(s, table)
+      .filter(col("ingest_batch") === 0).orderBy("doc_id")
+      .select("doc_id", "text").limit(2).collect()
+    require(committed.length == 2, "fixture needs two wave-1 docs")
+    val nearDupText = committed(0).getString(1) + " zzprobeextra"
+    val freshText = committed(1).getString(1).split("\\s+").reverse
+      .mkString(" ")
+    probeDocs(s, 900001L -> nearDupText, 900002L -> freshText)
+  }
+
+  /** The x47/x64 decontamination probe against a committed x34-shape
+    * corpus: doc 900001 is a clean wave-1 doc A verbatim followed by
+    * another one, B, reversed. Returns (probe, A's tokens, reversed B's
+    * tokens) — the mask must excise exactly A. */
+  private def decontamProbe(s: SparkSession, table: String)
+      : (DataFrame, Seq[String], Seq[String]) = {
+    val committed = graft.sources.TxnLake.read(s, table)
+      .filter(col("ingest_batch") === 0 && col("n_removed") === 0
+        && col("n_tokens") >= 20)
+      .orderBy("doc_id").select("doc_id", "text").limit(2).collect()
+    require(committed.length == 2, "fixture needs two clean wave-1 docs")
+    val aToks = committed(0).getString(1).split("\\s+").toSeq
+    val bToks = committed(1).getString(1).split("\\s+").reverse.toSeq
+    (probeDocs(s, 900001L -> (aToks ++ bToks).mkString(" ")), aToks, bToks)
+  }
 
   /** Normalized parquet landing for EMBEDDING streams (the x39 vector
     * ingest) — the [[docLanding]] discipline on embeddings.parquet. */
@@ -1717,12 +1771,8 @@ object OperatorQueries {
   val streamCuratedIngest = OracleQuery(
     "x32_stream_curated_ingest",
     curatedIngestOracleSql) { (s, d) =>
-    val w1 = docLanding(s, d, "curwave1", _.filter(col("doc_id") % 3 =!= 0))
-    val w2 = docLanding(s, d, "curwave2", _.filter(col("doc_id") % 3 === 0))
-    val base = Scratch.dir("cur_ingest")
-    graft.streaming.CurationStream.runCuratedTwoWaveIngest(
-      w1, w2, s"$base/t", s"$base/ckpt", "x32_ingest", s)
-    graft.sources.TxnLake.read(s, s"$base/t")
+    graft.sources.TxnLake.read(s,
+      curatedTwoWave(s, d, "cur_ingest", "x32_ingest"))
       .select("doc_id", "fp", "n_tokens", "ingest_batch")
       .orderBy("doc_id")
   }
@@ -1805,12 +1855,8 @@ object OperatorQueries {
   val streamCuratedIngestNearDup = OracleQuery(
     "x33_stream_curated_ingest_neardup",
     curatedNearDupIngestOracleSql) { (s, d) =>
-    val w1 = docLanding(s, d, "curwave1", _.filter(col("doc_id") % 3 =!= 0))
-    val w2 = docLanding(s, d, "curwave2", _.filter(col("doc_id") % 3 === 0))
-    val base = Scratch.dir("cur_ingest_nd")
-    graft.streaming.CurationStream.runCuratedTwoWaveIngestNearDup(
-      w1, w2, s"$base/t", s"$base/ckpt", "x33_ingest", s)
-    graft.sources.TxnLake.read(s, s"$base/t")
+    graft.sources.TxnLake.read(s, curatedTwoWave(s, d, "cur_ingest_nd",
+      "x33_ingest", Gate.NearDup))
       .select("doc_id", "fp", "n_tokens", "ingest_batch")
       .orderBy("doc_id")
   }
@@ -1903,12 +1949,8 @@ object OperatorQueries {
   val streamCuratedIngestDecontam = OracleQuery(
     "x34_stream_curated_ingest_decontam",
     curatedDecontamIngestOracleSql) { (s, d) =>
-    val w1 = docLanding(s, d, "curwave1", _.filter(col("doc_id") % 3 =!= 0))
-    val w2 = docLanding(s, d, "curwave2", _.filter(col("doc_id") % 3 === 0))
-    val base = Scratch.dir("cur_ingest_dc")
-    graft.streaming.CurationStream.runCuratedTwoWaveIngestDecontam(
-      w1, w2, s"$base/t", s"$base/ckpt", "x34_ingest", s)
-    graft.sources.TxnLake.read(s, s"$base/t")
+    graft.sources.TxnLake.read(s, curatedTwoWave(s, d, "cur_ingest_dc",
+      "x34_ingest", Gate.Decontam))
       .select("doc_id", "fp", "n_tokens", "n_removed", "text", "ingest_batch")
       .orderBy("doc_id")
   }
@@ -2087,12 +2129,8 @@ object OperatorQueries {
     "x37_stream_ingest_compaction",
     curatedIngestOracleSql) { (s, d) =>
     import graft.sources.TxnLake
-    val w1 = docLanding(s, d, "curwave1", _.filter(col("doc_id") % 3 =!= 0))
-    val w2 = docLanding(s, d, "curwave2", _.filter(col("doc_id") % 3 === 0))
-    val base = Scratch.dir("cur_ingest_opt")
-    val table = s"$base/t"
-    graft.streaming.CurationStream.runCuratedTwoWaveIngestCompacting(
-      w1, w2, table, s"$base/ckpt", "x37_ingest", s, numFiles = 2)
+    val table = curatedTwoWave(s, d, "cur_ingest_opt", "x37_ingest",
+      maintenance = Maintenance.Optimize(numFiles = 2))
     require(TxnLake.snapshotFiles(s, table).size <= 2,
       "continuous compaction must bound the snapshot to <= 2 files")
     // two data batches + two maintenance commits, and the replay added
@@ -2248,12 +2286,8 @@ object OperatorQueries {
     "x40_stream_indexed_ingest_maintained",
     curatedNearDupIngestOracleSql) { (s, d) =>
     import graft.sources.TxnLake
-    val w1 = docLanding(s, d, "curwave1", _.filter(col("doc_id") % 3 =!= 0))
-    val w2 = docLanding(s, d, "curwave2", _.filter(col("doc_id") % 3 === 0))
-    val base = Scratch.dir("cur_ingest_ndm")
-    val table = s"$base/t"
-    graft.streaming.CurationStream.runCuratedTwoWaveIngestNearDupMaintained(
-      w1, w2, table, s"$base/ckpt", "x40_ingest", s, numFiles = 2)
+    val table = curatedTwoWave(s, d, "cur_ingest_ndm", "x40_ingest",
+      Gate.NearDup, Maintenance.Optimize(2))
     // THE x40 point: the batch that arrived AFTER maintenance commits
     // landed must still have been served by the indexed probe path
     require(graft.streaming.CurationStream.probePaths.get((table, 1L))
@@ -2373,12 +2407,8 @@ object OperatorQueries {
     "x42_stream_decontam_ingest_maintained",
     curatedDecontamIngestOracleSql) { (s, d) =>
     import graft.sources.TxnLake
-    val w1 = docLanding(s, d, "curwave1", _.filter(col("doc_id") % 3 =!= 0))
-    val w2 = docLanding(s, d, "curwave2", _.filter(col("doc_id") % 3 === 0))
-    val base = Scratch.dir("cur_ingest_dcm")
-    val table = s"$base/t"
-    graft.streaming.CurationStream.runCuratedTwoWaveIngestDecontamMaintained(
-      w1, w2, table, s"$base/ckpt", "x42_ingest", s, numFiles = 2)
+    val table = curatedTwoWave(s, d, "cur_ingest_dcm", "x42_ingest",
+      Gate.Decontam, Maintenance.Optimize(2))
     require(graft.streaming.CurationStream.probePaths.get((table, 1L))
         .contains("indexed"),
       s"post-maintenance batch must use the window-index probe, got " +
@@ -2412,12 +2442,8 @@ object OperatorQueries {
     "x43_stream_ingest_incremental_compaction",
     curatedIngestOracleSql) { (s, d) =>
     import graft.sources.TxnLake
-    val w1 = docLanding(s, d, "curwave1", _.filter(col("doc_id") % 3 =!= 0))
-    val w2 = docLanding(s, d, "curwave2", _.filter(col("doc_id") % 3 === 0))
-    val base = Scratch.dir("cur_ingest_inc")
-    val table = s"$base/t"
-    graft.streaming.CurationStream.runCuratedTwoWaveIngestCompactingIncremental(
-      w1, w2, table, s"$base/ckpt", "x43_ingest", s)
+    val table = curatedTwoWave(s, d, "cur_ingest_inc", "x43_ingest",
+      maintenance = Maintenance.CompactLanded)
     require(TxnLake.lastTxn(s, table, "x43_ingest").contains(1L),
       "the txn watermark must survive the interleaved compaction commits")
     require(TxnLake.latestVersion(s, table).contains(3L),
@@ -2593,29 +2619,10 @@ object OperatorQueries {
     "x46_stream_neardup_probe_pruned",
     curatedNearDupIngestOracleSql) { (s, d) =>
     import graft.sources.TxnLake
-    import graft.streaming.CurationStream
-    val w1 = docLanding(s, d, "curwave1", _.filter(col("doc_id") % 3 =!= 0))
-    val w2 = docLanding(s, d, "curwave2", _.filter(col("doc_id") % 3 === 0))
-    val base = Scratch.dir("cur_probe_nd")
-    val table = s"$base/t"
-    CurationStream.runCuratedTwoWaveIngestNearDupMaintained(
-      w1, w2, table, s"$base/ckpt", "x46_ingest", s, numFiles = 2)
+    val table = curatedTwoWave(s, d, "cur_probe_nd", "x46_ingest",
+      Gate.NearDup, Maintenance.Optimize(2))
     // ---- the scan-scaled probe: a third-day delta against the corpus ----
-    val committed = TxnLake.read(s, table)
-      .filter(col("ingest_batch") === 0).orderBy("doc_id")
-      .select("doc_id", "text").limit(2).collect()
-    require(committed.length == 2, "fixture needs two wave-1 docs")
-    val nearDupText = committed(0).getString(1) + " zzprobeextra"
-    val freshText = committed(1).getString(1).split("\\s+").reverse
-      .mkString(" ")
-    val probe = s.createDataFrame(java.util.Arrays.asList(
-      org.apache.spark.sql.Row(900001L, nearDupText),
-      org.apache.spark.sql.Row(900002L, freshText)),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("text",
-          org.apache.spark.sql.types.StringType))))
+    val probe = nearDupProbe(s, table)
     val out = CurationStream.curateBatchNearDup(probe, table, 2L, "x46_ingest")
     val keptIds = out.select("doc_id").collect().map(_.getLong(0)).toSeq
     require(keptIds == Seq(900002L),
@@ -2652,28 +2659,9 @@ object OperatorQueries {
     "x47_stream_decontam_probe_pruned",
     curatedDecontamIngestOracleSql) { (s, d) =>
     import graft.sources.TxnLake
-    import graft.streaming.CurationStream
-    val w1 = docLanding(s, d, "curwave1", _.filter(col("doc_id") % 3 =!= 0))
-    val w2 = docLanding(s, d, "curwave2", _.filter(col("doc_id") % 3 === 0))
-    val base = Scratch.dir("cur_probe_dc")
-    val table = s"$base/t"
-    CurationStream.runCuratedTwoWaveIngestDecontamMaintained(
-      w1, w2, table, s"$base/ckpt", "x47_ingest", s, numFiles = 2)
-    val committed = TxnLake.read(s, table)
-      .filter(col("ingest_batch") === 0 && col("n_removed") === 0
-        && col("n_tokens") >= 20)
-      .orderBy("doc_id").select("doc_id", "text").limit(2).collect()
-    require(committed.length == 2, "fixture needs two clean wave-1 docs")
-    val aToks = committed(0).getString(1).split("\\s+").toSeq
-    val bToks = committed(1).getString(1).split("\\s+").reverse.toSeq
-    val probeText = (aToks ++ bToks).mkString(" ")
-    val probe = s.createDataFrame(java.util.Arrays.asList(
-      org.apache.spark.sql.Row(900001L, probeText)),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("text",
-          org.apache.spark.sql.types.StringType))))
+    val table = curatedTwoWave(s, d, "cur_probe_dc", "x47_ingest",
+      Gate.Decontam, Maintenance.Optimize(2))
+    val (probe, aToks, bToks) = decontamProbe(s, table)
     val out = CurationStream.curateBatchDecontam(probe, table, 2L,
       "x47_ingest").collect()
     require(out.length == 1, s"probe doc must survive, got ${out.length}")
@@ -2713,28 +2701,8 @@ object OperatorQueries {
     "x63_stream_neardup_probe_abovecap",
     curatedNearDupIngestOracleSql) { (s, d) =>
     import graft.sources.TxnLake
-    import graft.streaming.CurationStream
-    val w1 = docLanding(s, d, "curwave1", _.filter(col("doc_id") % 3 =!= 0))
-    val w2 = docLanding(s, d, "curwave2", _.filter(col("doc_id") % 3 === 0))
-    val base = Scratch.dir("cur_probe_nd_ac")
-    val table = s"$base/t"
-    CurationStream.runCuratedTwoWaveIngestNearDup(
-      w1, w2, table, s"$base/ckpt", "x63_ingest", s)
-    val committed = TxnLake.read(s, table)
-      .filter(col("ingest_batch") === 0).orderBy("doc_id")
-      .select("doc_id", "text").limit(2).collect()
-    require(committed.length == 2, "fixture needs two wave-1 docs")
-    val nearDupText = committed(0).getString(1) + " zzprobeextra"
-    val freshText = committed(1).getString(1).split("\\s+").reverse
-      .mkString(" ")
-    val probe = s.createDataFrame(java.util.Arrays.asList(
-      org.apache.spark.sql.Row(900001L, nearDupText),
-      org.apache.spark.sql.Row(900002L, freshText)),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("text",
-          org.apache.spark.sql.types.StringType))))
+    val table = curatedTwoWave(s, d, "cur_probe_nd_ac", "x63_ingest", Gate.NearDup)
+    val probe = nearDupProbe(s, table)
     s.conf.set("graft.probe.maxDriverKeys", "1")
     try {
       val out = CurationStream.curateBatchNearDup(probe, table, 2L,
@@ -2777,28 +2745,8 @@ object OperatorQueries {
     "x64_stream_decontam_probe_abovecap",
     curatedDecontamIngestOracleSql) { (s, d) =>
     import graft.sources.TxnLake
-    import graft.streaming.CurationStream
-    val w1 = docLanding(s, d, "curwave1", _.filter(col("doc_id") % 3 =!= 0))
-    val w2 = docLanding(s, d, "curwave2", _.filter(col("doc_id") % 3 === 0))
-    val base = Scratch.dir("cur_probe_dc_ac")
-    val table = s"$base/t"
-    CurationStream.runCuratedTwoWaveIngestDecontam(
-      w1, w2, table, s"$base/ckpt", "x64_ingest", s)
-    val committed = TxnLake.read(s, table)
-      .filter(col("ingest_batch") === 0 && col("n_removed") === 0
-        && col("n_tokens") >= 20)
-      .orderBy("doc_id").select("doc_id", "text").limit(2).collect()
-    require(committed.length == 2, "fixture needs two clean wave-1 docs")
-    val aToks = committed(0).getString(1).split("\\s+").toSeq
-    val bToks = committed(1).getString(1).split("\\s+").reverse.toSeq
-    val probeText = (aToks ++ bToks).mkString(" ")
-    val probe = s.createDataFrame(java.util.Arrays.asList(
-      org.apache.spark.sql.Row(900001L, probeText)),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("text",
-          org.apache.spark.sql.types.StringType))))
+    val table = curatedTwoWave(s, d, "cur_probe_dc_ac", "x64_ingest", Gate.Decontam)
+    val (probe, aToks, bToks) = decontamProbe(s, table)
     s.conf.set("graft.probe.maxDriverKeys", "1")
     try {
       val out = CurationStream.curateBatchDecontam(probe, table, 2L,
@@ -4579,7 +4527,6 @@ object OperatorQueries {
   val streamBackfillIngest = OracleQuery(
     "x70_stream_backfill_ingest", backfillIngestOracleSql) { (s, d) =>
     import graft.sources.TxnLake
-    import graft.streaming.CurationStream
     val base = Scratch.dir("cur_backfill")
     val landing = s"$base/landing"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(landing))
@@ -4609,9 +4556,9 @@ object OperatorQueries {
     // drain at one file per micro-batch, CRASH after two applied
     val crashed =
       try {
-        CurationStream.runCuratedBackfillIngest(landing, table,
-          s"$base/ckpt", "x70_ingest", s, maxFilesPerTrigger = 1,
-          failAfterBatches = 2)
+        CurationStream.ingest(s, CurationStream.Landing.Backfill(landing,
+          maxFilesPerTrigger = 1, failAfterBatches = 2), table,
+          s"$base/ckpt", "x70_ingest")
         false
       } catch {
         case _: org.apache.spark.sql.streaming.StreamingQueryException => true
@@ -4621,8 +4568,8 @@ object OperatorQueries {
       "the crash must park the offset after the two applied slices")
     // resume from the SAME checkpoint: replayed slice no-ops, the rest
     // drain — 4 files at cap 1 = batches 0..3
-    CurationStream.runCuratedBackfillIngest(landing, table,
-      s"$base/ckpt", "x70_ingest", s, maxFilesPerTrigger = 1)
+    CurationStream.ingest(s, CurationStream.Landing.Backfill(landing,
+      maxFilesPerTrigger = 1), table, s"$base/ckpt", "x70_ingest")
     require(TxnLake.lastTxn(s, table, "x70_ingest").contains(3L),
       "4 single-file slices must drain as batches 0..3")
     val batches = TxnLake.read(s, table).select("ingest_batch")

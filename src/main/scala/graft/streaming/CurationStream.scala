@@ -169,21 +169,23 @@ object CurationStream {
     * FileOutputStream.open0 at the top of this tier's executor time), so
     * fanning a KB micro-batch to 32 map slots multiplied every probe/
     * index exchange's file churn 16-32x for ~20 ms of CPU win. Width =
-    * ceil(bytes / SPARK_GRAFT_CPU_ADVISORY_BYTES, default 128 KiB/slot),
-    * clamped to [1, cores]: a KB batch takes a few slots, a production
-    * batch still saturates the machine (and a plan with UNKNOWN size —
-    * no pin, no file scan behind it — keeps the full-cores spread).
-    * Never shrinks an already-wider frame. */
+    * ceil(bytes / [[CpuAdvisoryBytes]]), clamped to [1, cores]: a KB
+    * batch takes a few slots, a production batch still saturates the
+    * machine (and a plan with UNKNOWN size — no pin, no file scan behind
+    * it — keeps the full-cores spread). Never shrinks an already-wider
+    * frame. */
   private[graft] def spreadForCpu(df: DataFrame): DataFrame = {
     val cores = df.sparkSession.sparkContext.defaultParallelism
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val adv = BigInt(sys.env.getOrElse(
-      "SPARK_GRAFT_CPU_ADVISORY_BYTES", "131072").toLong.max(1L))
     val want =
       if (bytes <= 0 || bytes >= BigInt(Long.MaxValue) / 4) cores
-      else ((bytes + adv - 1) / adv).min(cores).toInt.max(1)
+      else ((bytes + CpuAdvisoryBytes - 1) / CpuAdvisoryBytes)
+        .min(cores).toInt.max(1)
     if (df.rdd.getNumPartitions < want) df.repartition(want) else df
   }
+
+  /** Measured bytes per CPU slot [[spreadForCpu]] spreads to (128 KiB). */
+  private val CpuAdvisoryBytes = 131072L
 
   /** Marker txn ids under which the sink persists how far the coverage
     * classification in [[indexCovered]] has VERIFIED each log — the scan
@@ -204,7 +206,7 @@ object CurationStream {
     * JVM must never hand one app's verified tuple to the other's marker
     * (the scan bound would then skip versions the receiving app never
     * classified: unsound under-masking). Consumed (removed) by the sink
-    * when it commits the increment; cleared by the runners at start so a
+    * when it commits the increment; cleared by [[ingest]] at start so a
     * Scratch-path reuse in one JVM can never persist a stale tuple onto
     * a fresh log. */
   private val verifiedCoverage =
@@ -232,39 +234,6 @@ object CurationStream {
   @volatile private[graft] var lastCorpusIdSkipping: (Int, Int) = (0, 0)
   @volatile private[graft] var lastWindexSkipping: (Int, Int) = (0, 0)
   @volatile private[graft] var lastDecontamProbeShuffleFree: Boolean = false
-
-  /** Size bound on the per-batch driver-side key collects the scan-pruned
-    * probes perform (distinct fingerprints, band hashes, 13-gram windows)
-    * — ONE definition for every probe tier
-    * ([[graft.plans.ProbePlanner.maxDriverKeys]]). A DAILY delta sits far
-    * below it by construction; a batch above it — a backfill replaying
-    * months at once, a bootstrap wave that IS the corpus — keeps the key
-    * set DISTRIBUTED: the kept-file decision moves to the executors
-    * ([[graft.sources.TxnLake.readKeyedDistributed]] — sidecars probed
-    * as data), identical semantics, delta-scaled compute, no driver
-    * collect AND no full-index scan. Session-configurable because
-    * "daily volume" is a deployment property, not an engine constant. */
-  private def maxDriverKeys(s: SparkSession): Long =
-    graft.plans.ProbePlanner.maxDriverKeys(s)
-
-  /** The probe-path planner rule: take the scan-pruned (collect +
-    * bloom-skip + broadcast) probe only while the delta's key count is
-    * driver-collectable ([[maxDriverKeys]]). The overheads the pruned
-    * probe pays — the key collect, the per-file bloom probes, the
-    * broadcast build — all track the DELTA, so the absolute key count is
-    * the deciding variable, measured at both ends: 165k band keys still
-    * WON against the shuffle join at factor 30 (104 s vs 117 s — even
-    * with the delta at half the corpus), while 2M window grams LOST at
-    * factor 10 (41.8 s vs 37.9 s — a ~200 MB collect+broadcast buys
-    * little when the keys blanket the index anyway). The 1M default sits
-    * between the measured ends; deployments size it like any planner
-    * threshold. Beyond it the probe keeps the SAME scan pruning with the
-    * membership test distributed (since r17): identical rows, file I/O
-    * still tracking true key collisions, and the only added cost is a
-    * delta-scaled exactness shuffle in place of the broadcast. */
-  private def pruneWorthwhile(s: SparkSession, relation: String,
-                              deltaKeys: Long): Boolean =
-    deltaKeys <= maxDriverKeys(s)
 
   /** Bloom-indexed columns every corpus commit declares: `fp` makes the
     * committed-fingerprint gate's scan prunable (hash-uniform hex — file
@@ -298,7 +267,7 @@ object CurationStream {
     val sv = pinnedSurvivors
     val deltaFps = sv.select("fp").distinct()
     val nFps = labeled(s, "curate:delta-fp-count") { deltaFps.count() }
-    if (!pruneWorthwhile(s, table, nFps)) {
+    if (nFps > graft.plans.ProbePlanner.maxDriverKeys(s)) {
       // oversized or corpus-scale batch (backfill/bootstrap): the kept-
       // file decision moves to the EXECUTORS — the delta's fps probe the
       // per-file fp sidecars as data (readKeyedDistributed: no driver
@@ -459,7 +428,6 @@ object CurationStream {
               indexFull = TxnLake.read(s, bindex).select("doc_id", "b", "bh"),
               corpusFull = tbl.select("doc_id", "text"),
               threshold = threshold,
-              shouldPrune = n => pruneWorthwhile(s, bindex, n),
               // ABOVE-CAP loaders: the membership decision distributes
               // (sidecars as data on the executors), so a backfill-sized
               // delta still prunes the index/corpus scans instead of
@@ -586,7 +554,8 @@ object CurationStream {
               sum(greatest(col("n_tokens") - (window - 1), lit(0))))
             .head().get(0)).map(_.asInstanceOf[Long]).getOrElse(0L) }
         val hits =
-          if (trusted && pruneWorthwhile(s, windex, estGrams)) {
+          if (trusted &&
+              estGrams <= graft.plans.ProbePlanner.maxDriverKeys(s)) {
             // SCAN-SCALED probe (x47): collect the delta's distinct grams
             // (O(delta tokens) driver — a day's volume), load only the
             // index files whose __g Bloom sidecars might contain one,
@@ -718,95 +687,135 @@ object CurationStream {
       .select(explode(orderedGrams(col("__t"), window)).as("__g"))
       .distinct()
 
-  /** [[runCuratedTwoWaveIngest]] with the incremental exact-substring
-    * decontamination gate ([[curateBatchDecontam]]) — the x34 shape, same
-    * exactly-once + checkpoint-loss-replay proof, PLUS the window-index
-    * maintenance: each batch lands TWO exactly-once commits, the corpus
-    * rows under (appId, batchId) and the batch's window increment under
-    * (appId#windex, batchId). Corpus first — once the corpus txn is
-    * present the batch's rows are final — then the index RECONCILES to
-    * the corpus txn watermark: every increment the index log is missing
-    * rebuilds from the table's own ingest_batch column. That watermark
+  /** Sibling LSH band-index table for `table`: one (doc_id, b, bh) row
+    * per band key of each committed batch — x33's counterpart of
+    * [[windowIndexPath]]. */
+  def bandIndexPath(table: String): String = table + "_bindex"
+
+  /** The band-index increment for `batchId`: band keys of the rows
+    * `table` committed for that batch (expectation-passing rows only,
+    * rebuildable from the log alone — the [[batchWindows]] doctrine). */
+  private def batchBands(spark: SparkSession, table: String,
+                         batchId: Long): DataFrame =
+    // readWhere, not read+filter — see batchWindows
+    graft.operators.MinHashDedup.bandIndex(
+      TxnLake.readWhere(spark, table, col("ingest_batch") === batchId)
+        .select("doc_id", "text"))
+
+  /** Where an [[ingest]] reads its documents from. */
+  sealed trait Landing
+  object Landing {
+    /** Two waves, each exactly one micro-batch (files land between
+      * `processAllAvailable` barriers, and each wave's landing is a single
+      * coalesced file), then a checkpoint-loss replay of both — see
+      * [[runTwoWaveSink]]. */
+    final case class TwoWaves(wave1Dir: String, wave2Dir: String)
+      extends Landing
+
+    /** A BACKFILL drained with the file-source rate limit — Spark's own
+      * `maxFilesPerTrigger` is the ingest counterpart of
+      * [[TxnReplicaFeed]]'s `maxFilesPerHop`: the SOURCE slices the
+      * backlog into micro-batches of at most `maxFilesPerTrigger` files
+      * and every slice flows through the same exactly-once sink. A crash
+      * mid-drain leaves the checkpoint at the first unapplied
+      * micro-batch; the restart replays it against the (appId, batchId)
+      * guard, and the watermark reconcile back-fills any index increment
+      * the crash orphaned. Duplicates straddling slice boundaries are
+      * caught by the committed-fingerprint anti-join (earlier slices are
+      * COMMITTED corpus by the time later ones curate), so the curated
+      * fp-set equals the unsliced run's; with slices landing in ascending
+      * doc_id order the survivor rule composes to GLOBAL
+      * min-doc_id-per-fingerprint (the x70 oracle). `failAfterBatches`
+      * >= 0 injects a crash after that many applied batches — the
+      * mid-drain resume proof's seam. */
+    final case class Backfill(dir: String, maxFilesPerTrigger: Int,
+                              failAfterBatches: Int = -1) extends Landing
+  }
+
+  /** Which curator gates each batch. The indexed gates also keep a
+    * sibling index table in step with the corpus (see [[ingest]]). */
+  sealed trait Gate
+  object Gate {
+    /** [[curateBatch]] — scrub → gate → exact dedup (x32). */
+    case object Exact extends Gate
+    /** [[curateBatchNearDup]] plus the `_bindex` band index (x33). */
+    case object NearDup extends Gate
+    /** [[curateBatchDecontam]] plus the `_windex` window index (x34). */
+    case object Decontam extends Gate
+  }
+
+  /** Lake maintenance the sink runs after each batch that actually lands
+    * (a replayed batch triggers none, so compaction happens exactly as
+    * often as data lands). Every arm commits one data-preserving
+    * "optimize" entry carrying the cumulative (appId, batchId) txn map
+    * forward, so the checkpoint-loss replay still sees its batches in the
+    * log, readers stay isolated, and the indexed probe stays trusted
+    * ([[indexCovered]] classifies the commit as data-preserving — x40). */
+  sealed trait Maintenance
+  object Maintenance {
+    case object Off extends Maintenance
+
+    /** [[graft.sources.TxnLake.optimize]] of the whole snapshot, Z-ordered
+      * by doc_id (x37/x40/x42) — deliberately O(table) per batch: the
+      * exactly-once-under-maximum-maintenance-pressure proof fixture. */
+    final case class Optimize(numFiles: Int) extends Maintenance
+
+    /** The production cost model (x43): the batch appends
+      * `repartition(2)` so it provably accrues small-file debt, then
+      * [[graft.sources.TxnLake.compactSmallFiles]] packs exactly the
+      * files that append landed and carries every already-packed file
+      * over with its path VERBATIM — O(day's debt) at any table size. The
+      * pack set is PROVENANCE-scoped, not size-thresholded: a size
+      * heuristic flips which files it packs once a batch's append rivals
+      * the packed history's size. */
+    case object CompactLanded extends Maintenance
+  }
+
+  /** The sibling index an indexed [[Gate]] maintains: table, the txn id
+    * its increments commit under, their Bloom column, and the increment
+    * builder for one corpus batch. */
+  private final case class SiblingIndex(
+      path: String, txnId: String, bloomCol: String,
+      increment: (SparkSession, Long) => DataFrame)
+
+  /** The streaming curated ingest: micro-batches from `landing`, each
+    * curated by `gate` and committed under (appId, batchId) through the
+    * exactly-once expectations sink, then `maintenance`. Indexed gates
+    * land TWO exactly-once commits per batch — the corpus rows, then the
+    * index increment under (index txn id, batchId). Corpus first: once
+    * the corpus txn is present the batch's rows are final; the index
+    * then RECONCILES to the corpus txn watermark, every missing increment
+    * rebuilt from the table's own ingest_batch column. That watermark
     * scan (not a this-batch-only check) is what makes every interleaving
     * heal: a crash between the two commits retries into the index-only
     * path, a crash PLUS checkpoint loss re-delivers everything as batch 0
-    * yet still back-fills the crashed batch's increment, and even a fully
-    * lost index table rebuilds from the corpus on the next sink
-    * invocation. */
-  def runCuratedTwoWaveIngestDecontam(wave1Dir: String, wave2Dir: String,
-                                      table: String, checkpointDir: String,
-                                      appId: String, spark: SparkSession): Unit = {
-    verifiedCoverage.remove((windowIndexPath(table), windowIndexTxn(appId)))
-    clearProbeLog(table)
-    runTwoWaveSink(wave1Dir, wave2Dir, checkpointDir, spark,
-      indexedIngestSink(table, appId,
-        windowIndexPath(table), windowIndexTxn(appId),
-        curateBatchDecontam(_, _, _, appId),
-        (s, b) => batchWindows(s, table, b, DecontamWindow),
-        indexBloomCol = "__g"))()
-  }
-
-  /** BACKFILL ingest with the file-source rate limit — Spark's own
-    * `maxFilesPerTrigger` is the ingest counterpart of
-    * [[TxnReplicaFeed]]'s `maxFilesPerHop` (the r18 verdict's item 5):
-    * instead of slicing commits under a sub-namespace, the SOURCE
-    * slices the backlog into micro-batches of at most
-    * `maxFilesPerTrigger` landed files, and every slice flows through
-    * the SAME exactly-once indexed sink — corpus rows under
-    * (appId, batchId), index increments reconciled to the corpus txn
-    * watermark. Bounded memory falls out of the batch bound; convergent
-    * resume falls out of machinery that already exists: a crash
-    * mid-drain leaves the checkpoint at the first unapplied
-    * micro-batch, the restart replays it against the (appId, batchId)
-    * guard, and the watermark reconcile back-fills any increment the
-    * crash orphaned. Duplicates that straddle slice boundaries are
-    * caught by the committed-fingerprint anti-join (earlier slices are
-    * COMMITTED corpus by the time later ones curate), so the curated
-    * fp-set equals the unsliced run's — only the arbitrary-survivor
-    * choice among intra-batch duplicates can differ, the engine's
-    * documented dedup semantics (SURVEY §2.4 A4).
-    *
-    * `failAfterBatches` >= 0 injects a crash after that many applied
-    * batches — the spec's mid-drain resume proof. */
-  def runCuratedBackfillIngestDecontam(landingDir: String, table: String,
-                                       checkpointDir: String, appId: String,
-                                       spark: SparkSession,
-                                       maxFilesPerTrigger: Int,
-                                       failAfterBatches: Int = -1): Unit = {
-    verifiedCoverage.remove((windowIndexPath(table), windowIndexTxn(appId)))
-    clearProbeLog(table)
-    runBackfill(landingDir, checkpointDir, spark, maxFilesPerTrigger,
-      failAfterBatches)(
-      indexedIngestSink(table, appId,
-        windowIndexPath(table), windowIndexTxn(appId),
-        curateBatchDecontam(_, _, _, appId),
-        (s, b) => batchWindows(s, table, b, DecontamWindow),
-        indexBloomCol = "__g"))
-  }
-
-  /** [[runCuratedBackfillIngestDecontam]]'s index-free sibling — the
-    * x32 curator (scrub → gate → dedup, anti-joined against committed
-    * fingerprints) over a rate-limited backfill drain. This is the
-    * SQL-expressible shape the x70 oracle recomputes: the slice-order
-    * survivor rule composes with the within-batch canon to GLOBAL
-    * min-doc_id-per-fingerprint when slices land in ascending doc_id
-    * order. */
-  def runCuratedBackfillIngest(landingDir: String, table: String,
-                               checkpointDir: String, appId: String,
-                               spark: SparkSession,
-                               maxFilesPerTrigger: Int,
-                               failAfterBatches: Int = -1): Unit =
-    runBackfill(landingDir, checkpointDir, spark, maxFilesPerTrigger,
-      failAfterBatches) { (batch, batchId) =>
-      if (!TxnLake.lastTxn(batch.sparkSession, table, appId)
-            .exists(_ >= batchId)) {
-        Expectations.commitOnceWithExpectations(
-          batch.sparkSession, curateBatch(batch, table, batchId),
-          table, "append", appId, batchId, IngestExpectations,
-          bloomCols = CorpusBloomCols)
-      }
-      ()
+    * yet still back-fills the crashed batch's increment, and a fully lost
+    * index table rebuilds from the corpus on the next invocation. */
+  def ingest(spark: SparkSession, landing: Landing, table: String,
+             checkpointDir: String, appId: String,
+             gate: Gate = Gate.Exact,
+             maintenance: Maintenance = Maintenance.Off): Unit = {
+    val (curate, index) = gate match {
+      case Gate.Exact => (curateBatch _, None)
+      case Gate.NearDup =>
+        (curateBatchNearDup(_: DataFrame, _: String, _: Long, appId),
+          Some(SiblingIndex(bandIndexPath(table), bandIndexTxn(appId), "bh",
+            (s, b) => batchBands(s, table, b))))
+      case Gate.Decontam =>
+        (curateBatchDecontam(_: DataFrame, _: String, _: Long, appId),
+          Some(SiblingIndex(windowIndexPath(table), windowIndexTxn(appId),
+            "__g", (s, b) => batchWindows(s, table, b, DecontamWindow))))
     }
+    index.foreach(i => verifiedCoverage.remove((i.path, i.txnId)))
+    clearProbeLog(table)
+    val sink = ingestSink(table, appId, curate, index, maintenance)
+    landing match {
+      case Landing.TwoWaves(w1, w2) =>
+        runTwoWaveSink(w1, w2, checkpointDir, spark, sink)()
+      case Landing.Backfill(dir, maxFiles, failAfter) =>
+        runBackfill(dir, checkpointDir, spark, maxFiles, failAfter)(sink)
+    }
+  }
 
   /** The shared rate-limited drain: AvailableNow over the landing dir
     * with `maxFilesPerTrigger` as the slice bound, optional injected
@@ -834,298 +843,96 @@ object CurationStream {
     q.awaitTermination()
   }
 
-  /** ONE definition of the indexed-ingest sink (x33/x34/x40 — they
-    * differ only in index table, txn id, curator, increment builder,
-    * and maintenance hook; a replay-guard or reconcile fix must hit all
-    * at once). Commits the curated batch under (appId, batchId), runs
-    * `maintain` after a batch that actually landed (x40's in-loop
-    * OPTIMIZE; a replayed batch triggers NO maintenance), then
-    * RECONCILES the sibling index to the corpus txn WATERMARK — not
-    * just this batchId: a crash after the corpus commit combined with a
-    * checkpoint loss re-delivers everything as batch 0, and a
-    * "this-batch-only" check would skip the crashed batch's increment
-    * forever (future probes would silently under-mask). Each missing
-    * increment rebuilds from the table's own ingest_batch column —
-    * corpus batch ids are the streaming batch sequence 0..C under this
-    * appId, so the gap scan is exact. The corpus-commit fast-path also
-    * spares a replayed batch the curator's eagerly-materializing probe
-    * (a cost short-circuit; the txn guard inside the commit remains the
-    * correctness mechanism).
+  /** ONE definition of the curated-ingest sink — every [[ingest]] variant
+    * (and the replay that proves its idempotence) runs through it, so a
+    * replay-guard or reconcile fix hits all at once. Commits the curated
+    * batch under (appId, batchId), runs `maintenance` after a batch that
+    * actually landed, then, for an indexed gate, RECONCILES the sibling
+    * index to the corpus txn WATERMARK — not just this batchId: a crash
+    * after the corpus commit combined with a checkpoint loss re-delivers
+    * everything as batch 0, and a "this-batch-only" check would skip the
+    * crashed batch's increment forever (future probes would silently
+    * under-mask). Corpus batch ids are the streaming batch sequence 0..C
+    * under this appId, so the gap scan is exact.
     *
     * The first increment commit of the reconcile also persists the
     * coverage markers this batch's probe verified (consumed from
     * [[verifiedCoverage]], atomically with the increment via
     * `extraTxns`) — the scan bounds that keep [[indexCovered]] O(new
     * commits) per batch. */
-  private def indexedIngestSink(table: String, appId: String,
-                                indexPath: String, indexTxnId: String,
-                                curate: (DataFrame, String, Long) => DataFrame,
-                                increment: (SparkSession, Long) => DataFrame,
-                                indexBloomCol: String,
-                                maintain: SparkSession => Unit = _ => ())
+  private def ingestSink(table: String, appId: String,
+                         curate: (DataFrame, String, Long) => DataFrame,
+                         index: Option[SiblingIndex],
+                         maintenance: Maintenance)
       : (DataFrame, Long) => Unit = (batch, batchId) => {
     val s = batch.sparkSession
+    // Replay fast-path: a batch already in the table log must not even
+    // BUILD the curation gate (the indexed curators materialize their
+    // probes eagerly). commitOnceWithExpectations re-checks under the
+    // same (appId, batchId) txn, so this is a cost short-circuit, not the
+    // correctness mechanism.
     if (!TxnLake.lastTxn(s, table, appId).exists(_ >= batchId)) {
+      val compactLanded = maintenance == Maintenance.CompactLanded
+      // the pre-append listing CompactLanded diffs against — the only
+      // arm that reads the log here
+      val before =
+        if (compactLanded) TxnLake.snapshotFiles(s, table).map(_.path).toSet
+        else Set.empty[String]
+      val curated = curate(batch, table, batchId)
       val committed = Expectations.commitOnceWithExpectations(
-        s, curate(batch, table, batchId),
+        s, if (compactLanded) curated.repartition(2) else curated,
         table, "append", appId, batchId, IngestExpectations,
         bloomCols = CorpusBloomCols)
-      if (committed.isDefined) maintain(s)
-    }
-    val c = TxnLake.lastTxn(s, table, appId).getOrElse(-1L)
-    val w = TxnLake.lastTxn(s, indexPath, indexTxnId).getOrElse(-1L)
-    // Attach the probe's verified-coverage tuple to the FIRST increment
-    // commit that actually persists (not blindly i == 0: a replayed
-    // increment returns None WITHOUT persisting extraTxns). If the whole
-    // reconcile range is empty or every increment was a replay, re-insert
-    // the tuple so the NEXT batch's sink can persist it — silently losing
-    // it is never unsound (markers only bound the indexCovered scan) but
-    // re-widens that scan to the older marker forever. putIfAbsent: never
-    // clobber a fresher tuple a subsequent probe may have recorded.
-    val marks = verifiedCoverage.remove((indexPath, indexTxnId))
-    val extra = marks
-      .map { case (tv, iv) =>
-        Map(covTxn(indexTxnId) -> tv, icovTxn(indexTxnId) -> iv) }
-      .getOrElse(Map.empty)
-    var marksPersisted = marks.isEmpty
-    ((w + 1) to c).foreach { b =>
-      val committed = graft.plans.JobLabel.labeled(s, s"index:increment b$b") {
-        // REBALANCE before the write (guide §6): the increment arrives at
-        // the CPU-spread width (cores partitions for a KB-scale batch), so
-        // an as-is append wrote one tiny parquet file + bloom sidecar per
-        // core PER COMMIT — and every later probe pays per-file sidecar
-        // reads and per-task write overhead. AQE sizes the rebalance by
-        // advisoryPartitionSizeInBytes: one file for a micro-batch
-        // increment, bytes/advisory for a backfill-scale one — the output
-        // layout a production lake wants at any scale.
-        TxnLake.commitOnce(s, increment(s, b).hint("rebalance"), indexPath,
-          "append", indexTxnId, b,
-          extraTxns = if (marksPersisted) Map.empty else extra,
-          bloomCols = Seq(indexBloomCol))
-      }
-      if (committed.isDefined) marksPersisted = true
-    }
-    if (!marksPersisted)
-      marks.foreach(verifiedCoverage.putIfAbsent((indexPath, indexTxnId), _))
-    ()
-  }
-
-  /** Drive the curated ingest over TWO waves (each exactly one micro-batch
-    * — files land between `processAllAvailable` barriers, and each wave's
-    * landing is a single coalesced file), committing each batch through
-    * the exactly-once expectations sink. */
-  def runCuratedTwoWaveIngest(wave1Dir: String, wave2Dir: String,
-                              table: String, checkpointDir: String,
-                              appId: String, spark: SparkSession): Unit =
-    runTwoWave(wave1Dir, wave2Dir, table, checkpointDir, appId, spark,
-      curateBatch)
-
-  /** Sibling LSH band-index table for `table`: one (doc_id, b, bh) row
-    * per band key of each committed batch — x33's counterpart of
-    * [[windowIndexPath]]. */
-  def bandIndexPath(table: String): String = table + "_bindex"
-
-  /** The band-index increment for `batchId`: band keys of the rows
-    * `table` committed for that batch (expectation-passing rows only,
-    * rebuildable from the log alone — the [[batchWindows]] doctrine). */
-  private def batchBands(spark: SparkSession, table: String,
-                         batchId: Long): DataFrame =
-    // readWhere, not read+filter — see batchWindows
-    graft.operators.MinHashDedup.bandIndex(
-      TxnLake.readWhere(spark, table, col("ingest_batch") === batchId)
-        .select("doc_id", "text"))
-
-  /** [[runCuratedTwoWaveIngest]] with the incremental near-dup gate
-    * ([[curateBatchNearDup]]) — the x33 shape, same exactly-once +
-    * checkpoint-loss-replay proof, plus band-index maintenance under
-    * (appId#bindex, batchId) with the same corpus-watermark
-    * reconciliation as the x34 window index (every crash / replay /
-    * index-loss interleaving heals from the table's own ingest_batch
-    * column). */
-  def runCuratedTwoWaveIngestNearDup(wave1Dir: String, wave2Dir: String,
-                                     table: String, checkpointDir: String,
-                                     appId: String, spark: SparkSession): Unit = {
-    verifiedCoverage.remove((bandIndexPath(table), bandIndexTxn(appId)))
-    clearProbeLog(table)
-    runTwoWaveSink(wave1Dir, wave2Dir, checkpointDir, spark,
-      indexedIngestSink(table, appId,
-        bandIndexPath(table), bandIndexTxn(appId),
-        curateBatchNearDup(_, _, _, appId),
-        (s, b) => batchBands(s, table, b),
-        indexBloomCol = "bh"))()
-  }
-
-  /** The x33 indexed near-dup ingest composed WITH continuous in-log
-    * maintenance (x40) — the composition the pre-x40 trust model
-    * deliberately excluded and a production table cannot avoid: every
-    * committed micro-batch is followed by an OPTIMIZE of the corpus
-    * (doc_id-range re-cluster, the x37 cadence), and the VERSION-COVERAGE
-    * model ([[indexCovered]]) must keep the band index trusted across
-    * the interleaved maintenance commits — the post-maintenance batch
-    * must be served by the delta-vs-index PROBE path, never the
-    * O(corpus) recompute (gated through [[probePaths]]). Exactly-once is
-    * the x32/x37 doctrine: optimize entries carry the cumulative
-    * (appId, batchId) map forward, so the checkpoint-loss replay is
-    * absorbed by the log, and a replayed batch triggers no maintenance.
-    * The per-batch whole-snapshot OPTIMIZE is the deliberate proof
-    * fixture (maximum maintenance pressure per data commit);
-    * [[graft.sources.TxnLake.compactSmallFiles]] /
-    * [[graft.sources.TxnLake.optimizeWhere]] carry the production cost
-    * model — the trust model is indifferent to WHICH data-preserving
-    * command produced the commits. */
-  def runCuratedTwoWaveIngestNearDupMaintained(
-      wave1Dir: String, wave2Dir: String, table: String,
-      checkpointDir: String, appId: String, spark: SparkSession,
-      numFiles: Int = 2): Unit = {
-    verifiedCoverage.remove((bandIndexPath(table), bandIndexTxn(appId)))
-    clearProbeLog(table)
-    runTwoWaveSink(wave1Dir, wave2Dir, checkpointDir, spark,
-      indexedIngestSink(table, appId,
-        bandIndexPath(table), bandIndexTxn(appId),
-        curateBatchNearDup(_, _, _, appId),
-        (s, b) => batchBands(s, table, b),
-        indexBloomCol = "bh",
-        maintain = s => {
+      if (committed.isDefined) maintenance match {
+        case Maintenance.Off =>
+        case Maintenance.Optimize(numFiles) =>
           TxnLake.optimize(s, table, zorderBy = Seq("doc_id"),
             numFiles = numFiles)
-          ()
-        }))()
-  }
-
-  /** [[runCuratedTwoWaveIngest]] with CONTINUOUS LAKE MAINTENANCE (x37):
-    * after each batch that actually lands, the sink runs
-    * [[graft.sources.TxnLake.optimize]] on the corpus table — a
-    * WHOLE-SNAPSHOT re-cluster per batch, deliberately: this runner is
-    * the exactly-once-under-maximum-maintenance-pressure proof, paying
-    * O(table) rewrite per micro-batch to interleave the heaviest
-    * possible maintenance commit after every data commit. At production
-    * cadence that cost model is wrong — a deployment runs
-    * [[graft.sources.TxnLake.compactSmallFiles]] (O(small-file debt)) or
-    * [[graft.sources.TxnLake.optimizeWhere]] (O(scoped bytes)) between
-    * batches and reserves the full re-cluster for scheduled windows; the
-    * exactly-once invariants proven here are identical for all three,
-    * since each is one data-preserving "optimize" log commit. What must
-    * survive the interleaving: exactly-once holds because every optimize
-    * entry carries the cumulative (appId, batchId) txn map forward, so
-    * the checkpoint-loss replay still sees its batches in the log;
-    * readers are isolated because optimize is one data-preserving
-    * snapshot swap. A replayed (skipped) batch triggers NO maintenance —
-    * compaction happens exactly as often as data actually lands. */
-  def runCuratedTwoWaveIngestCompacting(wave1Dir: String, wave2Dir: String,
-                                        table: String, checkpointDir: String,
-                                        appId: String, spark: SparkSession,
-                                        numFiles: Int = 2): Unit = {
-    val sink = (batch: DataFrame, batchId: Long) => {
-      val s = batch.sparkSession
-      if (!TxnLake.lastTxn(s, table, appId).exists(_ >= batchId)) {
-        val committed = Expectations.commitOnceWithExpectations(
-          s, curateBatch(batch, table, batchId),
-          table, "append", appId, batchId, IngestExpectations,
-          bloomCols = CorpusBloomCols)
-        if (committed.isDefined) {
-          TxnLake.optimize(s, table, zorderBy = Seq("doc_id"),
-            numFiles = numFiles)
-          ()
-        }
-      }
-      ()
-    }
-    runTwoWaveSink(wave1Dir, wave2Dir, checkpointDir, spark, sink)()
-  }
-
-  /** [[runCuratedTwoWaveIngestCompacting]] with the PRODUCTION cost model
-    * in the loop (x43): after each landed batch the sink runs
-    * [[graft.sources.TxnLake.compactSmallFiles]] — pack only the
-    * sub-threshold small-file debt, carry every already-packed file over
-    * with its physical path VERBATIM — instead of x37's deliberate
-    * whole-snapshot re-cluster. The first batch's compaction packs its
-    * own small appends into one file and every later compaction packs
-    * ONLY the new batch's debt around it: maintenance cost is O(day's
-    * small files) at any table size, the cadence command a 100 TB
-    * deployment actually schedules. Appends land `repartition(2)` so
-    * every batch provably
-    * accrues debt (AQE would otherwise coalesce a small batch into one
-    * file and the no-op guard would skip the maintenance this runner
-    * exists to exercise). Exactly-once is x37's doctrine unchanged —
-    * compaction commits carry the cumulative txn map, a replayed batch
-    * triggers NO maintenance. The pack set is PROVENANCE-scoped
-    * (`compactSmallFiles(within = the files this batch just landed)`),
-    * not size-thresholded: a size heuristic flips which files it packs
-    * the moment a batch's append rivals the packed history's size, while
-    * provenance packs exactly the new debt at any size distribution. */
-  def runCuratedTwoWaveIngestCompactingIncremental(
-      wave1Dir: String, wave2Dir: String, table: String,
-      checkpointDir: String, appId: String, spark: SparkSession): Unit = {
-    val sink = (batch: DataFrame, batchId: Long) => {
-      val s = batch.sparkSession
-      if (!TxnLake.lastTxn(s, table, appId).exists(_ >= batchId)) {
-        val before = TxnLake.snapshotFiles(s, table).map(_.path).toSet
-        val committed = Expectations.commitOnceWithExpectations(
-          s, curateBatch(batch, table, batchId).repartition(2),
-          table, "append", appId, batchId, IngestExpectations,
-          bloomCols = CorpusBloomCols)
-        if (committed.isDefined) {
-          val landed = TxnLake.snapshotFiles(s, table).map(_.path).toSet -- before
+        case Maintenance.CompactLanded =>
+          val landed =
+            TxnLake.snapshotFiles(s, table).map(_.path).toSet -- before
           TxnLake.compactSmallFiles(s, table, minFileBytes = Long.MaxValue,
             within = Some(landed))
-          ()
+      }
+    }
+    index.foreach { idx =>
+      val c = TxnLake.lastTxn(s, table, appId).getOrElse(-1L)
+      val w = TxnLake.lastTxn(s, idx.path, idx.txnId).getOrElse(-1L)
+      // Attach the probe's verified-coverage tuple to the FIRST increment
+      // commit that actually persists (not blindly i == 0: a replayed
+      // increment returns None WITHOUT persisting extraTxns). If the whole
+      // reconcile range is empty or every increment was a replay,
+      // re-insert the tuple so the NEXT batch's sink can persist it —
+      // silently losing it is never unsound (markers only bound the
+      // indexCovered scan) but re-widens that scan to the older marker
+      // forever. putIfAbsent: never clobber a fresher tuple a subsequent
+      // probe may have recorded.
+      val marks = verifiedCoverage.remove((idx.path, idx.txnId))
+      val extra = marks
+        .map { case (tv, iv) =>
+          Map(covTxn(idx.txnId) -> tv, icovTxn(idx.txnId) -> iv) }
+        .getOrElse(Map.empty)
+      var marksPersisted = marks.isEmpty
+      ((w + 1) to c).foreach { b =>
+        val committed = graft.plans.JobLabel.labeled(s,
+            s"index:increment b$b") {
+          // REBALANCE before the write (guide §6): the increment arrives
+          // at the CPU-spread width (cores partitions for a KB-scale
+          // batch), so an as-is append wrote one tiny parquet file + bloom
+          // sidecar per core PER COMMIT — and every later probe pays
+          // per-file sidecar reads and per-task write overhead. AQE sizes
+          // the rebalance by advisoryPartitionSizeInBytes: one file for a
+          // micro-batch increment, bytes/advisory for a backfill-scale one.
+          TxnLake.commitOnce(s, idx.increment(s, b).hint("rebalance"),
+            idx.path, "append", idx.txnId, b,
+            extraTxns = if (marksPersisted) Map.empty else extra,
+            bloomCols = Seq(idx.bloomCol))
         }
+        if (committed.isDefined) marksPersisted = true
       }
-      ()
+      if (!marksPersisted)
+        marks.foreach(verifiedCoverage.putIfAbsent((idx.path, idx.txnId), _))
     }
-    runTwoWaveSink(wave1Dir, wave2Dir, checkpointDir, spark, sink)()
-  }
-
-  /** The x34 indexed decontamination ingest composed WITH continuous
-    * in-log maintenance (x42) — [[runCuratedTwoWaveIngestNearDupMaintained]]'s
-    * proof for the OTHER sibling-index type: the `_windex` window index
-    * must stay trusted across interleaved optimize commits, so the
-    * post-maintenance batch's mask probes the materialized index rather
-    * than re-tokenizing the corpus. Identical trust machinery
-    * ([[indexCovered]] + markers) — registering both compositions pins
-    * that the model is index-type-agnostic. */
-  def runCuratedTwoWaveIngestDecontamMaintained(
-      wave1Dir: String, wave2Dir: String, table: String,
-      checkpointDir: String, appId: String, spark: SparkSession,
-      numFiles: Int = 2): Unit = {
-    verifiedCoverage.remove((windowIndexPath(table), windowIndexTxn(appId)))
-    clearProbeLog(table)
-    runTwoWaveSink(wave1Dir, wave2Dir, checkpointDir, spark,
-      indexedIngestSink(table, appId,
-        windowIndexPath(table), windowIndexTxn(appId),
-        curateBatchDecontam(_, _, _, appId),
-        (s, b) => batchWindows(s, table, b, DecontamWindow),
-        indexBloomCol = "__g",
-        maintain = s => {
-          TxnLake.optimize(s, table, zorderBy = Seq("doc_id"),
-            numFiles = numFiles)
-          ()
-        }))()
-  }
-
-  private def runTwoWave(wave1Dir: String, wave2Dir: String,
-                         table: String, checkpointDir: String,
-                         appId: String, spark: SparkSession,
-                         curate: (DataFrame, String, Long) => DataFrame): Unit = {
-    // ONE sink definition serves both the primary ingest and the replay —
-    // the replay must exercise the exact sink whose idempotence it proves.
-    // (Only curateBatch/x32 routes through here now; the index-maintaining
-    // gates use indexedIngestSink.)
-    val sink = (batch: DataFrame, batchId: Long) => {
-      // Replay fast-path: a batch already in the table log must not even
-      // BUILD the curation gate. commitOnceWithExpectations re-checks
-      // under the same (appId, batchId) txn, so this is a cost
-      // short-circuit, not the correctness mechanism.
-      if (!TxnLake.lastTxn(batch.sparkSession, table, appId)
-            .exists(_ >= batchId)) {
-        Expectations.commitOnceWithExpectations(
-          batch.sparkSession, curate(batch, table, batchId),
-          table, "append", appId, batchId, IngestExpectations,
-          bloomCols = CorpusBloomCols)
-      }
-      ()
-    }
-    runTwoWaveSink(wave1Dir, wave2Dir, checkpointDir, spark, sink)()
   }
 
   /** The two-wave driver itself: land wave 1, micro-batch it, land wave 2,

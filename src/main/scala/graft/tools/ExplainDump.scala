@@ -5,8 +5,10 @@ import graft.GraftSession
 import graft.SparkEntry
 
 /** Dev tool: dump formatted physical plans of the headline queries to
-  * PLANS.md — the `.explain("formatted")` evidence for the plan-shape
-  * claims (pushdown, pruning, broadcast, codegen spans).
+  * PLANS.md in the working directory — the `.explain("formatted")`
+  * evidence for the plan-shape claims (pushdown, pruning, broadcast,
+  * codegen spans) that PlanShapeSpec pins. Generated on demand, not
+  * committed.
   * Run: sbt "runMain graft.tools.ExplainDump" */
 object ExplainDump {
   def main(args: Array[String]): Unit = {
@@ -109,7 +111,7 @@ object ExplainDump {
         org.apache.spark.sql.execution.FormattedMode)
       sb.append(s"\n## $name\n\n_${note}_\n\n```\n$plan```\n")
     }
-    Files.writeString(Paths.get("/root/repo/PLANS.md"), sb.toString)
+    Files.writeString(Paths.get("PLANS.md"), sb.toString)
     println(s"[explain] wrote PLANS.md (${headline.size} queries)")
     spark.stop()
   }

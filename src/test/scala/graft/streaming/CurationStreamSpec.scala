@@ -4,6 +4,8 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.sources.{Expectations, TxnLake}
+import graft.streaming.CurationStream.{Gate, Maintenance}
+import graft.streaming.CurationStream.Landing.{Backfill, TwoWaves}
 
 /** What the x32 oracle cannot see: the table's VERSION HISTORY. Two waves
   * must commit exactly two versions, the checkpoint-loss replay zero, and
@@ -17,22 +19,37 @@ class CurationStreamSpec extends SparkSpec {
     val w1 = s"$base/w1"; val w2 = s"$base/w2"
     docs.filter(col("doc_id") % 3 =!= 0).coalesce(1).write.parquet(w1)
     docs.filter(col("doc_id") % 3 === 0).coalesce(1).write.parquet(w2)
-    val table = s"$base/t"
-    CurationStream.runCuratedTwoWaveIngest(
-      w1, w2, table, s"$base/ckpt", "spec_ingest", spark)
-    // wave1 = version 0, wave2 = version 1, replay = nothing
-    assert(TxnLake.latestVersion(spark, table).contains(1L),
-      s"expected exactly versions 0 and 1, got ${TxnLake.latestVersion(spark, table)}")
-    assert(TxnLake.latestVersion(spark,
-      Expectations.quarantinePath(table)).isEmpty,
-      "honest data must not quarantine")
-    // cross-wave ownership: every fingerprint appears once, and a fp seen
-    // in wave 1 is never re-committed by wave 2
-    val rows = TxnLake.read(spark, table)
-    assert(rows.groupBy("fp").count().filter(col("count") > 1).count() == 0)
-    val batches = rows.select("ingest_batch").distinct()
-      .collect().map(_.getInt(0)).toSet
-    assert(batches == Set(0, 1), s"got batches $batches")
+    // wave1 = version 0, wave2 = version 1, replay = nothing; each
+    // maintenance arm adds one commit after each landed batch, and none
+    // after the replay
+    Seq(Maintenance.Off -> 1L, Maintenance.Optimize(2) -> 3L,
+      Maintenance.CompactLanded -> 3L).zipWithIndex.foreach {
+      case ((maintenance, latest), i) =>
+        val table = s"$base/t$i"
+        CurationStream.ingest(spark, TwoWaves(w1, w2), table,
+          s"$base/ckpt$i", "spec_ingest", maintenance = maintenance)
+        assert(TxnLake.latestVersion(spark, table).contains(latest),
+          s"$maintenance: expected latest version $latest, got " +
+            s"${TxnLake.latestVersion(spark, table)}")
+        assert(TxnLake.latestVersion(spark,
+          Expectations.quarantinePath(table)).isEmpty,
+          "honest data must not quarantine")
+        // cross-wave ownership: every fingerprint appears once, and a fp
+        // seen in wave 1 is never re-committed by wave 2
+        val rows = TxnLake.read(spark, table)
+        assert(rows.groupBy("fp").count().filter(col("count") > 1).count() == 0)
+        val batches = rows.select("ingest_batch").distinct()
+          .collect().map(_.getInt(0)).toSet
+        assert(batches == Set(0, 1), s"got batches $batches")
+        if (maintenance == Maintenance.CompactLanded) {
+          // batch 0's packed file (the v1 snapshot) survives batch 1's
+          // compaction verbatim: only the landed debt is packed
+          val packed = TxnLake.snapshotFiles(spark, table, Some(1L)).map(_.path)
+          val last = TxnLake.snapshotFiles(spark, table).map(_.path)
+          assert(packed.size == 1 && last.contains(packed.head),
+            s"packed history must carry over verbatim: $packed vs $last")
+        }
+    }
   }
 
   test("near-dup gate drops a wave-2 doc similar to a committed wave-1 doc") {
@@ -66,8 +83,8 @@ class CurationStreamSpec extends SparkSpec {
     val w1 = land(s"$base/w1", Seq(1L -> w1text))
     val w2 = land(s"$base/w2", Seq(2L -> w2near, 3L -> w2fresh))
     val table = s"$base/t"
-    CurationStream.runCuratedTwoWaveIngestNearDup(
-      w1, w2, table, s"$base/ckpt", "spec_nd_ingest", spark)
+    CurationStream.ingest(spark, TwoWaves(w1, w2), table, s"$base/ckpt",
+      "spec_nd_ingest", Gate.NearDup)
     val rows = TxnLake.read(spark, table)
       .select("doc_id", "ingest_batch").collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
@@ -91,8 +108,8 @@ class CurationStreamSpec extends SparkSpec {
     assert(idxBands() == expB, "band index diverged from recompute")
     // total index loss rebuilds via the corpus-watermark reconciliation
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(bindex))
-    CurationStream.runCuratedTwoWaveIngestNearDup(
-      w1, w2, table, s"$base/ckpt2", "spec_nd_ingest", spark)
+    CurationStream.ingest(spark, TwoWaves(w1, w2), table, s"$base/ckpt2",
+      "spec_nd_ingest", Gate.NearDup)
     assert(TxnLake.latestVersion(spark, table).contains(1L),
       "corpus must not re-commit during the index rebuild")
     assert(idxBands() == expB, "rebuilt band index diverged")
@@ -126,8 +143,8 @@ class CurationStreamSpec extends SparkSpec {
     val w1 = land(s"$base/w1", Seq(1L -> w1text))
     val w2 = land(s"$base/w2", Seq(2L -> w2contaminated, 3L -> w2fresh))
     val table = s"$base/t"
-    CurationStream.runCuratedTwoWaveIngestDecontam(
-      w1, w2, table, s"$base/ckpt", "spec_dc_ingest", spark)
+    CurationStream.ingest(spark, TwoWaves(w1, w2), table, s"$base/ckpt",
+      "spec_dc_ingest", Gate.Decontam)
     val rows = TxnLake.read(spark, table)
       .select("doc_id", "ingest_batch", "n_removed", "text").collect()
       .map(r => r.getLong(0) -> ((r.getInt(1), r.getInt(2), r.getString(3))))
@@ -185,8 +202,8 @@ class CurationStreamSpec extends SparkSpec {
     val w1 = land(s"$base/w1", wave1)
     val w2 = land(s"$base/w2", wave2)
     val table = s"$base/t"
-    CurationStream.runCuratedTwoWaveIngestDecontam(
-      w1, w2, table, s"$base/ckpt", "spec_xalg_ingest", spark)
+    CurationStream.ingest(spark, TwoWaves(w1, w2), table, s"$base/ckpt",
+      "spec_xalg_ingest", Gate.Decontam)
     val got = TxnLake.read(spark, table)
       .filter(col("ingest_batch") === 1)
       .select("doc_id", "n_removed", "text").collect()
@@ -229,8 +246,8 @@ class CurationStreamSpec extends SparkSpec {
     // first sink invocation must back-fill BOTH increments
     org.apache.commons.io.FileUtils.deleteDirectory(
       new java.io.File(windex))
-    CurationStream.runCuratedTwoWaveIngestDecontam(
-      w1, w2, table, s"$base/ckpt2", "spec_xalg_ingest", spark)
+    CurationStream.ingest(spark, TwoWaves(w1, w2), table, s"$base/ckpt2",
+      "spec_xalg_ingest", Gate.Decontam)
     assert(TxnLake.latestVersion(spark, table).contains(1L),
       "corpus must not re-commit during the index rebuild")
     assert(TxnLake.latestVersion(spark, windex).contains(1L),
@@ -266,8 +283,8 @@ class CurationStreamSpec extends SparkSpec {
       Seq(2L -> (filler ++ Seq("but", "never", "twice", "over", "water",
         "this", "evening", "for", "the", "boats")).mkString(" ")))
     val table = s"$base/t"
-    CurationStream.runCuratedTwoWaveIngestDecontam(
-      w1, w2, table, s"$base/ckpt", "spec_foreign_ingest", spark)
+    CurationStream.ingest(spark, TwoWaves(w1, w2), table, s"$base/ckpt",
+      "spec_foreign_ingest", Gate.Decontam)
     // a FOREIGN writer appends a doc carrying the run, bypassing the sink
     val foreign = Seq((9L, "x" * 32, 25,
       0, (run ++ filler).mkString(" "), 7))
@@ -337,8 +354,8 @@ class CurationStreamSpec extends SparkSpec {
     val w2 = land(s"$base/w2", Seq(2L -> w2near, 3L -> w2fresh))
     val table = s"$base/t"
     val appId = "spec_ndm_ingest"
-    CurationStream.runCuratedTwoWaveIngestNearDupMaintained(
-      w1, w2, table, s"$base/ckpt", appId, spark)
+    CurationStream.ingest(spark, TwoWaves(w1, w2), table, s"$base/ckpt",
+      appId, Gate.NearDup, Maintenance.Optimize(2))
     // same semantic outcome as the unmaintained x33 ingest
     val rows = TxnLake.read(spark, table)
       .select("doc_id", "ingest_batch").collect()
@@ -421,15 +438,15 @@ class CurationStreamSpec extends SparkSpec {
       Seq(2L -> toks.updated(29, "owls").mkString(" "),
         3L -> toks.reverse.mkString(" ")))
     def ingest(table: String, ckpt: String): Set[String] = {
-      CurationStream.runCuratedTwoWaveIngestNearDup(
-        w1, w2, table, ckpt, "spec_fb_ingest", spark)
+      CurationStream.ingest(spark, TwoWaves(w1, w2), table, ckpt,
+        "spec_fb_ingest", Gate.NearDup)
       TxnLake.read(spark, table)
         .select("doc_id", "fp", "n_tokens", "ingest_batch")
         .collect().map(_.toString).toSet
     }
     def ingestDc(table: String, ckpt: String): Set[String] = {
-      CurationStream.runCuratedTwoWaveIngestDecontam(
-        w1, w2, table, ckpt, "spec_fb_dc", spark)
+      CurationStream.ingest(spark, TwoWaves(w1, w2), table, ckpt,
+        "spec_fb_dc", Gate.Decontam)
       TxnLake.read(spark, table)
         .select("doc_id", "fp", "n_tokens", "n_removed", "text",
           "ingest_batch")
@@ -503,9 +520,9 @@ class CurationStreamSpec extends SparkSpec {
       } finally stream.close()
     }
     // reference: the whole landing as ONE batch (no effective cap)
-    CurationStream.runCuratedBackfillIngestDecontam(
-      landing.toString, s"$base/ref", s"$base/ckpt_ref", "bf_ref", spark,
-      maxFilesPerTrigger = 100)
+    CurationStream.ingest(spark,
+      Backfill(landing.toString, maxFilesPerTrigger = 100),
+      s"$base/ref", s"$base/ckpt_ref", "bf_ref", Gate.Decontam)
     assert(TxnLake.lastTxn(spark, s"$base/ref", "bf_ref").contains(0L),
       "fixture: uncapped, the backlog is one micro-batch")
     val refFps = TxnLake.read(spark, s"$base/ref")
@@ -514,17 +531,17 @@ class CurationStreamSpec extends SparkSpec {
     // capped at 2 files/trigger with a crash after ONE applied batch
     val table = s"$base/t"
     intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      CurationStream.runCuratedBackfillIngestDecontam(
-        landing.toString, table, s"$base/ckpt", "bf", spark,
-        maxFilesPerTrigger = 2, failAfterBatches = 1)
+      CurationStream.ingest(spark,
+        Backfill(landing.toString, maxFilesPerTrigger = 2, failAfterBatches = 1),
+        table, s"$base/ckpt", "bf", Gate.Decontam)
     }
     assert(TxnLake.lastTxn(spark, table, "bf").contains(0L),
       "the crash must park the offset at the first unapplied slice")
     // resume with the SAME checkpoint: the remaining slices drain, the
     // replayed slice no-ops at the (appId, batchId) guard
-    CurationStream.runCuratedBackfillIngestDecontam(
-      landing.toString, table, s"$base/ckpt", "bf", spark,
-      maxFilesPerTrigger = 2)
+    CurationStream.ingest(spark,
+      Backfill(landing.toString, maxFilesPerTrigger = 2),
+      table, s"$base/ckpt", "bf", Gate.Decontam)
     assert(TxnLake.lastTxn(spark, table, "bf").contains(2L),
       "6 files at cap 2 = micro-batches 0..2")
     val rows = TxnLake.read(spark, table)

@@ -3,6 +3,8 @@ package graft.jobs
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.model.EarthquakeSchemas
+import graft.plans.JobLabel
 
 /** Bronze → Silver: flatten the GeoJSON FeatureCollection, cast, validate,
   * dedup latest-update-wins, enrich. Re-expresses
@@ -135,17 +137,19 @@ object BronzeToSilver {
 
   /** End-to-end job: JSON scan → transform → parquet partitioned by
     * (year, month) with overwrite semantics (ref: b2s:38,146; Delta swapped
-    * for parquet per SURVEY §7.3 — no delta jars in this environment). */
+    * for parquet per SURVEY §7.3 — no delta jars in this environment).
+    * Silver reads back with its known schema, so a day with no events
+    * writes and returns zero rows of that schema. */
   def run(spark: SparkSession, bronzePath: String, silverPath: String,
           multiLine: Boolean = false,
           lake: graft.sources.LakeFormat = graft.sources.ParquetLake): DataFrame = {
     val bronze = spark.read
       .option("multiLine", multiLine)
-      .schema(graft.model.EarthquakeSchemas.bronzeSchema)
+      .schema(EarthquakeSchemas.bronzeSchema)
       .json(bronzePath)
-    if (bronze.isEmpty) return spark.emptyDataFrame
-    val silver = transform(bronze)
-    lake.write(silver, silverPath, Seq("year", "month"))
-    lake.read(spark, silverPath)
+    JobLabel.labeled(spark, "b2s:write") {
+      lake.write(transform(bronze), silverPath, Seq("year", "month"))
+    }
+    lake.read(spark, silverPath, EarthquakeSchemas.silverSchema)
   }
 }

@@ -2,6 +2,9 @@ package graft.jobs
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.model.EarthquakeSchemas
+import graft.plans.JobLabel
+import graft.run.Concurrently
 
 /** Silver → Gold: star-schema dimensional modeling
   * (re-expresses `scripts/process_silver_to_gold.py`).
@@ -16,8 +19,9 @@ import org.apache.spark.sql.functions._
   *    star-schema semantics unchanged.
   *
   * Scale: each dim is a distinct (one shuffle each, AQE-coalesced); the fact
-  * assembly joins dims back by natural key — all broadcastable (dims are
-  * ~|distinct locations| ≪ fact) so the fact side never shuffles for joins.
+  * computes its dim keys from silver's natural keys instead of joining the
+  * dims back, so it shuffles only for its EventID dedup. Silver is cached
+  * once and the five table writes overlap.
   */
 object SilverToGold {
 
@@ -82,29 +86,25 @@ object SilverToGold {
       .distinct()
       .withColumn("EventTypeKey", xxhash64(col("EventType"), col("MagType")))
 
-  /** Fact assembly: DateKey derivation + 4 dimension joins + final projection
-    * (ref: process_silver_to_gold.py:112-139). NULL magType rows drop via
-    * plain (non-null-safe) equi-join — intentional reference semantics
-    * (SURVEY §7.5.4). */
-  def factEarthquakeEvents(silver: DataFrame, dimLoc: DataFrame,
-                           dimMag: DataFrame, dimET: DataFrame): DataFrame = {
-    val withKeys = silver
-      .withColumn("DateKey",
-        date_format(col("event_timestamp_utc"), "yyyyMMdd").cast("int"))
-    withKeys
-      .join(broadcast(dimLoc.select("LocationKey", "latitude", "longitude", "place")),
-        Seq("latitude", "longitude", "place"), "inner")
-      .join(broadcast(dimMag.select("MagnitudeKey", "MagnitudeCategory")),
-        col("magnitude_category") === col("MagnitudeCategory"), "inner")
-      // dim-side join cols renamed: Spark's default case-insensitive
-      // resolution would make silver `magType` vs dim `MagType` ambiguous
-      .join(broadcast(dimET.select(col("EventTypeKey"),
-          col("EventType").as("et_key"), col("MagType").as("mt_key"))),
-        col("event_type") === col("et_key") && col("magType") === col("mt_key"),
-        "inner")
+  /** Fact assembly: DateKey derivation + the three dimension keys + final
+    * projection (ref: process_silver_to_gold.py:112-139). The reference
+    * joins each dim back by natural key; here every surrogate key is
+    * `xxhash64` of that natural key, so it is computed straight from the
+    * silver row and nothing joins. The filter is the reference's inner-join
+    * drop rule: a row with a NULL in any natural key finds no dim row, so
+    * NULL magType rows drop — intentional reference semantics (SURVEY
+    * §7.5.4). `xxhash64` hashes -0.0 and 0.0 alike, as the join's equality
+    * matches them, so the keys equal the ones the dims carry. */
+  def factEarthquakeEvents(silver: DataFrame): DataFrame =
+    silver
+      .filter(Seq("latitude", "longitude", "place", "magnitude_category", "event_type",
+        "magType").map(col(_).isNotNull).reduce(_ && _))
       .select(
         col("event_id").as("EventID"),
-        col("DateKey"), col("LocationKey"), col("MagnitudeKey"), col("EventTypeKey"),
+        date_format(col("event_timestamp_utc"), "yyyyMMdd").cast("int").as("DateKey"),
+        xxhash64(col("latitude"), col("longitude"), col("place")).as("LocationKey"),
+        xxhash64(col("magnitude_category")).as("MagnitudeKey"),
+        xxhash64(col("event_type"), col("magType")).as("EventTypeKey"),
         col("event_timestamp_utc").as("EventTimestamp"),
         col("magnitude").as("Magnitude"),
         col("depth_km").as("DepthKm"),
@@ -117,36 +117,38 @@ object SilverToGold {
         col("latitude"), col("longitude"),
         current_timestamp().as("GoldProcessingTimestamp"))
       .dropDuplicates(Seq("EventID"))
-  }
 
   /** All six gold tables from a silver DataFrame. */
-  def buildAll(spark: SparkSession, silver: DataFrame): Map[String, DataFrame] = {
-    val dDate = dimDate(silver)
-    val dLoc = dimLocation(silver)
-    val dMag = dimMagnitude(spark)
-    val dET = dimEventType(silver)
-    val fact = factEarthquakeEvents(silver, dLoc, dMag, dET)
+  def buildAll(spark: SparkSession, silver: DataFrame): Map[String, DataFrame] =
     Map(
-      "dim_date" -> dDate,
-      "dim_location" -> dLoc,
-      "dim_magnitude" -> dMag,
-      "dim_event_type" -> dET,
-      "fact_earthquake_events" -> fact)
-  }
+      "dim_date" -> dimDate(silver),
+      "dim_location" -> dimLocation(silver),
+      "dim_magnitude" -> dimMagnitude(spark),
+      "dim_event_type" -> dimEventType(silver),
+      "fact_earthquake_events" -> factEarthquakeEvents(silver))
 
   /** End-to-end job: silver scan → star schema → warehouse sink
-    * (overwrite = BigQuery full-table-replace semantics, SURVEY §2.1 S7). */
+    * (overwrite = BigQuery full-table-replace semantics, SURVEY §2.1 S7).
+    * The five table writes are independent, so they run concurrently;
+    * the returned tables read back with the schemas just written. An
+    * empty silver writes nothing and returns no table. */
   def run(spark: SparkSession, silverPath: String, goldPath: String,
           lake: graft.sources.LakeFormat = graft.sources.ParquetLake): Map[String, DataFrame] = {
     val warehouse = new graft.sources.ParquetWarehouse(goldPath)
-    val silver = lake.read(spark, silverPath)
-    if (silver.isEmpty) return Map.empty
     // cache: every table write re-executes the silver lineage otherwise
     // (the reference re-runs it 5×, SURVEY §4.3.1)
-    silver.cache()
-    val tables = buildAll(spark, silver)
-    tables.foreach { case (name, df) => warehouse.writeTable(df, name) }
-    silver.unpersist()
-    tables.map { case (name, _) => name -> warehouse.readTable(spark, name) }
+    val silver = lake.read(spark, silverPath, EarthquakeSchemas.silverSchema).cache()
+    try {
+      // one count both fills the cache and probes for emptiness; filled
+      // before the fan-out, so the writers do not queue on the same blocks
+      if (JobLabel.labeled(spark, "s2g:silver")(silver.count()) == 0) Map.empty
+      else {
+        val tables = buildAll(spark, silver)
+        Concurrently(spark)(tables.toSeq.map { case (name, df) =>
+          () => JobLabel.labeled(spark, s"s2g:$name")(warehouse.writeTable(df, name))
+        }: _*)
+        tables.map { case (name, df) => name -> warehouse.readTable(spark, name, df.schema) }
+      }
+    } finally silver.unpersist()
   }
 }

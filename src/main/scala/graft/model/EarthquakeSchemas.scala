@@ -66,4 +66,21 @@ object EarthquakeSchemas {
     "year", "month", "day", "hour", "day_of_week",
     "extracted_region_detail", "extracted_country",
     "silver_processing_timestamp_utc")
+
+  /** Silver as stored: the [[silverColumns]] with the types
+    * `BronzeToSilver.transform` gives them, the `year`/`month` partition
+    * columns last (where a partitioned parquet read puts them). Reading
+    * with it skips the footer-inference job and reads a day with no
+    * events as zero rows instead of failing. */
+  val silverSchema: StructType = StructType.fromDDL(
+    "event_id STRING, event_timestamp_utc TIMESTAMP, updated_timestamp_utc TIMESTAMP, " +
+    "magnitude DOUBLE, depth_km DOUBLE, latitude DOUBLE, longitude DOUBLE, " +
+    "significance INT, felt_reports INT, nst_stations INT, " +
+    "rms_travel_time DOUBLE, gap_azimuthal DOUBLE, " +
+    "tsunami_warning BOOLEAN, event_type STRING, magType STRING, alert STRING, status STRING, " +
+    "url STRING, title STRING, place STRING, " +
+    "magnitude_category STRING, depth_category STRING, hemisphere_ns STRING, hemisphere_ew STRING, " +
+    "day INT, hour INT, day_of_week INT, " +
+    "extracted_region_detail STRING, extracted_country STRING, " +
+    "silver_processing_timestamp_utc TIMESTAMP, year INT, month INT")
 }

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Storage abstractions decoupling the pipeline from concrete formats
   * (SURVEY §7.3): the reference writes Delta on GCS and BigQuery tables;
@@ -15,7 +16,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 trait LakeFormat {
   def write(df: DataFrame, path: String, partitionBy: Seq[String]): Unit
-  def read(spark: SparkSession, path: String): DataFrame
+  /** Read with the schema the caller wrote (partition columns last), so
+    * the scan infers nothing and an empty table reads as zero rows of it. */
+  def read(spark: SparkSession, path: String, schema: StructType): DataFrame
 }
 
 /** Warehouse table sink with the reference's overwrite (full replace)
@@ -32,7 +35,8 @@ object ParquetLake extends LakeFormat {
     val w = df.write.mode("overwrite")
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(path)
   }
-  def read(spark: SparkSession, path: String): DataFrame = spark.read.parquet(path)
+  def read(spark: SparkSession, path: String, schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(path)
 }
 
 /** Local warehouse: one parquet directory per table under a root.
@@ -62,6 +66,10 @@ final class ParquetWarehouse(root: String) extends WarehouseSink {
   }
   def readTable(spark: SparkSession, table: String): DataFrame =
     spark.read.parquet(s"$root/$table")
+  /** [[readTable]] with the schema the table was written with: no
+    * footer-inference job. */
+  def readTable(spark: SparkSession, table: String, schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(s"$root/$table")
 }
 
 /** Lake maintenance: small-file compaction (the `OPTIMIZE` analog).

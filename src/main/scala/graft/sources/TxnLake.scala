@@ -2127,6 +2127,10 @@ object TxnLake extends LakeFormat {
       case None => spark.emptyDataFrame
     }
 
+  /** The log records the schema, so `schema` adds nothing to the read. */
+  def read(spark: SparkSession, path: String,
+           schema: StructType): DataFrame = read(spark, path)
+
   // ---- deletion vectors -------------------------------------------------
 
   /** Live deletion vectors AS OF a version, data-file path → [[DvRef]]. */

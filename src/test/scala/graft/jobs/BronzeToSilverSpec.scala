@@ -124,4 +124,25 @@ class BronzeToSilverSpec extends SparkSpec {
       .collect().map(_.getString(0)).toSeq
     assert(got == Seq("Micro", "Minor", "Major", "Great"))
   }
+
+  test("silver reads back with the stored schema: types and partition columns last") {
+    assert(silver.schema == EarthquakeSchemas.silverSchema)
+    assert(SparkSpec.session.read.parquet(s"$lake/silver").schema == EarthquakeSchemas.silverSchema)
+  }
+
+  test("a day with no events, or none valid, gives an empty silver and no gold") {
+    val s = SparkSpec.session
+    val invalid = """{"type":"Feature","id":"bad1","properties":{"mag":11.0,"time":1704067200000,""" +
+      """"updated":1704067200000,"tsunami":0},"geometry":{"type":"Point","coordinates":[1.0,2.0,10.0]}}"""
+    Seq("none" -> "", "invalid" -> invalid).foreach { case (name, features) =>
+      val dir = s"$lake/empty_$name"
+      UsgsGeoJson.writeBronze(s"$dir/bronze.json",
+        s"""{"type":"FeatureCollection","features":[$features]}""")
+      val empty = BronzeToSilver.run(s, s"$dir/bronze.json", s"$dir/silver")
+      assert(empty.count() == 0, name)
+      assert(empty.columns.toSet == EarthquakeSchemas.silverColumns.toSet, name)
+      assert(SilverToGold.run(s, s"$dir/silver", s"$dir/gold").isEmpty, name)
+      assert(!new java.io.File(s"$dir/gold").exists(), name)
+    }
+  }
 }

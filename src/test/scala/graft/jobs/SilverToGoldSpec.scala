@@ -3,6 +3,7 @@ package graft.jobs
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
+import graft.run.ConcurrentlySpec
 import graft.ingest.UsgsGeoJson
 import graft.queries.GoldQueries
 import graft.queries.GoldQueries.SlicerState
@@ -110,5 +111,43 @@ class SilverToGoldSpec extends SparkSpec {
       gold("dim_location"), gold("dim_magnitude")).collect()
     assert(rows.nonEmpty)
     assert(rows.forall(!_.isNullAt(3)))
+  }
+
+  test("fact keys equal the keys joined from each dim, -0.0 and NULL keys included") {
+    val s = SparkSpec.session
+    val ev01 = silver.filter(col("event_id") === "ev01")
+    def variant(id: String, c: String, v: org.apache.spark.sql.Column) =
+      ev01.withColumn("event_id", lit(id)).withColumn(c, v)
+    val in = Seq(
+      variant("lat+0", "latitude", lit(0.0)),
+      variant("lat-0", "latitude", lit(-0.0)),
+      variant("noplace", "place", lit(null).cast("string")),
+      variant("nomagtype", "magType", lit(null).cast("string"))).foldLeft(silver)(_ unionByName _)
+    val joined = in
+      .join(SilverToGold.dimLocation(in).select("LocationKey", "latitude", "longitude", "place"),
+        Seq("latitude", "longitude", "place"))
+      .join(SilverToGold.dimMagnitude(s).select("MagnitudeKey", "MagnitudeCategory"),
+        col("magnitude_category") === col("MagnitudeCategory"))
+      .join(SilverToGold.dimEventType(in).select(col("EventTypeKey"),
+          col("EventType").as("et"), col("MagType").as("mt")),
+        col("event_type") === col("et") && col("magType") === col("mt"))
+    def keys(df: org.apache.spark.sql.DataFrame, id: String) =
+      df.select(id, "LocationKey", "MagnitudeKey", "EventTypeKey").collect()
+        .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
+    val want = keys(joined, "event_id")
+    val got = keys(SilverToGold.factEarthquakeEvents(in), "EventID")
+    assert(got == want)
+    assert(got.contains("lat-0") && got("lat-0") == got("lat+0"))
+    assert(!got.contains("noplace") && !got.contains("nomagtype"))
+  }
+
+  test("nothing outlives a run: no cached RDD, no helper thread") {
+    val s = SparkSpec.session
+    // a silver path no earlier run read, so its cache cannot pre-exist
+    BronzeToSilver.run(s, s"$lake/bronze/raw.json", s"$lake/silver_fresh")
+    val before = s.sparkContext.getPersistentRDDs.keySet
+    assert(SilverToGold.run(s, s"$lake/silver_fresh", s"$lake/gold_fresh").size == 5)
+    assert(s.sparkContext.getPersistentRDDs.keySet == before)
+    assert(ConcurrentlySpec.liveHelpers.isEmpty)
   }
 }

@@ -2,7 +2,10 @@ package graft.jobs
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
+import org.apache.spark.ml.classification.RandomForestClassificationModel
+import org.apache.spark.sql.types.Metadata
 import graft.SparkSpec
+import graft.run.ConcurrentlySpec
 import graft.ingest.UsgsGeoJson
 
 class TrainTsunamiModelSpec extends SparkSpec {
@@ -53,5 +56,51 @@ class TrainTsunamiModelSpec extends SparkSpec {
     val p2 = r2.predictions.select("event_id", "predicted_tsunami_warning").collect()
       .map(r => r.getString(0) -> r.getBoolean(1)).toMap
     assert(p1 == p2)
+  }
+
+  /** `n` earthquakes with spread features, flagged as a tsunami when
+    * `tsunami` holds for the magnitude. */
+  private def slice(n: Int, tsunami: org.apache.spark.sql.Column => org.apache.spark.sql.Column) = {
+    val mag = lit(2.0) + pmod(hash(col("id")), lit(700)) / 100.0
+    SparkSpec.session.range(n).select(
+      concat(lit("s"), col("id").cast("string")).as("event_id"),
+      lit("earthquake").as("event_type"),
+      mag.as("magnitude"),
+      (pmod(hash(col("id"), lit(1)), lit(600)) / 2.0).as("depth_km"),
+      (pmod(hash(col("id"), lit(2)), lit(180)) - 90.0).as("latitude"),
+      (pmod(hash(col("id"), lit(3)), lit(360)) - 180.0).as("longitude"),
+      pmod(hash(col("id"), lit(4)), lit(1000)).as("significance"),
+      tsunami(mag).as("tsunami_warning"))
+  }
+
+  private def trees(m: org.apache.spark.ml.PipelineModel): String = {
+    val rf = m.stages.last.asInstanceOf[RandomForestClassificationModel]
+    rf.toDebugString.replace(rf.uid, "")
+  }
+
+  test("the forest equals an uncached fit without label metadata") {
+    Seq(silver, slice(400, _ >= 6.5)).foreach { in =>
+      val res = TrainTsunamiModel.run(SparkSpec.session, in)
+      val plain = TrainTsunamiModel.prepare(in).withColumn("label", col("label").as("label", Metadata.empty))
+      val Array(train, _) = TrainTsunamiModel.rebalance(plain).randomSplit(Array(0.8, 0.2), seed = 42)
+      assert(trees(res.model) == trees(TrainTsunamiModel.pipeline().fit(train)))
+    }
+  }
+
+  test("a day with no tsunami-flagged event trains and scores every row") {
+    val res = TrainTsunamiModel.run(SparkSpec.session, slice(200, _ => lit(false)))
+    val predicted = res.predictions.select("predicted_tsunami_warning").collect().map(_.getBoolean(0))
+    assert(predicted.length == 200 && predicted.forall(!_))
+    assert(res.f1 >= 0.0 && res.f1 <= 1.0)
+  }
+
+  test("nothing outlives a run: no cached RDD, no helper thread") {
+    val s = SparkSpec.session
+    // an input no earlier run prepared, so its cache cannot pre-exist
+    val fresh = slice(300, _ >= 6.5)
+    val before = s.sparkContext.getPersistentRDDs.keySet
+    TrainTsunamiModel.run(s, fresh, Some(s"$lake/ml_models/rf_fresh"))
+    assert(s.sparkContext.getPersistentRDDs.keySet == before)
+    assert(ConcurrentlySpec.liveHelpers.isEmpty)
   }
 }

@@ -34,6 +34,30 @@ object Bench {
       .foreach(n => org.apache.logging.log4j.core.config.Configurator
         .setLevel(n, org.apache.logging.log4j.Level.ERROR))
 
+  /** One query's steady-state time: a warm run (plan + codegen + JIT for
+    * this exact query at this SF), then the best of two runs, with
+    * storage dropped between runs. None when any run throws — a failing
+    * query has no time, and timing it up to its failure would read as a
+    * speedup. */
+  private def bestOfTwo(spark: SparkSession, sfDir: String,
+                        name: String): Option[Double] = {
+    val fn = SparkEntry.queries(name)
+    def once(): Double = {
+      val t0 = System.nanoTime()
+      fn(spark, sfDir).count()
+      (System.nanoTime() - t0) / 1e9
+    }
+    try {
+      once()
+      dropAllStorage(spark)
+      val r1 = once() // steady state, cold caches
+      dropAllStorage(spark)
+      val r2 = once() // best-of-two damps GC/scheduler noise on the tail
+      Some(math.min(r1, r2))
+    } catch { case _: Throwable => None }
+    finally dropAllStorage(spark)
+  }
+
   private def warmSession(spark: SparkSession, sfDir: String): Unit =
     // Warm a fresh session (shuffle service, parquet reader, codegen
     // infrastructure) so one-time init isn't attributed to the first query.
@@ -120,7 +144,7 @@ object Bench {
           }
         }
       } catch { case _: Exception => Map.empty }
-    val results = chunks.iterator.flatMap { chunk =>
+    val outcomes = chunks.iterator.flatMap { chunk =>
       val spark = GraftSession.local()
       quietLineageWarns()
       // stop() in finally: a wedged chunk must not leak its SparkContext —
@@ -135,23 +159,13 @@ object Bench {
           contractChecked = true
         }
         warmSession(spark, sfDir)
-        chunk.map { name =>
-          val fn = SparkEntry.queries(name)
-          def once(): Double = {
-            val t0 = System.nanoTime()
-            try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-            (System.nanoTime() - t0) / 1e9
-          }
-          once() // warm: plan + codegen + JIT for this exact query at this SF
-          dropAllStorage(spark)
-          val r1 = once() // steady state, cold caches
-          dropAllStorage(spark)
-          val r2 = once() // best-of-two damps GC/scheduler noise on the tail
-          dropAllStorage(spark)
-          name -> math.min(r1, r2)
-        }
+        chunk.map(name => name -> bestOfTwo(spark, sfDir, name))
       } finally quietStop(spark)
     }.toMap
+    // a throwing query is left out of every time and the total, and
+    // listed under "failed" instead
+    val results = outcomes.collect { case (n, Some(t)) => n -> t }
+    val failed = outcomes.collect { case (n, None) => n }.toSeq.sorted
     // The driver captures only the LAST 2000 bytes of this process's
     // output (measured from BENCH_r{1,2,3}.json, all of which failed to
     // parse because the metric line overflowed that window). Keep the
@@ -171,9 +185,9 @@ object Bench {
       else s.reverse.dropWhile(_ == '0').dropWhile(_ == '.').reverse
     }
     def shortKey(name: String): String = name.takeWhile(_ != '_')
-    val keys = results.keys.map(shortKey)
+    val keys = outcomes.keys.map(shortKey)
     val keyFn: String => String =
-      if (keys.toSet.size == results.size) shortKey else identity
+      if (keys.toSet.size == outcomes.size) shortKey else identity
     def qsJson(rs: Iterable[(String, Double)]): String =
       rs.map { case (k, v) => "\"" + keyFn(k) + "\":" + s2t(v) }
         .mkString("{", ",", "}")
@@ -203,18 +217,9 @@ object Bench {
         quietLineageWarns()
         try {
           warmSession(spark, sfDir)
-          val fn = SparkEntry.queries(name)
-          def once(): Double = {
-            val t0 = System.nanoTime()
-            try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-            (System.nanoTime() - t0) / 1e9
-          }
-          once(); dropAllStorage(spark)
-          val r1 = once(); dropAllStorage(spark)
-          val r2 = once(); dropAllStorage(spark)
-          name -> math.min(r1, r2)
+          bestOfTwo(spark, sfDir, name).map(name -> _)
         } finally quietStop(spark)
-      }.toMap
+      }.flatten.toMap
     // contracts: testdata schema-drift count from the startup probe —
     // makes a mid-round regeneration visible in the artifact the judge
     // reads, not just on stderr. Emitted ONLY when nonzero since round 15:
@@ -241,10 +246,16 @@ object Bench {
           }
         kb / 1024
       } catch { case _: Exception => -1L }
+    // failed: the queries that threw, emitted only when nonempty (like
+    // contracts) so a clean run's line keeps its bytes for the map
+    val failedJson =
+      if (failed.isEmpty) ""
+      else failed.map(n => "\"" + keyFn(n) + "\"")
+        .mkString(""","failed":[""", ",", "]")
     def line(qs: String, extra: String = ""): String = {
       val contracts =
         if (contractWarnings > 0) s""","contracts":$contractWarnings""" else ""
-      s"""{"metric":"total","value":${s2(total)},"unit":"sec"$extra$contracts,"threads":$threadsActual,"cache_mb":$cacheMb,"queries":$qs,"sf":"${new java.io.File(sfDir).getName}"}"""
+      s"""{"metric":"total","value":${s2(total)},"unit":"sec"$extra$contracts$failedJson,"threads":$threadsActual,"cache_mb":$cacheMb,"queries":$qs,"sf":"${new java.io.File(sfDir).getName}"}"""
     }
     // SIDECAR: the complete, never-truncated metric JSON lands in a FILE
     // (r13 lost 8 per-query entries to the stdout tail window); the

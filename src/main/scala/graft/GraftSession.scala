@@ -34,8 +34,7 @@ object GraftSession {
       // session artifacts, so isolation buys nothing; sharing the classloader
       // restores cross-start codegen cache hits. Any long-lived driver that
       // starts many streams wants this unless it actually ships session jars.
-      .config("spark.sql.artifact.isolation.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_ARTIFACT_ISOLATION", "false"))
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // Spark 4 walks the JVM stack on EVERY DataFrame/Column operation
       // to attach a call-site fragment to potential error messages
@@ -45,8 +44,7 @@ object GraftSession {
       // CurrentOrigin.withOrigin on the stream-execution thread); the
       // context is diagnostics-only — semantics and results are
       // unaffected — so a throughput-oriented driver turns it off.
-      .config("spark.sql.dataFrameQueryContext.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_DF_QUERY_CONTEXT", "false"))
+      .config("spark.sql.dataFrameQueryContext.enabled", "false")
       // managed (bucketed) tables land in tmp, not the repo working dir;
       // per-process suffix so concurrent JVMs never race on table dirs
       .config("spark.sql.warehouse.dir",
@@ -72,31 +70,11 @@ object GraftSession {
       // libhadoop, RawLocalFileSystem forks a chmod PROCESS per created
       // file; a streaming-ingest lifecycle creates 100+ files (parquet
       // parts, .crc twins, log entries, sidecars, checkpoint files) and
-      // burned ~0.5-1 s/query in fork+exec. java.nio chmod instead.
-      .config("spark.hadoop.fs.file.impl",
-        sys.env.getOrElse("SPARK_GRAFT_FILE_FS",
-          "graft.sources.NioLocalFileSystem"))
+      // burned ~0.5-1 s/query in fork+exec. java.nio chmod instead. The
+      // FileSystem handle cache key is unchanged by the custom impl.
+      .config("spark.hadoop.fs.file.impl", "graft.sources.NioLocalFileSystem")
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        sys.env.getOrElse("SPARK_GRAFT_FILE_ABSTRACT_FS",
-          "graft.sources.NioLocalFs"))
-      // FileSystem handles are cached per (scheme, conf) anyway; disable
-      // nothing — the custom impl honors the same cache key.
-      //
-      // Shuffle writer: Spark's default bypass-merge threshold (200). Round
-      // 19 forced the sort writer (threshold=1) because jstack sampling
-      // showed shuffle-file-creation storms in the streaming tier; that
-      // charged every tiny 32-partition exchange the sort-writer setup cost
-      // and regressed the sub-second vector/relational queries 10-35% at
-      // local[32] (driver PERF_r19: v05-v11, q43-q46). Re-measured this
-      // round WITH the shared codegen classloader in place: the streaming
-      // tier is within run-to-run noise under either writer (the storms
-      // were a symptom of per-start plan recompiles multiplying exchange
-      // count, now fixed), while the v-family recovers 10-25% under the
-      // bypass writer (v05 4.51->3.78 s, v08 1.74->1.41 s, v11 1.09->0.92 s,
-      // q44 0.48->0.35 s, interleaved isolated A/B). So: stock default;
-      // env-overridable for future A/Bs.
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "200"))
+        "graft.sources.NioLocalFs")
 
   /** Default executor-thread count = every host core (the deployment
     * contract: one local[N] JVM using the whole box, shuffle partitions

@@ -1,7 +1,9 @@
 package graft.jobs
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.KnownNullable
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftx.ColumnBridge
 import graft.model.EarthquakeSchemas
 import graft.plans.JobLabel
 import graft.run.Concurrently
@@ -16,12 +18,14 @@ import graft.run.Concurrently
   *    `monotonically_increasing_id` (s2g:86,101,106), which is
   *    nondeterministic across runs/partitionings. xxhash64 is stable,
   *    distributed (no global ordering shuffle), and keys stay opaque —
-  *    star-schema semantics unchanged.
+  *    star-schema semantics unchanged;
+  *  - the fact has no `dropDuplicates(["EventID"])` (s2g:139): silver's
+  *    `event_id` is already unique.
   *
   * Scale: each dim is a distinct (one shuffle each, AQE-coalesced); the fact
   * computes its dim keys from silver's natural keys instead of joining the
-  * dims back, so it shuffles only for its EventID dedup. Silver is cached
-  * once and the five table writes overlap.
+  * dims back, so it does not shuffle. Silver is cached once and the five
+  * table writes overlap.
   */
 object SilverToGold {
 
@@ -94,17 +98,24 @@ object SilverToGold {
     * drop rule: a row with a NULL in any natural key finds no dim row, so
     * NULL magType rows drop — intentional reference semantics (SURVEY
     * §7.5.4). `xxhash64` hashes -0.0 and 0.0 alike, as the join's equality
-    * matches them, so the keys equal the ones the dims carry. */
-  def factEarthquakeEvents(silver: DataFrame): DataFrame =
+    * matches them, so the keys equal the ones the dims carry. No dedup:
+    * silver is written by `BronzeToSilver.run`, whose `dedupLatest` keeps
+    * one row per `event_id`, so `EventID` is already unique. */
+  def factEarthquakeEvents(silver: DataFrame): DataFrame = {
+    // the surrogate keys are never null, but the gold fact's schema,
+    // which its readers see, marks them nullable
+    def nullable(c: Column): Column =
+      ColumnBridge.column(KnownNullable(ColumnBridge.expression(c)))
     silver
       .filter(Seq("latitude", "longitude", "place", "magnitude_category", "event_type",
         "magType").map(col(_).isNotNull).reduce(_ && _))
       .select(
         col("event_id").as("EventID"),
         date_format(col("event_timestamp_utc"), "yyyyMMdd").cast("int").as("DateKey"),
-        xxhash64(col("latitude"), col("longitude"), col("place")).as("LocationKey"),
-        xxhash64(col("magnitude_category")).as("MagnitudeKey"),
-        xxhash64(col("event_type"), col("magType")).as("EventTypeKey"),
+        nullable(xxhash64(col("latitude"), col("longitude"), col("place")))
+          .as("LocationKey"),
+        nullable(xxhash64(col("magnitude_category"))).as("MagnitudeKey"),
+        nullable(xxhash64(col("event_type"), col("magType"))).as("EventTypeKey"),
         col("event_timestamp_utc").as("EventTimestamp"),
         col("magnitude").as("Magnitude"),
         col("depth_km").as("DepthKm"),
@@ -116,7 +127,7 @@ object SilverToGold {
         col("tsunami_warning").as("TsunamiWarning"),
         col("latitude"), col("longitude"),
         current_timestamp().as("GoldProcessingTimestamp"))
-      .dropDuplicates(Seq("EventID"))
+  }
 
   /** All six gold tables from a silver DataFrame. */
   def buildAll(spark: SparkSession, silver: DataFrame): Map[String, DataFrame] =

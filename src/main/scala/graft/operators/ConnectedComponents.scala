@@ -91,10 +91,7 @@ object ConnectedComponents {
       .localCheckpoint()
     var labels = ckpt
     var changed = 1L
-    val dbg = sys.env.contains("GRAFT_CC_DEBUG")
-    var round = 0
     while (changed > 0) {
-      val t0 = System.nanoTime()
       // neighbor-min: the propagation step. The min() agg is safe from the
       // hub (map-side partial combine); the JOIN on e_src is what salting
       // defends — unsalted, the hub's whole adjacency lands on one reducer.
@@ -134,9 +131,6 @@ object ConnectedComponents {
       CheckpointUtils.unpersistBacking(ckpt) // step is materialized; free round N-1
       ckpt = step
       labels = step.select(col("id"), col("new_lbl").as("lbl"))
-      round += 1
-      if (dbg)
-        println(f"CC round $round: ${(System.nanoTime() - t0) / 1e9}%.3f s changed=$changed")
     }
     CheckpointUtils.unpersistBacking(edges) // returned plan reads only final labels
     labels.select(col("id"), col("lbl").as("cluster_id"))

@@ -115,12 +115,9 @@ object SuffixArray {
           // get() is 0-based and null-safe past the array end (never
           // throws under ANSI, unlike element_at)
           get(col("toks"), col("pos") + lit(k) - 1).as(s"__k$k")): _*)
-    val t0 = System.nanoTime()
     val base = pinned(PrefixSum
       .competitionRankByRange(tp8, keyCols, "rank", tiedOut = "__tied")
       .select("doc_id", "pos", "rank", "__tied"))
-    if (sys.env.contains("GRAFT_SA_DEBUG"))
-      println(f"[sa] base ${(System.nanoTime() - t0) / 1e9}%.2f s n=${base.count()}")
     // Refine-only-ties: a resolved (unique-rank) suffix stays resolved
     // forever, and new ties only appear INSIDE previously tied groups —
     // so each superstep touches only the still-tied `active` set, which
@@ -189,8 +186,6 @@ object SuffixArray {
       step *= 2
       snapshots ::= step -> fullRanks
       if (active.isEmpty) done = true
-      else if (sys.env.contains("GRAFT_SA_DEBUG"))
-        println(f"[sa] step=$step ${(System.nanoTime() - t0) / 1e9}%.2f s active=${active.count()}")
     }
     (fullRanks, snapshots.reverse, maxLen.toLong)
   }
@@ -321,13 +316,11 @@ object SuffixArray {
   /** [[adjacentLcp]] with the implementation chosen by the corpus' longest
     * document: the slice compare's per-document cost is quadratic in
     * length, acceptable only under [[LcpLiftThreshold]]. `maxLen` is the
-    * corpus maximum document token count (the caller usually has it).
-    * `GRAFT_SA_FORCE_LIFT` forces the lifted path (measurement escape
-    * hatch for the SCALE harness). */
+    * corpus maximum document token count (the caller usually has it). */
   def adjacentLcpAuto(docs: DataFrame, sa: DataFrame,
                       snapshots: Seq[(Long, DataFrame)],
                       maxLen: Long): DataFrame =
-    if (maxLen > LcpLiftThreshold || sys.env.contains("GRAFT_SA_FORCE_LIFT"))
+    if (maxLen > LcpLiftThreshold)
       adjacentLcpLifted(docs, sa, snapshots)
     else adjacentLcp(docs, sa)
 

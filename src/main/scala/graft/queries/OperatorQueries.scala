@@ -3422,7 +3422,7 @@ object OperatorQueries {
       && carried.forall(fm => !top(fm)),
       s"evolution crossed the scope: rewrote ${rewritten.map(_.path)}")
     // the log carries the widened schema; the past keeps the narrow one
-    require(TxnLake.loggedSchema(s, t, v).get.fieldNames.toSeq ==
+    require(TxnLake.loggedSchema(s, t, v).fieldNames.toSeq ==
       Seq("event_id", "vc", "flag"), "logged schema must evolve in order")
     require(TxnLake.readVersion(s, t, preV).columns.toSeq ==
       Seq("event_id", "vc"),

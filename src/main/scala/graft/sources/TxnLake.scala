@@ -30,7 +30,13 @@ import scala.jdk.CollectionConverters._
   *   <table>/_txn_log/v<N>.json   one DELTA entry per committed version:
   *                                the files ADDED (with per-file column
   *                                min/max stats) and the files REMOVED by
-  *                                commit N — Delta's add/remove actions
+  *                                commit N — Delta's add/remove actions —
+  *                                plus the cumulative table state every
+  *                                entry carries: `protocol`
+  *                                ({reader: 2, writer: 2}, Delta's
+  *                                protocol action), the in-commit `ts`,
+  *                                the logged `schema` and the `txns`
+  *                                app → batch map
   *   <table>/_txn_log/v<N>.ckpt   periodic checkpoint: the fully-resolved
   *                                file list AS OF version N, so readers
   *                                replay latest-checkpoint + tail instead
@@ -39,6 +45,10 @@ import scala.jdk.CollectionConverters._
   * }}}
   *
   * Protocol:
+  *  - VERSION: every entry names the log protocol it was written under.
+  *    A reader refuses an entry that names none or a reader version above
+  *    [[ReaderVersion]], loudly and naming the table and the version, so
+  *    exactly one on-disk format is ever interpreted.
   *  - WRITE: data lands in a fresh immutable dir, then the log entry is
   *    published by writing `v<N>.json.tmp-<salt>` and atomically linking it
   *    to `v<N>.json`. Publish-if-absent is the commit point: it either
@@ -71,6 +81,11 @@ object TxnLake extends LakeFormat {
     * at most this many tail entries past the newest checkpoint. */
   private[sources] val CheckpointInterval = 10
 
+  /** Log protocol versions this engine reads and writes — the
+    * `protocol` action every entry carries. */
+  private[sources] val ReaderVersion = 2
+  private[sources] val WriterVersion = 2
+
   private def fs(spark: SparkSession, p: Path): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
@@ -90,7 +105,7 @@ object TxnLake extends LakeFormat {
 
   /** One data file of a snapshot: table-relative path, row count, and the
     * column stats harvested from its footer at commit time. `rows` is -1
-    * for files inherited from pre-stats (legacy full-list) log entries.
+    * only on the path-only metas the engine builds for scans.
     * `brid` is the file's BASE ROW ID (Delta row tracking): fresh rows in
     * the file expose row id `brid + row_index`, a disjoint range the
     * commit reserved from the table's cumulative row-id high-water mark;
@@ -101,34 +116,27 @@ object TxnLake extends LakeFormat {
 
   private final case class Entry(version: Long, operation: String,
                                  add: Seq[FileMeta], remove: Seq[String],
-                                 legacyFiles: Option[Seq[String]],
                                  txn: Option[(String, Long)],
                                  txns: Map[String, Long],
-                                 hasTxns: Boolean,
-                                 schemaJson: Option[String] = None,
+                                 schema: StructType,
+                                 ts: Long,
                                  bloomCols: Seq[String] = Seq.empty,
                                  dvs: Map[String, DvRef] = Map.empty,
                                  droppedCols: Seq[String] = Seq.empty,
                                  constraints: Map[String, String] = Map.empty,
                                  genCols: Map[String, String] = Map.empty,
-                                 ts: Option[Long] = None,
                                  identityCols: Map[String, IdentitySpec] =
                                    Map.empty,
                                  dvDelta: Boolean = false,
                                  ridHwm: Long = -1L,
-                                 renames: Map[String, String] = Map.empty) {
-    /** The logged cumulative schema, decoded — one accessor instead of
-      * the same two-line parse at every read/DML site. */
-    def schemaStruct: Option[StructType] =
-      schemaJson.map(DataType.fromJson(_).asInstanceOf[StructType])
-  }
+                                 renames: Map[String, String] = Map.empty)
 
   /** One live deletion vector: the sidecar's table-relative path and the
     * number of row positions it masks. Since r17 a commit entry carries
     * only the masks THAT commit minted (`dvd: true` — O(commit) entry
     * size, the r16 item-4 bound) and the live map reconstructs by
     * cadence-bounded replay ([[resolveDvs]]); full-map anchors are
-    * legacy/restore/clone/empty/interval entries, keyed by data-file
+    * restore/compensation/clone/empty/interval entries, keyed by data-file
     * path either way, and a rewrite that removes a file drops
     * its DV from the map automatically. */
   final case class DvRef(path: String, rows: Long)
@@ -245,11 +253,6 @@ object TxnLake extends LakeFormat {
     else fm.copy(stats = fm.stats.map { case (k, v) =>
       displayOf(ren, k) -> v })
 
-  /** The cumulative rename map live at `version` (empty pre-feature). */
-  private def renamesAt(spark: SparkSession, table: String,
-                        version: Long): Map[String, String] =
-    readEntry(spark, table, version).renames
-
   // ---- JSON (jackson tree API — ships with Spark; no extra deps) ------
 
   private val mapper = new ObjectMapper()
@@ -295,36 +298,31 @@ object TxnLake extends LakeFormat {
         Option(c.get("bl")).exists(_.asBoolean()))
     }.toMap
 
-  private def fileFromJson(n: JsonNode): FileMeta = {
-    val stats = Option(n.get("stats")).map(statsFromJson).getOrElse(Map.empty)
-    FileMeta(n.get("path").asText(),
-      Option(n.get("rows")).map(_.asLong()).getOrElse(-1L), stats,
+  private def fileFromJson(n: JsonNode): FileMeta =
+    FileMeta(n.get("path").asText(), n.get("rows").asLong(),
+      statsFromJson(n.get("stats")),
       Option(n.get("brid")).map(_.asLong()).getOrElse(-1L))
-  }
 
   private def render(e: Entry): String = {
     val o = mapper.createObjectNode()
     o.put("version", e.version)
     o.put("operation", e.operation)
+    val pr = o.putObject("protocol")
+    pr.put("reader", ReaderVersion)
+    pr.put("writer", WriterVersion)
     // IN-COMMIT timestamp (Delta's inCommitTimestamp): the instant the
     // entry was RENDERED rides inside the entry bytes, so commit
     // instants survive object-store migrations/copies that rewrite
-    // file mtimes. Readers prefer it; pre-feature entries fall back to
-    // the mtime.
-    e.ts.foreach(o.put("ts", _))
+    // file mtimes
+    o.put("ts", e.ts)
     val add = o.putArray("add")
     e.add.foreach(fm => statsToJson(add.addObject(), fm))
     val rm = o.putArray("remove")
     e.remove.foreach(rm.add)
     e.txn.foreach { case (a, b) => o.put("txnApp", a); o.put("txnBatch", b) }
-    // ALWAYS render the txns map, even empty: its presence is the format
-    // marker that distinguishes a new-format entry from a legacy one, so
-    // the one-time legacy fold in commitImpl runs exactly once — an
-    // omitted-when-empty field would re-trigger the O(log) fold on every
-    // commit of a table that never uses commitOnce
     val txns = o.putObject("txns")
     e.txns.toSeq.sorted.foreach { case (a, b) => txns.put(a, b) }
-    e.schemaJson.foreach(o.put("schema", _))
+    o.put("schema", e.schema.json)
     if (e.bloomCols.nonEmpty) {
       val bc = o.putArray("bloomCols")
       e.bloomCols.foreach(bc.add)
@@ -365,57 +363,47 @@ object TxnLake extends LakeFormat {
     mapper.writeValueAsString(o)
   }
 
-  private def parse(s: String): Entry = {
+  /** Decode the entry at `table`'s version `v`, refusing any entry not
+    * written under a protocol this engine reads: no `protocol` action, or
+    * a reader version above [[ReaderVersion]]. */
+  private def parse(s: String, table: String, v: Long): Entry = {
     val n = mapper.readTree(s)
-    val version = Option(n.get("version")).map(_.asLong())
-      .getOrElse(sys.error(s"TxnLake: malformed log entry: $s"))
-    val operation = Option(n.get("operation")).map(_.asText()).getOrElse("unknown")
-    val add = Option(n.get("add")).map(_.asScala.map(fileFromJson).toSeq)
-      .getOrElse(Seq.empty)
-    val remove = Option(n.get("remove")).map(_.asScala.map(_.asText()).toSeq)
-      .getOrElse(Seq.empty)
-    // entries written before the delta encoding carry the FULL snapshot
-    // file list under "files"
-    val legacy = Option(n.get("files")).map(_.asScala.map(_.asText()).toSeq)
+    val reader = Option(n.get("protocol")).flatMap(p => Option(p.get("reader")))
+      .map(_.asInt()).getOrElse(throw new IllegalStateException(
+        s"TxnLake: version $v of $table carries no protocol action — it " +
+          s"predates log protocol $ReaderVersion and cannot be read"))
+    if (reader > ReaderVersion)
+      throw new IllegalStateException(
+        s"TxnLake: version $v of $table requires log reader protocol " +
+          s"$reader; this engine reads protocol $ReaderVersion")
+    // the optional actions: absent when empty
+    def obj[T](k: String)(f: JsonNode => T): Map[String, T] =
+      Option(n.get(k)).map(_.properties().asScala
+        .map(e => e.getKey -> f(e.getValue)).toMap).getOrElse(Map.empty)
+    def strs(k: String): Seq[String] =
+      Option(n.get(k)).map(_.asScala.map(_.asText()).toSeq).getOrElse(Seq.empty)
     val txn = for {
       a <- Option(n.get("txnApp")).map(_.asText())
       b <- Option(n.get("txnBatch")).map(_.asLong())
     } yield (a, b)
-    val txnsNode = Option(n.get("txns"))
-    val txns = txnsNode.map(_.properties().asScala
-      .map(e => e.getKey -> e.getValue.asLong()).toMap).getOrElse(Map.empty)
-    val schemaJson = Option(n.get("schema")).map(_.asText())
-    val bloomCols = Option(n.get("bloomCols"))
-      .map(_.asScala.map(_.asText()).toSeq).getOrElse(Seq.empty)
-    val dvs = Option(n.get("dvs")).map(_.properties().asScala.map { e =>
-      e.getKey -> DvRef(e.getValue.get("p").asText(),
-        e.getValue.get("n").asLong())
-    }.toMap).getOrElse(Map.empty[String, DvRef])
-    val droppedCols = Option(n.get("droppedCols"))
-      .map(_.asScala.map(_.asText()).toSeq).getOrElse(Seq.empty)
-    val constraints = Option(n.get("constraints"))
-      .map(_.properties().asScala.map(e =>
-        e.getKey -> e.getValue.asText()).toMap)
-      .getOrElse(Map.empty[String, String])
-    val genCols = Option(n.get("genCols"))
-      .map(_.properties().asScala.map(e =>
-        e.getKey -> e.getValue.asText()).toMap)
-      .getOrElse(Map.empty[String, String])
-    val ts = Option(n.get("ts")).map(_.asLong())
-    val identityCols = Option(n.get("identityCols"))
-      .map(_.properties().asScala.map { e =>
-        e.getKey -> IdentitySpec(e.getValue.get("s").asLong(),
-          e.getValue.get("k").asLong(), e.getValue.get("h").asLong())
-      }.toMap).getOrElse(Map.empty[String, IdentitySpec])
-    val dvDelta = Option(n.get("dvd")).exists(_.asBoolean())
-    val ridHwm = Option(n.get("rhw")).map(_.asLong()).getOrElse(-1L)
-    val renames = Option(n.get("renames"))
-      .map(_.properties().asScala.map(e =>
-        e.getKey -> e.getValue.asText()).toMap)
-      .getOrElse(Map.empty[String, String])
-    Entry(version, operation, add, remove, legacy, txn, txns, txnsNode.isDefined,
-      schemaJson, bloomCols, dvs, droppedCols, constraints, genCols, ts,
-      identityCols, dvDelta, ridHwm, renames)
+    Entry(n.get("version").asLong(), n.get("operation").asText(),
+      n.get("add").asScala.map(fileFromJson).toSeq,
+      n.get("remove").asScala.map(_.asText()).toSeq,
+      txn,
+      n.get("txns").properties().asScala
+        .map(e => e.getKey -> e.getValue.asLong()).toMap,
+      DataType.fromJson(n.get("schema").asText()).asInstanceOf[StructType],
+      n.get("ts").asLong(),
+      bloomCols = strs("bloomCols"),
+      dvs = obj("dvs")(d => DvRef(d.get("p").asText(), d.get("n").asLong())),
+      droppedCols = strs("droppedCols"),
+      constraints = obj("constraints")(_.asText()),
+      genCols = obj("genCols")(_.asText()),
+      identityCols = obj("identityCols")(x => IdentitySpec(
+        x.get("s").asLong(), x.get("k").asLong(), x.get("h").asLong())),
+      dvDelta = Option(n.get("dvd")).exists(_.asBoolean()),
+      ridHwm = Option(n.get("rhw")).map(_.asLong()).getOrElse(-1L),
+      renames = obj("renames")(_.asText()))
   }
 
   // ---- log access -----------------------------------------------------
@@ -475,7 +463,7 @@ object TxnLake extends LakeFormat {
     }
     logEntryReads.incrementAndGet()
     val in = f.open(p)
-    val e = try parse(new String(in.readAllBytes(), "UTF-8"))
+    val e = try parse(new String(in.readAllBytes(), "UTF-8"), table, v)
       finally in.close()
     entryCache.synchronized {
       entryCache.put(key, (st.getModificationTime, st.getLen, e))
@@ -493,12 +481,12 @@ object TxnLake extends LakeFormat {
       .sorted.toSeq
   }
 
-  /** Checkpoints are PARQUET since round 8 — a JSON full file list is a
+  /** Checkpoints are PARQUET — a JSON full file list is a
     * multi-hundred-MB driver parse at millions of files; a columnar
     * checkpoint compresses the (highly repetitive) path column and is the
     * format Delta uses for exactly this reason. One row per live file:
-    * (path UTF8, rows INT64, stats UTF8-JSON). Legacy JSON checkpoints are
-    * detected by the absent PAR1 magic and still resolve. */
+    * (path UTF8, rows INT64, stats UTF8-JSON, brid INT64 — null on an
+    * untracked file). */
   private val ckptSchema = org.apache.parquet.schema.MessageTypeParser
     .parseMessageType(
       """message graft_ckpt {
@@ -510,47 +498,29 @@ object TxnLake extends LakeFormat {
 
   private def readCheckpoint(spark: SparkSession, table: String,
                              v: Long): Seq[FileMeta] = {
-    val p = new Path(logDir(table), s"v$v.ckpt")
-    val f = fs(spark, p)
-    val magic = {
-      val in = f.open(p)
-      try { val b = new Array[Byte](4); in.readFully(0, b); b }
-      finally in.close()
-    }
-    if (java.util.Arrays.equals(magic, "PAR1".getBytes("US-ASCII"))) {
-      val reader = org.apache.parquet.hadoop.ParquetReader
-        .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(), p)
-        .withConf(spark.sparkContext.hadoopConfiguration)
-        .build()
-      try {
-        val buf = Seq.newBuilder[FileMeta]
-        var g = reader.read()
-        while (g != null) {
-          // pre-row-tracking checkpoints lack the brid field entirely;
-          // post-r18 ones null it for untracked files — both read -1
-          val brid =
-            if (g.getType.containsField("brid")
-              && g.getFieldRepetitionCount("brid") > 0)
-              g.getLong("brid", 0)
-            else -1L
-          buf += FileMeta(g.getString("path", 0), g.getLong("rows", 0),
-            statsFromJson(mapper.readTree(g.getString("stats", 0))), brid)
-          g = reader.read()
-        }
-        buf.result()
-      } finally reader.close()
-    } else {
-      val in = f.open(p)
-      val n = try mapper.readTree(new String(in.readAllBytes(), "UTF-8"))
-        finally in.close()
-      n.get("files").asScala.map(fileFromJson).toSeq
-    }
+    val reader = org.apache.parquet.hadoop.ParquetReader
+      .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
+        new Path(logDir(table), s"v$v.ckpt"))
+      .withConf(spark.sparkContext.hadoopConfiguration)
+      .build()
+    try {
+      val buf = Seq.newBuilder[FileMeta]
+      var g = reader.read()
+      while (g != null) {
+        val brid =
+          if (g.getFieldRepetitionCount("brid") > 0) g.getLong("brid", 0)
+          else -1L
+        buf += FileMeta(g.getString("path", 0), g.getLong("rows", 0),
+          statsFromJson(mapper.readTree(g.getString("stats", 0))), brid)
+        g = reader.read()
+      }
+      buf.result()
+    } finally reader.close()
   }
 
   /** Resolve the file list AS OF `version`: newest checkpoint at or below
     * it, then the tail entries' add/remove deltas — O(CheckpointInterval)
-    * entry reads regardless of log length. Legacy full-list entries reset
-    * the state (they ARE a snapshot). */
+    * entry reads regardless of log length. */
   private def resolveFiles(spark: SparkSession, table: String,
                            version: Long): Seq[FileMeta] = {
     val ckpt = checkpointVersions(spark, table).filter(_ <= version).lastOption
@@ -559,12 +529,8 @@ object TxnLake extends LakeFormat {
     var v = ckpt.map(_ + 1).getOrElse(0L)
     while (v <= version) {
       val e = readEntry(spark, table, v)
-      state = e.legacyFiles match {
-        case Some(files) => files.map(FileMeta(_, -1L, Map.empty))
-        case None =>
-          val rm = e.remove.toSet
-          state.filterNot(fm => rm(fm.path)) ++ e.add
-      }
+      val rm = e.remove.toSet
+      state = state.filterNot(fm => rm(fm.path)) ++ e.add
       v += 1
     }
     state
@@ -601,12 +567,10 @@ object TxnLake extends LakeFormat {
     * path), and the tail adds union in as a local relation. The count
     * is footer metadata + tail arithmetic, no job.
     *
-    * None when the regime doesn't apply — no parquet checkpoint at or
-    * below `version` (tiny log), a legacy JSON checkpoint, a legacy
-    * full-list entry in the tail (pre-delta log surgery), or a
-    * checkpoint row count at or below `cap` (the regime probe is this
-    * one footer read — the count deliberately ignores the tail's
-    * deltas: both regimes compute identical kept sets, so a tail that
+    * None when the regime doesn't apply — no checkpoint at or below
+    * `version` (tiny log), or a checkpoint row count at or below `cap`
+    * (the regime probe is this one footer read — the count ignores the
+    * tail's deltas: both regimes compute identical kept sets, so a tail that
     * momentarily crosses the cap simply waits for its next
     * checkpoint) — and the caller falls back to the driver path. */
   private def snapshotAsDf(spark: SparkSession, table: String,
@@ -616,11 +580,10 @@ object TxnLake extends LakeFormat {
       .lastOption.getOrElse(return None)
     val ckptPath = new Path(logDir(table), s"v$ckptV.ckpt")
     val conf = spark.sparkContext.hadoopConfiguration
-    val ckptRows =
-      try {
-        val r = ParquetFileReader.open(HadoopInputFile.fromPath(ckptPath, conf))
-        try r.getRecordCount finally r.close()
-      } catch { case _: Exception => return None } // legacy JSON checkpoint
+    val ckptRows = {
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(ckptPath, conf))
+      try r.getRecordCount finally r.close()
+    }
     if (ckptRows <= cap) return None
     // tail deltas, driver-parsed with the SAME replay rule as
     // [[resolveFiles]] (remove-then-add per version; an add removed by
@@ -633,7 +596,6 @@ object TxnLake extends LakeFormat {
     var v = ckptV + 1
     while (v <= version) {
       val e = readEntry(spark, table, v)
-      if (e.legacyFiles.isDefined) return None
       e.remove.foreach { p =>
         if (addBuf.remove(p).isEmpty) removedCkpt += p
       }
@@ -690,7 +652,7 @@ object TxnLake extends LakeFormat {
       return (spark.emptyDataFrame, (0, 0))
     }
     val entry = readEntry(spark, table, v)
-    val schema = entry.schemaStruct
+    val schema = entry.schema
     val ren = entry.renames
     val dirs = fdf
       .select(org.apache.spark.sql.functions
@@ -709,7 +671,7 @@ object TxnLake extends LakeFormat {
     val sampleAbs = new Path(table,
       fdf.select("path").as[String].head()).toString
     val pred = resolvedPredicate(spark, sampleAbs, predicate,
-      schema.map(toDisplaySchema(_, ren)))
+      toDisplaySchema(schema, ren))
     val keptPaths = fdf.filter(SnapshotPrune.keepRow(pred, ren))
       .select("path").as[String].collect().toSeq
     val kept = keptPaths.map(FileMeta(_, -1L, Map.empty))
@@ -717,10 +679,8 @@ object TxnLake extends LakeFormat {
     lastPruneDistributed = true
     val df =
       if (kept.isEmpty)
-        toDisplay(schema match {
-          case Some(st) => spark.read.schema(st).parquet(sampleAbs)
-          case None => spark.read.parquet(sampleAbs)
-        }, ren).where(lit(false))
+        toDisplay(spark.read.schema(schema).parquet(sampleAbs), ren)
+          .where(lit(false))
       else scanFiles(spark, table, kept, schema,
           resolveDvs(spark, table, v), ren)
         .where(predicate)
@@ -776,14 +736,13 @@ object TxnLake extends LakeFormat {
                                    version: Long,
                                    paths: Seq[String]): DataFrame = {
     val entry = readEntry(spark, table, version)
-    val schema = entry.schemaStruct
     val want = paths.toSet
     val files = resolveFiles(spark, table, version)
       .filter(fm => want(fm.path))
     require(files.size == want.size,
       s"TxnLake.readFileSlice: ${want.size - files.size} of the " +
         s"requested files are not in version $version of $table")
-    scanFiles(spark, table, files, schema,
+    scanFiles(spark, table, files, entry.schema,
       resolveDvs(spark, table, version), entry.renames)
   }
 
@@ -793,36 +752,25 @@ object TxnLake extends LakeFormat {
   def history(spark: SparkSession, table: String): Seq[CommitInfo] =
     committedVersions(spark, table).map(commitInfo(spark, table, _))
 
-  /** Commit instant of `version` in epoch millis. New-format entries
-    * carry an IN-COMMIT timestamp inside the entry bytes (Delta's
-    * inCommitTimestamp) — robust against object-store migrations and
-    * copies that rewrite file mtimes; entries written before the field
-    * existed fall back to the log file's modification time (Delta's
-    * original source of truth). Either way the entry publish IS the
-    * commit, so there is no second clock to drift. */
+  /** Commit instant of `version` in epoch millis: the IN-COMMIT
+    * timestamp inside the entry bytes (Delta's inCommitTimestamp) —
+    * robust against object-store migrations and copies that rewrite file
+    * mtimes. The entry publish IS the commit, so there is no second
+    * clock to drift. */
   def commitTimestamp(spark: SparkSession, table: String,
                       version: Long): Long =
-    readEntry(spark, table, version).ts.getOrElse {
-      val p = new Path(logDir(table), s"v$version.json")
-      fs(spark, p).getFileStatus(p).getModificationTime
-    }
+    readEntry(spark, table, version).ts
 
   /** The version a timestamp resolves to — Delta's `TIMESTAMP AS OF`:
-    * the LATEST version whose (monotone-adjusted) commit timestamp is
-    * <= `ts` millis; None when `ts` predates the first commit. Like
-    * Delta, raw mtimes are adjusted monotone (`max(mtime, prev+1)`) so
-    * a wall clock stepping backwards between commits cannot make
-    * resolution ambiguous — version order always wins. O(versions)
-    * driver metadata reads, the same cost Delta pays. */
-  def versionAsOf(spark: SparkSession, table: String, ts: Long): Option[Long] = {
-    var prev = Long.MinValue
-    committedVersions(spark, table).iterator.map { v =>
-      val t = math.max(commitTimestamp(spark, table, v),
-        if (prev == Long.MinValue) Long.MinValue else prev + 1)
-      prev = t
-      (v, t)
-    }.takeWhile(_._2 <= ts).map(_._1).reduceOption((_, b) => b)
-  }
+    * the LATEST version whose commit timestamp is <= `ts` millis; None
+    * when `ts` predates the first commit. In-commit timestamps are
+    * strictly monotone in version order (clamped at write time by
+    * [[nextTs]]), so a wall clock stepping backwards between commits
+    * cannot make resolution ambiguous. O(versions) driver metadata
+    * reads, the same cost Delta pays. */
+  def versionAsOf(spark: SparkSession, table: String, ts: Long): Option[Long] =
+    committedVersions(spark, table)
+      .takeWhile(commitTimestamp(spark, table, _) <= ts).lastOption
 
   /** Snapshot read as of a timestamp — `SELECT ... TIMESTAMP AS OF`.
     * Refuses (loudly, naming the earliest readable instant) a timestamp
@@ -850,8 +798,7 @@ object TxnLake extends LakeFormat {
     val seen = scala.collection.mutable.Set.empty[String]
     committedVersions(spark, table).forall { v =>
       val e = readEntry(spark, table, v)
-      val paths = e.add.map(_.path) ++ e.remove ++
-        e.legacyFiles.getOrElse(Seq.empty) ++ e.dvs.values.map(_.path)
+      val paths = e.add.map(_.path) ++ e.remove ++ e.dvs.values.map(_.path)
       paths.forall(p => !seen.add(p) || f.exists(new Path(table, p)))
     }
   }
@@ -1108,7 +1055,7 @@ object TxnLake extends LakeFormat {
     val nChecks = checks.size
     // Size each file's sidecar to ITS row count (~10 bits/key ≈ 1 % FP
     // at k=6), pow2 for the double-hash modulo, floored at the 16 KiB
-    // legacy default and capped at 2 MiB: a fixed 2^17 bits saturates on
+    // first fixed size and capped at 2 MiB: a fixed 2^17 bits saturates on
     // gram-scale index files (~190k keys/file measured at sf0.1 — FP→1,
     // every probe kept every file), which silently un-prunes exactly the
     // highest-cardinality columns the sidecars exist for. The read side
@@ -1246,14 +1193,12 @@ object TxnLake extends LakeFormat {
         def abs(fms: Seq[FileMeta]) =
           fms.map(fm => new Path(table, fm.path).toString)
         val entry = readEntry(spark, table, v)
-        val schema = entry.schemaStruct
+        val schema = entry.schema
         val ren = entry.renames
         // the sidecars and stats are keyed by the column's PHYSICAL name
         val colPhys = physicalOf(spark, ren, column)
-        def scan(paths: Seq[String]) = toDisplay(schema match {
-          case Some(st) => spark.read.schema(st).parquet(paths: _*)
-          case None => spark.read.parquet(paths: _*)
-        }, ren)
+        def scan(paths: Seq[String]) =
+          toDisplay(spark.read.schema(schema).parquet(paths: _*), ren)
         val kept =
           if (keys.isEmpty) Seq.empty
           else files.filter(
@@ -1310,7 +1255,7 @@ object TxnLake extends LakeFormat {
         requireLive(spark, table, v, files)
         if (files.isEmpty) return (spark.emptyDataFrame, (0, 0))
         val entry = readEntry(spark, table, v)
-        val schema = entry.schemaStruct
+        val schema = entry.schema
         val ren = entry.renames
         val colPhys = physicalOf(spark, ren, column) // sidecars/stats are physical
         val (bloomed, unbloomed) =
@@ -1404,11 +1349,9 @@ object TxnLake extends LakeFormat {
         lastKeyedProbeDistributed = true
         val df =
           if (kept.isEmpty) {
-            val head = Seq(new Path(table, files.head.path).toString)
-            toDisplay(schema match {
-              case Some(st) => spark.read.schema(st).parquet(head: _*)
-              case None => spark.read.parquet(head: _*)
-            }, ren).where(lit(false))
+            val head = new Path(table, files.head.path).toString
+            toDisplay(spark.read.schema(schema).parquet(head), ren)
+              .where(lit(false))
           } else scanFiles(spark, table, kept, schema,
             resolveDvs(spark, table, v), ren)
         (df, (kept.size, files.size))
@@ -1459,8 +1402,7 @@ object TxnLake extends LakeFormat {
     *
     * The check reads ONE log entry: every commit carries the cumulative
     * app→latest-batch map forward (Delta's checkpointed SetTransaction
-    * state), so replay detection is O(1) regardless of log length; logs
-    * written before the map existed fall back to the linear scan. */
+    * state), so replay detection is O(1) regardless of log length. */
   def commitOnce(spark: SparkSession, df: DataFrame, table: String,
                  operation: String, appId: String, batchId: Long,
                  maxAttempts: Int = 10,
@@ -1527,38 +1469,15 @@ object TxnLake extends LakeFormat {
     * the cumulative txn map in the base entry only (O(1) log reads).
     * Batch ids per app are monotone (the foreachBatch contract), so seen
     * means batchId <= recorded — Delta's exact SetTransaction semantics.
-    * Entries written before the map existed fall back to the full-log
-    * scan. Must be judged at the same base the commit publishes on: a
+    * Must be judged at the same base the commit publishes on: a
     * twin that committed after `base` makes that publish conflict, and
     * the retry re-judges at the fresh base — so a replay is always
     * caught either here or by the version conflict. */
   private def replayed(spark: SparkSession, table: String, base: Option[Long],
                        txn: Option[(String, Long)]): Boolean =
     txn.exists { case (app, batch) =>
-      base.exists { b =>
-        val e = readEntry(spark, table, b)
-        if (e.hasTxns) e.txns.get(app).exists(_ >= batch)
-        else committedVersions(spark, table).filter(_ <= b).exists(v =>
-          readEntry(spark, table, v).txn.contains((app, batch)))
-      }
+      base.exists(readEntry(spark, table, _).txns.get(app).exists(_ >= batch))
     }
-
-  /** The cumulative app → latest-batch map as of version `v`. Every entry
-    * carries it forward, so this is one entry read — except on a log
-    * written before the map existed, whose per-entry markers fold once
-    * (linear scan) into the first commit that introduces the map. */
-  private def carriedTxns(spark: SparkSession, table: String,
-                          v: Long): Map[String, Long] = {
-    val e = readEntry(spark, table, v)
-    if (e.hasTxns) e.txns
-    else committedVersions(spark, table).filter(_ <= v)
-      .foldLeft(Map.empty[String, Long]) { (m, u) =>
-        readEntry(spark, table, u).txn match {
-          case Some((a, b)) if m.get(a).forall(_ < b) => m + (a -> b)
-          case _ => m
-        }
-      }
-  }
 
   /** The session's column-name resolver (honors spark.sql.caseSensitive,
     * default case-INSENSITIVE) — every tombstone/duplicate-column guard
@@ -1573,12 +1492,10 @@ object TxnLake extends LakeFormat {
     * STRICTLY exceed the previous entry's — Delta's inCommitTimestamp
     * monotonicity, enforced at WRITE time so that
     * `readAsOf(commitTimestamp(v))` round-trips even under multi-writer
-    * clock skew (read-side adjustment alone keeps resolution
-    * deterministic but lets the raw exposed value point before an
-    * earlier version's). */
-  private def nextTs(prev: Option[Entry]): Some[Long] =
-    Some(math.max(System.currentTimeMillis(),
-      prev.flatMap(_.ts).map(_ + 1).getOrElse(Long.MinValue)))
+    * clock skew, and [[versionAsOf]] needs no read-side clamp. */
+  private def nextTs(prev: Option[Entry]): Long =
+    math.max(System.currentTimeMillis(),
+      prev.map(_.ts + 1).getOrElse(Long.MinValue))
 
   /** ONE publish attempt of `df` as version `base + 1` (0 on an absent
     * table), computed against exactly the `base` snapshot [[transact]]
@@ -1797,8 +1714,7 @@ object TxnLake extends LakeFormat {
     // of merging footers across the whole file list. Computed before
     // the post-write pass, which reads the fresh files under it.
     val tableSchema = schemaOverride.getOrElse(mergedSchema(
-      lastEntry.flatMap(_.schemaJson)
-        .map(DataType.fromJson(_).asInstanceOf[StructType]),
+      lastEntry.map(_.schema),
       // the materialized row-id column is PHYSICAL only — never part
       // of the logical table schema (plain reads must not see it)
       StructType(dfPhys.schema.fields.filterNot(_.name == RidCol)),
@@ -1857,13 +1773,8 @@ object TxnLake extends LakeFormat {
         .getOrElse(Seq.empty)
     }
     // carry the cumulative txn state through EVERY commit (plain commits
-    // included) so the O(1) replay check stays sound. UPGRADE path: a
-    // log written before the map existed carries per-entry txn markers
-    // only — carriedTxns folds ALL of them into the one commit that
-    // introduces the map, otherwise the first new-format commit would
-    // orphan every legacy marker and a legacy app's replay would slip
-    // past the has-map fast path.
-    val prior = base.map(carriedTxns(spark, table, _)).getOrElse(Map.empty)
+    // included) so the O(1) replay check stays sound
+    val prior = lastEntry.map(_.txns).getOrElse(Map.empty[String, Long])
     // extraTxns are auxiliary watermarks a caller piggybacks on the same
     // atomic commit (e.g. the index-coverage markers the streaming sinks
     // record — see CurationStream.indexCovered). Monotone merge: a stale
@@ -1943,13 +1854,12 @@ object TxnLake extends LakeFormat {
       fm.copy(brid = b)
     }
     // 2. publish: tmp write + atomic link IS the commit
-    val entry = render(Entry(next, operation, addedRid, removed, None, txn,
-      txns,
-      hasTxns = true, schemaJson = Some(tableSchema.json),
+    val entry = render(Entry(next, operation, addedRid, removed, txn,
+      txns, tableSchema, nextTs(lastEntry),
       bloomCols = allBloomCols,
       dvs = if (dvAnchor) dvLive else newDvs, dvDelta = !dvAnchor,
       droppedCols = dropped.distinct, constraints = tableConstraints,
-      genCols = genColsAll, ts = nextTs(lastEntry),
+      genCols = genColsAll,
       identityCols = idColsOut, ridHwm = ridCursor,
       renames = renamesAll))
     publishEntry(f, table, next, entry)
@@ -2065,13 +1975,11 @@ object TxnLake extends LakeFormat {
           } ++ incoming.fields.filterNot(f => p.fieldNames.contains(f.name)))
     }
 
-  /** The cumulative table schema recorded at `version`, when the log is
-    * new enough to carry one (one O(1) entry read; legacy logs → None →
-    * readers fall back to footer-derived schemas). */
+  /** The cumulative table schema recorded at `version` — one O(1) entry
+    * read. */
   def loggedSchema(spark: SparkSession, table: String,
-                   version: Long): Option[StructType] =
-    readEntry(spark, table, version).schemaJson
-      .map(DataType.fromJson(_).asInstanceOf[StructType])
+                   version: Long): StructType =
+    readEntry(spark, table, version).schema
 
   private def requireLive(spark: SparkSession, table: String, version: Long,
                           files: Seq[FileMeta]): Unit = {
@@ -2106,18 +2014,14 @@ object TxnLake extends LakeFormat {
   def readVersion(spark: SparkSession, table: String, version: Long): DataFrame = {
     val files = resolveFiles(spark, table, version)
     requireLive(spark, table, version, files)
-    // apply the LOGGED schema when present: files written before a column
-    // was added lack it physically — the parquet reader fills nulls, which
-    // is exactly Delta's read-time evolution semantics (and the scan skips
+    // apply the LOGGED schema: files written before a column was added
+    // lack it physically — the parquet reader fills nulls, which is
+    // exactly Delta's read-time evolution semantics (and the scan skips
     // the per-file footer schema merge entirely)
     val entry = readEntry(spark, table, version)
-    val schema = entry.schemaStruct
     if (files.isEmpty)
-      schema.map(st => spark.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-          toDisplaySchema(st, entry.renames)))
-        .getOrElse(spark.emptyDataFrame)
-    else scanFiles(spark, table, files, schema,
+      emptyOf(spark, toDisplaySchema(entry.schema, entry.renames))
+    else scanFiles(spark, table, files, entry.schema,
       resolveDvs(spark, table, version), entry.renames)
   }
 
@@ -2147,10 +2051,10 @@ object TxnLake extends LakeFormat {
     * the live map reconstructs by replay from the nearest FULL anchor,
     * exactly how [[resolveFiles]] reconstructs the file list:
     *
-    *  - anchors are every entry written with the full map: legacy logs
-    *    (cumulative by construction), restore / compensation / clone
-    *    publishes, any commit whose live map is EMPTY (the no-DV common
-    *    case — so DV-free tables stay O(1) here), and every
+    *  - anchors are every entry written with the full map: restore /
+    *    compensation / clone publishes, any commit whose live map is
+    *    EMPTY (the no-DV common case — so DV-free tables stay O(1)
+    *    here), and every
     *    [[CheckpointInterval]]-th commit (the cadence bound, Delta's
     *    checkpoint amortization);
     *  - replay applies `(live -- entry.remove) ++ entry.dvs` forward —
@@ -2268,14 +2172,11 @@ object TxnLake extends LakeFormat {
     * Zero plan change when no scanned file carries a DV — the fast path
     * every DV-free table stays on. */
   private def scanFiles(spark: SparkSession, table: String,
-                        files: Seq[FileMeta], schema: Option[StructType],
+                        files: Seq[FileMeta], schema: StructType,
                         dvs: Map[String, DvRef],
                         ren: Map[String, String] = Map.empty): DataFrame = {
     import org.apache.spark.sql.functions.col
-    def scan(paths: Seq[String]) = schema match {
-      case Some(st) => spark.read.schema(st).parquet(paths: _*)
-      case None => spark.read.parquet(paths: _*)
-    }
+    def scan(paths: Seq[String]) = spark.read.schema(schema).parquet(paths: _*)
     def abs(fms: Seq[FileMeta]) =
       fms.map(fm => new Path(table, fm.path).toString)
     val (masked, clean) = files.partition(fm => dvs.contains(fm.path))
@@ -2305,6 +2206,11 @@ object TxnLake extends LakeFormat {
     }
     toDisplay(out, ren)
   }
+
+  /** An empty frame of `schema` — the read of an empty snapshot. */
+  private def emptyOf(spark: SparkSession, schema: StructType): DataFrame =
+    spark.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
 
   /** [[scanFiles]] with the ROW ID materialized as [[RidCol]]: a row's
     * id is the physical `__graft_rid` column when its file carries one
@@ -2362,21 +2268,17 @@ object TxnLake extends LakeFormat {
 
   /** The copy-on-write scan seam: rows WITH their ids materialized when
     * every scanned file tracks them (so the rewrite PRESERVES ids —
-    * commit with `carryRids = true`), else the plain scan on a legacy
-    * snapshot. Returns (frame, whether ids are carried). */
+    * commit with `carryRids = true`), else the plain scan over untracked
+    * files. Returns (frame, whether ids are carried). */
   private def scanForRewrite(spark: SparkSession, table: String,
                              files: Seq[FileMeta], schema: StructType,
                              dvs: Map[String, DvRef],
                              ren: Map[String, String] = Map.empty)
       : (DataFrame, Boolean) =
-    if (files.isEmpty)
-      (spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-        toDisplaySchema(schema, ren)),
-        false)
+    if (files.isEmpty) (emptyOf(spark, toDisplaySchema(schema, ren)), false)
     else if (files.forall(_.brid >= 0L))
       (scanFilesWithRid(spark, table, files, schema, dvs, ren), true)
-    else (scanFiles(spark, table, files, Some(schema), dvs, ren), false)
+    else (scanFiles(spark, table, files, schema, dvs, ren), false)
 
   /** Whether every live file of the snapshot tracks row ids — true for
     * any table whose files were all committed (or rewritten) after row
@@ -2413,13 +2315,10 @@ object TxnLake extends LakeFormat {
     val files = resolveFiles(spark, table, v)
     requireLive(spark, table, v, files)
     val entry = readEntry(spark, table, v)
-    val schema = subsetReadSchema(spark, table, entry.schemaStruct, files)
     if (files.isEmpty)
-      spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-        StructType(toDisplaySchema(schema, entry.renames).fields :+
-          StructField(RidCol, LongType, nullable = true)))
-    else scanFilesWithRid(spark, table, files, schema,
+      emptyOf(spark, StructType(toDisplaySchema(entry.schema, entry.renames)
+        .fields :+ StructField(RidCol, LongType, nullable = true)))
+    else scanFilesWithRid(spark, table, files, entry.schema,
       resolveDvs(spark, table, v), entry.renames)
   }
 
@@ -2459,26 +2358,24 @@ object TxnLake extends LakeFormat {
           case Some((fdf, total)) =>
             return readWhereDistributed(spark, table, v, predicate,
               fdf, total)
-          case None => // below cap / no ckpt / legacy — driver path
+          case None => // below cap / no checkpoint — driver path
         }
         val files = resolveFiles(spark, table, v)
         requireLive(spark, table, v, files)
         if (files.isEmpty) return (spark.emptyDataFrame, (0, 0))
         def abs(fms: Seq[FileMeta]) =
           fms.map(fm => new Path(table, fm.path).toString)
-        // logged schema (when present) both evolves old files and lets the
-        // predicate reference columns the SAMPLE file may predate
+        // the logged schema both evolves old files and lets the predicate
+        // reference columns the SAMPLE file may predate
         val entry = readEntry(spark, table, v)
-        val schema = entry.schemaStruct
+        val schema = entry.schema
         val ren = entry.renames
-        def scan(paths: Seq[String]) = toDisplay(schema match {
-          case Some(st) => spark.read.schema(st).parquet(paths: _*)
-          case None => spark.read.parquet(paths: _*)
-        }, ren)
+        def scan(paths: Seq[String]) =
+          toDisplay(spark.read.schema(schema).parquet(paths: _*), ren)
         // the predicate references DISPLAY names; the matcher sees the
         // stats through the same display overlay (displayMeta)
         val pred = resolvedPredicate(spark, abs(files).head, predicate,
-          schema.map(toDisplaySchema(_, ren)))
+          toDisplaySchema(schema, ren))
         val kept = files.filter(fm => mayMatch(displayMeta(ren)(fm), pred))
         val df =
           if (kept.isEmpty)
@@ -2500,10 +2397,11 @@ object TxnLake extends LakeFormat {
     val v = version.orElse(latestVersion(spark, table))
     val files = snapshotFiles(spark, table, v)
     if (files.isEmpty) return (0, 0)
-    val ren = v.map(renamesAt(spark, table, _)).getOrElse(Map.empty)
+    val e = readEntry(spark, table, v.get)
+    val ren = e.renames
     val sample = new Path(table, files.head.path).toString
     val pred = resolvedPredicate(spark, sample, predicate,
-      v.flatMap(loggedSchema(spark, table, _)).map(toDisplaySchema(_, ren)))
+      toDisplaySchema(e.schema, ren))
     (files.count(fm => mayMatch(displayMeta(ren)(fm), pred)), files.size)
   }
 
@@ -2514,9 +2412,8 @@ object TxnLake extends LakeFormat {
     * unresolved column graph the public Column API carries. */
   private def resolvedPredicate(spark: SparkSession, sampleFile: String,
                                 predicate: Column,
-                                schema: Option[StructType] = None): Expression = {
-    val reader = schema.map(spark.read.schema).getOrElse(spark.read)
-    val probe = reader.parquet(sampleFile).where(predicate)
+                                schema: StructType): Expression = {
+    val probe = spark.read.schema(schema).parquet(sampleFile).where(predicate)
     probe.queryExecution.analyzed.collect {
       case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
     }.headOption.getOrElse(Literal(true, BooleanType))
@@ -2765,21 +2662,20 @@ object TxnLake extends LakeFormat {
     import org.apache.spark.sql.functions.{col, lit}
     require(fromVersion <= toVersion,
       s"TxnLake.tableChanges: $fromVersion > $toVersion")
-    val schema = loggedSchema(spark, table, toVersion)
+    val top = readEntry(spark, table, toVersion)
+    val schema = top.schema
     // ONE display overlay for the whole range — the feed's consumer
     // unions hops column-by-column, so every hop must speak the SAME
     // (latest-requested) names even when a rename landed mid-range
-    val ren = renamesAt(spark, table, toVersion)
+    val ren = top.renames
     // the row-id read needs REAL FileMetas (their base row ids); the
     // plain read only needs paths. Pre-image paths resolve against the
     // PREVIOUS snapshot, post-image adds ride the entry itself.
     def readFms(fms: Seq[FileMeta],
                 dvs: Map[String, DvRef] = Map.empty,
                 keepMeta: Boolean = false): DataFrame =
-      if (byRid) scanFilesWithRid(spark, table, fms,
-        schema.getOrElse(sys.error(
-          "TxnLake.tableChangesByRowId: legacy log carries no schema")),
-        dvs, ren, keepMeta)
+      if (byRid) scanFilesWithRid(spark, table, fms, schema, dvs, ren,
+        keepMeta)
       else {
         import org.apache.spark.sql.functions.col
         val df = scanFiles(spark, table, fms, schema, dvs, ren)
@@ -2801,20 +2697,16 @@ object TxnLake extends LakeFormat {
       requireLive(spark, table, v, files)
       val sch = loggedSchema(spark, table, v)
       if (files.isEmpty) {
-        val base = sch.map(st => spark.createDataFrame(
-            java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-            toDisplaySchema(st, ren)))
-          .getOrElse(spark.emptyDataFrame)
+        val base = emptyOf(spark, toDisplaySchema(sch, ren))
         if (byRid) base.withColumn(RidCol, lit(null).cast("long"))
         else base
       }
-      else if (byRid) scanFilesWithRid(spark, table, files,
-        subsetReadSchema(spark, table, sch, files),
+      else if (byRid) scanFilesWithRid(spark, table, files, sch,
         resolveDvs(spark, table, v), ren)
       else scanFiles(spark, table, files, sch,
         resolveDvs(spark, table, v), ren)
     }
-    // snapshot-replacement diff (overwrite / restore / legacy entries)
+    // snapshot-replacement diff (overwrite / restore entries)
     def snapDiff(v: Long): DataFrame =
       keyedDiff(snapAt(v - 1), snapAt(v), key)
     val hops = ((fromVersion + 1) to toVersion).flatMap { v =>
@@ -2841,12 +2733,6 @@ object TxnLake extends LakeFormat {
                         dvs: Map[String, DvRef]): DataFrame =
         readFms(metasPrev(paths), dvs, keepMeta = true)
       e.operation match {
-        // legacy full-list entries carry the SNAPSHOT, not a delta — their
-        // op tag says "append" but add is empty, and shortcutting them as
-        // empty appends would silently drop those commits' rows from the
-        // feed; only the snapshot diff can attribute them
-        case _ if e.legacyFiles.isDefined =>
-          Some(snapDiff(v).withColumn("commit_version", lit(v)))
         case "optimize" => None
         case "metadata" => None // schema-only commit: no row changes
         case "append" if e.add.nonEmpty =>
@@ -2920,8 +2806,7 @@ object TxnLake extends LakeFormat {
     * no batch ≥ `batchId` for `appId` proves no earlier version can
     * carry the marker either and the scan stops — cost is
     * O(versions since the batch landed), not O(table history), on
-    * every crash-replay report. Legacy entries (no map) keep scanning:
-    * there is nothing to prove absence with. */
+    * every crash-replay report. */
   def txnVersion(spark: SparkSession, table: String, appId: String,
                  batchId: Long): Option[Long] = {
     val it = committedVersions(spark, table).reverseIterator
@@ -2929,7 +2814,7 @@ object TxnLake extends LakeFormat {
       val v = it.next()
       val e = readEntry(spark, table, v)
       if (e.txn.contains((appId, batchId))) return Some(v)
-      if (e.hasTxns && e.txns.get(appId).forall(_ < batchId)) return None
+      if (e.txns.get(appId).forall(_ < batchId)) return None
     }
     None
   }
@@ -2937,17 +2822,10 @@ object TxnLake extends LakeFormat {
   /** Latest batch id recorded for `appId` in the table's transaction
     * state — the recovery read an at-least-once consumer performs on
     * restart to resume where it left off. O(1) log reads: the cumulative
-    * app→batch map rides the last entry (legacy logs fall back to the
-    * linear scan). */
-  def lastTxn(spark: SparkSession, table: String, appId: String): Option[Long] = {
-    val committed = committedVersions(spark, table)
-    committed.lastOption.flatMap { last =>
-      val e = readEntry(spark, table, last)
-      if (e.hasTxns) e.txns.get(appId)
-      else committed.flatMap(v => readEntry(spark, table, v).txn
-        .filter(_._1 == appId).map(_._2)).maxOption
-    }
-  }
+    * app→batch map rides the last entry. */
+  def lastTxn(spark: SparkSession, table: String, appId: String): Option[Long] =
+    latestVersion(spark, table)
+      .flatMap(readEntry(spark, table, _).txns.get(appId))
 
   // ---- merge ----------------------------------------------------------
 
@@ -3049,14 +2927,11 @@ object TxnLake extends LakeFormat {
     // re-run per attempt: a concurrent schema-evolving commit between
     // retries must fail this merge exactly as it would have on attempt 1
     def schemaCheck(base: Option[Long]): Unit = base.foreach { b =>
-      val files = resolveFiles(spark, table, b)
-      val schema = loggedSchema(spark, table, b)
+      val e = readEntry(spark, table, b)
       def sig(st: StructType) =
         st.fields.map(f => (f.name, f.dataType)).sortBy(_._1).toSeq
       // the caller's delta speaks DISPLAY names — compare through the map
-      val tblSchema = toDisplaySchema(schema.getOrElse(
-        subsetReadSchema(spark, table, schema, files)),
-        renamesAt(spark, table, b))
+      val tblSchema = toDisplaySchema(e.schema, e.renames)
       require(sig(tblSchema) == sig(delta.schema),
         s"TxnLake.mergeInto: schema mismatch ${sig(tblSchema)} vs " +
           s"${sig(delta.schema)}")
@@ -3470,7 +3345,7 @@ object TxnLake extends LakeFormat {
             val anti =
               if (keyTouched.isEmpty) src
               else src.join(
-                scanFiles(spark, table, keyTouched, Some(snap.readSchema),
+                scanFiles(spark, table, keyTouched, snap.readSchema,
                   snap.dvs, ren).select(col(key)),
                 Seq(key), "left_anti")
             insertRows(anti, displaySchema, newCols)
@@ -3651,37 +3526,18 @@ object TxnLake extends LakeFormat {
       }
     }
 
-  /** Schema for a PARTIAL-snapshot read inside a scoped rewrite
-    * ([[optimizeWhere]], [[compactSmallFiles]]): the logged schema when
-    * the log carries one; on a LEGACY log (no schemaJson yet), the
-    * footer-merged schema of the WHOLE snapshot — never of the subset
-    * being rewritten. The scoped commit records the table's FIRST
-    * schemaJson, and a subset-derived schema would silently drop any
-    * column that exists only in carried-over files: every later
-    * logged-schema read would then hide that column's data (column-level
-    * loss). One extra footer sweep, paid only on the one legacy-upgrade
-    * commit. */
-  private def subsetReadSchema(spark: SparkSession, table: String,
-                               logged: Option[StructType],
-                               snapshot: => Seq[FileMeta]): StructType =
-    logged.getOrElse(
-      spark.read.option("mergeSchema", "true")
-        .parquet(snapshot.map(fm => new Path(table, fm.path).toString): _*)
-        .schema)
-
   /** The snapshot a rewrite attempt works on, pinned at `base`: its live
-    * files (liveness-checked), its entry, and — lazily, so each caller
-    * pays only what it uses — the read schema, the deletion-vector map
-    * (resolved ONCE per attempt: per-file resolveDvs calls would replay
-    * the log O(files) times), and the predicate scope. */
+    * files (liveness-checked), its entry (with the logged read schema),
+    * and — lazily, so each caller pays only what it uses — the
+    * deletion-vector map (resolved ONCE per attempt: per-file resolveDvs
+    * calls would replay the log O(files) times) and the predicate scope. */
   private final class PinnedSnapshot(spark: SparkSession, table: String,
                                      base: Long) {
     val files: Seq[FileMeta] = resolveFiles(spark, table, base)
     requireLive(spark, table, base, files)
     val entry: Entry = readEntry(spark, table, base)
     def ren: Map[String, String] = entry.renames
-    lazy val readSchema: StructType =
-      subsetReadSchema(spark, table, entry.schemaStruct, files)
+    def readSchema: StructType = entry.schema
     lazy val displayFields: Seq[String] =
       toDisplaySchema(readSchema, ren).fieldNames.toSeq
     lazy val dvs: Map[String, DvRef] = resolveDvs(spark, table, base)
@@ -3694,7 +3550,7 @@ object TxnLake extends LakeFormat {
       else {
         val pred = resolvedPredicate(spark,
           new Path(table, files.head.path).toString, predicate,
-          entry.schemaStruct.map(toDisplaySchema(_, ren)))
+          toDisplaySchema(entry.schema, ren))
         files.filter(fm => mayMatch(displayMeta(ren)(fm), pred))
       }
 
@@ -4035,8 +3891,8 @@ object TxnLake extends LakeFormat {
                         maxAttempts: Int = 10,
                         within: Option[Set[String]] = None): Option[Long] =
     transactOn(spark, table, "compactSmallFiles", maxAttempts) { base =>
-      // ONE snapshot resolution per attempt feeds the size listing, the
-      // pack-set filter, and the legacy-schema fallback alike
+      // ONE snapshot resolution per attempt feeds the size listing and
+      // the pack-set filter alike
       val snap = new PinnedSnapshot(spark, table, base)
       val fsys = fs(spark, new Path(table))
       val small = snap.files.map(fm => fm.path ->
@@ -4079,7 +3935,7 @@ object TxnLake extends LakeFormat {
 
   /** RESTORE to the snapshot a TIMESTAMP resolves to — Delta's
     * `RESTORE TABLE … TO TIMESTAMP AS OF`: [[versionAsOf]] resolution
-    * (monotone-adjusted publish mtimes), then the metadata-only
+    * (in-commit timestamps), then the metadata-only
     * [[restore]]. Refuses a pre-history instant with the same guided
     * error as [[readAsOf]]. */
   def restoreAsOf(spark: SparkSession, table: String, ts: Long,
@@ -4126,9 +3982,8 @@ object TxnLake extends LakeFormat {
       if (lastV == toVersion) Some(lastV)
       else {
         val lastEntry = readEntry(spark, table, lastV)
-        // carry the cumulative txn state forward (a legacy log gets the
-        // same one-time marker fold commitImpl performs)
-        val txns = carriedTxns(spark, table, lastV)
+        // carry the cumulative txn state forward
+        val txns = lastEntry.txns
         // remove EVERYTHING current and add the full target list: delta
         // replay then can't double-count files the two snapshots share
         val currentMeta = resolveFiles(spark, table, lastV)
@@ -4138,8 +3993,7 @@ object TxnLake extends LakeFormat {
         val targetDvs = resolveDvs(spark, table, toVersion)
         requireDvLive(targetDvs)
         publishEntry(f, table, next, render(Entry(next, "restore", target,
-          current, None, None, txns, hasTxns = true,
-          schemaJson = targetEntry.schemaJson,
+          current, None, txns, targetEntry.schema, nextTs(Some(lastEntry)),
           // the bloom-column declaration is a table property — carry the
           // union so a restore never silently un-indexes later commits
           bloomCols = (lastEntry.bloomCols ++ targetEntry.bloomCols).distinct,
@@ -4163,8 +4017,7 @@ object TxnLake extends LakeFormat {
           ridHwm = math.max(targetEntry.ridHwm, lastEntry.ridHwm),
           // display names restore with their snapshot (era-correct, like
           // the schema itself)
-          renames = targetEntry.renames,
-          ts = nextTs(Some(lastEntry)))), beforePublish)
+          renames = targetEntry.renames)), beforePublish)
         // Re-verify the target's files AFTER the publish: a vacuum that
         // resolved its live set between our pre-check and this publish may
         // have reclaimed them (the restore/vacuum TOCTOU). Once our entry
@@ -4191,7 +4044,7 @@ object TxnLake extends LakeFormat {
             // removing it would vanish live rows from the log
             compensateRestore(spark, f, table, next, currentMeta,
               target.map(_.path).filterNot(current.toSet),
-              txns, lastEntry.schemaJson, maxAttempts,
+              txns, lastEntry.schema, maxAttempts,
               priorDvs = resolveDvs(spark, table, lastV))
             throw new IllegalStateException(
               s"TxnLake.restore: a concurrent vacuum reclaimed version " +
@@ -4226,7 +4079,7 @@ object TxnLake extends LakeFormat {
                                 priorSnapshot: Seq[FileMeta],
                                 removePaths: Seq[String],
                                 txns: Map[String, Long],
-                                schemaJson: Option[String],
+                                schema: StructType,
                                 maxAttempts: Int,
                                 priorDvs: Map[String, DvRef] = Map.empty): Unit =
     try transactOn(spark, table, "restore", maxAttempts) { lastV =>
@@ -4247,18 +4100,14 @@ object TxnLake extends LakeFormat {
           k -> math.max(carried.getOrElse(k, Long.MinValue),
             txns.getOrElse(k, Long.MinValue))
         }.toMap
-        val latestSchema = lastEntry.flatMap(_.schemaJson).orElse(schemaJson)
-        val outSchema = (latestSchema, schemaJson) match {
-          case (Some(l), Some(p)) if l != p =>
-            Some(mergedSchema(
-              Some(DataType.fromJson(l).asInstanceOf[StructType]),
-              DataType.fromJson(p).asInstanceOf[StructType], "append").json)
-          case (l, p) => l.orElse(p)
-        }
         val latest = readEntry(spark, table, lastV)
+        // monotone vs the ACTUAL last entry — lastEntry is None exactly
+        // when the failed restore's own entry is latest, and that entry
+        // carries a ts the compensation must still exceed
         publishEntry(f, table, next, render(Entry(next, "restore", addBack,
-          stillReferenced, None, None, mergedTxns, hasTxns = true,
-          schemaJson = outSchema,
+          stillReferenced, None, mergedTxns,
+          mergedSchema(lastEntry.map(_.schema), schema, "append"),
+          nextTs(Some(latest)),
           bloomCols = latest.bloomCols,
           // masks follow their files: survivors keep the current map's,
           // added-back files return with the pre-restore snapshot's
@@ -4273,11 +4122,7 @@ object TxnLake extends LakeFormat {
           genCols = latest.genCols,
           identityCols = latest.identityCols,
           ridHwm = latest.ridHwm,
-          renames = latest.renames,
-          // monotone vs the ACTUAL last entry — lastEntry is None exactly
-          // when the failed restore's own entry is latest, and that entry
-          // carries a ts the compensation must still exceed
-          ts = nextTs(Some(latest)))))
+          renames = latest.renames)))
         maybeCheckpoint(spark, f, table, next)
         Some(next)
       }
@@ -4723,11 +4568,6 @@ object TxnLake extends LakeFormat {
         AlterSpec(cur, dropConstraints = Seq(name))
     }
 
-  /** Shared ALTER loop: resolve the pinned snapshot's current schema
-    * (footer-merged on a legacy log — the one-time upgrade cost every
-    * scoped rewrite pays), let `change` produce (new schema, bloom
-    * drops, tombstones), and publish as a noData "metadata" commit with
-    * recompute-on-conflict. */
   /** One ALTER's full outcome: the new schema plus every table-property
     * delta it carries into the metadata commit. */
   private final case class AlterSpec(schema: StructType,
@@ -4746,15 +4586,16 @@ object TxnLake extends LakeFormat {
                                        Map.empty,
                                      dropRenames: Seq[String] = Seq.empty)
 
+  /** Shared ALTER loop: read the pinned entry's logged schema, let
+    * `change` produce (new schema, bloom drops, tombstones), and publish
+    * as a noData "metadata" commit with recompute-on-conflict. */
   private def alterSchemaWith(spark: SparkSession, table: String, api: String,
                               maxAttempts: Int)
                              (change: (StructType, Entry) => AlterSpec)
       : Long =
     transactOn(spark, table, api, maxAttempts) { base =>
       val entry = readEntry(spark, table, base)
-      val cur = subsetReadSchema(spark, table, entry.schemaStruct,
-        resolveFiles(spark, table, base))
-      val spec = change(cur, entry)
+      val spec = change(entry.schema, entry)
       val emptyDf = spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], spec.schema)
       Some(commitImpl(spark, emptyDf, table, "metadata", None, Some(base),
@@ -4777,9 +4618,9 @@ object TxnLake extends LakeFormat {
   /** One row of table metadata — Delta's `DESCRIBE DETAIL`, resolved
     * from the latest entry + O(|files|) driver metadata (the size
     * listing): live file count and bytes, logical row count (file
-    * row-counts minus masked positions; −1 when a legacy file predates
-    * row counting), mask census, and the full table-property surface
-    * (schema, bloom declaration, CHECK constraints, drop tombstones). */
+    * row-counts minus masked positions), mask census, and the full
+    * table-property surface (schema, bloom declaration, CHECK
+    * constraints, drop tombstones). */
   final case class TableDetail(version: Long, committedAt: Long,
                                numFiles: Int, sizeBytes: Long,
                                numRows: Long, maskedRows: Long,
@@ -4802,14 +4643,12 @@ object TxnLake extends LakeFormat {
     val bytes = snapshotFileSizes(spark, table, Some(v)).map(_._2).sum
     val dvsLive = resolveDvs(spark, table, v)
     val masked = dvsLive.values.map(_.rows).sum
-    val rows =
-      if (files.exists(_.rows < 0)) -1L
-      else files.map(_.rows).sum - masked
+    val rows = files.map(_.rows).sum - masked
     TableDetail(v, commitTimestamp(spark, table, v), files.size, bytes,
       rows, masked, dvsLive.size,
       // the user-facing schema speaks DISPLAY names; the raw physical →
       // display overlay rides alongside for introspection
-      e.schemaStruct.map(toDisplaySchema(_, e.renames)),
+      Some(toDisplaySchema(e.schema, e.renames)),
       e.bloomCols.map(displayOf(e.renames, _)),
       e.constraints, e.droppedCols, e.genCols, e.identityCols, e.renames,
       e.ridHwm)
@@ -4976,8 +4815,8 @@ object TxnLake extends LakeFormat {
         (copied, dvsCopied)
       }
     f.mkdirs(logDir(target))
-    val entry = render(Entry(0L, "append", add, Seq.empty, None, None,
-      Map.empty, hasTxns = true, schemaJson = srcEntry.schemaJson,
+    val entry = render(Entry(0L, "append", add, Seq.empty, None,
+      Map.empty, srcEntry.schema, nextTs(None),
       bloomCols = srcEntry.bloomCols, dvs = dvs,
       droppedCols = srcEntry.droppedCols,
       constraints = srcEntry.constraints,
@@ -4986,8 +4825,7 @@ object TxnLake extends LakeFormat {
       // the clone's files carry their base row ids verbatim, so the
       // source's mark rides too — ids stay stable across a clone
       ridHwm = srcEntry.ridHwm,
-      renames = srcEntry.renames,
-      ts = nextTs(None)))
+      renames = srcEntry.renames))
     try publishEntry(f, target, 0L, entry)
     catch { case _: CommitConflict =>
       sys.error(s"TxnLake.cloneTable: a concurrent writer founded $target " +

@@ -48,7 +48,7 @@ import graft.sources.TxnLake
   * O(touched + delta) copy-on-write — never O(table) on either side
   * (SCALE.md mode `cdcapply`: flat apply wall, one file rewritten,
   * across 30x replica growth). A SNAPSHOT-REPLACEMENT hop (overwrite,
-  * restore, legacy full-list) is the exception: it routes through the
+  * restore) is the exception: it routes through the
   * change feed's snapshot-diff branch — an O(table) source read to
   * derive the diff — though the replica still rewrites only the files
   * the diff's keys scope to, so a daily full refresh whose actual

@@ -64,6 +64,19 @@ class SilverToGoldSpec extends SparkSpec {
     assert(f.count() == 10)
   }
 
+  test("fact EventIDs are unique without a dedup: one per null-key-passing silver row") {
+    val f = gold("fact_earthquake_events")
+    val n = f.count()
+    assert(f.select("EventID").distinct().count() == n)
+    val passing = silver.filter(Seq("latitude", "longitude", "place",
+      "magnitude_category", "event_type", "magType").map(col(_).isNotNull)
+      .reduce(_ && _)).count()
+    assert(n == passing)
+    // the written schema keeps the surrogate keys nullable
+    assert(SilverToGold.factEarthquakeEvents(silver).schema
+      .filter(_.name.endsWith("Key")).forall(_.nullable))
+  }
+
   test("fact FKs resolve against their dimensions") {
     val f = gold("fact_earthquake_events")
     val orphans = f.join(gold("dim_location"), Seq("LocationKey"), "left_anti").count() +

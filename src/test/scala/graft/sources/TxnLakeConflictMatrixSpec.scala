@@ -218,6 +218,12 @@ class TxnLakeConflictMatrixSpec extends SparkSpec {
         s"[${w.api}] lost or mangled rows: ${rowsOf(t).take(8)}…")
       assert(TxnLake.readVersion(spark, t, racer).collect().length ==
         pre.size + 1, s"[${w.api}] the racer's commit must stay in history")
+      val entry = new com.fasterxml.jackson.databind.ObjectMapper().readTree(
+        Files.readString(java.nio.file.Paths.get(t, "_txn_log",
+          s"v${racer + 1}.json")))
+      assert(Seq("protocol", "ts", "schema", "txns").forall(entry.has) &&
+        entry.get("protocol").get("reader").asInt() == 2,
+        s"[${w.api}] its entry must carry the protocol-2 state: $entry")
       if (w.dv) assert(saltDirs(t) == 1,
         s"[${w.api}] the conflicted attempt's sidecars must be removed")
 

@@ -143,34 +143,6 @@ class TxnLakeDmlSpec extends SparkSpec {
     }
   }
 
-  test("tableChanges attributes a legacy full-list hop via the snapshot diff") {
-    import spark.implicits._
-    val t = freshTable()
-    TxnLake.commit(spark, Seq((1L, "a")).toDF("k", "v").coalesce(1),
-      t, "append") // v0
-    TxnLake.commit(spark, Seq((2L, "b")).toDF("k", "v").coalesce(1),
-      t, "append") // v1
-    // rewrite v1 into the pre-delta format: operation SAYS append but the
-    // entry carries the FULL snapshot under "files" with an empty add —
-    // the shape a shortcut-as-empty-append walk would silently drop from
-    // the feed; only the snapshot diff can attribute it
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    def addsOf(v: Long) = mapper.readTree(java.nio.file.Files.readString(
-      java.nio.file.Paths.get(t, "_txn_log", s"v$v.json"))).get("add")
-    val legacy = mapper.createObjectNode()
-    legacy.put("version", 1L).put("operation", "append")
-    val files = legacy.putArray("files")
-    addsOf(0L).forEach(a => files.add(a.get("path").asText()))
-    addsOf(1L).forEach(a => files.add(a.get("path").asText()))
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(t, "_txn_log", "v1.json"),
-      mapper.writeValueAsString(legacy))
-    val feed = TxnLake.tableChanges(spark, t, 0L, 1L, "k").collect()
-    assert(feed.length == 1 && feed.head.getLong(0) == 2L
-      && feed.head.getAs[String]("change_type") == "insert",
-      s"legacy hop must fall back to the snapshot diff: ${feed.toSeq}")
-  }
-
   // ---- clause-based MERGE ---------------------------------------------
 
   import TxnLake.{MergeDelete, MergeInsert, MergeUpdate, sourceCol}
@@ -523,7 +495,7 @@ class TxnLakeDmlSpec extends SparkSpec {
     // pre-merge version still time-travels under its own narrow schema
     assert(TxnLake.readVersion(spark, t, preV).columns.toSeq ==
       Seq("k", "v"))
-    assert(TxnLake.loggedSchema(spark, t, v).get.fieldNames.toSeq ==
+    assert(TxnLake.loggedSchema(spark, t, v).fieldNames.toSeq ==
       Seq("k", "v", "tag"))
   }
 

@@ -339,6 +339,47 @@ class TxnLakeSpec extends SparkSpec {
     assert(TxnLake.read(spark, t).count() == 101)
   }
 
+  test("an entry without the protocol action, or naming a newer reader, " +
+    "is refused naming the table and the version") {
+    import spark.implicits._
+    val t = freshTable()
+    (0 to 2).foreach(i =>
+      TxnLake.commit(spark, Seq(i).toDF("x").coalesce(1), t, "append"))
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    def rewrite(v: Long)(edit: com.fasterxml.jackson.databind.node.ObjectNode => Unit): Unit = {
+      val p = java.nio.file.Paths.get(t, "_txn_log", s"v$v.json")
+      val n = mapper.readTree(java.nio.file.Files.readString(p))
+        .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+      assert(n.get("protocol").get("reader").asInt() == 2 &&
+        n.get("protocol").get("writer").asInt() == 2)
+      edit(n)
+      java.nio.file.Files.writeString(p, mapper.writeValueAsString(n))
+      // a distinct mtime, so no cached parse of the old bytes can answer
+      java.nio.file.Files.setLastModifiedTime(p,
+        java.nio.file.attribute.FileTime.fromMillis(1000L + v))
+    }
+    rewrite(1L)(n => n.get("protocol")
+      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+      .put("reader", 3))
+    rewrite(2L)(_.remove("protocol"))
+    val newer = intercept[IllegalStateException] {
+      TxnLake.readVersion(spark, t, 1L).collect()
+    }
+    assert(newer.getMessage.contains("version 1 of " + t) &&
+      newer.getMessage.contains("reader protocol 3"), newer.getMessage)
+    val missing = intercept[IllegalStateException] {
+      TxnLake.commitInfo(spark, t, 2L)
+    }
+    assert(missing.getMessage.contains("version 2 of " + t) &&
+      missing.getMessage.contains("no protocol"), missing.getMessage)
+    // a writer refuses too: its commit reads the latest entry first
+    intercept[IllegalStateException] {
+      TxnLake.commit(spark, Seq(9).toDF("x"), t, "append")
+    }
+    // the intact entry below them still reads
+    assert(TxnLake.readVersion(spark, t, 0L).count() == 1)
+  }
+
   test("checkpoints bound tail replay and preserve resolution + time travel") {
     import spark.implicits._
     val t = freshTable()
@@ -352,6 +393,8 @@ class TxnLakeSpec extends SparkSpec {
       finally st.close()
     }
     assert(names.contains("v10.ckpt") && names.contains("v20.ckpt"), names)
+    val head = java.nio.file.Files.readAllBytes(log.resolve("v10.ckpt")).take(4)
+    assert(new String(head, "US-ASCII") == "PAR1", "checkpoint is not parquet")
     // resolution across checkpoints is exact at every version
     assert(TxnLake.read(spark, t).count() == 25)
     assert(TxnLake.readVersion(spark, t, 9).count() == 10)   // pre-ckpt
@@ -361,24 +404,6 @@ class TxnLakeSpec extends SparkSpec {
     TxnLake.commit(spark, Seq(999).toDF("x"), t, "overwrite")
     assert(TxnLake.read(spark, t).collect().map(_.getInt(0)).toSeq == Seq(999))
     assert(TxnLake.readVersion(spark, t, 20).count() == 21)
-  }
-
-  test("a legacy full-list entry still resolves (files field = snapshot)") {
-    import spark.implicits._
-    val t = freshTable()
-    TxnLake.commit(spark, Seq(1, 2, 3).toDF("x").coalesce(1), t, "overwrite")
-    TxnLake.commit(spark, Seq(4).toDF("x").coalesce(1), t, "append")
-    // rewrite v0 into the pre-delta format: full file list under "files"
-    val p0 = java.nio.file.Paths.get(t, "_txn_log", "v0.json")
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val n = mapper.readTree(java.nio.file.Files.readString(p0))
-    val legacy = mapper.createObjectNode()
-    legacy.put("version", 0L).put("operation", "overwrite")
-    val files = legacy.putArray("files")
-    n.get("add").forEach(a => files.add(a.get("path").asText()))
-    java.nio.file.Files.writeString(p0, mapper.writeValueAsString(legacy))
-    assert(TxnLake.read(spark, t).collect().map(_.getInt(0)).sorted.toSeq
-      == Seq(1, 2, 3, 4))
   }
 
   // ---- per-file stats + data skipping ---------------------------------
@@ -563,31 +588,6 @@ class TxnLakeSpec extends SparkSpec {
           yield mx.toLong - mn.toLong < 4095L).getOrElse(false))),
         s"no file has a sub-full-range span on $d")
     }
-  }
-
-  test("checkpoints are parquet; legacy JSON checkpoints still resolve") {
-    import spark.implicits._
-    val t = freshTable()
-    (0 to 12).foreach { i =>
-      TxnLake.commit(spark, Seq(i).toDF("x").coalesce(1), t, "append")
-    }
-    val ckpt = java.nio.file.Paths.get(t, "_txn_log", "v10.ckpt")
-    val head = java.nio.file.Files.readAllBytes(ckpt).take(4)
-    assert(new String(head, "US-ASCII") == "PAR1",
-      "checkpoint is not parquet")
-    assert(TxnLake.readVersion(spark, t, 11).count() == 12) // ckpt + tail
-    // rewrite the checkpoint into the legacy JSON format: same file list
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val o = mapper.createObjectNode()
-    o.put("version", 10L)
-    val arr = o.putArray("files")
-    TxnLake.snapshotFiles(spark, t, Some(10L)).foreach { fm =>
-      val fo = arr.addObject()
-      fo.put("path", fm.path)
-      fo.put("rows", fm.rows)
-    }
-    java.nio.file.Files.writeString(ckpt, mapper.writeValueAsString(o))
-    assert(TxnLake.readVersion(spark, t, 11).count() == 12)
   }
 
   test("timestamp stats are trusted only under INT64-micros physical encoding") {

@@ -78,35 +78,6 @@ class TxnSinkSpec extends SparkSpec {
     assert(TxnLake.commitOnce(s, batch, table, "append", "carry_spec", 4L).isDefined)
   }
 
-  test("upgrading a legacy log folds its per-entry txn markers into the map") {
-    val s = SparkSpec.session
-    val table = Files.createTempDirectory("txnlegacy_table").toString + "/t"
-    val batch = Tables.events(s, "/root/testdata/sf0.001").limit(5)
-    assert(TxnLake.commitOnce(s, batch, table, "append", "legacy_app", 5L).isDefined)
-    TxnLake.commit(s, batch, table, "append")
-    // simulate a log written before the cumulative map existed: strip the
-    // "txns" field from every committed entry, leaving only the legacy
-    // per-entry txnApp/txnBatch markers
-    val logDir = java.nio.file.Paths.get(table, "_txn_log")
-    val st = Files.list(logDir)
-    try st.forEach { p =>
-      if (p.getFileName.toString.endsWith(".json")) {
-        val stripped = Files.readString(p).replaceAll(""","txns":\{[^}]*\}""", "")
-        Files.writeString(p, stripped)
-      }
-    } finally st.close()
-    // the first new-format commit must FOLD the legacy markers into the
-    // map it introduces — otherwise legacy_app's replay slips past the
-    // O(1) nonEmpty-map fast path and double-applies
-    assert(TxnLake.commitOnce(s, batch, table, "append", "new_app", 0L).isDefined)
-    val rows = TxnLake.read(s, table).count()
-    assert(TxnLake.commitOnce(s, batch, table, "append", "legacy_app", 5L).isEmpty)
-    assert(TxnLake.commitOnce(s, batch, table, "append", "legacy_app", 4L).isEmpty)
-    assert(TxnLake.read(s, table).count() == rows)
-    // and the legacy app still moves forward
-    assert(TxnLake.commitOnce(s, batch, table, "append", "legacy_app", 6L).isDefined)
-  }
-
   test("racing replay twins commit once under version conflicts") {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._

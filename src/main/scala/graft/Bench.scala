@@ -96,11 +96,11 @@ object Bench {
     // listener queues, cleaner backlog, JIT/code-cache churn) inflated
     // job-dense iterative queries up to 6x over their healthy-session cost
     // (d13: 2.7 s clean vs 15.7 s late-registry, identical plans and
-    // superstep counts). Restarting the session every GROUP queries bounds
-    // that interference; restart cost sits OUTSIDE the timed sections, and
-    // every query still measures steady-state (warm + best-of-two) inside
-    // a healthy driver.
-    val group = sys.env.getOrElse("GRAFT_BENCH_GROUP", "4").toInt
+    // superstep counts). Restarting the session every `group` queries
+    // bounds that interference; restart cost sits OUTSIDE the timed
+    // sections, and every query still measures steady-state (warm +
+    // best-of-two) inside a healthy driver.
+    val group = 4
     // Optional args: query names (dev-only isolation harness; the driver
     // always benches the full registry).
     val only: Option[Set[String]] =
@@ -124,7 +124,7 @@ object Bench {
     // what this field exists to expose
     var threadsActual = 0
     val (isoNames, restNames) = names.partition(isolate.contains)
-    val chunks = restNames.grouped(math.max(1, group)).toSeq ++
+    val chunks = restNames.grouped(group).toSeq ++
       isoNames.map(Seq(_))
     // previous round's sidecar, read BEFORE this run overwrites it: the
     // self-adjudication baseline (short keys -> seconds)

@@ -29,7 +29,7 @@ object GraftSession {
       // streaming-query start (and this engine's lifecycle queries start
       // several per invocation) recompiled its entire per-batch plan suite:
       // measured 7/7/7 Janino compilations for three starts of an IDENTICAL
-      // pipeline (graft.tools.CodegenProbe), ~80 recompiles per x46/x63
+      // pipeline (a codegen-counting probe, round 20), ~80 recompiles per x46/x63
       // invocation burning ~1 s of task time each run. This engine adds no
       // session artifacts, so isolation buys nothing; sharing the classloader
       // restores cross-start codegen cache hits. Any long-lived driver that

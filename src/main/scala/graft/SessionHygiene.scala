@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared between-queries cleanup for every harness main (Bench,
-  * Verify, TimeQuery): `clearCache()` drops DataFrame caches but NOT
+  * Verify, JobProfile): `clearCache()` drops DataFrame caches but NOT
   * localCheckpoint blocks (iterative operators leave their final
   * checkpoint for the caller to consume), memory-sink temp views pin their
   * rows until dropped, and broadcasts/shuffle files are only reclaimed by

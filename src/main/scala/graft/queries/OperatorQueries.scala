@@ -1354,7 +1354,7 @@ object OperatorQueries {
     val ev = Tables.events(s, d).select(col("event_id"), col("event_type"), col("value"))
     val table = Scratch.dir(scratchName) + "/t"
     val v0 = TxnLake.commit(s, ev.filter(col("event_id") % 3 =!= 0), table, "overwrite")
-    val v1 = TxnLake.merge(s,
+    val v1 = TxnLake.mergeInto(s,
       ev.filter(col("event_id") % 2 === 0)
         .withColumn("value", round(col("value") * 2, 2)),
       table, key = "event_id")
@@ -1477,7 +1477,7 @@ object OperatorQueries {
     // versions 1–2: MERGE of a doubled-value delta, then a pruning
     // overwrite — both land before the next poll, which must fold each
     // version's change feed as its own exactly-once micro-batch
-    TxnLake.merge(s,
+    TxnLake.mergeInto(s,
       ev.filter(col("event_id") % 2 === 0)
         .withColumn("value", round(col("value") * 2, 2)),
       src, key = "event_id")

@@ -244,55 +244,30 @@ class TxnLakeSpec extends SparkSpec {
     }
   }
 
-  test("merge upserts delta rows, inserts unmatched, null updates win") {
+  test("mergeInto upserts delta rows, inserts unmatched, null updates win") {
     import spark.implicits._
     val t = freshTable()
     TxnLake.commit(spark,
       Seq((1L, Option("a")), (2L, Option("b")), (3L, Option("c")))
         .toDF("k", "v"), t, "overwrite")
     // update k=2 (to null — must WIN over "b"), update k=3, insert k=4
-    val v = TxnLake.merge(spark,
+    val v = TxnLake.mergeInto(spark,
       Seq((2L, Option.empty[String]), (3L, Option("C")), (4L, Option("d")))
         .toDF("k", "v"), t, "k")
     val got = TxnLake.read(spark, t).collect()
       .map(r => r.getLong(0) -> Option(r.getString(1))).toMap
     assert(got == Map(1L -> Some("a"), 2L -> None, 3L -> Some("C"), 4L -> Some("d")))
-    // one overwrite commit: pre-merge snapshot still time-travels
+    // one commit: the pre-merge snapshot still time-travels
     assert(TxnLake.readVersion(spark, t, v - 1).count() == 3)
-    // merge into an empty table is a plain insert
+    // merge into an absent table is a plain insert
     val t2 = freshTable()
-    TxnLake.merge(spark, Seq((9L, Option("z"))).toDF("k", "v"), t2, "k")
+    TxnLake.mergeInto(spark, Seq((9L, Option("z"))).toDF("k", "v"), t2, "k")
     assert(TxnLake.read(spark, t2).count() == 1)
-  }
-
-  test("merge detects a concurrent commit and recomputes — no lost update") {
-    import spark.implicits._
-    val t = freshTable()
-    TxnLake.commit(spark,
-      Seq((1L, Option("a")), (2L, Option("b"))).toDF("k", "v"), t, "overwrite")
-    // interleave a concurrent writer between merge's snapshot read and its
-    // commit: the racer overwrites the table with an extra row (k=5). A
-    // lost-update merge would publish its stale recompute over it; the
-    // conflict-checked merge must refuse, re-read, and carry k=5 through.
-    var raced = false
-    TxnLake.withBeforeCommit(() => if (!raced) {
-        raced = true
-        TxnLake.commit(spark,
-          Seq((1L, Option("a")), (2L, Option("b")), (5L, Option("e")))
-            .toDF("k", "v"), t, "overwrite")
-      }) {
-      TxnLake.merge(spark,
-        Seq((2L, Option("B")), (3L, Option("c"))).toDF("k", "v"), t, "k",
-        maxAttempts = 10)
-    }
-    val got = TxnLake.read(spark, t).collect()
-      .map(r => r.getLong(0) -> Option(r.getString(1))).toMap
-    assert(got == Map(1L -> Some("a"), 2L -> Some("B"),
-      3L -> Some("c"), 5L -> Some("e")))
     // type-mismatched delta with matching names is rejected up front
     intercept[IllegalArgumentException] {
-      TxnLake.merge(spark, Seq((7L, 1)).toDF("k", "v"), t, "k")
+      TxnLake.mergeInto(spark, Seq((7L, 1)).toDF("k", "v"), t, "k")
     }
+    assert(TxnLake.latestVersion(spark, t).contains(v))
   }
 
   test("BronzeToSilver runs unchanged on the TxnLake format") {
@@ -1031,5 +1006,84 @@ class TxnLakeSpec extends SparkSpec {
       "a re-founded table must not inherit the predecessor's constraints")
     assert(TxnLake.columnRenames(spark, t).isEmpty)
     assert(TxnLake.read(spark, t).columns.toSeq == Seq("a", "b"))
+  }
+
+  test("an emptied version reads back with the schema its rows had") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val t = freshTable()
+    TxnLake.commit(spark, Seq((1L, "a")).toDF("k", "v"), t, "overwrite")
+    assert(!TxnLake.loggedSchema(spark, t, 0L)("k").nullable,
+      "fixture: k is logged non-null")
+    def readers(): Seq[(String, org.apache.spark.sql.DataFrame)] = Seq(
+      "read" -> TxnLake.read(spark, t),
+      "readWhere" -> TxnLake.readWhere(spark, t, col("k") > 0L),
+      "readKeyed" -> TxnLake.readKeyed(spark, t, "k", Seq("1"))._1,
+      "readKeyedDistributed" -> TxnLake.readKeyedDistributed(spark, t, "k",
+        Seq(1L).toDF("k"))._1,
+      "readWithRowIds" -> TxnLake.readWithRowIds(spark, t))
+    val before = readers().map { case (n, df) =>
+      assert(df.count() == 1, s"fixture: $n reads the row")
+      n -> df.schema
+    }.toMap
+    // the copy-on-write delete lands one 0-row part file under the
+    // scan's all-nullable schema; rewriting its entry to add nothing and
+    // to keep v0's logged schema gives a version with no live file and a
+    // logged non-null column — the reads must still answer the schema
+    // the non-empty scan had
+    val v = TxnLake.deleteWhere(spark, t, col("k") === 1L).get
+    val entry = java.nio.file.Paths.get(t, "_txn_log", s"v$v.json")
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val node = mapper.readTree(java.nio.file.Files.readString(entry))
+      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    node.putArray("add")
+    node.put("schema", TxnLake.loggedSchema(spark, t, 0L).json)
+    java.nio.file.Files.writeString(entry, mapper.writeValueAsString(node))
+    java.nio.file.Files.setLastModifiedTime(entry,
+      java.nio.file.attribute.FileTime.fromMillis(1000L))
+    assert(TxnLake.snapshotFiles(spark, t).isEmpty &&
+      !TxnLake.loggedSchema(spark, t, v)("k").nullable,
+      "fixture: the emptied version has no live file and logs k non-null")
+    readers().foreach { case (n, df) =>
+      assert(df.count() == 0, s"$n of the emptied version")
+      assert(df.schema == before(n),
+        s"$n: ${df.schema.treeString} vs ${before(n).treeString}")
+    }
+  }
+
+  test("every read resolves the latest version afresh: a commit another " +
+    "writer lands between two calls is visible to the second, and a " +
+    "repeat read of an unchanged version reads no log entry") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    import org.apache.commons.io.FileUtils
+    val t = freshTable()
+    TxnLake.commit(spark, Seq((1L, "a")).toDF("k", "v"), t, "append")
+    // the other writer commits v1 on a byte copy of the table; landing
+    // its data dir and then its entry in `t` is that commit as another
+    // process would make it, unseen by this session's writer
+    val other = freshTable()
+    FileUtils.copyDirectory(new java.io.File(t), new java.io.File(other))
+    TxnLake.commit(spark, Seq((2L, "b")).toDF("k", "v"), other, "append")
+    def calls(): Seq[Long] = Seq(
+      TxnLake.read(spark, t).count(),
+      TxnLake.readWhere(spark, t, col("k") > 0L).count(),
+      TxnLake.snapshotFiles(spark, t).size.toLong)
+    assert(calls() == Seq(1L, 1L, 1L))
+    TxnLake.logEntryReads.set(0L)
+    assert(calls() == Seq(1L, 1L, 1L))
+    assert(TxnLake.logEntryReads.get() == 0L,
+      s"a repeat read of an unchanged version read " +
+        s"${TxnLake.logEntryReads.get()} log entries")
+    val landed = TxnLake.snapshotFiles(spark, other, Some(1L))
+      .map(_.path.split("/").take(2).mkString("/")).distinct
+      .filterNot(d => new java.io.File(t, d).exists())
+    landed.foreach(d => FileUtils.copyDirectory(
+      new java.io.File(other, d), new java.io.File(t, d)))
+    FileUtils.copyFile(new java.io.File(other, "_txn_log/v1.json"),
+      new java.io.File(t, "_txn_log/v1.json"))
+    assert(calls() == Seq(2L, 2L, 2L),
+      "the second call must see the version the other writer landed")
+    assert(TxnLake.latestVersion(spark, t).contains(1L))
   }
 }

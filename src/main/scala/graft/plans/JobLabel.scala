@@ -18,4 +18,11 @@ object JobLabel {
     sc.setJobDescription(desc)
     try f finally sc.setJobDescription(prev)
   }
+
+  /** [[labeled]], unless the calling thread's jobs already carry a label:
+    * a phase that materializes its caller's lazy input (a merge pinning
+    * its source) leaves that work under the caller's name. */
+  private[graft] def labeledUnlessSet[T](spark: SparkSession, desc: String)(f: => T): T =
+    if (spark.sparkContext.getLocalProperty("spark.job.description") != null) f
+    else labeled(spark, desc)(f)
 }

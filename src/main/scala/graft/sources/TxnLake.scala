@@ -500,11 +500,16 @@ object TxnLake extends LakeFormat {
 
   private def readCheckpoint(spark: SparkSession, table: String,
                              v: Long): Seq[FileMeta] = {
-    val reader = org.apache.parquet.hadoop.ParquetReader
-      .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
-        new Path(logDir(table), s"v$v.ckpt"))
-      .withConf(spark.sparkContext.hadoopConfiguration)
-      .build()
+    // built from the session's conf: the Path-based builder first makes
+    // a fresh Configuration and parses its XML defaults on every read
+    val conf = spark.sparkContext.hadoopConfiguration
+    val reader = new org.apache.parquet.hadoop.ParquetReader.Builder[
+        org.apache.parquet.example.data.Group](
+        HadoopInputFile.fromPath(new Path(logDir(table), s"v$v.ckpt"), conf),
+        new org.apache.parquet.conf.HadoopParquetConfiguration(conf)) {
+      override def getReadSupport() =
+        new org.apache.parquet.hadoop.example.GroupReadSupport()
+    }.build()
     try {
       val buf = Seq.newBuilder[FileMeta]
       var g = reader.read()
@@ -1129,12 +1134,13 @@ object TxnLake extends LakeFormat {
     }
   }
 
-  /** Files at or below this count harvest inline on the driver (a Spark
-    * job costs more than a handful of footer reads — the append hot path);
-    * above it the footer reads run as a distributed job, so an overwrite /
-    * optimize that rewrites a large table never serializes O(files) driver
-    * I/O through the commit path. */
-  private[sources] val DriverHarvestMax = 4
+  /** Files at or below this count harvest on the driver, their footers
+    * read concurrently (a Spark job costs more than a few parallel footer
+    * reads — the append and replica-hop hot paths, which add 1 to 8
+    * files); above it the footer reads run as a distributed job, so an
+    * overwrite / optimize that rewrites a large table never funnels
+    * O(files) driver I/O through the commit path. */
+  private[sources] val DriverHarvestMax = 16
 
   /** Observability seam for specs: whether the most recent harvest ran as
     * a distributed job (true) or the driver inline loop (false). */
@@ -1145,17 +1151,22 @@ object TxnLake extends LakeFormat {
     * a serial driver loop. */
   @volatile private[sources] var lastCloneCopySlices: Int = 0
 
-  /** Harvest footer stats for every committed file. Small commits loop on
-    * the driver; larger ones fan the footer reads out as one Spark job —
-    * per-file work is independent, so this is the executor-side stats
+  /** Harvest footer stats for every committed file. Per-file work is
+    * independent, so small commits read their footers on concurrent
+    * driver threads ([[graft.run.Concurrently]], one per file) and larger
+    * ones fan the reads out as one Spark job — the executor-side stats
     * collection Delta performs inside the write transaction, recovered
     * here from the footers the write already produced. */
   private def harvestAll(spark: SparkSession, files: Seq[(String, String)],
                          schema: StructType): Seq[FileMeta] = {
     val conf = spark.sparkContext.hadoopConfiguration
+    def harvest(abs: String, rel: String) =
+      harvestMeta(conf, new Path(abs), rel, schema)
     if (files.size <= DriverHarvestMax) {
       lastHarvestDistributed = false
-      files.map { case (abs, rel) => harvestMeta(conf, new Path(abs), rel, schema) }
+      if (files.size <= 1) files.map { case (abs, rel) => harvest(abs, rel) }
+      else graft.run.Concurrently(spark)(files.map { case (abs, rel) =>
+        () => harvest(abs, rel) }: _*)
     } else {
       lastHarvestDistributed = true
       val ser = confCarrier(spark)
@@ -1842,8 +1853,20 @@ object TxnLake extends LakeFormat {
         // the materialized row-id column is engine plumbing, not table
         // data: its footer stats never feed user-predicate pruning, so
         // they stay out of the entry
-        harvestAll(spark, written, dfPhys.schema)
+        val harvested = harvestAll(spark, written, dfPhys.schema)
           .map(fm => fm.copy(stats = fm.stats - RidCol))
+        // a DML rewrite that keeps no row still lands Spark's part 0 with
+        // 0 rows: leave it out of the entry and off the disk, or every
+        // later scan (and every merge's key scope — it has no bounds)
+        // opens it. The logged schema comes from the frame, not the file.
+        if (operation != "merge" && operation != "update"
+            && operation != "delete") harvested
+        else {
+          val (empty, kept) = harvested.partition(_.rows == 0L)
+          if (kept.isEmpty) f.delete(new Path(tablePath, dataRel), true)
+          else empty.foreach(fm => f.delete(new Path(tablePath, fm.path), false))
+          kept
+        }
       }
     // Bloom-indexed columns are a TABLE property (like the cumulative
     // schema): declared on any commit, inherited by every later one —
@@ -2848,17 +2871,12 @@ object TxnLake extends LakeFormat {
     // mergeIntoClauses reproduces mergeInto exactly"). Only the
     // UPDATE-SET-star / INSERT-star contract lives here: the delta's
     // schema must match the table's exactly, duplicate keys are refused
-    // even on a keys-only table, and an EMPTY delta still commits its
-    // (empty) founding version — the historical behaviour callers pin.
-    import org.apache.spark.sql.functions.{col, count, lit}
+    // even on a keys-only table (the clause engine's key pass, told to
+    // refuse them although a keys-only delta has no MATCHED clause), and
+    // an EMPTY delta still commits its (empty) founding version — the
+    // historical behaviour callers pin.
     require(delta.columns.contains(key),
       s"TxnLake.mergeInto: no column $key in ${delta.columns.toSeq}")
-    val dupKeys = delta.filter(col(key).isNotNull).groupBy(key)
-      .agg(count(lit(1)).as("__n")).filter(col("__n") > 1).limit(1).count()
-    require(dupKeys == 0,
-      s"TxnLake.mergeInto: multiple delta rows share a $key — a matched " +
-        "row would have no deterministic source (Delta's multiple-matches " +
-        "error)")
     // re-run per attempt: a concurrent schema-evolving commit between
     // retries must fail this merge exactly as it would have on attempt 1
     def schemaCheck(base: Option[Long]): Unit = base.foreach { b =>
@@ -2880,7 +2898,7 @@ object TxnLake extends LakeFormat {
         delta.columns.toIndexedSeq.map(c =>
           c -> org.apache.spark.sql.functions.col(c)).toMap)),
       notMatchedBySource = Seq.empty,
-      maxAttempts = maxAttempts, perAttempt = schemaCheck)
+      maxAttempts = maxAttempts, perAttempt = schemaCheck, uniqueKeys = true)
       .orElse {
         // historical contract: mergeInto always returns a committed
         // version. The clause engine's no-op None arises only when
@@ -2985,11 +3003,15 @@ object TxnLake extends LakeFormat {
     * [[sourceCol]] columns cannot prune files (those rows' source side
     * is all-NULL anyway) and falls back to full scope. Untouched files
     * carry into the new snapshot with their physical paths VERBATIM.
-    * The key collect itself is bounded by the probe tier's
-    * `graft.probe.maxDriverKeys` threshold (default 1M): a backfill or
-    * bootstrap merge whose source rivals the table skips the collect
-    * and takes full scope — which is what such a merge rewrites anyway
-    * — so the driver term never outgrows a day's volume.
+    * The key collect is one job over the pinned source (its first, so
+    * pinning costs no job of its own) that also decides the
+    * multiple-matches check, grouping keys as SQL does. It stops storing
+    * keys past the probe tier's `graft.probe.maxDriverKeys` threshold
+    * (default 1M): a backfill or bootstrap merge whose source rivals the
+    * table gets no key list and takes full scope — which is what such a
+    * merge rewrites anyway — so the driver term never outgrows a day's
+    * volume. A rewrite writes at most as many files as it removes,
+    * coalescing its output without a shuffle.
     *
     * The commit carries the "merge" tag: NOT data-preserving for the
     * x40 index-trust model, and [[tableChanges]] classifies the hop as
@@ -3037,8 +3059,82 @@ object TxnLake extends LakeFormat {
       notMatchedBySource, maxAttempts, txn,
       evolveSchema = evolveSchema, gcTxnPrefixes = gcTxnPrefixes)
 
+  /** The merge key pass, in an object of its own: Spark's closure
+    * cleaner reads the bytecode of the class that defines each RDD
+    * closure, and this class is small; TxnLake's own is not. */
+  private[sources] object MergeKeys {
+
+    /** A key value as SQL grouping compares it: −0.0 and 0.0 are one
+      * key, every NaN is one key (Scala's `==` says NaN != NaN, so
+      * floating keys compare by their canonical bits — one column has
+      * one type, so bits never meet integers), and binary keys compare
+      * by content. */
+    private def groupingKey(v: Any): Any = v match {
+      case d: Double => java.lang.Double.doubleToLongBits(if (d == 0.0d) 0.0d else d)
+      case f: Float => java.lang.Float.floatToIntBits(if (f == 0.0f) 0.0f else f)
+      case b: Array[Byte] => scala.collection.immutable.ArraySeq.unsafeWrapArray(b)
+      case x => x
+    }
+
+    private type Counts = scala.collection.mutable.HashMap[Any, (String, Long)]
+
+    /** The source's distinct non-null `key` values, rendered as
+      * `cast(key as string)` (the domain file stats and Bloom sidecars
+      * are probed in), and whether any value occurs twice — in ONE job:
+      * each partition counts its keys ([[groupingKey]]) in a map, and a
+      * single reduce task merges the maps. Both stop storing keys once
+      * they hold `cap + 1`, so neither the driver nor the job's result
+      * ever holds more: None then means more than `cap` distinct keys.
+      * A source without partitions submits no job. */
+    def collect(source: DataFrame, key: String,
+                cap: Long): Option[(Seq[String], Boolean)] = {
+      import org.apache.spark.sql.functions.col
+      // clamp: a Long.MaxValue cap means "up to the Int ceiling"
+      val lim = math.min(math.max(cap, 0L), (Int.MaxValue - 2).toLong).toInt
+      // adds n occurrences of k; false once the map holds more than lim keys
+      def add(m: Counts, k: Any, rendered: String, n: Long): Boolean =
+        m.get(k) match {
+          case Some((r, c)) => m.update(k, (r, c + n)); true
+          case None => m.update(k, (rendered, n)); m.size <= lim
+        }
+      val proj = source.filter(col(key).isNotNull)
+        .select(col(key), col(key).cast("string"))
+      val keyType = proj.schema.head.dataType
+      // internal rows: no deserializer pass, and the rows are reused
+      // buffers, so the native value is copied before it is kept
+      val rows = proj.queryExecution.toRdd
+      if (rows.getNumPartitions == 0) return Some((Seq.empty, false))
+      val perPart = rows.mapPartitions { it =>
+        val m = new Counts
+        var ok = true
+        while (ok && it.hasNext) {
+          val r = it.next()
+          ok = add(m, groupingKey(org.apache.spark.sql.catalyst.InternalRow
+            .copyValue(r.get(0, keyType))), r.getUTF8String(1).toString, 1L)
+        }
+        Iterator((if (ok) m else new Counts, ok))
+      }
+      val one =
+        if (perPart.getNumPartitions == 1) perPart else perPart.repartition(1)
+      val (counts, underCap) = one.mapPartitions { it =>
+        val m = new Counts
+        var ok = true
+        while (ok && it.hasNext) {
+          val (part, partOk) = it.next()
+          ok = partOk && part.forall { case (k, (r, n)) => add(m, k, r, n) }
+        }
+        Iterator((if (ok) m else new Counts, ok))
+      }.collect().head
+      if (!underCap) None
+      else Some((counts.valuesIterator.map(_._1).toSeq.distinct,
+        counts.valuesIterator.exists(_._2 > 1)))
+    }
+  }
+
   /** `perAttempt` re-validates a caller contract against each attempt's
-    * base ([[mergeInto]]'s exact-schema check). */
+    * base ([[mergeInto]]'s exact-schema check); `uniqueKeys` refuses
+    * duplicate source keys even without a MATCHED clause ([[mergeInto]]'s
+    * keys-only delta). */
   private def mergeIntoClausesImpl(spark: SparkSession,
                                             source: DataFrame, table: String,
                                             key: String,
@@ -3050,7 +3146,8 @@ object TxnLake extends LakeFormat {
                                             perAttempt: Option[Long] => Unit = _ => (),
                                             evolveSchema: Boolean = false,
                                             gcTxnPrefixes: Seq[String] =
-                                              Seq.empty): Option[Long] = {
+                                              Seq.empty,
+                                            uniqueKeys: Boolean = false): Option[Long] = {
     import org.apache.spark.sql.functions.{coalesce, col, count, lit, when}
     require(matched.nonEmpty || notMatched.nonEmpty
       || notMatchedBySource.nonEmpty,
@@ -3101,9 +3198,18 @@ object TxnLake extends LakeFormat {
     // MEASURED stats (round 20, guide §3.1): a delta-scale source
     // broadcasts both joins at PLAN time instead of paying a shuffle map
     // stage + AQE re-plan per hop; a backfill-scale source keeps its
-    // exchanges exactly as before.
-    val src = org.apache.spark.sql.GraftCheckpointShim
-      .pinWithMeasuredStats(source)
+    // exchanges exactly as before. The pin is lazy: the key collect
+    // below is its first job and caches every block as it reads them, so
+    // pinning costs no job of its own. Jobs the pin does run (the stages
+    // of an adaptive source plan, e.g. a replica hop's change feed) keep
+    // the caller's label when it set one.
+    val tableName = new Path(table).getName
+    def labeled[T](phase: String)(f: => T): T =
+      graft.plans.JobLabel.labeled(spark, s"txn:merge $phase $tableName")(f)
+    val pin = graft.plans.JobLabel.labeledUnlessSet(spark,
+        s"txn:merge pin $tableName") {
+      source.localCheckpoint(eager = false)
+    }
     // the DML scoping planner rule — the probe tier's
     // graft.probe.maxDriverKeys threshold applied to the merge keys:
     // collect them (to stats/bloom-prune the copy-on-write scope) only
@@ -3112,44 +3218,31 @@ object TxnLake extends LakeFormat {
     // scope, which is what such a merge rewrites anyway. Never a driver
     // OOM, identical rows either way.
     //
-    // Round-19 optimization (guide §1.2): the multiple-matches check and
-    // the key collect used to be TWO jobs, each its own groupBy pass
-    // over the source — one grouped pass now carries both the distinct
-    // keys and their multiplicities. Grouping stays on the NATIVE key
-    // (the dup check's exact domain — two distinct natives with one
-    // string rendering must not read as a dup) and the rendering is the
-    // same Spark cast the old collect used. When the limit truncates
-    // (backfill-sized source, keys = None), the page we saw can't prove
-    // no-dup, so the old dedicated dup job runs — the rare path keeps
-    // the exact semantics at its pre-existing cost.
+    // The multiple-matches check rides the same single job as the key
+    // collect ([[MergeKeys.collect]]): it groups on the NATIVE key (two
+    // distinct natives with one string rendering must not read as a dup)
+    // the way the SQL grouped aggregate does. Beyond the cap the partial
+    // key map cannot prove no-dup, so the dedicated dup job runs — the
+    // rare path keeps the exact semantics at its pre-existing cost.
     val keyCap = graft.plans.ProbePlanner.maxDriverKeys(spark)
-    // clamp BEFORE the +1: a Long.MaxValue cap must mean "collect up to
-    // the Int ceiling", not overflow to limit(0) and misread every
-    // source row as new
-    val lim = (math.min(math.max(keyCap, 0L),
-      (Int.MaxValue - 2).toLong) + 1).toInt
-    val grouped = src.filter(col(key).isNotNull)
-      .groupBy(col(key)).agg(count(lit(1)).as("__n"))
-      .select(col(key).cast("string"), col("__n"))
-      .limit(lim).collect()
-    val sawAllGroups = grouped.length < lim
-    if (matched.nonEmpty) {
-      val dup =
-        if (sawAllGroups) grouped.exists(_.getLong(1) > 1)
-        else src.filter(col(key).isNotNull).groupBy(key)
-          .agg(count(lit(1)).as("__n")).filter(col("__n") > 1)
-          .limit(1).count() > 0
+    val collected = labeled("keys")(MergeKeys.collect(pin, key, keyCap))
+    val src = org.apache.spark.sql.GraftCheckpointShim.withMeasuredStats(pin)
+    if (matched.nonEmpty || uniqueKeys) {
+      val dup = collected match {
+        case Some((_, d)) => d
+        case None => labeled("dupkeys") {
+          src.filter(col(key).isNotNull).groupBy(key)
+            .agg(count(lit(1)).as("__n")).filter(col("__n") > 1)
+            .limit(1).count() > 0
+        }
+      }
+      val api = if (uniqueKeys) "mergeInto" else "mergeIntoClauses"
       require(!dup,
-        s"TxnLake.mergeIntoClauses: multiple source rows share a $key — a " +
+        s"TxnLake.$api: multiple source rows share a $key — a " +
           "matched row would have no deterministic clause source (Delta's " +
           "multiple-matches error)")
     }
-    // distinct: grouping is on the NATIVE key, so two distinct natives can
-    // share one string rendering — duplicates are membership-safe but would
-    // double-probe blooms and inflate size-based sizing of the key list
-    val keys: Option[Seq[String]] =
-      if (grouped.length > keyCap) None
-      else Some(grouped.map(_.getString(0)).toSeq.distinct)
+    val keys: Option[Seq[String]] = collected.map(_._1)
     // NOT MATCHED rows per clause, projected onto the target schema
     // (provided expressions uncast — a type mismatch is refused loudly by
     // the commit's schema merge, never silently coerced; absent columns
@@ -3211,7 +3304,8 @@ object TxnLake extends LakeFormat {
           // clauses still define the schema, so the empty table founds
           // typed. txn checked FIRST: the emptiness probe is a Spark job
           // whose answer the marker path ignores.
-          if (txn.isDefined || !ins.isEmpty) Some((ins, Seq.empty, false))
+          if (txn.isDefined || !labeled("probe")(ins.isEmpty))
+            Some((ins, Seq.empty, false))
           else None
         case Some(b) =>
           val snap = pinned(spark, table, b)
@@ -3284,7 +3378,8 @@ object TxnLake extends LakeFormat {
           // rows still has to advance it (txn checked FIRST: the
           // emptiness probe is a Spark job whose answer the marker path
           // ignores)
-          if (rewriteFiles.isEmpty && txn.isEmpty && inserts.isEmpty) None
+          if (rewriteFiles.isEmpty && txn.isEmpty
+              && labeled("probe")(inserts.isEmpty)) None
           else {
             // an empty typed frame stands in for cur when nothing
             // rewrites: zero I/O, and the update-clause when-chains
@@ -3297,8 +3392,10 @@ object TxnLake extends LakeFormat {
                   spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
                   displaySchema), false)
               else snap.scanForRewrite(rewriteFiles)
-            val srcRenamed = src.columns.foldLeft(src)((d, c) =>
-              d.withColumnRenamed(c, MergeSourcePrefix + c))
+            // one select renames every column (one analysis, not one
+            // per withColumnRenamed); backticks take each name literally
+            val srcRenamed = src.select(src.columns.toIndexedSeq.map(c =>
+              col(s"`${c.replace("`", "``")}`").as(MergeSourcePrefix + c)): _*)
             // without MATCHED clauses the join only needs the MARKER, so
             // it joins distinct keys — duplicate source keys (legal on an
             // insert-only/NMBS merge) must never fan out target rows
@@ -3349,9 +3446,11 @@ object TxnLake extends LakeFormat {
             val out0 = rewritten.unionByName(insertsRid,
               allowMissingColumns = evolveSchema)
             // pure-insert merges keep the batch's own partitioning — a
-            // repartition(1) would funnel a large insert into one file
+            // coalesce(1) would funnel a large insert into one file; a
+            // rewrite writes at most as many files as it removes, merged
+            // without a shuffle (no map stage, no AQE re-plan)
             val out1 = if (rewriteFiles.isEmpty) out0
-              else out0.repartition(rewriteFiles.size)
+              else out0.coalesce(rewriteFiles.size)
             Some((out1, rewriteFiles.map(_.path), carry))
           }
       }

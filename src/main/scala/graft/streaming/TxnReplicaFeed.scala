@@ -154,6 +154,10 @@ final class TxnReplicaFeed(source: String, replica: String, appId: String,
       gcTxnPrefixes = Seq(s"$appId#boot$v@"))
   }
 
+  /** The job label of the work that reads the source's changes. */
+  private val changesLabel =
+    s"txn:changes ${new org.apache.hadoop.fs.Path(source).getName}"
+
   /** Apply an oversized insert hop in `maxFilesPerHop`-file slices,
     * each its own exactly-once merge under `(sliceApp@cap, ordinal)`;
     * the version's NORMAL marker commits last (empty merge) as the
@@ -178,9 +182,11 @@ final class TxnReplicaFeed(source: String, replica: String, appId: String,
     * One column-pruned scan over the hop's files, shuffle-bounded. */
   private def applySliced(spark: SparkSession, v: Long,
                           files: Seq[String], sliceApp: String): Boolean = {
-    val dup = TxnLake.readFileSlice(spark, source, v, files)
-      .select(col(key)).filter(col(key).isNotNull)
-      .groupBy(key).count().filter(col("count") > 1).limit(1).count()
+    val dup = graft.plans.JobLabel.labeled(spark, s"$changesLabel dupkeys") {
+      TxnLake.readFileSlice(spark, source, v, files)
+        .select(col(key)).filter(col(key).isNotNull)
+        .groupBy(key).count().filter(col("count") > 1).limit(1).count()
+    }
     require(dup == 0,
       s"TxnReplicaFeed: version $v's insert hop carries duplicate " +
         s"'$key' keys across slice boundaries — the unsliced merge " +
@@ -227,12 +233,15 @@ final class TxnReplicaFeed(source: String, replica: String, appId: String,
       if (nonKey.isEmpty) Seq(MergeDelete(Some(sourceCol("__op") === "D")))
       else Seq(MergeDelete(Some(sourceCol("__op") === "D")),
         MergeUpdate(nonKey.map(c => c -> sourceCol(c)).toMap))
-    TxnLake.mergeIntoClauses(spark, batch, replica, key,
-      matched = matched,
-      notMatched = Seq(MergeInsert(cols.map(c => c -> col(c)).toMap,
-        Some(col("__op") =!= "D"))),
-      txn = Some(txn),
-      evolveSchema = followSchema,
-      gcTxnPrefixes = gcTxnPrefixes).nonEmpty
+    // the merge's pin computes the hop's changes: its jobs keep this label
+    graft.plans.JobLabel.labeled(spark, changesLabel) {
+      TxnLake.mergeIntoClauses(spark, batch, replica, key,
+        matched = matched,
+        notMatched = Seq(MergeInsert(cols.map(c => c -> col(c)).toMap,
+          Some(col("__op") =!= "D"))),
+        txn = Some(txn),
+        evolveSchema = followSchema,
+        gcTxnPrefixes = gcTxnPrefixes).nonEmpty
+    }
   }
 }

@@ -64,8 +64,15 @@ object GraftCheckpointShim {
     * broadcast payload, so the threshold comparison errs conservative.
     * Falls back to the unknown-stats leaf when the blocks cannot be
     * found (nothing cached — e.g. a lazy checkpoint). */
-  def pinWithMeasuredStats(df: Dataset[Row]): Dataset[Row] = {
-    val ck = df.localCheckpoint()
+  def pinWithMeasuredStats(df: Dataset[Row]): Dataset[Row] =
+    withMeasuredStats(df.localCheckpoint())
+
+  /** `ck` (a local checkpoint) with its blocks' measured size as the
+    * leaf's statistics — see [[pinWithMeasuredStats]]. A caller whose
+    * first job over the pin reads every row anyway pins lazily
+    * (`localCheckpoint(eager = false)`), lets that job cache the blocks,
+    * and measures them here afterwards: the pin then costs no job. */
+  def withMeasuredStats(ck: Dataset[Row]): Dataset[Row] =
     ck.queryExecution.logical match {
       case lr: LogicalRDD =>
         val session = ck.sparkSession.asInstanceOf[CSparkSession]
@@ -81,5 +88,4 @@ object GraftCheckpointShim {
         CDataset.ofRows(session, clean)
       case _ => ck
     }
-  }
 }

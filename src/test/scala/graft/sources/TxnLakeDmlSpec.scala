@@ -24,6 +24,27 @@ class TxnLakeDmlSpec extends SparkSpec {
       t, "append")
   }
 
+  /** Jobs `f` submits, counted by a listener once the bus drains. */
+  private def jobsOf[T](f: => T): (T, Seq[String]) = {
+    val sc = spark.sparkContext
+    org.apache.spark.GraftListenerShim.waitUntilListenerBusEmpty(sc)
+    val seen = java.util.Collections.synchronizedList(
+      new java.util.ArrayList[String]())
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    sc.addSparkListener(l)
+    try {
+      val out = f
+      org.apache.spark.GraftListenerShim.waitUntilListenerBusEmpty(sc)
+      (out, seen.toArray.toSeq.map(_.toString))
+    } finally sc.removeSparkListener(l)
+  }
+
   test("mergeInto rewrites only key-scoped files; the rest carry verbatim") {
     import spark.implicits._
     val t = freshTable()
@@ -82,6 +103,15 @@ class TxnLakeDmlSpec extends SparkSpec {
       TxnLake.mergeInto(spark,
         Seq((60L, "a"), (60L, "b")).toDF("k", "v"), t, "k")
     }
+    // a keys-only delta has no MATCHED clause, yet mergeInto refuses dups
+    val k = freshTable()
+    TxnLake.commit(spark, Seq(Tuple1(1L)).toDF("k").coalesce(1), k, "append")
+    val e = intercept[IllegalArgumentException] {
+      TxnLake.mergeInto(spark, Seq(Tuple1(2L), Tuple1(2L)).toDF("k"), k, "k")
+    }
+    assert(e.getMessage.contains("TxnLake.mergeInto: multiple source rows"),
+      e.getMessage)
+    assert(TxnLake.latestVersion(spark, k).contains(0L))
   }
 
   test("mergeInto detects a concurrent commit and recomputes — no lost rows") {
@@ -360,10 +390,18 @@ class TxnLakeDmlSpec extends SparkSpec {
     spark.conf.set("graft.probe.maxDriverKeys", "2")
     try {
       val pre2 = TxnLake.snapshotFiles(spark, t2).map(_.path).toSet
-      TxnLake.mergeInto(spark, delta, t2, "k") // fallback: full scope
+      // fallback: full scope
+      val (_, jobs) = jobsOf(TxnLake.mergeInto(spark, delta, t2, "k"))
       assert((pre2 intersect
         TxnLake.snapshotFiles(spark, t2).map(_.path).toSet).isEmpty,
         "beyond the cap every file is in scope — no carry")
+      // the partial key map cannot prove no-dup: the dedicated job runs,
+      // and it still refuses duplicates
+      assert(jobs.exists(_.startsWith("txn:merge dupkeys")), s"$jobs")
+      intercept[IllegalArgumentException] {
+        TxnLake.mergeInto(spark, Seq((1L, "a"), (2L, "b"), (3L, "c"),
+          (3L, "d")).toDF("k", "v"), t2, "k")
+      }
     } finally spark.conf.unset("graft.probe.maxDriverKeys")
     val a = TxnLake.read(spark, t1).collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
@@ -423,6 +461,125 @@ class TxnLakeDmlSpec extends SparkSpec {
         TxnLake.snapshotFiles(spark, t).map(_.path).toSet).size == 1,
         "key pruning must still engage under a huge cap")
     } finally spark.conf.unset("graft.probe.maxDriverKeys")
+  }
+
+  test("the merge key pass groups keys as SQL grouping does, in one job") {
+    import spark.implicits._
+    // what the grouped aggregate answers: (distinct keys, any duplicate)
+    def grouped(df: org.apache.spark.sql.DataFrame): (Long, Boolean) = {
+      val n = df.filter(col("k").isNotNull).groupBy("k").count()
+        .collect().map(_.getLong(1))
+      (n.length.toLong, n.exists(_ > 1))
+    }
+    def pass(df: org.apache.spark.sql.DataFrame, cap: Long = 100L) =
+      TxnLake.MergeKeys.collect(df, "k", cap)
+    // pinned, as the merge pins its source: a scan of cached blocks
+    def pin(df: org.apache.spark.sql.DataFrame) =
+      org.apache.spark.sql.GraftCheckpointShim.pinWithMeasuredStats(df)
+    val cases = Seq(
+      "string" -> Seq(Option("a"), Option("b"), None, Option("a"))
+        .toDF("k").repartition(3),
+      "long" -> Seq(Option(1L), Option(2L), None, Option(3L)).toDF("k"),
+      "double" -> Seq(0.0, -0.0, Double.NaN, 0.0 / 0.0, 1.5, -1.5)
+        .toDF("k").repartition(4),
+      "NaN" -> Seq(Double.NaN, 0.0 / 0.0, 2.0).toDF("k").repartition(2),
+      "binary" -> Seq(Array[Byte](1, 2), Array[Byte](1, 2), Array[Byte](3),
+        null).toDF("k").repartition(2),
+      "null only" -> Seq(Option.empty[Long], None).toDF("k"))
+      .map { case (n, df) => n -> pin(df) }
+    cases.foreach { case (name, df) =>
+      val (got, jobs) = jobsOf(pass(df))
+      val (n, dup) = grouped(df)
+      assert(got.map(g => (g._1.size.toLong, g._2)).contains((n, dup)),
+        s"$name: the key pass read $got, the grouped aggregate $n keys " +
+          s"(duplicate: $dup)")
+      assert(jobs.size == 1, s"$name: the key pass ran ${jobs.size} jobs")
+    }
+    // −0.0 and 0.0 are one key, and so are NaNs; the key list renders
+    // through cast(k as string), the domain the file stats are probed in
+    assert(pass(cases(2)._2).map(_._1.size).contains(4))
+    assert(pass(cases(3)._2).contains((Seq("NaN", "2.0"), true)) ||
+      pass(cases(3)._2).contains((Seq("2.0", "NaN"), true)))
+    assert(pass(cases(1)._2).map(_._1.toSet).contains(Set("1", "2", "3")))
+    // more distinct keys than the cap: no key list, whatever the dups
+    assert(pass(cases(1)._2, cap = 2L).isEmpty)
+    assert(pass(cases(1)._2, cap = 3L).map(_._1.size).contains(3))
+    // a source without partitions submits no job
+    val empty = spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      cases(1)._2.schema)
+    val (none, jobs) = jobsOf(pass(empty))
+    assert(none.contains((Seq.empty[String], false)) && jobs.isEmpty,
+      s"empty source: $none, $jobs")
+  }
+
+  test("double and binary keys merge as SQL equality matches them") {
+    import spark.implicits._
+    val t = freshTable()
+    TxnLake.commit(spark, Seq((0.0, "zero"), (Double.NaN, "nan"),
+      (2.5, "x")).toDF("k", "v").coalesce(1), t, "append")
+    TxnLake.mergeInto(spark, Seq((-0.0, "Z"), (Double.NaN, "N"),
+      (7.0, "new")).toDF("k", "v"), t, "k")
+    val got = TxnLake.read(spark, t).collect()
+      .map(r => (r.getDouble(0), r.getString(1)))
+    assert(got.length == 4 && got.count(_._2 == "Z") == 1 &&
+      got.count(_._2 == "N") == 1 && got.exists(_ == ((2.5, "x"))) &&
+      got.exists(_ == ((7.0, "new"))),
+      s"-0.0 must update 0.0 and NaN must update NaN: ${got.toSeq}")
+    val b = freshTable()
+    TxnLake.commit(spark, Seq((Array[Byte](1, 2), "a"), (Array[Byte](3), "b"))
+      .toDF("k", "v").coalesce(1), b, "append")
+    TxnLake.mergeInto(spark, Seq((Array[Byte](1, 2), "A"),
+      (Array[Byte](9), "n")).toDF("k", "v"), b, "k")
+    assert(TxnLake.read(spark, b).collect()
+      .map(r => r.getAs[Array[Byte]](0).toSeq -> r.getString(1)).toMap ==
+      Map(Seq[Byte](1, 2) -> "A", Seq[Byte](3) -> "b", Seq[Byte](9) -> "n"))
+  }
+
+  test("MATCHED merges refuse keys equal under SQL grouping; insert-only " +
+    "merges accept them") {
+    import spark.implicits._
+    val t = freshTable()
+    TxnLake.commit(spark, Seq((1.0, "a")).toDF("k", "v").coalesce(1), t,
+      "append")
+    val upd = Seq(MergeUpdate(Map("v" -> sourceCol("v"))))
+    Seq(Seq((0.0, "p"), (-0.0, "m")), Seq((Double.NaN, "p"), (0.0 / 0.0, "q")))
+      .foreach { rows =>
+        val e = intercept[IllegalArgumentException] {
+          TxnLake.mergeIntoClauses(spark, rows.toDF("k", "v"), t, "k",
+            matched = upd)
+        }
+        assert(e.getMessage.contains("multiple source rows"), e.getMessage)
+      }
+    val bin = freshTable()
+    TxnLake.commit(spark, Seq((Array[Byte](1), "a")).toDF("k", "v")
+      .coalesce(1), bin, "append")
+    intercept[IllegalArgumentException] {
+      TxnLake.mergeIntoClauses(spark, Seq((Array[Byte](5), "p"),
+        (Array[Byte](5), "q")).toDF("k", "v"), bin, "k", matched = upd)
+    }
+    assert(TxnLake.latestVersion(spark, t).contains(0L) &&
+      TxnLake.latestVersion(spark, bin).contains(0L),
+      "a refused merge commits nothing")
+    // insert-only: duplicates (under SQL grouping) are legal and insert
+    val v = TxnLake.mergeIntoClauses(spark,
+      Seq((0.0, "p"), (-0.0, "m"), (3.0, "x"), (3.0, "y")).toDF("k", "v"),
+      t, "k",
+      notMatched = Seq(MergeInsert(Map("k" -> col("k"), "v" -> col("v")))))
+    assert(v.isDefined && TxnLake.read(spark, t).count() == 5)
+  }
+
+  test("every job of a merge carries a txn:merge label") {
+    import spark.implicits._
+    val t = freshTable()
+    twoFileTable(t)
+    val (_, jobs) = jobsOf(TxnLake.mergeInto(spark,
+      Seq((60L, "U60"), (100L, "I100")).toDF("k", "v"), t, "k"))
+    assert(jobs.nonEmpty && jobs.forall(_.startsWith("txn:merge ")),
+      s"unlabeled merge jobs: $jobs")
+    assert(jobs.count(_.startsWith("txn:merge keys")) == 1 &&
+      !jobs.exists(_.startsWith("txn:merge pin")),
+      s"the key pass is the lazy pin's one job: $jobs")
   }
 
   test("founding merge orders columns by the source, not Map iteration") {

@@ -496,17 +496,17 @@ class TxnLakeSpec extends SparkSpec {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     val t = freshTable()
-    // 12 files > DriverHarvestMax: the footer reads must fan out
+    // 24 files > DriverHarvestMax: the footer reads must fan out
     TxnLake.commit(spark, (0 until 1200).map(i => (i.toLong, i.toString))
-      .toDF("k", "v").repartition(12), t, "overwrite")
+      .toDF("k", "v").repartition(24), t, "overwrite")
     assert(TxnLake.lastHarvestDistributed,
-      "a 12-file overwrite harvested stats serially on the driver")
+      "a 24-file overwrite harvested stats serially on the driver")
     val files = TxnLake.snapshotFiles(spark, t)
-    assert(files.length == 12)
+    assert(files.length == 24)
     // the distributed harvest produced real, usable bounds
     assert(files.forall(_.stats.get("k").exists(s =>
       s.min.isDefined && s.max.isDefined)))
-    assert(TxnLake.skippingStats(spark, t, col("k") === 3L)._1 < 12)
+    assert(TxnLake.skippingStats(spark, t, col("k") === 3L)._1 < 24)
     // the append hot path stays an inline driver loop (no job overhead)
     TxnLake.commit(spark, Seq((9999L, "z")).toDF("k", "v").coalesce(1),
       t, "append")
@@ -1026,11 +1026,10 @@ class TxnLakeSpec extends SparkSpec {
       assert(df.count() == 1, s"fixture: $n reads the row")
       n -> df.schema
     }.toMap
-    // the copy-on-write delete lands one 0-row part file under the
-    // scan's all-nullable schema; rewriting its entry to add nothing and
-    // to keep v0's logged schema gives a version with no live file and a
-    // logged non-null column — the reads must still answer the schema
-    // the non-empty scan had
+    // the copy-on-write delete logs the scan's all-nullable schema;
+    // rewriting its entry to add nothing and to keep v0's logged schema
+    // gives a version with no live file and a logged non-null column —
+    // the reads must still answer the schema the non-empty scan had
     val v = TxnLake.deleteWhere(spark, t, col("k") === 1L).get
     val entry = java.nio.file.Paths.get(t, "_txn_log", s"v$v.json")
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -1049,6 +1048,36 @@ class TxnLakeSpec extends SparkSpec {
       assert(df.schema == before(n),
         s"$n: ${df.schema.treeString} vs ${before(n).treeString}")
     }
+  }
+
+  test("a copy-on-write rewrite that keeps no row commits no file") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val t = freshTable()
+    TxnLake.commit(spark, Seq((1L, "a"), (2L, "b")).toDF("k", "v")
+      .coalesce(1), t, "overwrite")
+    val v = TxnLake.deleteWhere(spark, t, col("k") > 0L).get
+    assert(TxnLake.snapshotFiles(spark, t).isEmpty,
+      s"an emptying delete left ${TxnLake.snapshotFiles(spark, t)}")
+    val dataDirs = new java.io.File(t, "data").listFiles().map(_.getName)
+    assert(!dataDirs.exists(_.startsWith(s"v$v-")),
+      s"the emptying delete left its data dir: ${dataDirs.toSeq}")
+    val empty = TxnLake.read(spark, t)
+    assert(empty.count() == 0 && empty.columns.toSeq == Seq("k", "v") &&
+      empty.schema("k").dataType == org.apache.spark.sql.types.LongType,
+      s"the emptied table reads typed: ${empty.schema.treeString}")
+    // a later append reads back; a merge rewrite that deletes every row
+    // of its scope drops its 0-row file the same way
+    TxnLake.commit(spark, Seq((3L, "c"), (4L, "d")).toDF("k", "v")
+      .coalesce(1), t, "append")
+    assert(TxnLake.read(spark, t).count() == 2)
+    TxnLake.mergeIntoClauses(spark, Seq(Tuple1(3L), Tuple1(4L)).toDF("k"), t,
+      "k", matched = Seq(TxnLake.MergeDelete()))
+    assert(TxnLake.snapshotFiles(spark, t).isEmpty)
+    TxnLake.mergeInto(spark, Seq((5L, "e")).toDF("k", "v"), t, "k")
+    assert(TxnLake.snapshotFiles(spark, t).forall(_.rows > 0L))
+    assert(TxnLake.read(spark, t).collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap == Map(5L -> "e"))
   }
 
   test("every read resolves the latest version afresh: a commit another " +

@@ -678,22 +678,23 @@ object ScaleStress {
     val pred = col("event_id") % 199 === 0 && col("event_id") < 10000000L
     val nHit = ev.filter(pred).count()
     val set = Map("vc" -> (col("vc") + 1000000L))
-    def build(name: String): String = {
+    // each twin founds with deletion vectors on (the default); the
+    // copy-on-write twin turns them off
+    def build(name: String, dv: Boolean): String = {
       val t = s"$dir/${mode}_$name"
       val f = new java.io.File(t)
       if (f.exists()) org.apache.commons.io.FileUtils.deleteDirectory(f)
       TxnLake.commit(spark, ev.repartitionByRange(4, col("event_id")),
         t, "append")
+      if (!dv) TxnLake.setDeletionVectors(spark, t, enabled = false)
       t
     }
-    def run(t: String, dv: Boolean): (Double, Long, Long, Long, Long) = {
+    def run(t: String): (Double, Long, Long, Long, Long) = {
       val preSizes = TxnLake.snapshotFileSizes(spark, t).toMap
       listener.reset()
       val t0 = System.nanoTime()
       val op =
-        if (update && dv) TxnLake.updateWhereDv(spark, t, pred, set)
-        else if (update) TxnLake.updateWhere(spark, t, pred, set)
-        else if (dv) TxnLake.deleteWhereDv(spark, t, pred)
+        if (update) TxnLake.updateWhere(spark, t, pred, set)
         else TxnLake.deleteWhere(spark, t, pred)
       op.getOrElse(sys.error("fixture: the residue cannot be empty"))
       val sec = (System.nanoTime() - t0) / 1e9
@@ -707,10 +708,10 @@ object ScaleStress {
         .sum(col("vc"))).head().getLong(0)
       (sec, rewrittenBytes, TxnLake.read(spark, t).count(), peak, sum)
     }
-    val cow = build("cow"); val dvT = build("dv")
-    run(build("warm"), dv = false) // JIT/codegen warm-up on a throwaway
-    val (cowSec, cowBytes, cowRows, cowPeak, cowSum) = run(cow, dv = false)
-    val (dvSec, dvBytes, dvRows, dvPeak, dvSum) = run(dvT, dv = true)
+    val cow = build("cow", dv = false); val dvT = build("dv", dv = true)
+    run(build("warm", dv = false)) // JIT/codegen warm-up on a throwaway
+    val (cowSec, cowBytes, cowRows, cowPeak, cowSum) = run(cow)
+    val (dvSec, dvBytes, dvRows, dvPeak, dvSum) = run(dvT)
     require(cowRows == dvRows && cowSum == dvSum,
       s"plans disagree: $cowRows/$cowSum vs $dvRows/$dvSum")
     def s2(v: Double) =

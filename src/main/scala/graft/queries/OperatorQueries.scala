@@ -2507,6 +2507,8 @@ object OperatorQueries {
     val table = Scratch.dir("txn_delete") + "/t"
     val bkt = expr(s"event_id * 8 div ${m + 1}")
     bucketedBootstrap(ev, bkt, 0 until 8, table)
+    // copy-on-write: the gates below pin the rewrite's file scope
+    TxnLake.setDeletionVectors(s, table, enabled = false)
     val preV = TxnLake.latestVersion(s, table).get
     val preCount = TxnLake.readVersion(s, table, preV).count()
     val idHi = m / 2 // id > idHi ⇔ buckets 4..7 exactly (x41's complement)
@@ -2821,6 +2823,8 @@ object OperatorQueries {
     val table = Scratch.dir("txn_merge_into") + "/t"
     val bkt = expr(s"event_id * 8 div ${m + 1}")
     bucketedBootstrap(ev, bkt, 0 until 8, table)
+    // copy-on-write: the gates below pin the rewrite's file scope
+    TxnLake.setDeletionVectors(s, table, enabled = false)
     val preV = TxnLake.latestVersion(s, table).get
     val preCount = TxnLake.readVersion(s, table, preV).count()
     val preFiles = TxnLake.snapshotFiles(s, table, Some(preV))
@@ -2908,6 +2912,8 @@ object OperatorQueries {
     val table = Scratch.dir("txn_update") + "/t"
     val bkt = expr(s"event_id * 8 div ${m + 1}")
     bucketedBootstrap(ev, bkt, 0 until 8, table)
+    // copy-on-write: the gates below pin the rewrite's file scope
+    TxnLake.setDeletionVectors(s, table, enabled = false)
     val preV = TxnLake.latestVersion(s, table).get
     val preCount = TxnLake.readVersion(s, table, preV).count()
     val idHi = m / 2
@@ -3008,6 +3014,8 @@ object OperatorQueries {
     val a = root + "/a"; val b = root + "/b"
     val bkt = expr(s"event_id * 8 div ${m + 1}")
     bucketedBootstrap(ev, bkt, 0 until 8, a, b)
+    // copy-on-write: the gates below pin the rewrite's file scope
+    TxnLake.setDeletionVectors(s, b, enabled = false)
     val vPre = TxnLake.latestVersion(s, a).get
     // three source-of-truth mutations: banded update, low-bucket delete,
     // fresh append — the day's change volume
@@ -3158,6 +3166,8 @@ object OperatorQueries {
       when(col("event_id") % 7 === 0, col("vc") + 7).otherwise(col("vc"))
         .as("vc"))
     bucketedBootstrap(tampered, bkt, 0 until 8, r)
+    // copy-on-write: the gates below pin the rewrite's file scope
+    TxnLake.setDeletionVectors(s, r, enabled = false)
     TxnLake.commit(s, s.range(0, 8)
       .select((col("id") + m + 10).as("event_id"),
         ((col("id") + m + 10) * 3).as("vc")).coalesce(1), r, "append")
@@ -3396,6 +3406,8 @@ object OperatorQueries {
     val t = Scratch.dir("txn_merge_evolve") + "/t"
     val bkt = expr(s"event_id * 8 div ${m + 1}")
     bucketedBootstrap(ev, bkt, 0 until 8, t)
+    // copy-on-write: the gates below pin the rewrite's file scope
+    TxnLake.setDeletionVectors(s, t, enabled = false)
     val preV = TxnLake.latestVersion(s, t).get
     val preFiles = TxnLake.snapshotFiles(s, t)
     val lo7 = (7L * (m + 1) + 7) / 8
@@ -3490,7 +3502,7 @@ object OperatorQueries {
     val prePaths = TxnLake.snapshotFiles(s, t).map(_.path).toSet
     val delPred = col("vc") % 97 === 0 && col("event_id") > m / 2
     val nDel = ev.filter(delPred).count()
-    val v = TxnLake.deleteWhereDv(s, t, delPred)
+    val v = TxnLake.deleteWhere(s, t, delPred)
       .getOrElse(sys.error("the residue band cannot be empty"))
     require(TxnLake.commitInfo(s, t, v).operation == "delete")
     // THE merge-on-read gate: not one data file moved
@@ -3577,7 +3589,7 @@ object OperatorQueries {
     val updPred = col("vc") % 97 === 0 && col("event_id") > m / 2
     val nUpd = ev.filter(updPred).count()
     val preSum = ev.agg(sum(col("vc"))).head().getLong(0)
-    val v = TxnLake.updateWhereDv(s, t, updPred,
+    val v = TxnLake.updateWhere(s, t, updPred,
         Map("vc" -> (col("vc") + 1000000L)))
       .getOrElse(sys.error("the residue band cannot be empty"))
     require(TxnLake.commitInfo(s, t, v).operation == "update")
@@ -3723,7 +3735,7 @@ object OperatorQueries {
     val d1 = col("vc") % 97 === 0 && col("event_id") > m / 2
     val d2 = col("vc") % 89 === 0 && col("event_id") <= m / 2
     val nD1 = ev.filter(d1).count(); val nD2 = ev.filter(d2).count()
-    TxnLake.deleteWhereDv(s, src, d1)
+    TxnLake.deleteWhere(s, src, d1)
       .getOrElse(sys.error("the d1 residue cannot be empty"))
     val maskedCount = ev.count() - nD1
     require(TxnLake.cloneTable(s, src, cl) == 0L)
@@ -3749,7 +3761,7 @@ object OperatorQueries {
     TxnLake.commit(s, s.range(1, 9)
       .select((col("id") + m).as("event_id"), ((col("id") + m) * 7).as("vc"))
       .coalesce(1), src, "append")
-    TxnLake.deleteWhereDv(s, cl, d2)
+    TxnLake.deleteWhere(s, cl, d2)
       .getOrElse(sys.error("the d2 residue cannot be empty"))
     require(parquets(cl) == 0,
       "merge-on-read DML keeps the shallow clone parquet-free")
@@ -3951,7 +3963,7 @@ object OperatorQueries {
     val total = ev.count()
     val delPred = col("vc") % 97 === 0 && col("event_id") > m / 2
     val nDel = ev.filter(delPred).count()
-    TxnLake.deleteWhereDv(s, t, delPred)
+    TxnLake.deleteWhere(s, t, delPred)
       .getOrElse(sys.error("the residue band cannot be empty"))
     val d1 = TxnLake.describeDetail(s, t)
     require(d1.numFiles == nb && d1.numRows == total - nDel
@@ -4250,7 +4262,7 @@ object OperatorQueries {
     def key(rn: Int): String = twelve(rn - 1).toString
     // DV delete (merge-on-read), CoW update, CoW delete, OPTIMIZE —
     // ids must hold through every lifecycle hop
-    TxnLake.deleteWhereDv(s, t, col("k") === key(3))
+    TxnLake.deleteWhere(s, t, col("k") === key(3))
     require(rids() == ids0 - key(3), "DV delete must not shift ids")
     TxnLake.updateWhere(s, t, col("k") === key(5), Map("v" -> lit("u")))
     require(rids() == ids0 - key(3), "CoW update must carry ids")
@@ -4430,7 +4442,7 @@ object OperatorQueries {
     def key(rn: Int): String = twelve(rn - 1).toString
     // v3: CoW update of rn=5 (rid 4); v4: DV delete of rn=9 (rid 8)
     TxnLake.updateWhere(s, t, col("k") === key(5), Map("v" -> lit("u")))
-    TxnLake.deleteWhereDv(s, t, col("k") === key(9))
+    TxnLake.deleteWhere(s, t, col("k") === key(9))
     // v5: OPTIMIZE — silent in the feed (gated below)
     TxnLake.optimize(s, t, zorderBy = Seq("k"), numFiles = 2)
     val latest = TxnLake.latestVersion(s, t).get

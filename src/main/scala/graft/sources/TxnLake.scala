@@ -6,7 +6,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
@@ -19,7 +19,9 @@ import scala.util.chaining._
   * process_bronze_to_silver.py:146,151-155): versioned snapshots, atomic
   * commits, snapshot-isolated readers, time travel, optimistic concurrency,
   * row-level DML (MERGE INTO / UPDATE WHERE / DELETE WHERE, all
-  * copy-on-write and stats-scoped), OPTIMIZE (whole, predicate-scoped,
+  * stats-scoped; merge-on-read through deletion vectors on every new
+  * table, copy-on-write where the table turns them off), OPTIMIZE
+  * (whole, predicate-scoped,
   * and bin-packing), per-file column statistics with data-skipping scans,
   * per-file Bloom sidecars with key-set skipping ([[readKeyed]]), a
   * change feed at O(changes-per-commit) ([[tableChanges]]), and vacuum —
@@ -36,13 +38,20 @@ import scala.util.chaining._
   *                                entry carries: `protocol`
   *                                ({reader: 2, writer: 2}, Delta's
   *                                protocol action), the in-commit `ts`,
-  *                                the logged `schema` and the `txns`
-  *                                app → batch map
+  *                                the logged `schema`, the `txns`
+  *                                app → batch map and the
+  *                                `deletionVectors` write mode (Delta's
+  *                                `delta.enableDeletionVectors`: true
+  *                                from the founding entry on; absent
+  *                                reads false)
   *   <table>/_txn_log/v<N>.ckpt   periodic checkpoint: the fully-resolved
   *                                file list AS OF version N, so readers
   *                                replay latest-checkpoint + tail instead
   *                                of the whole log
   *   <table>/data/v<N>-<salt>/    immutable parquet written by commit N
+  *   <table>/_dv/<salt>/<f>.dv    a deletion vector: the masked row
+  *                                positions of data file <f>, minted by
+  *                                one merge-on-read commit
   * }}}
   *
   * Protocol:
@@ -132,7 +141,8 @@ object TxnLake extends LakeFormat {
                                    Map.empty,
                                  dvDelta: Boolean = false,
                                  ridHwm: Long = -1L,
-                                 renames: Map[String, String] = Map.empty)
+                                 renames: Map[String, String] = Map.empty,
+                                 dvMode: Boolean = false)
 
   /** One live deletion vector: the sidecar's table-relative path and the
     * number of row positions it masks. Since r17 a commit entry carries
@@ -363,6 +373,7 @@ object TxnLake extends LakeFormat {
       val rn = o.putObject("renames")
       e.renames.toSeq.sortBy(_._1).foreach { case (p, d) => rn.put(p, d) }
     }
+    if (e.dvMode) o.put("deletionVectors", true)
     mapper.writeValueAsString(o)
   }
 
@@ -406,7 +417,8 @@ object TxnLake extends LakeFormat {
         x.get("s").asLong(), x.get("k").asLong(), x.get("h").asLong())),
       dvDelta = Option(n.get("dvd")).exists(_.asBoolean()),
       ridHwm = Option(n.get("rhw")).map(_.asLong()).getOrElse(-1L),
-      renames = obj("renames")(_.asText()))
+      renames = obj("renames")(_.asText()),
+      dvMode = Option(n.get("deletionVectors")).exists(_.asBoolean()))
   }
 
   // ---- log access -----------------------------------------------------
@@ -1579,6 +1591,10 @@ object TxnLake extends LakeFormat {
     * latest — the caller's read snapshot is stale and it must recompute. */
   private[sources] final class CommitConflict extends Exception
 
+  /** Raised (internally) when a merge-on-read write finds its masks over
+    * the `graft.probe.maxDriverKeys` cap: the merge takes copy-on-write. */
+  private final class MaskOverCap extends Exception
+
   /** Test seam: runs once per [[transact]] attempt, after the attempt
     * pins its base version and before it computes and publishes — lets
     * specs land a concurrent writer deterministically inside any writer.
@@ -1669,7 +1685,7 @@ object TxnLake extends LakeFormat {
                          extraTxns: Map[String, Long] = Map.empty,
                          gcTxnPrefixes: Seq[String] = Seq.empty,
                          bloomCols: Seq[String] = Seq.empty,
-                         newDvs: Map[String, DvRef] = Map.empty,
+                         newDvs: => Map[String, DvRef] = Map.empty,
                          noData: Boolean = false,
                          schemaOverride: Option[StructType] = None,
                          dropBloomCols: Seq[String] = Seq.empty,
@@ -1682,7 +1698,8 @@ object TxnLake extends LakeFormat {
                          dropIdentityColNames: Seq[String] = Seq.empty,
                          carryRids: Boolean = false,
                          newRenames: Map[String, String] = Map.empty,
-                         dropRenames: Seq[String] = Seq.empty): Long = {
+                         dropRenames: Seq[String] = Seq.empty,
+                         setDvMode: Option[Boolean] = None): Long = {
     require(operation == "overwrite" || operation == "append"
       || operation == "optimize" || operation == "delete"
       || operation == "merge" || operation == "update"
@@ -1963,13 +1980,20 @@ object TxnLake extends LakeFormat {
       !gcTxnPrefixes.exists(k.startsWith) } ++ extra ++ txn.toMap
     // deletion vectors: the live map is (previous live -- removed) ++
     // fresh — a removed file's DV dies with it, and this commit's
-    // masks (deleteWhereDv/updateWhereDv) overlay the survivors. The
+    // masks (merge-on-read DML and MERGE) overlay the survivors. The
     // ENTRY stores only this commit's delta (O(commit)) unless it is
     // an anchor — empty live map (the DV-free common case), or the
     // CheckpointInterval cadence — where the full map lands so replay
     // stays bounded (see Snapshot.dvs).
+    // `newDvs` resolves HERE, after the data write: a merge-on-read merge
+    // reads its masks off what the write recorded. A throw removes the
+    // unpublished data dir
+    val minted = try newDvs catch { case e: Throwable =>
+      if (!noData) f.delete(new Path(tablePath, dataRel), true)
+      throw e
+    }
     val dvLive = (baseSnap.map(_.dvs).getOrElse(Map.empty[String, DvRef])
-      -- removed) ++ newDvs
+      -- removed) ++ minted
     val dvAnchor = dvLive.isEmpty || next % CheckpointInterval == 0
     // advance each identity hwm from the freshly-HARVESTED file stats —
     // zero extra I/O (parquet int64 footers always carry exact min/max;
@@ -2023,15 +2047,19 @@ object TxnLake extends LakeFormat {
       ridCursor += math.max(0L, fm.rows)
       fm.copy(brid = b)
     }
+    // the row-level write mode is a table property carried like the
+    // constraints: a founding commit turns deletion vectors on (Delta's
+    // default for new tables), and only the ALTER changes it
+    val dvMode = setDvMode.getOrElse(lastEntry.forall(_.dvMode))
     // 2. publish: tmp write + atomic link IS the commit
     val entry = render(Entry(next, operation, addedRid, removed, txn,
       txns, tableSchema, nextTs(lastEntry),
       bloomCols = allBloomCols,
-      dvs = if (dvAnchor) dvLive else newDvs, dvDelta = !dvAnchor,
+      dvs = if (dvAnchor) dvLive else minted, dvDelta = !dvAnchor,
       droppedCols = dropped.distinct, constraints = tableConstraints,
       genCols = genColsAll,
       identityCols = idColsOut, ridHwm = ridCursor,
-      renames = renamesAll))
+      renames = renamesAll, dvMode = dvMode))
     publishEntry(f, table, next, entry)
     maybeCheckpoint(spark, f, table, next)
     next
@@ -2214,20 +2242,19 @@ object TxnLake extends LakeFormat {
                         refs: Seq[(String, DvRef)]): DataFrame = {
     import org.apache.spark.sql.functions.{col, element_at, explode,
       regexp_replace, split}
-    import spark.implicits._
     val cap = graft.plans.ProbePlanner.maxDriverKeys(spark)
     val f = fs(spark, new Path(table))
     def missing(relPath: String) = new IllegalStateException(
       s"TxnLake: deletion-vector sidecar $relPath of $table is missing — " +
         "the masked version has been vacuumed")
     if (refs.map(_._2.rows).sum <= cap)
-      refs.flatMap { case (name, ref) =>
+      namedLongs(spark, refs.flatMap { case (name, ref) =>
         val positions =
           try readDvFile(f, new Path(table, ref.path))
           catch { case e: java.io.FileNotFoundException =>
             throw missing(ref.path).initCause(e) }
         positions.map(name -> _)
-      }.toDF("__graft_dv_fn", "__graft_dv_ri")
+      }, "__graft_dv_fn", "__graft_dv_ri")
     else {
       refs.foreach { case (name, ref) =>
         require(new Path(ref.path).getName == s"$name.dv",
@@ -2290,6 +2317,15 @@ object TxnLake extends LakeFormat {
     toDisplay(out, ren)
   }
 
+  /** A driver-local (data-file name, Long) relation under the column
+    * names `a` and `b` — built from rows, not through a reflective
+    * tuple encoder, which costs more to derive than to plan the scan. */
+  private def namedLongs(spark: SparkSession, pairs: Seq[(String, Long)],
+                         a: String, b: String): DataFrame =
+    spark.createDataFrame(pairs.map { case (n, v) => Row(n, v) }.asJava,
+      StructType(Seq(StructField(a, StringType),
+        StructField(b, LongType, nullable = false))))
+
   /** An empty frame of exactly `schema`, nullability included. */
   private def emptyOf(spark: SparkSession, schema: StructType): DataFrame =
     spark.createDataFrame(
@@ -2311,7 +2347,6 @@ object TxnLake extends LakeFormat {
                                ren: Map[String, String] = Map.empty,
                                keepMeta: Boolean = false): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, coalesce, col}
-    import spark.implicits._
     require(files.forall(_.brid >= 0L),
       s"TxnLake: row tracking unavailable — ${files.count(_.brid < 0L)} " +
         s"file(s) of $table predate it (committed before row tracking; " +
@@ -2327,9 +2362,9 @@ object TxnLake extends LakeFormat {
       .parquet(files.map(fm => new Path(table, fm.path).toString): _*)
       .withColumn("__graft_dv_fn", col("_metadata.file_name"))
       .withColumn("__graft_dv_ri", col("_metadata.row_index"))
-    val brids = broadcast(
-      files.map(fm => (new Path(fm.path).getName, fm.brid))
-        .toDF("__graft_dv_fn", "__graft_rid_base"))
+    val brids = broadcast(namedLongs(spark,
+      files.map(fm => (new Path(fm.path).getName, fm.brid)),
+      "__graft_dv_fn", "__graft_rid_base"))
     val withRid = base.join(brids, Seq("__graft_dv_fn"))
       .withColumn(RidCol, coalesce(col(RidCol),
         col("__graft_rid_base") + col("__graft_dv_ri")))
@@ -2565,7 +2600,11 @@ object TxnLake extends LakeFormat {
     * `key` between a pre and a post relation, each changed row emitted as
     * insert / delete / update pre+post-image. Shared by the snapshot-diff
     * [[changeFeed]] and the touched-files-only merge/update hops of
-    * [[tableChanges]] (same classification, O(touched) input). */
+    * [[tableChanges]] (same classification, O(touched) input). A side's
+    * presence is read from a marker column, never from the key: a NULL
+    * key pairs with nothing (SQL equality), so its row surfaces as a
+    * delete of its pre-image and an insert of its post-image — never as
+    * an all-NULL insert. */
   private def keyedDiff(pre: DataFrame, post: DataFrame,
                         key: String): DataFrame = {
     import org.apache.spark.sql.functions.{array, col, explode, lit, struct, when}
@@ -2576,20 +2615,37 @@ object TxnLake extends LakeFormat {
     val changed = cols.filterNot(_ == key)
       .map(c => !(col(s"p.$c") <=> col(s"q.$c")))
       .reduceOption(_ || _).getOrElse(lit(false))
-    pre.as("p")
-      .join(post.as("q"), col(s"p.$key") === col(s"q.$key"), "full_outer")
+    // __graft_dv_* names are reserved: no table column can shadow them
+    val present = "__graft_dv_side"
+    pre.withColumn(present, lit(true)).as("p")
+      .join(post.withColumn(present, lit(true)).as("q"),
+        col(s"p.$key") === col(s"q.$key"), "full_outer")
       .select(explode(
-        when(col(s"p.$key").isNull, array(side("q", "insert")))
-          .when(col(s"q.$key").isNull, array(side("p", "delete")))
+        when(col(s"p.$present").isNull, array(side("q", "insert")))
+          .when(col(s"q.$present").isNull, array(side("p", "delete")))
           .when(changed,
             array(side("p", "update_preimage"), side("q", "update_postimage")))
           .otherwise(lit(null))).as("c"))
       .select(cols.map(c => col(s"c.$c")) :+ col("c.change_type"): _*)
   }
 
+  /** `a.exceptAll(b)` with floating values returned as stored: the
+    * multiset difference groups rows, and grouping folds -0.0 into 0.0
+    * and every NaN into one — so floating columns compare through their
+    * exact string rendering and cast back. */
+  private def exceptAllExact(a: DataFrame, b: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    val floating = a.schema.fields.filter(f =>
+      f.dataType == DoubleType || f.dataType == FloatType)
+    def as(d: DataFrame, t: StructField => DataType) =
+      floating.foldLeft(d)((x, f) => x.withColumn(f.name,
+        col(s"`${f.name.replace("`", "``")}`").cast(t(f))))
+    as(as(a, _ => StringType).exceptAll(as(b, _ => StringType)), _.dataType)
+  }
+
   /** The rows entry `e`'s LIVE DV map newly masks relative to the
     * `prev` snapshot (its version minus one) — the pre-images of a
-    * merge-on-read hop ([[deleteWhereDv]], [[updateWhereDv]]) — read RAW
+    * merge-on-read hop (a DV [[deleteWhere]], [[updateWhere]] or MERGE) — read RAW
     * (no masks: the masked rows themselves) from exactly the touched
     * files via `readFiles`. None when `e` masks nothing new.
     * O(touched files + fresh positions). */
@@ -2611,7 +2667,6 @@ object TxnLake extends LakeFormat {
     }
     if (fresh.isEmpty) None
     else {
-      import prev.spark.implicits._
       val touched = fresh.map(_._1).toSet
       val paths = prev.files
         .map(_.path).filter(p => touched(new Path(p).getName))
@@ -2624,7 +2679,8 @@ object TxnLake extends LakeFormat {
       // the scan (metadata columns cannot resolve above the row-id
       // scan's join)
       val base = readFiles(paths, Map.empty)
-      Some(base.join(fresh.toDF("__graft_dv_fn", "__graft_dv_ri"),
+      Some(base.join(
+          namedLongs(prev.spark, fresh, "__graft_dv_fn", "__graft_dv_ri"),
           Seq("__graft_dv_fn", "__graft_dv_ri"), "left_semi")
         .drop("__graft_dv_fn", "__graft_dv_ri"))
     }
@@ -2768,7 +2824,7 @@ object TxnLake extends LakeFormat {
           val kept =
             if (e.add.nonEmpty) readFms(e.add)
             else removed.limit(0)
-          Some(removed.exceptAll(kept)
+          Some(exceptAllExact(removed, kept)
             .withColumn("change_type", lit("delete"))
             .withColumn("commit_version", lit(v)))
         case "merge" | "update" =>
@@ -2778,9 +2834,11 @@ object TxnLake extends LakeFormat {
           // commit's inserts / deletes / update pre+post pairs —
           // O(touched), never O(snapshot), with full classification
           // (carried-verbatim files appear on neither side by definition).
-          // A MERGE-ON-READ update ([[updateWhereDv]]) moves no file out:
-          // its pre-image is the rows the commit's DV map newly masks,
-          // unioned in exactly like the DV-delete hop reads them
+          // A MERGE-ON-READ update or merge moves no file out: its
+          // pre-image is the rows the commit's DV map newly masks,
+          // unioned in exactly like the DV-delete hop reads them, and its
+          // added file holds the post-images (with their pre-images' row
+          // ids) and the inserts
           val post =
             if (e.add.nonEmpty) readFms(e.add)
             else snapAt(v).limit(0)
@@ -2837,14 +2895,16 @@ object TxnLake extends LakeFormat {
 
   // ---- merge ----------------------------------------------------------
 
-  /** MERGE INTO in its COPY-ON-WRITE form — the production upsert a
-    * 100 TB lake runs daily: only the files whose commit-time stats
-    * (min/max, plus the Bloom sidecar when the key column is
-    * bloom-indexed) admit at least one delta key are rewritten; every
-    * other file carries into the new snapshot with its physical path
-    * VERBATIM. Cost is O(touched files +
-    * delta), never O(table) — on a key-clustered table a day's upsert
-    * rewrites one cluster's files.
+  /** MERGE INTO — the production upsert a 100 TB lake runs daily: only
+    * the files whose commit-time stats (min/max, plus the Bloom sidecar
+    * when the key column is bloom-indexed) admit at least one delta key
+    * are in scope; every other file carries into the new snapshot with
+    * its physical path VERBATIM. On a deletion-vector table (every new
+    * table's default) the matched rows are masked in their files and
+    * one file of post-images and inserts is added — write cost
+    * O(delta); with deletion vectors off the in-scope files are
+    * rewritten — O(touched files + delta). See [[mergeIntoClauses]]
+    * for both plans.
     *
     * Semantics (Delta's MERGE with matched→UPDATE SET *, not-matched→
     * INSERT *): a delta row whose `key` matches a current row replaces it
@@ -2985,7 +3045,7 @@ object TxnLake extends LakeFormat {
     * source keys never match (SQL equality) and flow to the insert
     * group.
     *
-    * Copy-on-write scoping, the 100 TB contract: the rewrite touches
+    * Scoping, the 100 TB contract: a clause can change rows only in
     * the union of (a) WHEN MATCHED clauses exist, files whose
     * stats/Bloom sidecar admit at least one source key — only matched
     * clauses can change those rows, so an INSERT-ONLY merge rewrites
@@ -3010,12 +3070,34 @@ object TxnLake extends LakeFormat {
     * (default 1M): a backfill or bootstrap merge whose source rivals the
     * table gets no key list and takes full scope — which is what such a
     * merge rewrites anyway — so the driver term never outgrows a day's
-    * volume. A rewrite writes at most as many files as it removes,
-    * coalescing its output without a shuffle.
+    * volume.
+    *
+    * The table's write mode ([[setDeletionVectors]]) picks the plan:
+    *
+    *  - MERGE-ON-READ (deletion vectors on): one position pass reads
+    *    the in-scope files once, under their live masks, joined to the
+    *    pinned source and tagged with each row's clause, and is pinned.
+    *    Its matched source keys make the inserts (the source rows whose
+    *    key matched nothing — no second key scan), and the write job
+    *    that lands the post-images (each with its pre-image's row id)
+    *    and the inserts records the (file, position) of every row a
+    *    clause claims, so the masks cost no job of their own. ONE
+    *    "merge" commit holds fresh sidecars for the touched files
+    *    (old ∪ new positions) and the added file(s) — one per
+    *    `spark.sql.files.maxPartitionBytes` of source, plus one per file
+    *    a NOT MATCHED BY SOURCE update reaches — and removes no file.
+    *    Over the `graft.probe.maxDriverKeys` cap — the key collect, the
+    *    claimed rows, or any file's cumulative mask — it takes the
+    *    copy-on-write plan (the unpublished write is removed).
+    *  - COPY-ON-WRITE (off): the in-scope files a clause can change are
+    *    rewritten, at most as many files as it removes, coalesced
+    *    without a shuffle; inserts are the source rows absent from the
+    *    key-scoped files.
     *
     * The commit carries the "merge" tag: NOT data-preserving for the
     * x40 index-trust model, and [[tableChanges]] classifies the hop as
-    * a touched-files keyed diff — inserts, deletes, and update
+    * a keyed diff of its pre-images (the rewritten files, or the newly
+    * masked rows) against its added rows — inserts, deletes, and update
     * pre/post-image pairs at O(touched), tombstone deletes included.
     *
     * Returns None without committing when nothing could change (no file
@@ -3078,19 +3160,56 @@ object TxnLake extends LakeFormat {
 
     private type Counts = scala.collection.mutable.HashMap[Any, (String, Long)]
 
+    /** The post-images of `changed` — the merge-on-read position pass:
+      * `__graft_dv_fn`, `__graft_dv_ri`, `__act`, then the image — for
+      * the rows whose clause is in `updated`, as `out` columns. The job
+      * that consumes the frame also records the (file, position) of every
+      * row a clause claims (`__act` not `keep`) in `positions`, at most
+      * `cap + 1` per task, and counts them all in `claimed`: the write
+      * gathers the masks with no job of its own. */
+    def recordingClaims(changed: DataFrame, updated: Set[String],
+                        out: Seq[String],
+                        positions: org.apache.spark.util.CollectionAccumulator[
+                          (String, Long)],
+                        claimed: org.apache.spark.util.LongAccumulator,
+                        cap: Long): DataFrame = {
+      val lim = capLimit(cap)
+      val st = changed.schema
+      val (fn, ri, act) = (st.fieldIndex("__graft_dv_fn"),
+        st.fieldIndex("__graft_dv_ri"), st.fieldIndex("__act"))
+      val idx = out.map(st.fieldIndex)
+      changed.mapPartitions { it =>
+        var n = 0L
+        it.filter { r =>
+          val a = r.getString(act)
+          if (a != "keep") {
+            if (n <= lim) positions.add((r.getString(fn), r.getLong(ri)))
+            n += 1
+            claimed.add(1L)
+          }
+          updated(a)
+        }.map(r => Row.fromSeq(idx.map(r.get)))
+      }(org.apache.spark.sql.Encoders.row(StructType(idx.map(st(_)))))
+    }
+
+    /** `cap` as a collect bound: a Long.MaxValue cap means "up to the Int
+      * ceiling". */
+    def capLimit(cap: Long): Int =
+      math.min(math.max(cap, 0L), (Int.MaxValue - 2).toLong).toInt
+
     /** The source's distinct non-null `key` values, rendered as
       * `cast(key as string)` (the domain file stats and Bloom sidecars
       * are probed in), and whether any value occurs twice — in ONE job:
-      * each partition counts its keys ([[groupingKey]]) in a map, and a
-      * single reduce task merges the maps. Both stop storing keys once
+      * each partition counts its keys ([[groupingKey]]) in a map, and the
+      * driver (a source small enough to broadcast) or a single reduce
+      * task merges the maps. Both stop storing keys once
       * they hold `cap + 1`, so neither the driver nor the job's result
       * ever holds more: None then means more than `cap` distinct keys.
       * A source without partitions submits no job. */
     def collect(source: DataFrame, key: String,
                 cap: Long): Option[(Seq[String], Boolean)] = {
       import org.apache.spark.sql.functions.col
-      // clamp: a Long.MaxValue cap means "up to the Int ceiling"
-      val lim = math.min(math.max(cap, 0L), (Int.MaxValue - 2).toLong).toInt
+      val lim = capLimit(cap)
       // adds n occurrences of k; false once the map holds more than lim keys
       def add(m: Counts, k: Any, rendered: String, n: Long): Boolean =
         m.get(k) match {
@@ -3098,7 +3217,7 @@ object TxnLake extends LakeFormat {
           case None => m.update(k, (rendered, n)); m.size <= lim
         }
       val proj = source.filter(col(key).isNotNull)
-        .select(col(key), col(key).cast("string"))
+        .select(col(key), col(key).cast(StringType))
       val keyType = proj.schema.head.dataType
       // internal rows: no deserializer pass, and the rows are reused
       // buffers, so the native value is copied before it is kept
@@ -3114,17 +3233,25 @@ object TxnLake extends LakeFormat {
         }
         Iterator((if (ok) m else new Counts, ok))
       }
-      val one =
-        if (perPart.getNumPartitions == 1) perPart else perPart.repartition(1)
-      val (counts, underCap) = one.mapPartitions { it =>
+      def merged(it: Iterator[(Counts, Boolean)]): (Counts, Boolean) = {
         val m = new Counts
         var ok = true
         while (ok && it.hasNext) {
           val (part, partOk) = it.next()
           ok = partOk && part.forall { case (k, (r, n)) => add(m, k, r, n) }
         }
-        Iterator((if (ok) m else new Counts, ok))
-      }.collect().head
+        (if (ok) m else new Counts, ok)
+      }
+      // a source small enough to broadcast ships its partition maps to
+      // the driver, which merges them; a larger one merges them in a
+      // single reduce task, so the driver still receives one capped map
+      val small = source.queryExecution.optimizedPlan.stats.sizeInBytes <=
+        source.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+      val (counts, underCap) =
+        if (small || perPart.getNumPartitions == 1)
+          merged(perPart.collect().iterator)
+        else perPart.repartition(1)
+          .mapPartitions(it => Iterator(merged(it))).collect().head
       if (!underCap) None
       else Some((counts.valuesIterator.map(_._1).toSeq.distinct,
         counts.valuesIterator.exists(_._2 > 1)))
@@ -3148,7 +3275,8 @@ object TxnLake extends LakeFormat {
                                             gcTxnPrefixes: Seq[String] =
                                               Seq.empty,
                                             uniqueKeys: Boolean = false): Option[Long] = {
-    import org.apache.spark.sql.functions.{coalesce, col, count, lit, when}
+    import org.apache.spark.sql.functions.{broadcast, coalesce, col, count,
+      lit, when}
     require(matched.nonEmpty || notMatched.nonEmpty
       || notMatchedBySource.nonEmpty,
       "TxnLake.mergeIntoClauses: no WHEN clauses")
@@ -3271,13 +3399,16 @@ object TxnLake extends LakeFormat {
         }.reduce(_ unionByName _)
       }
     }
-    transact(spark, table, "mergeIntoClauses", maxAttempts) { base =>
+    // the pinned source's blocks are dropped once the merge is done
+    try transact(spark, table, "mergeIntoClauses", maxAttempts) { base =>
       // caller-contract re-validation under the CURRENT base — a retry
       // after a concurrent commit must re-check what the first attempt
       // checked (mergeInto's exact-schema contract), not trust a
       // pre-loop snapshot of it
       perAttempt(base)
-      val out: Option[(DataFrame, Seq[String], Boolean)] = base match {
+      // a replayed (appId, batchId) finds its marker: skip, never re-apply
+      if (replayed(spark, table, base, txn)) None
+      else base match {
         case None => // founding merge: the INSERT clauses define the schema
           require(notMatched.nonEmpty,
             "TxnLake.mergeIntoClauses: a founding merge on an absent table " +
@@ -3305,7 +3436,8 @@ object TxnLake extends LakeFormat {
           // typed. txn checked FIRST: the emptiness probe is a Spark job
           // whose answer the marker path ignores.
           if (txn.isDefined || !labeled("probe")(ins.isEmpty))
-            Some((ins, Seq.empty, false))
+            Some(commitImpl(spark, ins, table, "merge", txn, base,
+              removePaths = Some(Seq.empty), gcTxnPrefixes = gcTxnPrefixes))
           else None
         case Some(b) =>
           val snap = pinned(spark, table, b)
@@ -3353,115 +3485,201 @@ object TxnLake extends LakeFormat {
               else try snap.scoped(conds.flatten.reduce(_ || _))
               catch { case _: Exception => files }
             }
-          // files that REWRITE: matched clauses can only change rows in
+          // files whose rows a clause can CHANGE: matched clauses only in
           // key-scoped files, NMBS clauses only in condition-scoped files
-          // — an insert-only merge rewrites NOTHING (Delta's insert-only
+          // — an insert-only merge changes NOTHING (Delta's insert-only
           // MERGE), even when source keys overlap existing files; those
           // files are still READ (key column only) for the insert
           // existence check
           val rewriteFiles =
             ((if (matched.isEmpty) Seq.empty[FileMeta] else keyTouched)
               ++ nmbsTouched).distinctBy(_.path)
-          // the insert anti-join's existence set: every file that might
-          // hold a source key — sound because any key absent from all of
-          // them is absent from the table
-          def insertsVsExisting(): DataFrame = {
-            val anti =
-              if (keyTouched.isEmpty) src
-              else src.join(snap.scan(keyTouched).select(col(key)),
-                Seq(key), "left_anti")
-            insertRows(anti, displaySchema, newCols)
-          }
-          val inserts = insertsVsExisting()
-          // with a txn marker, even a no-op must commit — the marker is
-          // the consumer's offset, and a maintenance hop that changes no
-          // rows still has to advance it (txn checked FIRST: the
-          // emptiness probe is a Spark job whose answer the marker path
-          // ignores)
-          if (rewriteFiles.isEmpty && txn.isEmpty
-              && labeled("probe")(inserts.isEmpty)) None
-          else {
-            // an empty typed frame stands in for cur when nothing
-            // rewrites: zero I/O, and the update-clause when-chains
-            // still TYPE any evolved column the insert branches left as
-            // NullType (an all-new-keys batch must not crash the
-            // parquet write that an overlapping batch survives)
-            val (cur, carry) =
-              if (rewriteFiles.isEmpty)
-                (spark.createDataFrame(
-                  spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-                  displaySchema), false)
-              else snap.scanForRewrite(rewriteFiles)
-            // one select renames every column (one analysis, not one
-            // per withColumnRenamed); backticks take each name literally
-            val srcRenamed = src.select(src.columns.toIndexedSeq.map(c =>
-              col(s"`${c.replace("`", "``")}`").as(MergeSourcePrefix + c)): _*)
-            // without MATCHED clauses the join only needs the MARKER, so
-            // it joins distinct keys — duplicate source keys (legal on an
-            // insert-only/NMBS merge) must never fan out target rows
-            val srcJoin =
-              (if (matched.nonEmpty) srcRenamed
-               else srcRenamed.select(col(MergeSourcePrefix + key)).distinct())
-                .withColumn("__m", lit(true))
-            val joined = cur.join(srcJoin,
-              col(key) === col(MergeSourcePrefix + key), "left")
-            val isM = coalesce(col("__m"), lit(false))
-            def actChain(prefix: String, cs: Seq[MergeAction]): Column =
-              cs.zipWithIndex.foldRight(lit("keep"): Column) {
-                case ((a, i), rest) =>
-                  when(condTrue(condOf(a)), lit(s"$prefix$i")).otherwise(rest)
-              }
-            val act = when(isM, actChain("m", matched))
-              .otherwise(actChain("n", notMatchedBySource))
-            val deletes =
-              matched.zipWithIndex.collect {
-                case (_: MergeDelete, i) => s"m$i" } ++
-              notMatchedBySource.zipWithIndex.collect {
-                case (_: MergeDelete, i) => s"n$i" }
-            val updates: Seq[(String, Map[String, Column])] =
-              matched.zipWithIndex.collect {
-                case (u: MergeUpdate, i) => s"m$i" -> u.set } ++
-              notMatchedBySource.zipWithIndex.collect {
-                case (u: MergeUpdate, i) => s"n$i" -> u.set }
-            val tagged = joined.withColumn("__act", act)
-            val kept = if (deletes.isEmpty) tagged
-              else tagged.filter(!col("__act").isin(deletes: _*))
-            val rewritten = kept.select(targetCols.map { n =>
-              updates.filter(_._2.contains(n))
+          // one select renames every column (one analysis, not one per
+          // withColumnRenamed); backticks take each name literally
+          val srcRenamed = src.select(src.columns.toIndexedSeq.map(c =>
+            col(s"`${c.replace("`", "``")}`").as(MergeSourcePrefix + c)): _*)
+          // without MATCHED clauses the join only needs the MARKER, so it
+          // joins distinct keys — duplicate source keys (legal on an
+          // insert-only/NMBS merge) must never fan out target rows
+          val srcJoin =
+            (if (matched.nonEmpty) srcRenamed
+             else srcRenamed.select(col(MergeSourcePrefix + key)).distinct())
+              .withColumn("__m", lit(true))
+          val isM = coalesce(col("__m"), lit(false))
+          def actChain(prefix: String, cs: Seq[MergeAction]): Column =
+            cs.zipWithIndex.foldRight(lit("keep"): Column) {
+              case ((a, i), rest) =>
+                when(condTrue(condOf(a)), lit(s"$prefix$i")).otherwise(rest)
+            }
+          // `cur` LEFT JOIN the source, every row tagged `__act` with the
+          // clause that claims it: m<i> / n<i> for the i-th MATCHED / NOT
+          // MATCHED BY SOURCE clause, `keep` when none does
+          def tagged(cur: DataFrame): DataFrame =
+            cur.join(srcJoin, col(key) === col(MergeSourcePrefix + key), "left")
+              .withColumn("__act", when(isM, actChain("m", matched))
+                .otherwise(actChain("n", notMatchedBySource)))
+          val deletes =
+            matched.zipWithIndex.collect {
+              case (_: MergeDelete, i) => s"m$i" } ++
+            notMatchedBySource.zipWithIndex.collect {
+              case (_: MergeDelete, i) => s"n$i" }
+          val updates: Seq[(String, Map[String, Column])] =
+            matched.zipWithIndex.collect {
+              case (u: MergeUpdate, i) => s"m$i" -> u.set } ++
+            notMatchedBySource.zipWithIndex.collect {
+              case (u: MergeUpdate, i) => s"n$i" -> u.set }
+          // a tagged row's post-image: its clause's SET applied; an evolved
+          // column its clause does not assign reads NULL. `updatedOnly`
+          // leaves every row no UPDATE claims NULL, so the image reads
+          // only the target columns some UPDATE keeps (column pruning
+          // then narrows the scan: a SET-everything merge reads the key)
+          def postImage(carry: Boolean,
+                        updatedOnly: Boolean = false): Seq[Column] =
+            targetCols.map { n =>
+              if (updatedOnly)
+                updates.foldRight(
+                  lit(null).cast(displaySchema(n).dataType): Column) {
+                  case ((tag, set), rest) => when(col("__act") === tag,
+                    set.getOrElse(n, col(n))).otherwise(rest)
+                }.as(n)
+              else updates.filter(_._2.contains(n))
                 .foldRight(col(n)) { case ((tag, set), rest) =>
                   when(col("__act") === tag, set(n)).otherwise(rest)
                 }.as(n)
-            } ++ newCols.map { n => // evolved: unassigned rows read NULL
+            } ++ newCols.map { n =>
               updates.filter(_._2.contains(n))
                 .foldRight(lit(null): Column) { case ((tag, set), rest) =>
                   when(col("__act") === tag, set(n)).otherwise(rest)
                 }.as(n)
-            } ++ (if (carry) Seq(col(RidCol)) else Seq.empty): _*)
-            // merge-minted inserts leave the materialized id NULL: they
-            // draw fresh virtual ids from the new file's base range,
-            // while the carried rows' materialized ids take precedence
-            val insertsRid =
-              if (carry) inserts.withColumn(RidCol, lit(null).cast("long"))
-              else inserts
-            val out0 = rewritten.unionByName(insertsRid,
-              allowMissingColumns = evolveSchema)
-            // pure-insert merges keep the batch's own partitioning — a
-            // coalesce(1) would funnel a large insert into one file; a
-            // rewrite writes at most as many files as it removes, merged
-            // without a shuffle (no map stage, no AQE re-plan)
-            val out1 = if (rewriteFiles.isEmpty) out0
-              else out0.coalesce(rewriteFiles.size)
-            Some((out1, rewriteFiles.map(_.path), carry))
+            } ++ (if (carry) Seq(col(RidCol)) else Seq.empty)
+          // the NOT MATCHED rows: the source rows whose key `existing`
+          // lacks. Merge-minted inserts leave the materialized id NULL:
+          // they draw fresh virtual ids from the new file's base range,
+          // while carried rows' materialized ids take precedence
+          def insertsAbsentFrom(existing: Option[DataFrame],
+                                carry: Boolean): DataFrame = {
+            val ins = insertRows(existing.fold(src)(e =>
+              src.join(e, Seq(key), "left_anti")), displaySchema, newCols)
+            if (carry) ins.withColumn(RidCol, lit(null).cast("long")) else ins
           }
+          // nothing in scope, no insert row and no txn marker to record:
+          // commit nothing. With a txn marker even a no-op must commit —
+          // the marker is the consumer's offset, and a maintenance hop
+          // that changes no rows still has to advance it (txn checked
+          // FIRST: the emptiness probe is a Spark job whose answer the
+          // marker path ignores)
+          def noOp(inserts: DataFrame): Boolean =
+            rewriteFiles.isEmpty && txn.isEmpty &&
+              labeled("probe")(inserts.isEmpty)
+
+          // COPY-ON-WRITE: rewrite every file a clause can change
+          def copyOnWrite(): Option[Long] = {
+            // an empty typed frame stands in for cur when nothing
+            // rewrites: zero I/O, and the update-clause when-chains still
+            // TYPE any evolved column the insert branches left as NullType
+            // (an all-new-keys batch must not crash the parquet write
+            // that an overlapping batch survives)
+            val (cur, carry) =
+              if (rewriteFiles.isEmpty) (emptyOf(spark, displaySchema), false)
+              else snap.scanForRewrite(rewriteFiles)
+            // the existence set: every file that might hold a source key —
+            // sound because a key absent from all of them is absent from
+            // the table
+            val inserts = insertsAbsentFrom(
+              if (keyTouched.isEmpty) None
+              else Some(snap.scan(keyTouched).select(col(key))), carry)
+            if (noOp(inserts)) None
+            else {
+              val kept = tagged(cur).pipe(t =>
+                if (deletes.isEmpty) t else t.filter(!col("__act").isin(deletes: _*)))
+              val out = kept.select(postImage(carry): _*)
+                .unionByName(inserts, allowMissingColumns = evolveSchema)
+              // pure-insert merges keep the batch's own partitioning — a
+              // coalesce(1) would funnel a large insert into one file; a
+              // rewrite writes at most as many files as it removes, merged
+              // without a shuffle (no map stage, no AQE re-plan)
+              Some(commitImpl(spark,
+                if (rewriteFiles.isEmpty) out else out.coalesce(rewriteFiles.size),
+                table, "merge", txn, base,
+                removePaths = Some(rewriteFiles.map(_.path)), carryRids = carry,
+                gcTxnPrefixes = gcTxnPrefixes))
+            }
+          }
+
+          // MERGE-ON-READ: mask the rows the clauses change, add their
+          // post-images and the inserts. None hands the merge to
+          // copyOnWrite: over the key cap in the changed rows, or in any
+          // file's cumulative mask
+          def mergeOnRead(scope: Seq[FileMeta]): Option[Option[Long]] = {
+            val carry = scope.forall(_.brid >= 0L)
+            val srcKey = MergeSourcePrefix + key
+            // the position pass: the scoped files' live rows once, tagged
+            // like the rewrite's, keeping only the rows the source matches
+            // or a clause changes — their coordinates, the matching source
+            // key and the post-image — pinned lazily: the write's first job
+            // (the matched keys' broadcast) fills the pin in parallel, and
+            // the write reads the pin
+            val changed = labeled("positions") {
+              tagged(positionScan(snap, scope, carry))
+                .filter(isM || col("__act") =!= "keep")
+                .select(Seq(col("__graft_dv_fn"), col("__graft_dv_ri"),
+                  col("__act"), col(srcKey)) ++
+                  postImage(carry, updatedOnly = true): _*)
+                .localCheckpoint(eager = false)
+            }
+            // the inserts: source rows whose key no live row matched —
+            // the matched keys come from the same pass
+            val inserts = insertsAbsentFrom(Some(broadcast(changed
+              .select(col(srcKey).as(key)).where(col(key).isNotNull))),
+              carry)
+            try if (noOp(inserts)) Some(None)
+            else {
+              val updated = updates.map(_._1).toSet
+              val positions = spark.sparkContext
+                .collectionAccumulator[(String, Long)]("txn:merge positions")
+              val claimed = spark.sparkContext.longAccumulator
+              // the post-images; the job that consumes them records the
+              // coordinates of every row a clause claims
+              val post = MergeKeys.recordingClaims(changed, updated,
+                targetCols ++ newCols ++ (if (carry) Seq(RidCol) else Nil),
+                positions, claimed, keyCap)
+              val noData = notMatched.isEmpty && updated.isEmpty
+              if (noData) labeled("positions")(post.count())
+              // one file per maxPartitionBytes of source, plus one per
+              // file a NOT MATCHED BY SOURCE update can rewrite rows of
+              val srcBytes = src.queryExecution.optimizedPlan.stats.sizeInBytes
+              val outFiles = ((srcBytes / spark.sessionState.conf
+                .filesMaxPartitionBytes + 1) + BigInt(
+                if (notMatchedBySource.exists(_.isInstanceOf[MergeUpdate]))
+                  nmbsTouched.size else 0)).min(Int.MaxValue).toInt
+              // the masks, resolved after the write from what it recorded
+              def masks: Map[String, Seq[Long]] = {
+                if (claimed.value > keyCap) throw new MaskOverCap
+                val all = unionMasks(snap, scope,
+                  positions.value.asScala.toSeq.distinct)
+                if (all.values.exists(_.size.toLong > keyCap))
+                  throw new MaskOverCap
+                all
+              }
+              try Some(Some(commitMasks(spark, table, masks)(dvs =>
+                commitImpl(spark,
+                  post.unionByName(inserts, allowMissingColumns = evolveSchema)
+                    .coalesce(outFiles),
+                  table, "merge", txn, base,
+                  removePaths = Some(Seq.empty), newDvs = dvs,
+                  noData = noData, carryRids = carry,
+                  gcTxnPrefixes = gcTxnPrefixes))))
+              catch { case _: MaskOverCap => None }
+            }
+            finally org.apache.spark.sql.GraftCheckpointShim.release(changed)
+          }
+
+          val scope = (keyTouched ++ nmbsTouched).distinctBy(_.path)
+          (if (snap.entry.dvMode && keys.isDefined && scope.nonEmpty)
+             mergeOnRead(scope)
+           else None).getOrElse(copyOnWrite())
       }
-      out.flatMap { case (df, removed, carry) =>
-        // a replayed (appId, batchId) finds its marker: skip, never re-apply
-        if (replayed(spark, table, base, txn)) None
-        else Some(commitImpl(spark, df, table, "merge", txn, base,
-          removePaths = Some(removed), carryRids = carry,
-          gcTxnPrefixes = gcTxnPrefixes))
-      }
-    }
+    } finally org.apache.spark.sql.GraftCheckpointShim.release(pin)
   }
 
   // ---- optimize -------------------------------------------------------
@@ -3553,60 +3771,38 @@ object TxnLake extends LakeFormat {
       }
     }
 
-  /** Row-level DELETE — Delta's `DELETE FROM t WHERE …` in its
-    * copy-on-write form: files whose commit-time stats admit the
-    * predicate are REWRITTEN without the matching rows; every other file
-    * carries into the new snapshot with its physical path verbatim.
-    * Cost is O(touched files), never O(table) — the same stats scoping
-    * [[readWhere]] and [[optimizeWhere]] use, so a delete keyed to a
-    * clustered column rewrites only its cluster's files. Rows where the
-    * predicate is NULL are KEPT (SQL DELETE semantics: only TRUE
-    * deletes). Returns None without committing when no file's stats
-    * admit the predicate (nothing to delete — no version churn under a
-    * periodic retention job). Through the log: snapshot-isolated readers
-    * keep their versions, the pre-delete snapshot time-travels until
-    * vacuumed, the commit is pinned to its read version (concurrent
-    * commits force a recompute), and the "delete" operation tag is NOT
-    * data-preserving — a foreign delete correctly de-trusts the x40/x42
-    * sibling indexes (their keys would over-mask rows the corpus no
-    * longer has). */
+  /** Row-level DELETE — Delta's `DELETE FROM t WHERE …`. Rows where the
+    * predicate is TRUE go; NULL or FALSE keeps the row (SQL DELETE
+    * semantics). Only the files whose commit-time stats admit the
+    * predicate are in scope — the same stats scoping [[readWhere]] and
+    * [[optimizeWhere]] use — so the cost is O(touched files), never
+    * O(table). The table's write mode ([[setDeletionVectors]]) picks the
+    * plan:
+    *
+    *  - MERGE-ON-READ (deletion vectors on: every new table's default):
+    *    the matching live ROW POSITIONS land in fresh per-file sidecars
+    *    (`_dv/<salt>/<dataFile>.dv`, old ∪ new positions) and every
+    *    snapshot read drops them at scan time ([[scanFiles]]). The commit
+    *    adds and removes no data file: write cost O(matched rows). Over
+    *    the `graft.probe.maxDriverKeys` cap — this delete's matches, or
+    *    any file's CUMULATIVE mask — it takes the copy-on-write plan, so
+    *    no sidecar outgrows what the scan machinery budgets for. None
+    *    when no live row matches.
+    *  - COPY-ON-WRITE (off): every scoped file is REWRITTEN without the
+    *    matching rows, under its live mask (the mask dies with the file —
+    *    deleted rows never resurrect). None when no file's stats admit
+    *    the predicate (no version churn under a periodic retention job).
+    *
+    * Identical rows either way. Through the log: snapshot-isolated
+    * readers keep their versions, the pre-delete snapshot time-travels
+    * until vacuumed, each attempt is pinned to its read version and plans
+    * under that version's write mode (a concurrent commit forces a
+    * recompute), and the "delete" tag is NOT data-preserving — a foreign
+    * delete correctly de-trusts the x40/x42 sibling indexes. The hop
+    * surfaces in [[tableChanges]] as exactly the deleted rows. */
   def deleteWhere(spark: SparkSession, table: String, predicate: Column,
                   maxAttempts: Int = 10): Option[Long] =
-    rewriteWhere(spark, table, predicate, None, maxAttempts)
-
-  /** Row-level DELETE in MERGE-ON-READ form — Delta's deletion vectors:
-    * where [[deleteWhere]] REWRITES every touched file without the
-    * matching rows (copy-on-write: a 1-row delete in a 1 GB file
-    * rewrites the gigabyte), this records the matching ROW POSITIONS in
-    * a tiny per-file sidecar and every snapshot read drops them at scan
-    * time ([[scanFiles]] — the masked scan rides the parquet row-index
-    * metadata column and a distributed anti-join). The commit touches NO
-    * data file: it adds nothing, removes nothing, and only advances the
-    * entry's DV delta — write cost O(matched positions), never
-    * O(touched bytes). Re-deleting from a masked file UNIONS positions.
-    *
-    * A DV dies with its file: any copy-on-write rewrite (DML, OPTIMIZE,
-    * compaction) reads the file under its mask, materializes the
-    * surviving rows, and the commit's `prior -- removed` drops the
-    * sidecar from the map — deleted rows can never resurrect.
-    * [[purgeDeletionVectors]] is the explicit rewrite (Delta's
-    * `REORG TABLE ... APPLY (PURGE)`).
-    *
-    * The matched-position collect rides the `graft.probe.maxDriverKeys`
-    * planner rule: a delete too large to be a DV candidate (its mask
-    * would rival the data) falls back to [[deleteWhere]]'s copy-on-write
-    * — the right plan for a bulk delete anyway. The cap bounds the
-    * CUMULATIVE per-file mask, not just one delete's hits: a file whose
-    * old∪new union would exceed it takes copy-on-write too, so no
-    * sequence of selective deletes can grow a sidecar past the budget
-    * the scan machinery plans for. Identical rows either
-    * way. SQL NULL semantics (only TRUE deletes), the "delete" tag (NOT
-    * data-preserving — sibling indexes de-trust), pinned read version
-    * with recompute on conflict, provable no-op → None. The hop
-    * surfaces in [[tableChanges]] as exactly the newly masked rows. */
-  def deleteWhereDv(spark: SparkSession, table: String, predicate: Column,
-                    maxAttempts: Int = 10): Option[Long] =
-    maskWhere(spark, table, predicate, None, maxAttempts)
+    dmlWhere(spark, table, predicate, None, maxAttempts)
 
   /** Materialize every live deletion vector away — Delta's
     * `REORG TABLE ... APPLY (PURGE)`: rewrite ONLY the masked files
@@ -3614,7 +3810,8 @@ object TxnLake extends LakeFormat {
     * the commit's map maintenance drop the sidecars. Data-preserving
     * ("optimize" tag — the row multiset is unchanged by construction),
     * so sibling-index trust (x40) survives a purge, exactly as it
-    * survives compaction. No-op (None) when nothing is masked. */
+    * survives compaction. At most one file per masked file, merged
+    * without a shuffle. No-op (None) when nothing is masked. */
   def purgeDeletionVectors(spark: SparkSession, table: String,
                            maxAttempts: Int = 10): Option[Long] =
     transactOn(spark, table, "purgeDeletionVectors", maxAttempts) { base =>
@@ -3623,216 +3820,204 @@ object TxnLake extends LakeFormat {
       if (masked.isEmpty) None
       else {
         val (clean, carry) = snap.scanForRewrite(masked)
-        Some(commitImpl(spark, clean.repartition(masked.size), table,
+        Some(commitImpl(spark, clean.coalesce(masked.size), table,
           "optimize", None, Some(base),
           removePaths = Some(masked.map(_.path)), carryRids = carry))
       }
     }
 
-  /** Row-level UPDATE — Delta's `UPDATE t SET … WHERE …` in its
-    * copy-on-write form, the scalar-DML sibling of [[deleteWhere]] and
-    * [[mergeInto]]: files whose commit-time stats admit the predicate
-    * are rewritten with `set`'s expressions applied to the rows where
-    * the predicate is TRUE (NULL or FALSE keeps the row verbatim — SQL
-    * UPDATE semantics: only TRUE updates); every other file carries into
-    * the new snapshot with its physical path VERBATIM. Cost O(touched
-    * files), never O(table). `set` expressions may reference the row's
-    * own columns (`Map("value" -> col("value") * 2)`); assigning a type
-    * the column cannot hold is refused by the commit's schema merge
-    * rather than silently coerced. Returns None without committing when
-    * no file's stats admit the predicate. The "update" tag is NOT
-    * data-preserving — it de-trusts sibling indexes (x40) and surfaces
-    * in [[tableChanges]] as a touched-files keyed diff with full
-    * update pre/post-image classification. */
+  /** Row-level UPDATE — Delta's `UPDATE t SET … WHERE …`, the
+    * scalar-DML sibling of [[deleteWhere]] and [[mergeInto]]: `set`'s
+    * expressions apply to the rows where the predicate is TRUE (NULL or
+    * FALSE keeps the row verbatim — SQL UPDATE semantics). `set`
+    * expressions may reference the row's own columns
+    * (`Map("value" -> col("value") * 2)`); assigning a type the column
+    * cannot hold is refused by the commit's schema merge rather than
+    * silently coerced. Scoped, planned and capped exactly like
+    * [[deleteWhere]]:
+    *
+    *  - MERGE-ON-READ (deletion vectors on): ONE commit masks the
+    *    matched rows' positions and adds one small file holding their
+    *    post-images, each carrying its pre-image's row id — write cost
+    *    O(matched rows). None when no live row matches.
+    *  - COPY-ON-WRITE (off): every scoped file is rewritten with `set`
+    *    applied; None when no file's stats admit the predicate.
+    *
+    * Row ids survive either way (an update changes values, never
+    * identity). The "update" tag is NOT data-preserving — it de-trusts
+    * sibling indexes (x40) — and the hop surfaces in [[tableChanges]]
+    * with full update pre/post-image pairs. */
   def updateWhere(spark: SparkSession, table: String, predicate: Column,
                   set: Map[String, Column],
                   maxAttempts: Int = 10): Option[Long] = {
     require(set.nonEmpty, "TxnLake.updateWhere: empty SET clause")
-    rewriteWhere(spark, table, predicate, Some(set), maxAttempts)
+    dmlWhere(spark, table, predicate, Some(set), maxAttempts)
   }
 
-  /** Row-level UPDATE in MERGE-ON-READ form — the DV sibling of
-    * [[updateWhere]] (Delta's deletion-vector-backed UPDATE): instead
-    * of rewriting every touched file (copy-on-write: a 1-row update in
-    * a 1 GB file rewrites the gigabyte), ONE commit masks the matched
-    * rows' positions in per-file sidecars AND appends a small file
-    * holding their post-images — write cost O(matched rows), never
-    * O(touched bytes). Every snapshot read then sees exactly the
-    * updated table: the masks drop the pre-images at scan time, the
-    * appended file supplies the post-images.
-    *
-    * Shares [[deleteWhereDv]]'s whole contract: the
-    * `graft.probe.maxDriverKeys` cap gates BOTH this update's matches
-    * and the cumulative per-file mask union (either over cap →
-    * [[updateWhere]]'s copy-on-write, the right plan for a bulk update
-    * anyway — identical rows either way); SQL NULL semantics (only
-    * TRUE updates); the "update" tag (NOT data-preserving — sibling
-    * indexes de-trust); pinned read version with recompute on
-    * conflict; provable no-op → None; masks die with any later rewrite
-    * of their file ([[purgeDeletionVectors]] included). The hop
-    * surfaces in [[tableChanges]] as full update pre/post-image pairs:
-    * the newly masked rows are the pre-images, the appended file the
-    * post-images. */
-  def updateWhereDv(spark: SparkSession, table: String, predicate: Column,
-                    set: Map[String, Column],
-                    maxAttempts: Int = 10): Option[Long] = {
-    require(set.nonEmpty, "TxnLake.updateWhereDv: empty SET clause")
-    maskWhere(spark, table, predicate, Some(set), maxAttempts)
-  }
-
-  /** The copy-on-write DML body of [[deleteWhere]] (`set` = None) and
-    * [[updateWhere]]: rewrite the stats-scoped files with the TRUE rows
-    * dropped, or with `set` applied to them, and carry every other file
-    * verbatim. None when no file's stats admit the predicate. */
-  private def rewriteWhere(spark: SparkSession, table: String,
-                           predicate: Column,
-                           set: Option[Map[String, Column]],
-                           maxAttempts: Int): Option[Long] = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit, not, when}
-    val op = if (set.isEmpty) "delete" else "update"
-    transactOn(spark, table, s"${op}Where", maxAttempts) { base =>
-      val snap = pinned(spark, table, base)
-      if (snap.files.nonEmpty)
-        set.foreach(snap.requireSetColumns(s"${op}Where", _))
-      val touched = snap.scoped(predicate)
-      if (touched.isEmpty) None
-      else {
-        val hit = coalesce(predicate, lit(false))
-        // read UNDER the live masks: a rewritten file's deletion vector
-        // dies with it, so its masked rows must not be resurrected here —
-        // and WITH row ids when the files track them, so surviving rows
-        // keep their identity through the rewrite (an UPDATE changes
-        // values, never identity — Delta row tracking's update semantics)
-        val (scanned, carry) = snap.scanForRewrite(touched)
-        val rewritten = set match {
-          case None => scanned.where(not(hit))
-          case Some(s) => scanned.select((snap.displayFields.map { n =>
-            s.get(n) match {
-              case Some(v) => when(hit, v).otherwise(col(n)).as(n)
-              case None => col(n)
-            }
-          } ++ (if (carry) Seq(col(RidCol)) else Seq.empty)): _*)
-        }
-        Some(commitImpl(spark, rewritten.repartition(touched.size), table,
-          op, None, Some(base), removePaths = Some(touched.map(_.path)),
-          carryRids = carry))
-      }
-    }
-  }
-
-  /** The merge-on-read DML body of [[deleteWhereDv]] (`set` = None) and
-    * [[updateWhereDv]]: mask the matched live positions in fresh per-file
-    * sidecars and commit, in one entry, the masks plus the post-images —
-    * nothing for a delete (a noData commit: no data file moves), the
-    * matched rows with `set` applied for an update. Over the
-    * `graft.probe.maxDriverKeys` cap — this DML's matches or any file's
-    * cumulative mask — it takes [[rewriteWhere]]'s copy-on-write plan
-    * instead. */
-  private def maskWhere(spark: SparkSession, table: String,
-                        predicate: Column, set: Option[Map[String, Column]],
-                        maxAttempts: Int): Option[Long] = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit}
-    val op = if (set.isEmpty) "delete" else "update"
-    val api = s"${op}WhereDv"
-    val cap = graft.plans.ProbePlanner.maxDriverKeys(spark)
-    val lim = (math.min(math.max(cap, 0L), (Int.MaxValue - 2).toLong) + 1).toInt
+  /** The optimistic loop of [[deleteWhere]] (`set` = None) and
+    * [[updateWhere]]: each attempt pins its base, scopes the files by
+    * stats, and plans under that version's write mode — [[maskWhere]]
+    * on a deletion-vector table, [[rewriteWhere]] otherwise. */
+  private def dmlWhere(spark: SparkSession, table: String,
+                       predicate: Column, set: Option[Map[String, Column]],
+                       maxAttempts: Int): Option[Long] = {
+    val api = if (set.isEmpty) "deleteWhere" else "updateWhere"
     transactOn(spark, table, api, maxAttempts) { base =>
       val snap = pinned(spark, table, base)
       if (snap.files.nonEmpty) set.foreach(snap.requireSetColumns(api, _))
       val touched = snap.scoped(predicate)
       if (touched.isEmpty) None
-      else {
-        val f = fs(spark, new Path(table))
-        val byName = touched.map(fm => new Path(fm.path).getName -> fm.path)
-          .toMap
-        require(byName.size == touched.size,
-          s"TxnLake.$api: duplicate data-file names in $table")
-        // an update's appended post-images must carry the pre-images' row
-        // ids (an update never changes a row's identity) — the
-        // id-resolving scan is scanFilesWithRid's, with the (file,
-        // position) coordinates kept (keepMeta) for the prior-mask
-        // anti-join and the fresh-position collect below; the masks
-        // themselves apply HERE, not in the scan, because this path needs
-        // the raw positions first
-        val carry = set.isDefined && touched.forall(_.brid >= 0L)
-        val baseDf =
-          if (carry) scanFilesWithRid(spark, table, touched, snap.schema,
-            Map.empty, snap.ren, keepMeta = true)
-          else toDisplay(spark.read.schema(snap.schema)
-            .parquet(touched.map(fm => new Path(table, fm.path).toString): _*)
-            .withColumn("__graft_dv_fn", col("_metadata.file_name"))
-            .withColumn("__graft_dv_ri", col("_metadata.row_index")), snap.ren)
-        // matching LIVE positions: drop already-masked positions (a row
-        // never double-deletes), keep TRUE
-        val priorRefs = touched.flatMap(fm =>
-          snap.dvs.get(fm.path).map(new Path(fm.path).getName -> _))
-        val live =
-          if (priorRefs.isEmpty) baseDf
-          else baseDf.join(dvPairsDf(spark, table, priorRefs),
-            Seq("__graft_dv_fn", "__graft_dv_ri"), "left_anti")
-        val hit = live.where(coalesce(predicate, lit(false)))
-        val hits = hit.select(col("__graft_dv_fn"), col("__graft_dv_ri"))
-          .limit(lim).collect()
-        lazy val positions: Map[String, Seq[Long]] =
-          hits.groupBy(_.getString(0)).map { case (name, rows) =>
-            val rel = byName(name)
-            val old = snap.dvs.get(rel).map(r =>
-              readDvFile(f, new Path(table, r.path))).getOrElse(Seq.empty)
-            rel -> (old ++ rows.map(_.getLong(1)).toSeq).distinct
-          }
-        // the cap bounds the CUMULATIVE per-file mask, not just this
-        // DML's hits: repeated selective deletes must not grow one file's
-        // sidecar past what the scan machinery budgets for — an over-cap
-        // UNION takes the copy-on-write plan instead, which also retires
-        // that file's mask as a side effect
-        if (hits.length > cap || positions.values.exists(_.size.toLong > cap))
-          rewriteWhere(spark, table, predicate, set, maxAttempts)
-        else if (hits.isEmpty) None
-        else {
-          val salt = java.util.UUID.randomUUID().toString.take(8)
-          val dvDir = new Path(table, s"_dv/$salt")
-          f.mkdirs(dvDir)
-          val newDvs: Map[String, DvRef] = positions.map { case (rel, all) =>
-            val name = new Path(rel).getName
-            writeDvFile(f, new Path(dvDir, s"$name.dv"), all)
-            rel -> DvRef(s"_dv/$salt/$name.dv", all.size.toLong)
-          }
-          // the post-images: the matched live rows with SET applied —
-          // written as the commit's (small) added file, carrying the
-          // pre-images' row ids so identity survives the merge-on-read hop
-          val post = set match {
-            case None => emptyOf(spark, snap.schema) // noData: never written
-            case Some(s) => hit.select((snap.displayFields.map(n =>
-                s.get(n).map(_.as(n)).getOrElse(col(n)))
-              ++ (if (carry) Seq(col(RidCol)) else Seq.empty)): _*)
-              .repartition(1)
-          }
-          // cleanup is scoped to PRE-PUBLISH failures only — a conflict
-          // (the recompute writes a fresh salt dir) or a refused commit
-          // (a CHECK-constraint violation aborts inside commitImpl) must
-          // not orphan sidecars, but once the entry is visible, deleting
-          // the salt dir would take live sidecars with it
-          val v =
-            try commitImpl(spark, post, table, op, None, Some(base),
-              removePaths = Some(Seq.empty), newDvs = newDvs,
-              noData = set.isEmpty, carryRids = carry)
-            catch { case e: Throwable => f.delete(dvDir, true); throw e }
-          // post-publish re-verify (the restore/vacuum pattern): a vacuum
-          // that resolved its orphan set before our entry became visible
-          // may have swept the just-written sidecars; their bytes are a
-          // pure function of the positions we still hold, so recreate —
-          // once the entry is published, any NEW vacuum sees them as live
-          newDvs.foreach { case (rel, ref) =>
-            val p = new Path(table, ref.path)
-            if (!f.exists(p)) {
-              f.mkdirs(p.getParent)
-              writeDvFile(f, p, positions(rel))
-            }
-          }
-          Some(v)
+      else if (snap.entry.dvMode) maskWhere(snap, touched, predicate, set)
+      else Some(rewriteWhere(snap, touched, predicate, set))
+    }
+  }
+
+  /** The copy-on-write DML plan: rewrite `touched` with the TRUE rows
+    * dropped (`set` = None), or with `set` applied to them, and carry
+    * every other file verbatim. It writes at most one file per file it
+    * removes, merged without a shuffle. */
+  private def rewriteWhere(snap: Snapshot, touched: Seq[FileMeta],
+                           predicate: Column,
+                           set: Option[Map[String, Column]]): Long = {
+    import org.apache.spark.sql.functions.{coalesce, col, lit, not, when}
+    val hit = coalesce(predicate, lit(false))
+    // read UNDER the live masks: a rewritten file's deletion vector
+    // dies with it, so its masked rows must not be resurrected here —
+    // and WITH row ids when the files track them, so surviving rows
+    // keep their identity through the rewrite (an UPDATE changes
+    // values, never identity — Delta row tracking's update semantics)
+    val (scanned, carry) = snap.scanForRewrite(touched)
+    val rewritten = set match {
+      case None => scanned.where(not(hit))
+      case Some(s) => scanned.select((snap.displayFields.map { n =>
+        s.get(n) match {
+          case Some(v) => when(hit, v).otherwise(col(n)).as(n)
+          case None => col(n)
         }
+      } ++ (if (carry) Seq(col(RidCol)) else Seq.empty)): _*)
+    }
+    commitImpl(snap.spark, rewritten.coalesce(touched.size), snap.table,
+      if (set.isEmpty) "delete" else "update", None, Some(snap.version),
+      removePaths = Some(touched.map(_.path)), carryRids = carry)
+  }
+
+  /** The merge-on-read DML plan: mask the matched live positions of
+    * `touched` and commit, in one entry, the masks plus the post-images —
+    * nothing for a delete (a noData commit: no data file moves), the
+    * matched rows with `set` applied for an update. Over the
+    * `graft.probe.maxDriverKeys` cap — this DML's matches or any file's
+    * cumulative mask — it takes [[rewriteWhere]]'s plan instead. */
+  private def maskWhere(snap: Snapshot, touched: Seq[FileMeta],
+                        predicate: Column,
+                        set: Option[Map[String, Column]]): Option[Long] = {
+    import org.apache.spark.sql.functions.{coalesce, col, lit}
+    val spark = snap.spark
+    val cap = graft.plans.ProbePlanner.maxDriverKeys(spark)
+    // an update's post-images carry the pre-images' row ids (an update
+    // never changes a row's identity)
+    val carry = set.isDefined && touched.forall(_.brid >= 0L)
+    val hit = positionScan(snap, touched, carry)
+      .where(coalesce(predicate, lit(false)))
+    val hits = hit.select(col("__graft_dv_fn"), col("__graft_dv_ri"))
+      .limit(MergeKeys.capLimit(cap) + 1).collect()
+      .map(r => (r.getString(0), r.getLong(1)))
+    lazy val masks = unionMasks(snap, touched, hits)
+    if (hits.length > cap || masks.values.exists(_.size.toLong > cap))
+      Some(rewriteWhere(snap, touched, predicate, set))
+    else if (hits.isEmpty) None
+    else {
+      // the post-images: the matched live rows with SET applied —
+      // written as the commit's (small) added file
+      val post = set match {
+        case None => emptyOf(spark, snap.schema) // noData: never written
+        case Some(s) => hit.select((snap.displayFields.map(n =>
+            s.get(n).map(_.as(n)).getOrElse(col(n)))
+          ++ (if (carry) Seq(col(RidCol)) else Seq.empty)): _*)
+          .repartition(1)
+      }
+      Some(commitMasks(spark, snap.table, masks)(dvs =>
+        commitImpl(spark, post, snap.table,
+          if (set.isEmpty) "delete" else "update", None, Some(snap.version),
+          removePaths = Some(Seq.empty), newDvs = dvs,
+          noData = set.isEmpty, carryRids = carry)))
+    }
+  }
+
+  /** The live rows of `fms` under the snapshot's masks, with their
+    * (data-file name, row position) coordinates as `__graft_dv_fn` /
+    * `__graft_dv_ri` and, with `withRid`, their row ids — the scan every
+    * merge-on-read writer reads positions from. */
+  private def positionScan(snap: Snapshot, fms: Seq[FileMeta],
+                           withRid: Boolean): DataFrame =
+    if (withRid) scanFilesWithRid(snap.spark, snap.table, fms, snap.schema,
+      snap.dvs, snap.ren, keepMeta = true)
+    else {
+      import org.apache.spark.sql.functions.col
+      val raw = snap.spark.read.schema(snap.schema)
+        .parquet(fms.map(fm => new Path(snap.table, fm.path).toString): _*)
+        .withColumn("__graft_dv_fn", col("_metadata.file_name"))
+        .withColumn("__graft_dv_ri", col("_metadata.row_index"))
+      val prior = fms.flatMap(fm =>
+        snap.dvs.get(fm.path).map(new Path(fm.path).getName -> _))
+      toDisplay(
+        if (prior.isEmpty) raw
+        else raw.join(dvPairsDf(snap.spark, snap.table, prior),
+          Seq("__graft_dv_fn", "__graft_dv_ri"), "left_anti"),
+        snap.ren)
+    }
+
+  /** The full mask of every file of `fms` that `hits` (data-file name,
+    * position) land in — its live sidecar's positions ∪ the new ones —
+    * keyed by table-relative path. */
+  private def unionMasks(snap: Snapshot, fms: Seq[FileMeta],
+                         hits: Seq[(String, Long)]): Map[String, Seq[Long]] = {
+    val byName = fms.map(fm => new Path(fm.path).getName -> fm.path).toMap
+    require(byName.size == fms.size,
+      s"TxnLake: duplicate data-file names in ${snap.table}")
+    val f = fs(snap.spark, new Path(snap.table))
+    hits.groupBy(_._1).map { case (name, hs) =>
+      val rel = byName(name)
+      val old = snap.dvs.get(rel).map(r =>
+        readDvFile(f, new Path(snap.table, r.path))).getOrElse(Seq.empty)
+      rel -> (old ++ hs.map(_._2)).distinct
+    }
+  }
+
+  /** Publish `masks` (data-file path → its full position set) through
+    * `commit`: the sidecars land in a fresh `_dv/<salt>` dir and `commit`
+    * receives their refs. Cleanup is scoped to PRE-PUBLISH failures — a
+    * conflict (the recompute writes a fresh salt dir) or a refused
+    * commit (a CHECK violation) removes the dir, so no sidecar orphans,
+    * while a visible entry's sidecars are never touched. After the
+    * publish, the restore/vacuum re-verify: a vacuum that resolved its
+    * orphan set before the entry became visible may have swept the
+    * sidecars; their bytes are a pure function of the positions still
+    * held, so they are recreated. */
+  private def commitMasks(spark: SparkSession, table: String,
+                          masks: => Map[String, Seq[Long]])
+                         (commit: (=> Map[String, DvRef]) => Long): Long = {
+    val f = fs(spark, new Path(table))
+    val salt = java.util.UUID.randomUUID().toString.take(8)
+    val dvDir = new Path(table, s"_dv/$salt")
+    // resolved once, when the commit asks for the refs (a merge asks
+    // after its data write)
+    lazy val held = masks
+    lazy val refs = held.map { case (rel, all) =>
+      val name = new Path(rel).getName
+      f.mkdirs(dvDir)
+      writeDvFile(f, new Path(dvDir, s"$name.dv"), all)
+      rel -> DvRef(s"_dv/$salt/$name.dv", all.size.toLong)
+    }
+    val v = try commit(refs)
+      catch { case e: Throwable => f.delete(dvDir, true); throw e }
+    held.foreach { case (rel, all) =>
+      val p = new Path(dvDir, s"${new Path(rel).getName}.dv")
+      if (!f.exists(p)) {
+        f.mkdirs(dvDir)
+        writeDvFile(f, p, all)
       }
     }
+    v
   }
 
   /** On-disk byte size of every file in the snapshot, table-relative path
@@ -3994,8 +4179,9 @@ object TxnLake extends LakeFormat {
           // out by rolled-past commits are never reissued after a restore
           ridHwm = math.max(targetEntry.ridHwm, lastEntry.ridHwm),
           // display names restore with their snapshot (era-correct, like
-          // the schema itself)
-          renames = targetEntry.renames)), beforePublish)
+          // the schema itself), and so does the row-level write mode
+          renames = targetEntry.renames,
+          dvMode = targetEntry.dvMode)), beforePublish)
         // Re-verify the target's files AFTER the publish: a vacuum that
         // resolved its live set between our pre-check and this publish may
         // have reclaimed them (the restore/vacuum TOCTOU). Once our entry
@@ -4097,7 +4283,8 @@ object TxnLake extends LakeFormat {
           genCols = latest.genCols,
           identityCols = latest.identityCols,
           ridHwm = latest.ridHwm,
-          renames = latest.renames)))
+          renames = latest.renames,
+          dvMode = latest.dvMode)))
         maybeCheckpoint(spark, f, table, next)
         Some(next)
       }
@@ -4540,6 +4727,28 @@ object TxnLake extends LakeFormat {
         AlterSpec(cur, dropConstraints = Seq(name))
     }
 
+  /** `ALTER TABLE … SET TBLPROPERTIES (delta.enableDeletionVectors = …)`
+    * — the table's row-level write mode, as one metadata-only entry. On
+    * (every new table's default), [[deleteWhere]], [[updateWhere]] and
+    * every MERGE mask the rows they change in deletion vectors and add
+    * only the new rows (merge-on-read); off, they rewrite every file that
+    * holds a changed row (copy-on-write). Live masks stay live either
+    * way: the property decides how LATER writes plan, and any rewrite of
+    * a masked file still folds its mask in. */
+  def setDeletionVectors(spark: SparkSession, table: String,
+                         enabled: Boolean, maxAttempts: Int = 10): Long =
+    alterSchemaWith(spark, table, "setDeletionVectors", maxAttempts) {
+      (cur, _) => AlterSpec(cur, dvMode = Some(enabled))
+    }
+
+  /** Whether the table (at `version`, latest when None) plans row-level
+    * writes with deletion vectors. */
+  private[sources] def deletionVectorsEnabled(spark: SparkSession,
+                                              table: String,
+                                              version: Option[Long] = None)
+      : Boolean =
+    snapshot(spark, table, version).exists(_.entry.dvMode)
+
   /** One ALTER's full outcome: the new schema plus every table-property
     * delta it carries into the metadata commit. */
   private final case class AlterSpec(schema: StructType,
@@ -4556,7 +4765,8 @@ object TxnLake extends LakeFormat {
                                      dropIdentity: Seq[String] = Seq.empty,
                                      addRenames: Map[String, String] =
                                        Map.empty,
-                                     dropRenames: Seq[String] = Seq.empty)
+                                     dropRenames: Seq[String] = Seq.empty,
+                                     dvMode: Option[Boolean] = None)
 
   /** Shared ALTER loop: read the pinned entry's logged schema, let
     * `change` produce (new schema, bloom drops, tombstones), and publish
@@ -4581,7 +4791,8 @@ object TxnLake extends LakeFormat {
         newIdentityCols = spec.addIdentity,
         dropIdentityColNames = spec.dropIdentity,
         newRenames = spec.addRenames,
-        dropRenames = spec.dropRenames))
+        dropRenames = spec.dropRenames,
+        setDvMode = spec.dvMode))
     }.get
 
   // ---- introspection --------------------------------------------------
@@ -4808,7 +5019,8 @@ object TxnLake extends LakeFormat {
       // the clone's files carry their base row ids verbatim, so the
       // source's mark rides too — ids stay stable across a clone
       ridHwm = srcEntry.ridHwm,
-      renames = srcEntry.renames))
+      renames = srcEntry.renames,
+      dvMode = srcEntry.dvMode))
     try publishEntry(f, target, 0L, entry)
     catch { case _: CommitConflict =>
       sys.error(s"TxnLake.cloneTable: a concurrent writer founded $target " +

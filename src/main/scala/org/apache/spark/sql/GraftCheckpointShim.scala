@@ -88,4 +88,12 @@ object GraftCheckpointShim {
         CDataset.ofRows(session, clean)
       case _ => ck
     }
+
+  /** Drop the cached blocks behind a local checkpoint `ck` once nothing
+    * reads it any more (any other plan: nothing to drop). */
+  def release(ck: Dataset[Row]): Unit =
+    ck.queryExecution.logical match {
+      case lr: LogicalRDD => lr.rdd.unpersist(blocking = false)
+      case _ => ()
+    }
 }

@@ -159,7 +159,7 @@ class TxnLakeAlterSpec extends SparkSpec {
     val t = fresh()
     build(t) // two 50-row files
     TxnLake.addConstraint(spark, t, "k_nonneg", "k >= 0")
-    TxnLake.deleteWhereDv(spark, t, col("k") === 60L)
+    TxnLake.deleteWhere(spark, t, col("k") === 60L)
     val d = TxnLake.describeDetail(spark, t)
     assert(d.numFiles == 2 && d.numRows == 99 && d.maskedRows == 1
       && d.deletionVectors == 1 && d.sizeBytes > 0

@@ -23,7 +23,7 @@ class TxnLakeCloneSpec extends SparkSpec {
       TxnLake.commit(spark,
         r.map(i => (i, s"v$i")).toDF("k", "v").coalesce(1), src, "append")
     }
-    TxnLake.deleteWhereDv(spark, src, col("k") === 60L)
+    TxnLake.deleteWhere(spark, src, col("k") === 60L)
   }
 
   private def parquetCount(dir: String): Int = {
@@ -65,7 +65,7 @@ class TxnLakeCloneSpec extends SparkSpec {
       "source commits never appear in the clone")
     // clone DML: the source must not see it, and the clone's own log
     // machinery (stats pruning, DVs, vacuum) works over the references
-    TxnLake.deleteWhereDv(spark, cl, col("k") === 70L)
+    TxnLake.deleteWhere(spark, cl, col("k") === 70L)
     TxnLake.commit(spark,
       Seq((600L, "cl")).toDF("k", "v").coalesce(1), cl, "append")
     assert(!rows(cl).contains(70L) && rows(cl)(600L) == "cl")

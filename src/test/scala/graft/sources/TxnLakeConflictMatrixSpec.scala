@@ -85,7 +85,7 @@ class TxnLakeConflictMatrixSpec extends SparkSpec {
       // agree (deleted rows' updates are moot), so the only acceptable
       // committed-committed state is rows 25..39 with 25..29 updated
       Pair("dv-delete vs merge",
-        t => () => { TxnLake.deleteWhereDv(spark, t, col("k") < 25L); () },
+        t => () => { TxnLake.deleteWhere(spark, t, col("k") < 25L); () },
         t => () => {
           TxnLake.mergeIntoClauses(spark,
             (20L to 29L).map(k => (k, "u")).toDF("k", "v"), t, "k",
@@ -96,7 +96,7 @@ class TxnLakeConflictMatrixSpec extends SparkSpec {
         (a, b) => Set(
           (if (a) base.filter(_._1 >= 25L) else base)
             .pipe(r => if (b) updated(r, 20L, 29L) else r))),
-      // CoW update vs OPTIMIZE: optimize is row-preserving, so the rows
+      // update vs OPTIMIZE: optimize is row-preserving, so the rows
       // depend only on whether the update landed
       Pair("update vs optimize",
         t => () => {
@@ -137,11 +137,14 @@ class TxnLakeConflictMatrixSpec extends SparkSpec {
   /** One writer routed through the optimistic loop: `run(t, n)` drives it
     * with `maxAttempts = n` on a [[found]] table (after `prep`), and
     * `expect` maps the rows the table holds when it starts to the rows
-    * the writer must leave. `dv` writers land `_dv/<salt>` sidecars. */
+    * the writer must leave. `dv` writers land `_dv/<salt>` sidecars;
+    * `cow` writers run on a table with deletion vectors turned off. */
   private case class Writer(api: String, run: (String, Int) => Unit,
                             expect: Seq[(Long, String)] => Seq[(Long, String)],
                             prep: String => Unit = _ => (),
-                            dv: Boolean = false)
+                            dv: Boolean = false, cow: Boolean = false) {
+    def name: String = if (cow) s"$api (copy-on-write)" else api
+  }
 
   private def saltDirs(t: String): Int = {
     val dv = new java.io.File(t, "_dv")
@@ -175,21 +178,35 @@ class TxnLakeConflictMatrixSpec extends SparkSpec {
           maxAttempts = n), identity),
       Writer("deleteWhere",
         (t, n) => TxnLake.deleteWhere(spark, t, col("k") === 5L, n),
-        _.filterNot(_._1 == 5L)),
-      Writer("deleteWhereDv",
-        (t, n) => TxnLake.deleteWhereDv(spark, t, col("k") === 5L, n),
+        _.filterNot(_._1 == 5L), cow = true),
+      Writer("deleteWhere",
+        (t, n) => TxnLake.deleteWhere(spark, t, col("k") === 5L, n),
         _.filterNot(_._1 == 5L), dv = true),
       Writer("updateWhere",
         (t, n) => TxnLake.updateWhere(spark, t, col("k") === 5L,
           Map("v" -> lit("u")), n),
-        updated(_, 5L, 5L)),
-      Writer("updateWhereDv",
-        (t, n) => TxnLake.updateWhereDv(spark, t, col("k") === 5L,
+        updated(_, 5L, 5L), cow = true),
+      Writer("updateWhere",
+        (t, n) => TxnLake.updateWhere(spark, t, col("k") === 5L,
           Map("v" -> lit("u")), n),
         updated(_, 5L, 5L), dv = true),
+      // a merge-on-read MERGE: masks k = 5 and 6, adds the post-image of
+      // 5 and the insert of 3000 in one commit
+      Writer("mergeIntoClauses",
+        (t, n) => TxnLake.mergeIntoClauses(spark,
+          Seq((5L, "u", "U"), (6L, "", "D"), (3000L, "n", "U"))
+            .toDF("k", "v", "op"), t, "k",
+          matched = Seq(
+            TxnLake.MergeDelete(Some(TxnLake.sourceCol("op") === "D")),
+            TxnLake.MergeUpdate(Map("v" -> TxnLake.sourceCol("v")))),
+          notMatched = Seq(TxnLake.MergeInsert(
+            Map("k" -> col("k"), "v" -> col("v")))),
+          maxAttempts = n),
+        rows => (updated(rows, 5L, 5L).filterNot(_._1 == 6L) :+
+          ((3000L, "n"))).sortBy(_._1), dv = true),
       Writer("purgeDeletionVectors",
         (t, n) => TxnLake.purgeDeletionVectors(spark, t, n),
-        identity, prep = t => TxnLake.deleteWhereDv(spark, t, col("k") === 7L)),
+        identity, prep = t => TxnLake.deleteWhere(spark, t, col("k") === 7L)),
       Writer("addColumn",
         (t, n) => TxnLake.addColumn(spark, t, "extra",
           org.apache.spark.sql.types.StringType, n), identity),
@@ -199,9 +216,13 @@ class TxnLakeConflictMatrixSpec extends SparkSpec {
       Writer("restore", (t, n) => TxnLake.restore(spark, t, 0L, n),
         _ => base.take(20)))
     writers.foreach { w =>
+      def setUp(t: String): Unit = {
+        found(t)
+        if (w.cow) TxnLake.setDeletionVectors(spark, t, enabled = false)
+        w.prep(t)
+      }
       val t = fresh()
-      found(t)
-      w.prep(t)
+      setUp(t)
       val pre = rowsOf(t)
       var racer = -1L
       var attempts = 0
@@ -211,33 +232,32 @@ class TxnLakeConflictMatrixSpec extends SparkSpec {
       } { w.run(t, 10) }
       assert(attempts == 2 &&
         TxnLake.latestVersion(spark, t).contains(racer + 1),
-        s"[${w.api}] must conflict once and recompute on top of the " +
+        s"[${w.name}] must conflict once and recompute on top of the " +
           s"racer (attempts=$attempts, racer=v$racer, " +
           s"latest=${TxnLake.latestVersion(spark, t)})")
       assert(rowsOf(t) == w.expect((pre :+ race).sortBy(_._1)),
-        s"[${w.api}] lost or mangled rows: ${rowsOf(t).take(8)}…")
+        s"[${w.name}] lost or mangled rows: ${rowsOf(t).take(8)}…")
       assert(TxnLake.readVersion(spark, t, racer).collect().length ==
-        pre.size + 1, s"[${w.api}] the racer's commit must stay in history")
+        pre.size + 1, s"[${w.name}] the racer's commit must stay in history")
       val entry = new com.fasterxml.jackson.databind.ObjectMapper().readTree(
         Files.readString(java.nio.file.Paths.get(t, "_txn_log",
           s"v${racer + 1}.json")))
       assert(Seq("protocol", "ts", "schema", "txns").forall(entry.has) &&
         entry.get("protocol").get("reader").asInt() == 2,
-        s"[${w.api}] its entry must carry the protocol-2 state: $entry")
+        s"[${w.name}] its entry must carry the protocol-2 state: $entry")
       if (w.dv) assert(saltDirs(t) == 1,
-        s"[${w.api}] the conflicted attempt's sidecars must be removed")
+        s"[${w.name}] the conflicted attempt's sidecars must be removed")
 
       val t2 = fresh()
-      found(t2)
-      w.prep(t2)
+      setUp(t2)
       val dvBefore = saltDirs(t2)
       val e = intercept[java.util.ConcurrentModificationException] {
         TxnLake.withBeforeCommit(() => { append(t2); () }) { w.run(t2, 2) }
       }
       assert(e.getMessage.contains(s"TxnLake.${w.api}:") &&
-        e.getMessage.contains(t2), s"[${w.api}] ${e.getMessage}")
+        e.getMessage.contains(t2), s"[${w.name}] ${e.getMessage}")
       assert(saltDirs(t2) == dvBefore,
-        s"[${w.api}] an exhausted writer must leave no sidecar dir behind")
+        s"[${w.name}] an exhausted writer must leave no sidecar dir behind")
     }
   }
 

@@ -69,10 +69,10 @@ class TxnLakeConstraintSpec extends SparkSpec {
       if (!d.exists()) 0 else d.listFiles().count(_.isDirectory)
     }
     // a passing DV update leaves exactly its own salt dir
-    TxnLake.updateWhereDv(spark, t, col("k") === 1L, Map("n" -> lit(7L)))
+    TxnLake.updateWhere(spark, t, col("k") === 1L, Map("n" -> lit(7L)))
     val live = saltDirs()
     val e = intercept[IllegalStateException] {
-      TxnLake.updateWhereDv(spark, t, col("k") === 2L,
+      TxnLake.updateWhere(spark, t, col("k") === 2L,
         Map("n" -> lit(5000L)))
     }
     assert(e.getMessage.contains("n_small"))

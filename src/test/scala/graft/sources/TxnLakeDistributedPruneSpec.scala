@@ -90,7 +90,7 @@ class TxnLakeDistributedPruneSpec extends SparkSpec {
     val t = fresh()
     build(t)
     TxnLake.renameColumn(spark, t, "k", "key")
-    TxnLake.deleteWhereDv(spark, t, col("key") === 110L)
+    TxnLake.deleteWhere(spark, t, col("key") === 110L)
     val pred = col("key") >= 100L && col("key") < 150L
     val (dfDriver, cDriver) = TxnLake.readWherePruned(spark, t, pred)
     assert(!TxnLake.lastPruneDistributed)

@@ -24,6 +24,11 @@ class TxnLakeDmlSpec extends SparkSpec {
       t, "append")
   }
 
+  /** Turn deletion vectors off: the specs that pin copy-on-write file
+    * layout (removed files, carried files) run on such a table. */
+  private def copyOnWrite(t: String): Unit =
+    TxnLake.setDeletionVectors(spark, t, enabled = false)
+
   /** Jobs `f` submits, counted by a listener once the bus drains. */
   private def jobsOf[T](f: => T): (T, Seq[String]) = {
     val sc = spark.sparkContext
@@ -49,6 +54,7 @@ class TxnLakeDmlSpec extends SparkSpec {
     import spark.implicits._
     val t = freshTable()
     twoFileTable(t)
+    copyOnWrite(t)
     val preV = TxnLake.latestVersion(spark, t).get
     val preFiles = TxnLake.snapshotFiles(spark, t).map(_.path).toSet
     // keys 60..62 live in file 2 only; 100..101 are inserts
@@ -143,6 +149,7 @@ class TxnLakeDmlSpec extends SparkSpec {
     TxnLake.commit(spark,
       Seq((100L, Option(100L)), (101L, Option(200L)))
         .toDF("k", "n").coalesce(1), t, "append")
+    copyOnWrite(t)
     val preV = TxnLake.latestVersion(spark, t).get
     val preFiles = TxnLake.snapshotFiles(spark, t).map(_.path).toSet
     // predicate touches only the low-k file; n IS NULL evaluates the
@@ -193,6 +200,7 @@ class TxnLakeDmlSpec extends SparkSpec {
     import spark.implicits._
     val t = freshTable()
     twoFileTable(t)
+    copyOnWrite(t)
     val preV = TxnLake.latestVersion(spark, t).get
     val preFiles = TxnLake.snapshotFiles(spark, t).map(_.path).toSet
     // a change batch with tombstones: D kills 60..61, U rewrites 62,
@@ -227,6 +235,7 @@ class TxnLakeDmlSpec extends SparkSpec {
     import spark.implicits._
     val t = freshTable()
     threeFileTable(t)
+    copyOnWrite(t)
     val preV = TxnLake.latestVersion(spark, t).get
     val preFiles = TxnLake.snapshotFiles(spark, t).map(_.path).toSet
     // source covers 0..49 with IDENTICAL values: the conditional update
@@ -380,6 +389,7 @@ class TxnLakeDmlSpec extends SparkSpec {
     import spark.implicits._
     val t1 = freshTable(); val t2 = freshTable()
     twoFileTable(t1); twoFileTable(t2)
+    copyOnWrite(t1); copyOnWrite(t2)
     val delta = Seq((60L, "U60"), (61L, "U61"), (62L, "U62"),
       (100L, "I100")).toDF("k", "v")
     val v1 = TxnLake.mergeInto(spark, delta, t1, "k") // pruned path
@@ -449,6 +459,7 @@ class TxnLakeDmlSpec extends SparkSpec {
     import spark.implicits._
     val t = freshTable()
     twoFileTable(t)
+    copyOnWrite(t)
     spark.conf.set("graft.probe.maxDriverKeys", Long.MaxValue.toString)
     try {
       val preFiles = TxnLake.snapshotFiles(spark, t).map(_.path).toSet
@@ -617,6 +628,7 @@ class TxnLakeDmlSpec extends SparkSpec {
     import spark.implicits._
     val t = freshTable()
     twoFileTable(t)
+    copyOnWrite(t)
     val preV = TxnLake.latestVersion(spark, t).get
     // default: unknown column refused loudly
     intercept[IllegalArgumentException] {

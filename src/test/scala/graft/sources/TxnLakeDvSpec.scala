@@ -32,7 +32,7 @@ class TxnLakeDvSpec extends SparkSpec {
     twoFileTable(t)
     val preV = TxnLake.latestVersion(spark, t).get
     val preFiles = TxnLake.snapshotFiles(spark, t).map(_.path).toSet
-    val v = TxnLake.deleteWhereDv(spark, t,
+    val v = TxnLake.deleteWhere(spark, t,
       col("k") >= 60L && col("k") <= 62L).get
     assert(TxnLake.commitInfo(spark, t, v).operation == "delete")
     // the whole point: NOTHING moved — same physical files, no additions
@@ -49,12 +49,12 @@ class TxnLakeDvSpec extends SparkSpec {
     // the pre-delete snapshot still sees all rows
     assert(TxnLake.readVersion(spark, t, preV).count() == 100)
     // a second DV delete UNIONS positions on the same sidecar's file
-    TxnLake.deleteWhereDv(spark, t, col("k") === 63L)
+    TxnLake.deleteWhere(spark, t, col("k") === 63L)
     assert(TxnLake.deletionVectors(spark, t).values.head.rows == 4L)
     assert(keys(t).size == 96 && !keys(t).contains(63L))
     // the masked rows never double-delete: an overlapping re-delete
     // finds no live row and is a no-op
-    assert(TxnLake.deleteWhereDv(spark, t,
+    assert(TxnLake.deleteWhere(spark, t,
       col("k") >= 60L && col("k") <= 63L).isEmpty)
   }
 
@@ -64,9 +64,9 @@ class TxnLakeDvSpec extends SparkSpec {
     val t = freshTable()
     twoFileTable(t)
     val v0 = TxnLake.latestVersion(spark, t).get
-    val v1 = TxnLake.deleteWhereDv(spark, t,
+    val v1 = TxnLake.deleteWhere(spark, t,
       col("k") >= 60L && col("k") <= 61L).get
-    val v2 = TxnLake.deleteWhereDv(spark, t, col("k") === 10L).get
+    val v2 = TxnLake.deleteWhere(spark, t, col("k") === 10L).get
     val hop1 = TxnLake.tableChanges(spark, t, v0, v1, "k").collect()
     assert(hop1.map(_.getLong(0)).toSet == Set(60L, 61L)
       && hop1.forall(_.getAs[String]("change_type") == "delete"))
@@ -80,7 +80,8 @@ class TxnLakeDvSpec extends SparkSpec {
     import spark.implicits._
     val t = freshTable()
     twoFileTable(t)
-    TxnLake.deleteWhereDv(spark, t, col("k") === 60L)
+    TxnLake.deleteWhere(spark, t, col("k") === 60L)
+    TxnLake.setDeletionVectors(spark, t, enabled = false)
     // update touches the masked file: the rewrite must read UNDER the mask
     TxnLake.updateWhere(spark, t, col("k") === 70L,
       Map("v" -> lit("UPD")))
@@ -92,7 +93,8 @@ class TxnLakeDvSpec extends SparkSpec {
       "the masked row must not resurrect through the rewrite")
     // a merge whose delta carries the deleted key re-INSERTS it (the row
     // is logically gone, so it is NOT MATCHED — Delta semantics)
-    TxnLake.deleteWhereDv(spark, t, col("k") === 20L)
+    TxnLake.setDeletionVectors(spark, t, enabled = true)
+    TxnLake.deleteWhere(spark, t, col("k") === 20L)
     TxnLake.mergeInto(spark, Seq((20L, "BACK")).toDF("k", "v"), t, "k")
     val after = TxnLake.read(spark, t).collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
@@ -105,7 +107,7 @@ class TxnLakeDvSpec extends SparkSpec {
     import spark.implicits._
     val t = freshTable()
     twoFileTable(t)
-    TxnLake.deleteWhereDv(spark, t, col("k") === 60L)
+    TxnLake.deleteWhere(spark, t, col("k") === 60L)
     val preFiles = TxnLake.snapshotFiles(spark, t).map(_.path).toSet
     val preKeys = keys(t)
     val v = TxnLake.purgeDeletionVectors(spark, t).get
@@ -127,7 +129,7 @@ class TxnLakeDvSpec extends SparkSpec {
     spark.conf.set("graft.probe.maxDriverKeys", "2")
     try {
       val preFiles = TxnLake.snapshotFiles(spark, t).map(_.path).toSet
-      TxnLake.deleteWhereDv(spark, t, col("k") >= 60L && col("k") <= 69L)
+      TxnLake.deleteWhere(spark, t, col("k") >= 60L && col("k") <= 69L)
       assert(TxnLake.deletionVectors(spark, t).isEmpty,
         "past the cap the plan is copy-on-write, not a giant mask")
       assert((preFiles -- TxnLake.snapshotFiles(spark, t).map(_.path).toSet)
@@ -141,7 +143,7 @@ class TxnLakeDvSpec extends SparkSpec {
     import spark.implicits._
     val t = freshTable()
     twoFileTable(t)
-    val vDv = TxnLake.deleteWhereDv(spark, t, col("k") === 60L).get
+    val vDv = TxnLake.deleteWhere(spark, t, col("k") === 60L).get
     TxnLake.purgeDeletionVectors(spark, t)
     assert(TxnLake.deletionVectors(spark, t).isEmpty)
     val vBack = TxnLake.restore(spark, t, vDv)
@@ -170,7 +172,7 @@ class TxnLakeDvSpec extends SparkSpec {
     import spark.implicits._
     val t = freshTable()
     twoFileTable(t)
-    val vDv = TxnLake.deleteWhereDv(spark, t, col("k") === 60L).get
+    val vDv = TxnLake.deleteWhere(spark, t, col("k") === 60L).get
     TxnLake.purgeDeletionVectors(spark, t)
     TxnLake.vacuum(spark, t, retainVersions = 1) // reclaims the sidecar
     val e = intercept[IllegalStateException] {
@@ -189,12 +191,12 @@ class TxnLakeDvSpec extends SparkSpec {
     twoFileTable(t)
     spark.conf.set("graft.probe.maxDriverKeys", "3")
     try {
-      TxnLake.deleteWhereDv(spark, t, col("k") >= 60L && col("k") <= 61L)
+      TxnLake.deleteWhere(spark, t, col("k") >= 60L && col("k") <= 61L)
       assert(TxnLake.deletionVectors(spark, t).values.map(_.rows).sum == 2L)
       val preFiles = TxnLake.snapshotFiles(spark, t).map(_.path).toSet
       // 2 fresh hits pass the per-delete check, but old(2) ∪ new(2) = 4
       // breaks the per-file budget — the plan must flip to copy-on-write
-      TxnLake.deleteWhereDv(spark, t, col("k") >= 62L && col("k") <= 63L)
+      TxnLake.deleteWhere(spark, t, col("k") >= 62L && col("k") <= 63L)
       assert(TxnLake.deletionVectors(spark, t).isEmpty,
         "an over-cap UNION must not write an over-cap sidecar")
       assert((preFiles -- TxnLake.snapshotFiles(spark, t).map(_.path).toSet)
@@ -218,7 +220,7 @@ class TxnLakeDvSpec extends SparkSpec {
       // per-file union is under the cap, but the TOTAL (5) is over it,
       // so every subsequent scan must take the distributed decode path
       (0 until 5).foreach(i =>
-        TxnLake.deleteWhereDv(spark, t, col("k") === i * 20L + 7L))
+        TxnLake.deleteWhere(spark, t, col("k") === i * 20L + 7L))
       assert(TxnLake.deletionVectors(spark, t).size == 5)
       assert(keys(t).size == 95 && !keys(t).contains(47L))
       assert(TxnLake.readWhere(spark, t, col("k") >= 40L).count() == 57,
@@ -239,7 +241,7 @@ class TxnLakeDvSpec extends SparkSpec {
     twoFileTable(t)
     val preV = TxnLake.latestVersion(spark, t).get
     val preFiles = TxnLake.snapshotFiles(spark, t).map(_.path).toSet
-    val v = TxnLake.updateWhereDv(spark, t,
+    val v = TxnLake.updateWhere(spark, t,
       col("k") >= 60L && col("k") <= 62L,
       Map("v" -> concat(col("v"), lit("!")))).get
     assert(TxnLake.commitInfo(spark, t, v).operation == "update")
@@ -267,8 +269,8 @@ class TxnLakeDvSpec extends SparkSpec {
       Map(60L -> "v60!", 61L -> "v61!", 62L -> "v62!"))
     // a DV DELETE then a second DV UPDATE union masks on the same file;
     // the update must not touch already-deleted rows
-    TxnLake.deleteWhereDv(spark, t, col("k") === 63L)
-    TxnLake.updateWhereDv(spark, t, col("k") >= 63L && col("k") <= 64L,
+    TxnLake.deleteWhere(spark, t, col("k") === 63L)
+    TxnLake.updateWhere(spark, t, col("k") >= 63L && col("k") <= 64L,
       Map("v" -> lit("Z")))
     val after = TxnLake.read(spark, t).collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
@@ -281,7 +283,7 @@ class TxnLakeDvSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(purged == after)
     // provable no-op: stats admit nothing
-    assert(TxnLake.updateWhereDv(spark, t, col("k") === 5000L,
+    assert(TxnLake.updateWhere(spark, t, col("k") === 5000L,
       Map("v" -> lit("X"))).isEmpty)
   }
 
@@ -292,7 +294,7 @@ class TxnLakeDvSpec extends SparkSpec {
     twoFileTable(t)
     spark.conf.set("graft.probe.maxDriverKeys", "2")
     try {
-      TxnLake.updateWhereDv(spark, t, col("k") >= 60L && col("k") <= 69L,
+      TxnLake.updateWhere(spark, t, col("k") >= 60L && col("k") <= 69L,
         Map("v" -> lit("U")))
       assert(TxnLake.deletionVectors(spark, t).isEmpty,
         "past the cap the plan is copy-on-write, not a giant mask")
@@ -309,7 +311,7 @@ class TxnLakeDvSpec extends SparkSpec {
     TxnLake.commit(spark,
       Seq((1L, Option(5L)), (2L, Option.empty[Long]), (3L, Option(20L)))
         .toDF("k", "n").coalesce(1), t, "append")
-    TxnLake.updateWhereDv(spark, t, col("n") > 10L, Map("n" -> lit(0L)))
+    TxnLake.updateWhere(spark, t, col("n") > 10L, Map("n" -> lit(0L)))
     val got = TxnLake.read(spark, t).collect()
       .map(r => r.getLong(0) -> Option(r.get(1)).map(_.toString)).toMap
     assert(got == Map(1L -> Some("5"), 2L -> None, 3L -> Some("0")),
@@ -320,11 +322,11 @@ class TxnLakeDvSpec extends SparkSpec {
     "the file scan — the plan that stays affordable at 100 TB") {
     val t = freshTable()
     twoFileTable(t)
-    TxnLake.deleteWhereDv(spark, t, col("k") === 60L)
+    TxnLake.deleteWhere(spark, t, col("k") === 60L)
     assert(graft.plans.PlanChecks.shuffleFree(TxnLake.read(spark, t)),
       "a driver-budget mask must anti-join as a broadcast, never a " +
         "shuffle of the data files")
-    TxnLake.updateWhereDv(spark, t, col("k") === 61L,
+    TxnLake.updateWhere(spark, t, col("k") === 61L,
       Map("v" -> lit("U")))
     assert(graft.plans.PlanChecks.shuffleFree(TxnLake.read(spark, t)),
       "the DV-update read (masks + appended post-images) stays " +
@@ -337,7 +339,7 @@ class TxnLakeDvSpec extends SparkSpec {
     TxnLake.commit(spark,
       Seq((1L, Option(5L)), (2L, Option.empty[Long]), (3L, Option(20L)))
         .toDF("k", "n").coalesce(1), t, "append")
-    TxnLake.deleteWhereDv(spark, t, col("n") > 10L)
+    TxnLake.deleteWhere(spark, t, col("n") > 10L)
     assert(keys(t) == Set(1L, 2L),
       "the NULL-n row must survive — only TRUE deletes")
   }
@@ -356,7 +358,7 @@ class TxnLakeDvSpec extends SparkSpec {
     // 12 selective DV deletes, one file each: the LIVE map grows to 12
     // masked files while each entry must stay O(this commit)
     (0 until 12).foreach { i =>
-      TxnLake.deleteWhereDv(spark, t, col("k") === i * 100L)
+      TxnLake.deleteWhere(spark, t, col("k") === i * 100L)
     }
     def rawDvCount(v: Long): Int = {
       val txt = new String(java.nio.file.Files.readAllBytes(
@@ -404,8 +406,8 @@ class TxnLakeDvSpec extends SparkSpec {
             .coalesce(1), t, "append")
       }
       // two prior DV deltas so resolveDvs has a real tail to replay
-      TxnLake.deleteWhereDv(spark, t, col("k") === 1L)
-      TxnLake.deleteWhereDv(spark, t, col("k") === 51L)
+      TxnLake.deleteWhere(spark, t, col("k") === 1L)
+      TxnLake.deleteWhere(spark, t, col("k") === 51L)
       t
     }
     val tOne = build()
@@ -417,20 +419,166 @@ class TxnLakeDvSpec extends SparkSpec {
     }
     // k === 103: min/max stats prune to ONE touched file
     val one = reads(assert(
-      TxnLake.deleteWhereDv(spark, tOne, col("k") === 103L).nonEmpty))
+      TxnLake.deleteWhere(spark, tOne, col("k") === 103L).nonEmpty))
     // k % 50 === 3: stats cannot prune a modulo — EVERY file is touched
     val all = reads(assert(
-      TxnLake.deleteWhereDv(spark, tAll, col("k") % 50L === 3L).nonEmpty))
+      TxnLake.deleteWhere(spark, tAll, col("k") % 50L === 3L).nonEmpty))
     assert(all == one,
       s"log-entry reads must not scale with touched files: " +
         s"1-file delete read $one entries, 8-file delete read $all")
     // same invariant on the DV update path
-    val oneU = reads(assert(TxnLake.updateWhereDv(spark, tOne,
+    val oneU = reads(assert(TxnLake.updateWhere(spark, tOne,
       col("k") === 104L, Map("v" -> lit("u"))).nonEmpty))
-    val allU = reads(assert(TxnLake.updateWhereDv(spark, tAll,
+    val allU = reads(assert(TxnLake.updateWhere(spark, tAll,
       col("k") % 50L === 4L, Map("v" -> lit("u"))).nonEmpty))
     assert(allU == oneU,
-      s"updateWhereDv log reads must not scale with touched files: " +
+      s"a DV updateWhere's log reads must not scale with touched files: " +
         s"$oneU vs $allU")
+  }
+
+  /** The CDC batch the merge tests apply: D kills 60 and 61, U rewrites
+    * 62, I inserts 100; the D-tagged unmatched 101 must not insert. */
+  private def cdcMerge(t: String): Option[Long] = {
+    import spark.implicits._
+    TxnLake.mergeIntoClauses(spark,
+      Seq((60L, "x", "D"), (61L, "x", "D"), (62L, "U62", "U"),
+        (100L, "I100", "U"), (101L, "x", "D")).toDF("k", "v", "op"), t, "k",
+      matched = Seq(
+        TxnLake.MergeDelete(Some(TxnLake.sourceCol("op") === "D")),
+        TxnLake.MergeUpdate(Map("v" -> TxnLake.sourceCol("v")))),
+      notMatched = Seq(TxnLake.MergeInsert(
+        Map("k" -> col("k"), "v" -> col("v")), Some(col("op") =!= "D"))))
+  }
+
+  private def rowsOf(t: String): Map[Long, String] =
+    TxnLake.read(spark, t).collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+
+  test("a DV MERGE removes no file: one commit masks the deleted and " +
+    "updated rows, adds one file of post-images and inserts, keeps the " +
+    "updated row's id, and the change feed classifies every row") {
+    val t = freshTable()
+    twoFileTable(t)
+    assert(TxnLake.deletionVectorsEnabled(spark, t),
+      "a new table plans row-level writes with deletion vectors")
+    val preV = TxnLake.latestVersion(spark, t).get
+    val preFiles = TxnLake.snapshotFiles(spark, t).map(_.path).toSet
+    val id62 = TxnLake.readWithRowIds(spark, t).filter(col("k") === 62L)
+      .head().getAs[Long](TxnLake.RidCol)
+    val v = cdcMerge(t).get
+    val postFiles = TxnLake.snapshotFiles(spark, t).map(_.path).toSet
+    assert((preFiles -- postFiles).isEmpty && (postFiles -- preFiles).size == 1,
+      s"no file moves; one file adds: $preFiles -> $postFiles")
+    val dvs = TxnLake.deletionVectors(spark, t)
+    assert(dvs.size == 1 && dvs.values.head.rows == 3L,
+      s"60, 61 and 62's old image are masked in the high file: $dvs")
+    val got = rowsOf(t)
+    assert(got.size == 99 && !got.contains(60L) && !got.contains(61L) &&
+      got(62L) == "U62" && got(100L) == "I100" && !got.contains(101L))
+    assert(rowsOf(t) == TxnLake.readVersion(spark, t, v).collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap)
+    assert(TxnLake.readVersion(spark, t, preV).count() == 100,
+      "the pre-merge version is intact")
+    assert(TxnLake.readWithRowIds(spark, t).filter(col("k") === 62L)
+      .head().getAs[Long](TxnLake.RidCol) == id62,
+      "the post-image carries its pre-image's row id")
+    val hop = TxnLake.tableChanges(spark, t, preV, v, "k").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getAs[String]("change_type")))
+      .toSet
+    assert(hop == Set((60L, "v60", "delete"), (61L, "v61", "delete"),
+      (62L, "v62", "update_preimage"), (62L, "U62", "update_postimage"),
+      (100L, "I100", "insert")), s"hop: $hop")
+    val byRid = TxnLake.tableChangesByRowId(spark, t, preV, v)
+      .filter(col("k") === 62L).select(TxnLake.RidCol).distinct().count()
+    assert(byRid == 1L, "the update pairs by row identity")
+  }
+
+  test("a DV MERGE over graft.probe.maxDriverKeys takes copy-on-write " +
+    "with identical rows") {
+    val (dv, capped) = (freshTable(), freshTable())
+    twoFileTable(dv); twoFileTable(capped)
+    cdcMerge(dv)
+    spark.conf.set("graft.probe.maxDriverKeys", "2")
+    try {
+      val preFiles = TxnLake.snapshotFiles(spark, capped).map(_.path).toSet
+      cdcMerge(capped)
+      assert(TxnLake.deletionVectors(spark, capped).isEmpty &&
+        (preFiles -- TxnLake.snapshotFiles(spark, capped).map(_.path).toSet)
+          .nonEmpty, "over the key cap the merge rewrites its files")
+    } finally spark.conf.unset("graft.probe.maxDriverKeys")
+    assert(rowsOf(capped) == rowsOf(dv))
+  }
+
+  test("a DV MERGE whose cumulative mask would pass the cap takes " +
+    "copy-on-write, retires the mask, and leaves identical rows") {
+    val (dv, capped) = (freshTable(), freshTable())
+    twoFileTable(dv); twoFileTable(capped)
+    Seq(dv, capped).foreach(TxnLake.deleteWhere(spark, _,
+      col("k") >= 70L && col("k") <= 72L))
+    cdcMerge(dv)
+    assert(TxnLake.deletionVectors(spark, dv).values.map(_.rows).sum == 6L,
+      "uncapped: the merge unions its 3 positions into the 3-position mask")
+    // the 5 source keys and 3 new positions fit the cap; the 6-position
+    // union does not
+    spark.conf.set("graft.probe.maxDriverKeys", "5")
+    try {
+      val preFiles = TxnLake.snapshotFiles(spark, capped).map(_.path).toSet
+      cdcMerge(capped)
+      assert(TxnLake.deletionVectors(spark, capped).isEmpty &&
+        (preFiles -- TxnLake.snapshotFiles(spark, capped).map(_.path).toSet)
+          .size == 1, "the masked file rewrites, and its mask dies with it")
+    } finally spark.conf.unset("graft.probe.maxDriverKeys")
+    assert(rowsOf(capped) == rowsOf(dv))
+  }
+
+  test("the deletionVectors property: on for new tables, off when an " +
+    "entry lacks it, flipped by the ALTER, copied by clone, restored by " +
+    "restore") {
+    val t = freshTable()
+    twoFileTable(t)
+    val on = TxnLake.latestVersion(spark, t).get
+    val offV = TxnLake.setDeletionVectors(spark, t, enabled = false)
+    assert(!TxnLake.deletionVectorsEnabled(spark, t) &&
+      TxnLake.deletionVectorsEnabled(spark, t, Some(on)))
+    // off: the delete rewrites the touched file
+    val pre = TxnLake.snapshotFiles(spark, t).map(_.path).toSet
+    TxnLake.deleteWhere(spark, t, col("k") === 60L)
+    assert((pre -- TxnLake.snapshotFiles(spark, t).map(_.path).toSet).size == 1
+      && TxnLake.deletionVectors(spark, t).isEmpty)
+    val cloneOff = freshTable()
+    TxnLake.cloneTable(spark, t, cloneOff)
+    assert(!TxnLake.deletionVectorsEnabled(spark, cloneOff))
+    val cloneOn = freshTable()
+    TxnLake.cloneTable(spark, t, cloneOn, shallow = false, version = Some(on))
+    assert(TxnLake.deletionVectorsEnabled(spark, cloneOn))
+    // restore brings the version's mode back with its metadata
+    TxnLake.restore(spark, t, on)
+    assert(TxnLake.deletionVectorsEnabled(spark, t))
+    TxnLake.restore(spark, t, offV)
+    assert(!TxnLake.deletionVectorsEnabled(spark, t))
+    // on again: the delete masks and moves no file
+    TxnLake.setDeletionVectors(spark, t, enabled = true)
+    val pre2 = TxnLake.snapshotFiles(spark, t).map(_.path).toSet
+    TxnLake.deleteWhere(spark, t, col("k") === 61L)
+    assert(TxnLake.snapshotFiles(spark, t).map(_.path).toSet == pre2 &&
+      TxnLake.deletionVectors(spark, t).size == 1)
+    // an entry without the property reads as off (Delta: missing = false)
+    val legacy = freshTable()
+    twoFileTable(legacy)
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val last = TxnLake.latestVersion(spark, legacy).get
+    val entry = java.nio.file.Paths.get(legacy, "_txn_log", s"v$last.json")
+    val node = mapper.readTree(Files.readString(entry))
+      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    assert(node.get("deletionVectors").asBoolean())
+    node.remove("deletionVectors")
+    Files.writeString(entry, mapper.writeValueAsString(node))
+    Files.setLastModifiedTime(entry,
+      java.nio.file.attribute.FileTime.fromMillis(1000L))
+    assert(!TxnLake.deletionVectorsEnabled(spark, legacy))
+    val preL = TxnLake.snapshotFiles(spark, legacy).map(_.path).toSet
+    TxnLake.deleteWhere(spark, legacy, col("k") === 5L)
+    assert((preL -- TxnLake.snapshotFiles(spark, legacy).map(_.path).toSet)
+      .size == 1, "a table without the property plans copy-on-write")
   }
 }

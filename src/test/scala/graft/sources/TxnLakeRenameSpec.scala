@@ -122,8 +122,8 @@ class TxnLakeRenameSpec extends SparkSpec {
     assert(rids() == ids0 - 5L, "rename-era rewrites must carry row ids")
     assert(TxnLake.read(spark, t).filter(col("v") === "u").count() == 1)
     // DV delete + DV update under the display predicate
-    TxnLake.deleteWhereDv(spark, t, col("key") === 6L)
-    TxnLake.updateWhereDv(spark, t, col("key") === 7L,
+    TxnLake.deleteWhere(spark, t, col("key") === 6L)
+    TxnLake.updateWhere(spark, t, col("key") === 7L,
       Map("v" -> lit("dv")))
     assert(rids() == ids0 - 5L - 6L)
     assert(TxnLake.read(spark, t).filter(col("key") === 7L)

@@ -86,7 +86,7 @@ class TxnLakeRowTrackingSpec extends SparkSpec {
     TxnLake.compactSmallFiles(spark, t, minFileBytes = 1L << 30)
     assert(rids(t) == afterDel, "compaction must preserve every id")
     // DV delete then purge: both preserve ids
-    TxnLake.deleteWhereDv(spark, t, col("k") === 30L)
+    TxnLake.deleteWhere(spark, t, col("k") === 30L)
     val afterDv = rids(t)
     assert(afterDv == afterDel - 30L,
       "a DV delete must not shift surviving ids")
@@ -109,7 +109,7 @@ class TxnLakeRowTrackingSpec extends SparkSpec {
       (0L until 20L).map(i => (i, s"v$i")).toDF("k", "v").coalesce(1),
       t, "append")
     val before = rids(t)
-    TxnLake.updateWhereDv(spark, t, col("k") === 7L, Map("v" -> lit("dv")))
+    TxnLake.updateWhere(spark, t, col("k") === 7L, Map("v" -> lit("dv")))
     val afterDvU = rids(t)
     assert(afterDvU == before,
       "a merge-on-read UPDATE must keep the updated row's id")
@@ -222,7 +222,7 @@ class TxnLakeRowTrackingSpec extends SparkSpec {
       s"both images must carry the SAME row id: $pair")
     assert(pair.map(_._3).sorted.toSeq == Seq(3L, 300L))
     // v2: DV delete — the delete row carries its id
-    TxnLake.deleteWhereDv(spark, t, col("k") === 7L)
+    TxnLake.deleteWhere(spark, t, col("k") === 7L)
     val v2 = TxnLake.latestVersion(spark, t).get
     val dvRow = TxnLake.tableChangesByRowId(spark, t, v1, v2)
       .select("change_type", TxnLake.RidCol).collect()

@@ -874,6 +874,7 @@ class TxnLakeSpec extends SparkSpec {
       (col("id") % 7).as("v"))
     TxnLake.commit(spark, low.coalesce(1), t, "append")
     TxnLake.commit(spark, high.coalesce(1), t, "append")
+    TxnLake.setDeletionVectors(spark, t, enabled = false)
     val pre = TxnLake.snapshotFiles(spark, t).map(_.path).toSet
     // DELETE WHERE id < 10 AND v = 5: only the low file's stats admit it;
     // id=5 has v NULL → predicate NULL → row KEPT (SQL DELETE semantics)
@@ -1013,6 +1014,7 @@ class TxnLakeSpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     val t = freshTable()
     TxnLake.commit(spark, Seq((1L, "a")).toDF("k", "v"), t, "overwrite")
+    TxnLake.setDeletionVectors(spark, t, enabled = false)
     assert(!TxnLake.loggedSchema(spark, t, 0L)("k").nullable,
       "fixture: k is logged non-null")
     def readers(): Seq[(String, org.apache.spark.sql.DataFrame)] = Seq(
@@ -1056,6 +1058,7 @@ class TxnLakeSpec extends SparkSpec {
     val t = freshTable()
     TxnLake.commit(spark, Seq((1L, "a"), (2L, "b")).toDF("k", "v")
       .coalesce(1), t, "overwrite")
+    TxnLake.setDeletionVectors(spark, t, enabled = false)
     val v = TxnLake.deleteWhere(spark, t, col("k") > 0L).get
     assert(TxnLake.snapshotFiles(spark, t).isEmpty,
       s"an emptying delete left ${TxnLake.snapshotFiles(spark, t)}")

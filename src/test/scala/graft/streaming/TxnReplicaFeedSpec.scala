@@ -84,6 +84,8 @@ class TxnReplicaFeedSpec extends SparkSpec {
     }
     val feed = new TxnReplicaFeed(src, rep, "repl", "k")
     assert(feed.poll(spark) == 4)
+    // the carry-verbatim assertion below is about copy-on-write layout
+    TxnLake.setDeletionVectors(spark, rep, enabled = false)
     val repPre = TxnLake.latestVersion(spark, rep).get
     val repFilesPre = TxnLake.snapshotFiles(spark, rep).map(_.path).toSet
     // the reference-shaped daily job: recompute EVERYTHING, overwrite —
@@ -265,12 +267,15 @@ class TxnReplicaFeedSpec extends SparkSpec {
     TxnLake.commit(spark,
       (0L until 20L).map(i => (i, s"v$i")).toDF("k", "v").coalesce(1),
       src, "append") // v0
-    TxnLake.deleteWhere(spark, src, lit(true)) // v1: empty snapshot
+    // copy-on-write, so the emptying delete retires v0's file
+    TxnLake.setDeletionVectors(spark, src, enabled = false)
+    TxnLake.deleteWhere(spark, src, lit(true)) // empty snapshot
     TxnLake.vacuum(spark, src, retainVersions = 1)
     assert(!TxnLake.fullHistoryLive(spark, src), "fixture: source is aged")
     val feed = new TxnReplicaFeed(src, rep, "repl", "k")
     feed.poll(spark)
-    assert(TxnLake.lastTxn(spark, rep, "repl").contains(1L),
+    assert(TxnLake.lastTxn(spark, rep, "repl")
+      == TxnLake.latestVersion(spark, src),
       "the empty-latest founding must persist the offset at latest")
     assert(TxnLake.read(spark, rep).isEmpty)
     val repV = TxnLake.latestVersion(spark, rep)

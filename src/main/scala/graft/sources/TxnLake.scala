@@ -7,6 +7,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
@@ -1591,10 +1592,6 @@ object TxnLake extends LakeFormat {
     * latest — the caller's read snapshot is stale and it must recompute. */
   private[sources] final class CommitConflict extends Exception
 
-  /** Raised (internally) when a merge-on-read write finds its masks over
-    * the `graft.probe.maxDriverKeys` cap: the merge takes copy-on-write. */
-  private final class MaskOverCap extends Exception
-
   /** Test seam: runs once per [[transact]] attempt, after the attempt
     * pins its base version and before it computes and publishes — lets
     * specs land a concurrent writer deterministically inside any writer.
@@ -1685,7 +1682,7 @@ object TxnLake extends LakeFormat {
                          extraTxns: Map[String, Long] = Map.empty,
                          gcTxnPrefixes: Seq[String] = Seq.empty,
                          bloomCols: Seq[String] = Seq.empty,
-                         newDvs: => Map[String, DvRef] = Map.empty,
+                         newDvs: Map[String, DvRef] = Map.empty,
                          noData: Boolean = false,
                          schemaOverride: Option[StructType] = None,
                          dropBloomCols: Seq[String] = Seq.empty,
@@ -1985,15 +1982,8 @@ object TxnLake extends LakeFormat {
     // an anchor — empty live map (the DV-free common case), or the
     // CheckpointInterval cadence — where the full map lands so replay
     // stays bounded (see Snapshot.dvs).
-    // `newDvs` resolves HERE, after the data write: a merge-on-read merge
-    // reads its masks off what the write recorded. A throw removes the
-    // unpublished data dir
-    val minted = try newDvs catch { case e: Throwable =>
-      if (!noData) f.delete(new Path(tablePath, dataRel), true)
-      throw e
-    }
     val dvLive = (baseSnap.map(_.dvs).getOrElse(Map.empty[String, DvRef])
-      -- removed) ++ minted
+      -- removed) ++ newDvs
     val dvAnchor = dvLive.isEmpty || next % CheckpointInterval == 0
     // advance each identity hwm from the freshly-HARVESTED file stats —
     // zero extra I/O (parquet int64 footers always carry exact min/max;
@@ -2055,7 +2045,7 @@ object TxnLake extends LakeFormat {
     val entry = render(Entry(next, operation, addedRid, removed, txn,
       txns, tableSchema, nextTs(lastEntry),
       bloomCols = allBloomCols,
-      dvs = if (dvAnchor) dvLive else minted, dvDelta = !dvAnchor,
+      dvs = if (dvAnchor) dvLive else newDvs, dvDelta = !dvAnchor,
       droppedCols = dropped.distinct, constraints = tableConstraints,
       genCols = genColsAll,
       identityCols = idColsOut, ridHwm = ridCursor,
@@ -3074,21 +3064,24 @@ object TxnLake extends LakeFormat {
     *
     * The table's write mode ([[setDeletionVectors]]) picks the plan:
     *
-    *  - MERGE-ON-READ (deletion vectors on): one position pass reads
-    *    the in-scope files once, under their live masks, joined to the
-    *    pinned source and tagged with each row's clause, and is pinned.
-    *    Its matched source keys make the inserts (the source rows whose
-    *    key matched nothing — no second key scan), and the write job
-    *    that lands the post-images (each with its pre-image's row id)
-    *    and the inserts records the (file, position) of every row a
-    *    clause claims, so the masks cost no job of their own. ONE
-    *    "merge" commit holds fresh sidecars for the touched files
-    *    (old ∪ new positions) and the added file(s) — one per
-    *    `spark.sql.files.maxPartitionBytes` of source, plus one per file
-    *    a NOT MATCHED BY SOURCE update reaches — and removes no file.
-    *    Over the `graft.probe.maxDriverKeys` cap — the key collect, the
-    *    claimed rows, or any file's cumulative mask — it takes the
-    *    copy-on-write plan (the unpublished write is removed).
+    *  - MERGE-ON-READ (deletion vectors on): the key pass also brings
+    *    the source rows to the driver (while they number at most the
+    *    cap), and one scan job collects the in-scope files' candidate
+    *    rows — those a source key (by rendering) or a NOT MATCHED BY
+    *    SOURCE condition can claim — with their file positions and row
+    *    ids, masked rows dropped. The driver joins the two by key as
+    *    SQL equality does, and the clauses run over local relations, so
+    *    the masks are known before anything is written. ONE "merge"
+    *    commit holds fresh sidecars for the touched files (old ∪ new
+    *    positions) and one added file of post-images (each with its
+    *    pre-image's row id) and inserts, and removes no file. It takes
+    *    the copy-on-write plan instead — before writing anything — for
+    *    a key type the driver cannot match as SQL does (not atomic, a
+    *    non-binary collation, or a source type other than the
+    *    target's), a source, candidate set or any file's cumulative
+    *    mask over the `graft.probe.maxDriverKeys` cap, or a NOT MATCHED
+    *    BY SOURCE condition that does not resolve on the target alone.
+    *    An insert-only merge appends its inserts either way.
     *  - COPY-ON-WRITE (off): the in-scope files a clause can change are
     *    rewritten, at most as many files as it removes, coalesced
     *    without a shuffle; inserts are the source rows absent from the
@@ -3151,7 +3144,7 @@ object TxnLake extends LakeFormat {
       * floating keys compare by their canonical bits — one column has
       * one type, so bits never meet integers), and binary keys compare
       * by content. */
-    private def groupingKey(v: Any): Any = v match {
+    def groupingKey(v: Any): Any = v match {
       case d: Double => java.lang.Double.doubleToLongBits(if (d == 0.0d) 0.0d else d)
       case f: Float => java.lang.Float.floatToIntBits(if (f == 0.0f) 0.0f else f)
       case b: Array[Byte] => scala.collection.immutable.ArraySeq.unsafeWrapArray(b)
@@ -3160,36 +3153,14 @@ object TxnLake extends LakeFormat {
 
     private type Counts = scala.collection.mutable.HashMap[Any, (String, Long)]
 
-    /** The post-images of `changed` — the merge-on-read position pass:
-      * `__graft_dv_fn`, `__graft_dv_ri`, `__act`, then the image — for
-      * the rows whose clause is in `updated`, as `out` columns. The job
-      * that consumes the frame also records the (file, position) of every
-      * row a clause claims (`__act` not `keep`) in `positions`, at most
-      * `cap + 1` per task, and counts them all in `claimed`: the write
-      * gathers the masks with no job of its own. */
-    def recordingClaims(changed: DataFrame, updated: Set[String],
-                        out: Seq[String],
-                        positions: org.apache.spark.util.CollectionAccumulator[
-                          (String, Long)],
-                        claimed: org.apache.spark.util.LongAccumulator,
-                        cap: Long): DataFrame = {
-      val lim = capLimit(cap)
-      val st = changed.schema
-      val (fn, ri, act) = (st.fieldIndex("__graft_dv_fn"),
-        st.fieldIndex("__graft_dv_ri"), st.fieldIndex("__act"))
-      val idx = out.map(st.fieldIndex)
-      changed.mapPartitions { it =>
-        var n = 0L
-        it.filter { r =>
-          val a = r.getString(act)
-          if (a != "keep") {
-            if (n <= lim) positions.add((r.getString(fn), r.getLong(ri)))
-            n += 1
-            claimed.add(1L)
-          }
-          updated(a)
-        }.map(r => Row.fromSeq(idx.map(r.get)))
-      }(org.apache.spark.sql.Encoders.row(StructType(idx.map(st(_)))))
+    /** At most `n` rows of `rows`, copied, in ONE job: each partition
+      * keeps its first `n`, and a single reduce task keeps the first `n`
+      * of those, so the driver never receives more than `n`. */
+    def upTo(rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+             n: Int): Array[org.apache.spark.sql.catalyst.InternalRow] = {
+      val each = rows.mapPartitions(_.take(n).map(_.copy()))
+      if (each.getNumPartitions <= 1) each.collect()
+      else each.repartition(1).mapPartitions(_.take(n)).collect()
     }
 
     /** `cap` as a collect bound: a Long.MaxValue cap means "up to the Int
@@ -3200,14 +3171,21 @@ object TxnLake extends LakeFormat {
     /** The source's distinct non-null `key` values, rendered as
       * `cast(key as string)` (the domain file stats and Bloom sidecars
       * are probed in), and whether any value occurs twice — in ONE job:
-      * each partition counts its keys ([[groupingKey]]) in a map, and the
-      * driver (a source small enough to broadcast) or a single reduce
-      * task merges the maps. Both stop storing keys once
-      * they hold `cap + 1`, so neither the driver nor the job's result
-      * ever holds more: None then means more than `cap` distinct keys.
+      * each partition counts its keys ([[groupingKey]]) in a map, and a
+      * single reduce task merges the maps. Both stop storing keys once
+      * they hold `cap + 1`, so the job's result never holds more: None
+      * then means more than `cap` distinct keys.
       * A source without partitions submits no job. */
     def collect(source: DataFrame, key: String,
-                cap: Long): Option[(Seq[String], Boolean)] = {
+                cap: Long): Option[(Seq[String], Boolean)] =
+      collectWithRows(source, key, cap, rows = false).map(p => (p._1, p._2))
+
+    /** [[collect]], and with `rows` the source's rows too (catalyst rows
+      * of `source.schema`) while they number at most `cap` — the same
+      * job, holding at most `cap + 1` rows per task. */
+    def collectWithRows(source: DataFrame, key: String, cap: Long,
+                        rows: Boolean)
+        : Option[(Seq[String], Boolean, Option[Seq[InternalRow]])] = {
       import org.apache.spark.sql.functions.col
       val lim = capLimit(cap)
       // adds n occurrences of k; false once the map holds more than lim keys
@@ -3216,45 +3194,44 @@ object TxnLake extends LakeFormat {
           case Some((r, c)) => m.update(k, (r, c + n)); true
           case None => m.update(k, (rendered, n)); m.size <= lim
         }
-      val proj = source.filter(col(key).isNotNull)
-        .select(col(key), col(key).cast(StringType))
-      val keyType = proj.schema.head.dataType
+      val st = source.schema
+      val (ki, keyType, width) = (st.fieldIndex(key), st(key).dataType, st.size)
       // internal rows: no deserializer pass, and the rows are reused
-      // buffers, so the native value is copied before it is kept
-      val rows = proj.queryExecution.toRdd
-      if (rows.getNumPartitions == 0) return Some((Seq.empty, false))
-      val perPart = rows.mapPartitions { it =>
+      // buffers, so what is kept is copied
+      val all = source.select(col("*"), col(key).cast(StringType))
+        .queryExecution.toRdd
+      if (all.getNumPartitions == 0) return Some((Seq.empty, false, Some(Nil)))
+      type Part = (Counts, Boolean, Option[Vector[InternalRow]])
+      val perPart = all.mapPartitions { it =>
         val m = new Counts
         var ok = true
+        var kept = if (rows) Option(Vector.empty[InternalRow]) else None
         while (ok && it.hasNext) {
           val r = it.next()
-          ok = add(m, groupingKey(org.apache.spark.sql.catalyst.InternalRow
-            .copyValue(r.get(0, keyType))), r.getUTF8String(1).toString, 1L)
+          if (!r.isNullAt(ki)) ok = add(m, groupingKey(InternalRow.copyValue(
+            r.get(ki, keyType))), r.getUTF8String(width).toString, 1L)
+          kept = kept.filter(_.size <= lim).map(_ :+ r.copy())
         }
-        Iterator((if (ok) m else new Counts, ok))
+        Iterator[Part]((if (ok) m else new Counts, ok, kept.filter(_.size <= lim)))
       }
-      def merged(it: Iterator[(Counts, Boolean)]): (Counts, Boolean) = {
+      val one =
+        if (perPart.getNumPartitions == 1) perPart else perPart.repartition(1)
+      val (counts, underCap, kept) = one.mapPartitions { it =>
         val m = new Counts
         var ok = true
+        var kept = if (rows) Option(Vector.empty[InternalRow]) else None
         while (ok && it.hasNext) {
-          val (part, partOk) = it.next()
+          val (part, partOk, partRows) = it.next()
           ok = partOk && part.forall { case (k, (r, n)) => add(m, k, r, n) }
+          kept = kept.flatMap(k => partRows.map(k ++ _)).filter(_.size <= lim)
         }
-        (if (ok) m else new Counts, ok)
-      }
-      // a source small enough to broadcast ships its partition maps to
-      // the driver, which merges them; a larger one merges them in a
-      // single reduce task, so the driver still receives one capped map
-      val small = source.queryExecution.optimizedPlan.stats.sizeInBytes <=
-        source.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-      val (counts, underCap) =
-        if (small || perPart.getNumPartitions == 1)
-          merged(perPart.collect().iterator)
-        else perPart.repartition(1)
-          .mapPartitions(it => Iterator(merged(it))).collect().head
+        Iterator[Part]((if (ok) m else new Counts, ok, kept))
+      }.collect().head
       if (!underCap) None
       else Some((counts.valuesIterator.map(_._1).toSeq.distinct,
-        counts.valuesIterator.exists(_._2 > 1)))
+        counts.valuesIterator.exists(_._2 > 1),
+        kept.map(_.map(r => InternalRow.fromSeq(
+          st.fields.indices.map(i => r.get(i, st(i).dataType)))))))
     }
   }
 
@@ -3275,8 +3252,7 @@ object TxnLake extends LakeFormat {
                                             gcTxnPrefixes: Seq[String] =
                                               Seq.empty,
                                             uniqueKeys: Boolean = false): Option[Long] = {
-    import org.apache.spark.sql.functions.{broadcast, coalesce, col, count,
-      lit, when}
+    import org.apache.spark.sql.functions.{coalesce, col, count, lit, when}
     require(matched.nonEmpty || notMatched.nonEmpty
       || notMatchedBySource.nonEmpty,
       "TxnLake.mergeIntoClauses: no WHEN clauses")
@@ -3353,11 +3329,15 @@ object TxnLake extends LakeFormat {
     // key map cannot prove no-dup, so the dedicated dup job runs — the
     // rare path keeps the exact semantics at its pre-existing cost.
     val keyCap = graft.plans.ProbePlanner.maxDriverKeys(spark)
-    val collected = labeled("keys")(MergeKeys.collect(pin, key, keyCap))
+    // a deletion-vector table's merge also takes the source rows (under
+    // the cap) from this job: its merge-on-read plan joins them on the
+    // driver
+    val collected = labeled("keys")(MergeKeys.collectWithRows(pin, key,
+      keyCap, rows = deletionVectorsEnabled(spark, table)))
     val src = org.apache.spark.sql.GraftCheckpointShim.withMeasuredStats(pin)
     if (matched.nonEmpty || uniqueKeys) {
       val dup = collected match {
-        case Some((_, d)) => d
+        case Some((_, d, _)) => d
         case None => labeled("dupkeys") {
           src.filter(col(key).isNotNull).groupBy(key)
             .agg(count(lit(1)).as("__n")).filter(col("__n") > 1)
@@ -3371,6 +3351,7 @@ object TxnLake extends LakeFormat {
           "multiple-matches error)")
     }
     val keys: Option[Seq[String]] = collected.map(_._1)
+    val srcRows: Option[Seq[InternalRow]] = collected.flatMap(_._3)
     // NOT MATCHED rows per clause, projected onto the target schema
     // (provided expressions uncast — a type mismatch is refused loudly by
     // the commit's schema merge, never silently coerced; absent columns
@@ -3529,20 +3510,10 @@ object TxnLake extends LakeFormat {
             notMatchedBySource.zipWithIndex.collect {
               case (u: MergeUpdate, i) => s"n$i" -> u.set }
           // a tagged row's post-image: its clause's SET applied; an evolved
-          // column its clause does not assign reads NULL. `updatedOnly`
-          // leaves every row no UPDATE claims NULL, so the image reads
-          // only the target columns some UPDATE keeps (column pruning
-          // then narrows the scan: a SET-everything merge reads the key)
-          def postImage(carry: Boolean,
-                        updatedOnly: Boolean = false): Seq[Column] =
+          // column its clause does not assign reads NULL
+          def postImage(carry: Boolean): Seq[Column] =
             targetCols.map { n =>
-              if (updatedOnly)
-                updates.foldRight(
-                  lit(null).cast(displaySchema(n).dataType): Column) {
-                  case ((tag, set), rest) => when(col("__act") === tag,
-                    set.getOrElse(n, col(n))).otherwise(rest)
-                }.as(n)
-              else updates.filter(_._2.contains(n))
+              updates.filter(_._2.contains(n))
                 .foldRight(col(n)) { case ((tag, set), rest) =>
                   when(col("__act") === tag, set(n)).otherwise(rest)
                 }.as(n)
@@ -3606,78 +3577,79 @@ object TxnLake extends LakeFormat {
             }
           }
 
-          // MERGE-ON-READ: mask the rows the clauses change, add their
-          // post-images and the inserts. None hands the merge to
-          // copyOnWrite: over the key cap in the changed rows, or in any
-          // file's cumulative mask
-          def mergeOnRead(scope: Seq[FileMeta]): Option[Option[Long]] = {
+          // MERGE-ON-READ: mask the rows the clauses change and add one
+          // file of their post-images and the inserts. The source rows
+          // and the candidate rows come to the driver, where they join
+          // by key; the clauses then run over local relations, so the
+          // write is the only job after the candidate scan. None hands
+          // the merge to copyOnWrite: a key type the driver cannot match
+          // as SQL does, a source or a candidate set over the key cap, a
+          // file whose cumulative mask would pass it, or a NOT MATCHED
+          // BY SOURCE condition that does not resolve on the target alone
+          def mergeOnRead(scope: Seq[FileMeta],
+                          ks: Seq[String]): Option[Long] = {
+            val kt = displaySchema(key).dataType
+            val srcSt = asNullable(src.schema)
+            if (!localKey(kt) || srcSt(key).dataType != kt) return None
+            val srcIn = srcRows.getOrElse(return None)
             val carry = scope.forall(_.brid >= 0L)
-            val srcKey = MergeSourcePrefix + key
-            // the position pass: the scoped files' live rows once, tagged
-            // like the rewrite's, keeping only the rows the source matches
-            // or a clause changes — their coordinates, the matching source
-            // key and the post-image — pinned lazily: the write's first job
-            // (the matched keys' broadcast) fills the pin in parallel, and
-            // the write reads the pin
-            val changed = labeled("positions") {
-              tagged(positionScan(snap, scope, carry))
-                .filter(isM || col("__act") =!= "keep")
-                .select(Seq(col("__graft_dv_fn"), col("__graft_dv_ri"),
-                  col("__act"), col(srcKey)) ++
-                  postImage(carry, updatedOnly = true): _*)
-                .localCheckpoint(eager = false)
+            val claimable = (keyRendered(kt, key, ks) +:
+              notMatchedBySource.map(a => condTrue(condOf(a)))).reduce(_ || _)
+            val found =
+              try labeled("positions")(
+                mergeCandidates(snap, scope, claimable, carry, keyCap))
+              catch { case _: org.apache.spark.sql.AnalysisException => None }
+            val (candSt, cand, prior) = found.getOrElse(return None)
+            // the join: a source row meets the live candidates of its key
+            // (matched) or none (a NOT MATCHED row); a candidate no
+            // source row meets is NOT MATCHED BY SOURCE
+            def gk(r: InternalRow, i: Int): Any =
+              if (r.isNullAt(i)) null else MergeKeys.groupingKey(r.get(i, kt))
+            val (sk, ck) = (srcSt.fieldIndex(key), candSt.fieldIndex(key))
+            val byKey = cand.filterNot(_.isNullAt(ck)).groupBy(gk(_, ck))
+            val srcNulls = InternalRow.fromSeq(Seq.fill(srcSt.size)(null))
+            val (metSrc, unmet) = srcIn.partition(r => byKey.contains(gk(r, sk)))
+            val met = metSrc.map(gk(_, sk)).toSet
+            def pair(s: InternalRow, c: InternalRow, m: Boolean) =
+              InternalRow.fromSeq(s.toSeq(srcSt) ++ c.toSeq(candSt) :+ m)
+            val joined = metSrc.flatMap(s => byKey(gk(s, sk)).map(pair(s, _, true))) ++
+              cand.filterNot(c => met(gk(c, ck))).map(pair(srcNulls, _, false))
+            val tagged = org.apache.spark.sql.GraftCheckpointShim.localFrame(
+                spark, StructType(srcSt.fields.map(f =>
+                  f.copy(name = MergeSourcePrefix + f.name)) ++ candSt.fields :+
+                  StructField("__m", BooleanType)), joined)
+              .withColumn("__act", when(isM, actChain("m", matched))
+                .otherwise(actChain("n", notMatchedBySource)))
+            val claims = tagged.where(col("__act") =!= "keep")
+              .select("__graft_dv_fn", "__graft_dv_ri").collect()
+            val byName = scope.map(fm => new Path(fm.path).getName -> fm.path).toMap
+            val masks = claims.groupBy(_.getString(0)).map { case (n, hs) =>
+              val rel = byName(n)
+              rel -> (prior.getOrElse(rel, Seq.empty) ++ hs.map(_.getLong(1))).distinct
             }
-            // the inserts: source rows whose key no live row matched —
-            // the matched keys come from the same pass
-            val inserts = insertsAbsentFrom(Some(broadcast(changed
-              .select(col(srcKey).as(key)).where(col(key).isNotNull))),
-              carry)
-            try if (noOp(inserts)) Some(None)
-            else {
-              val updated = updates.map(_._1).toSet
-              val positions = spark.sparkContext
-                .collectionAccumulator[(String, Long)]("txn:merge positions")
-              val claimed = spark.sparkContext.longAccumulator
-              // the post-images; the job that consumes them records the
-              // coordinates of every row a clause claims
-              val post = MergeKeys.recordingClaims(changed, updated,
-                targetCols ++ newCols ++ (if (carry) Seq(RidCol) else Nil),
-                positions, claimed, keyCap)
-              val noData = notMatched.isEmpty && updated.isEmpty
-              if (noData) labeled("positions")(post.count())
-              // one file per maxPartitionBytes of source, plus one per
-              // file a NOT MATCHED BY SOURCE update can rewrite rows of
-              val srcBytes = src.queryExecution.optimizedPlan.stats.sizeInBytes
-              val outFiles = ((srcBytes / spark.sessionState.conf
-                .filesMaxPartitionBytes + 1) + BigInt(
-                if (notMatchedBySource.exists(_.isInstanceOf[MergeUpdate]))
-                  nmbsTouched.size else 0)).min(Int.MaxValue).toInt
-              // the masks, resolved after the write from what it recorded
-              def masks: Map[String, Seq[Long]] = {
-                if (claimed.value > keyCap) throw new MaskOverCap
-                val all = unionMasks(snap, scope,
-                  positions.value.asScala.toSeq.distinct)
-                if (all.values.exists(_.size.toLong > keyCap))
-                  throw new MaskOverCap
-                all
-              }
-              try Some(Some(commitMasks(spark, table, masks)(dvs =>
-                commitImpl(spark,
-                  post.unionByName(inserts, allowMissingColumns = evolveSchema)
-                    .coalesce(outFiles),
-                  table, "merge", txn, base,
-                  removePaths = Some(Seq.empty), newDvs = dvs,
-                  noData = noData, carryRids = carry,
-                  gcTxnPrefixes = gcTxnPrefixes))))
-              catch { case _: MaskOverCap => None }
+            if (masks.values.exists(_.size.toLong > keyCap)) return None
+            val updated = updates.map(_._1)
+            val post = tagged.where(col("__act").isin(updated: _*))
+              .select(postImage(carry): _*)
+            val inserts = {
+              val ins = insertRows(org.apache.spark.sql.GraftCheckpointShim
+                .localFrame(spark, srcSt, unmet), displaySchema, newCols)
+              if (carry) ins.withColumn(RidCol, lit(null).cast("long")) else ins
             }
-            finally org.apache.spark.sql.GraftCheckpointShim.release(changed)
+            // one file: the rows are driver-local, at most twice the cap
+            Some(commitMasks(spark, table, masks)(dvs => commitImpl(spark,
+              post.unionByName(inserts, allowMissingColumns = evolveSchema)
+                .coalesce(1),
+              table, "merge", txn, base,
+              removePaths = Some(Seq.empty), newDvs = dvs,
+              noData = notMatched.isEmpty && updated.isEmpty, carryRids = carry,
+              gcTxnPrefixes = gcTxnPrefixes)))
           }
 
           val scope = (keyTouched ++ nmbsTouched).distinctBy(_.path)
-          (if (snap.entry.dvMode && keys.isDefined && scope.nonEmpty)
-             mergeOnRead(scope)
-           else None).getOrElse(copyOnWrite())
+          keys.filter(_ => snap.entry.dvMode && rewriteFiles.nonEmpty)
+            .flatMap(mergeOnRead(scope, _)).map(Some(_))
+            .getOrElse(copyOnWrite())
       }
     } finally org.apache.spark.sql.GraftCheckpointShim.release(pin)
   }
@@ -3943,10 +3915,85 @@ object TxnLake extends LakeFormat {
     }
   }
 
+  /** Whether a merge key of type `dt` matches on the driver exactly as
+    * the SQL join does: by [[MergeKeys.groupingKey]] on one atomic type
+    * (binary-collated strings). */
+  private def localKey(dt: DataType): Boolean = dt match {
+    case s: StringType => s == StringType
+    case BooleanType | ByteType | ShortType | IntegerType | LongType
+         | FloatType | DoubleType | DateType | TimestampType | TimestampNTZType
+         | BinaryType | _: DecimalType => true
+    case _ => false
+  }
+
+  /** TRUE where display column `key` renders as one of `keys` (the
+    * merge key pass's `cast(key as string)` values) — a superset of SQL
+    * equality with them for a [[localKey]] type: floating keys render
+    * with −0.0 folded into 0.0. One hash-set lookup per row, however
+    * many keys. */
+  private def keyRendered(dt: DataType, key: String,
+                          keys: Seq[String]): Column = {
+    import org.apache.spark.sql.functions.{col, lit, when}
+    import org.apache.spark.sql.graftx.ColumnBridge
+    val k = col(key)
+    val floating = dt == DoubleType || dt == FloatType
+    val shown = if (floating) when(k === 0, lit(0).cast(dt)).otherwise(k) else k
+    ColumnBridge.column(InSet(ColumnBridge.expression(shown.cast(StringType)),
+      keys.map(r => org.apache.spark.unsafe.types.UTF8String.fromString(
+        if (floating && r == "-0.0") "0.0" else r)).toSet))
+  }
+
+  /** The merge-on-read MERGE's candidates: the live rows of `fms` where
+    * `claimable` is TRUE — every display column, their (data-file name,
+    * position) coordinates as `__graft_dv_fn` / `__graft_dv_ri` and,
+    * with `withRid`, their row ids — as driver-local catalyst rows of
+    * the returned schema, with the prior masks of the files they sit in
+    * (table-relative path → positions). One plain scan job collects at
+    * most `cap + 1` rows; masked rows drop on the driver. None over the
+    * cap. */
+  private def mergeCandidates(snap: Snapshot, fms: Seq[FileMeta],
+                              claimable: Column, withRid: Boolean, cap: Long)
+      : Option[(StructType, Seq[InternalRow], Map[String, Seq[Long]])] = {
+    import org.apache.spark.sql.functions.{coalesce, col, lit}
+    val spark = snap.spark
+    val byName = fms.map(fm => new Path(fm.path).getName -> fm).toMap
+    require(byName.size == fms.size,
+      s"TxnLake: duplicate data-file names in ${snap.table}")
+    val readSchema =
+      if (!withRid) snap.schema
+      else StructType(snap.schema.fields.filterNot(_.name == RidCol) :+
+        StructField(RidCol, LongType, nullable = true))
+    val scan = toDisplay(spark.read.schema(readSchema)
+        .parquet(fms.map(fm => new Path(snap.table, fm.path).toString): _*)
+        .withColumn("__graft_dv_fn", col("_metadata.file_name"))
+        .withColumn("__graft_dv_ri", col("_metadata.row_index")), snap.ren)
+      .where(coalesce(claimable, lit(false)))
+    val rows = MergeKeys.upTo(scan.queryExecution.toRdd,
+      MergeKeys.capLimit(cap) + 1)
+    if (rows.length > cap) return None
+    val st = asNullable(scan.schema)
+    val (fn, ri) = (st.fieldIndex("__graft_dv_fn"), st.fieldIndex("__graft_dv_ri"))
+    def name(r: InternalRow) = r.getUTF8String(fn).toString
+    val f = fs(spark, new Path(snap.table))
+    val prior: Map[String, Seq[Long]] = rows.map(name).distinct.flatMap { n =>
+      val rel = byName(n).path
+      snap.dvs.get(rel).map(r => rel -> readDvFile(f, new Path(snap.table, r.path)))
+    }.toMap
+    val masked = prior.map { case (rel, ps) => new Path(rel).getName -> ps.toSet }
+    val live = rows.toSeq.filterNot(r => masked.get(name(r)).exists(_(r.getLong(ri))))
+    // a row's id: its materialized id, else its file's base + position
+    if (withRid) {
+      val rid = st.fieldIndex(RidCol)
+      live.foreach(r => if (r.isNullAt(rid))
+        r.setLong(rid, byName(name(r)).brid + r.getLong(ri)))
+    }
+    Some((st, live, prior))
+  }
+
   /** The live rows of `fms` under the snapshot's masks, with their
     * (data-file name, row position) coordinates as `__graft_dv_fn` /
-    * `__graft_dv_ri` and, with `withRid`, their row ids — the scan every
-    * merge-on-read writer reads positions from. */
+    * `__graft_dv_ri` and, with `withRid`, their row ids — the scan
+    * [[maskWhere]] reads positions from. */
   private def positionScan(snap: Snapshot, fms: Seq[FileMeta],
                            withRid: Boolean): DataFrame =
     if (withRid) scanFilesWithRid(snap.spark, snap.table, fms, snap.schema,
@@ -3994,27 +4041,22 @@ object TxnLake extends LakeFormat {
     * sidecars; their bytes are a pure function of the positions still
     * held, so they are recreated. */
   private def commitMasks(spark: SparkSession, table: String,
-                          masks: => Map[String, Seq[Long]])
-                         (commit: (=> Map[String, DvRef]) => Long): Long = {
+                          masks: Map[String, Seq[Long]])
+                         (commit: Map[String, DvRef] => Long): Long = {
     val f = fs(spark, new Path(table))
     val salt = java.util.UUID.randomUUID().toString.take(8)
     val dvDir = new Path(table, s"_dv/$salt")
-    // resolved once, when the commit asks for the refs (a merge asks
-    // after its data write)
-    lazy val held = masks
-    lazy val refs = held.map { case (rel, all) =>
-      val name = new Path(rel).getName
-      f.mkdirs(dvDir)
-      writeDvFile(f, new Path(dvDir, s"$name.dv"), all)
-      rel -> DvRef(s"_dv/$salt/$name.dv", all.size.toLong)
-    }
-    val v = try commit(refs)
-      catch { case e: Throwable => f.delete(dvDir, true); throw e }
-    held.foreach { case (rel, all) =>
-      val p = new Path(dvDir, s"${new Path(rel).getName}.dv")
-      if (!f.exists(p)) {
+    def sidecar(rel: String) = new Path(dvDir, s"${new Path(rel).getName}.dv")
+    val v = try commit(masks.map { case (rel, all) =>
         f.mkdirs(dvDir)
-        writeDvFile(f, p, all)
+        writeDvFile(f, sidecar(rel), all)
+        rel -> DvRef(s"_dv/$salt/${new Path(rel).getName}.dv", all.size.toLong)
+      })
+      catch { case e: Throwable => f.delete(dvDir, true); throw e }
+    masks.foreach { case (rel, all) =>
+      if (!f.exists(sidecar(rel))) {
+        f.mkdirs(dvDir)
+        writeDvFile(f, sidecar(rel), all)
       }
     }
     v

@@ -89,6 +89,18 @@ object GraftCheckpointShim {
       case _ => ck
     }
 
+  /** A driver-local frame over `rows`, catalyst rows of `schema` — a
+    * local relation, so the optimizer evaluates the projections and
+    * filters over it without a job. */
+  def localFrame(spark: SparkSession, schema: org.apache.spark.sql.types.StructType,
+                 rows: Seq[org.apache.spark.sql.catalyst.InternalRow]): Dataset[Row] = {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.catalyst.types.DataTypeUtils
+    val session = spark.asInstanceOf[CSparkSession]
+    CDataset.ofRows(session,
+      LocalRelation(DataTypeUtils.toAttributes(schema), rows.toIndexedSeq))
+  }
+
   /** Drop the cached blocks behind a local checkpoint `ck` once nothing
     * reads it any more (any other plan: nothing to drop). */
   def release(ck: Dataset[Row]): Unit =

@@ -12,13 +12,16 @@ import org.apache.spark.sql.functions.{col, concat, lit}
   * from a pool that stresses SQL equality (NULL, -0.0 and 0.0, NaN);
   * non-NULL keys stay unique in every table, NULL keys may repeat.
   *
-  * After every step, for each table: the latest rows, `readVersion` of
-  * every version, the step's `tableChanges` and the rows of a
-  * `TxnReplicaFeed` replica must agree with the model, and every row
-  * that survives the step keeps its row id. A NULL key pairs with
-  * nothing, so the change feed reports a NULL-keyed row's change as a
-  * delete plus an insert (compared as the net multiset), and a keyed
-  * replica cannot address NULL-keyed rows (compared on non-NULL keys). */
+  * For each table, every step's version is checked against the model
+  * once the sequence has run: its rows (read with row ids and through
+  * `readVersion`), its `tableChanges`, and that every row surviving the
+  * step keeps its row id; the rows of a `TxnReplicaFeed` replica, which
+  * applies every version as its own hop, must match the final model.
+  * Each of these reads is one query per table, so a sequence costs
+  * few jobs beyond its writes. A NULL key pairs with nothing, so the
+  * change feed reports a NULL-keyed row's change as a delete plus an
+  * insert (compared as the net multiset), and a keyed replica cannot
+  * address NULL-keyed rows (compared on non-NULL keys). */
 class TxnLakeDifferentialSpec extends SparkSpec {
 
   private final case class R(k: Option[Double], v: Long, s: String)
@@ -187,18 +190,17 @@ class TxnLakeDifferentialSpec extends SparkSpec {
       case Optimize => Some(TxnLake.optimize(spark, table, numFiles = 2))
     }
 
-    /** The latest rows, each with its row id. */
-    def latest(): Seq[(Canon, Long)] =
-      TxnLake.readWithRowIds(spark, table)
-        .select(col("k"), col("v"), col("s"), col(TxnLake.RidCol))
-        .as[(Option[Double], Long, String, Long)].collect()
-        .map { case (k, v, s, id) => (canon(R(k, v, s)), id) }.toSeq
+    /** The rows of each of `vs`, each with its row id, in one query. */
+    def rowsWithIds(vs: Seq[Long]): Map[Long, Seq[(Canon, Long)]] =
+      vs.map(v => TxnLake.readWithRowIds(spark, table, Some(v))
+          .select(lit(v).as("ver"), col("k"), col("v"), col("s"),
+            col(TxnLake.RidCol)))
+        .reduce(_ unionByName _)
+        .as[(Long, Option[Double], Long, String, Long)].collect().toSeq
+        .groupBy(_._1).map { case (ver, rs) =>
+          ver -> rs.map { case (_, k, x, s, id) => (canon(R(k, x, s)), id) } }
 
-    private def rowsOf(d: DataFrame): Seq[Canon] =
-      d.select("k", "v", "s").as[(Option[Double], Long, String)].collect()
-        .map { case (k, v, s) => canon(R(k, v, s)) }.toSeq
-
-    /** Every version's rows, in one job. */
+    /** Every version's rows through `readVersion`, in one query. */
     def allVersions(): Map[Long, Seq[Canon]] =
       versions.keys.map(v => TxnLake.readVersion(spark, table, v)
           .select(lit(v).as("ver"), col("k"), col("v"), col("s")))
@@ -207,15 +209,24 @@ class TxnLakeDifferentialSpec extends SparkSpec {
         .groupBy(_._1).map { case (v, rs) =>
           v -> rs.map { case (_, k, x, s) => canon(R(k, x, s)) } }
 
-    def changes(v: Long): Seq[(Canon, String)] =
-      TxnLake.tableChanges(spark, table, v - 1, v, "k")
-        .select("k", "v", "s", "change_type")
-        .as[(Option[Double], Long, String, String)].collect()
-        .map { case (k, x, s, ct) => (canon(R(k, x, s)), ct) }.toSeq
+    /** `tableChanges(v - 1, v)` of each of `vs`, in one query. */
+    def changes(vs: Seq[Long]): Map[Long, Seq[(Canon, String)]] =
+      if (vs.isEmpty) Map.empty
+      else vs.map(v => TxnLake.tableChanges(spark, table, v - 1, v, "k")
+          .select(lit(v).as("ver"), col("k"), col("v"), col("s"),
+            col("change_type")))
+        .reduce(_ unionByName _)
+        .as[(Long, Option[Double], Long, String, String)].collect().toSeq
+        .groupBy(_._1).map { case (ver, rs) =>
+          ver -> rs.map { case (_, k, x, s, ct) => (canon(R(k, x, s)), ct) } }
 
+    /** The replica's rows on non-NULL keys, after one poll. */
     def replicaRows(): Seq[Canon] = {
       feed.poll(spark)
-      rowsOf(TxnLake.read(spark, replica)).filter(_._1.isDefined)
+      TxnLake.read(spark, replica).select("k", "v", "s")
+        .as[(Option[Double], Long, String)].collect()
+        .map { case (k, v, s) => canon(R(k, v, s)) }.toSeq
+        .filter(_._1.isDefined)
     }
   }
 
@@ -253,57 +264,77 @@ class TxnLakeDifferentialSpec extends SparkSpec {
   }
 
   /** Run sequence `seed` of `steps` operations; returns its failures.
-    * Every version is immutable once committed, so `readVersion` of all
-    * of them is compared once, after the last step. */
+    * Every version is immutable once committed, so the reads that check
+    * the steps run once, after the last step. */
   private def sequence(seed: Long, steps: Int): Seq[String] = {
     val gen = new Gen(seed)
     val dir = Files.createTempDirectory(s"txnlake_diff_$seed")
-    var model = gen.initial()
-    val subjects = Seq(new Subject(dv = true, dir, model),
-      new Subject(dv = false, dir, model))
-    val errs = Seq.newBuilder[String]
-    // each subject's row ids of its non-NULL keys after the last step
-    val ids = scala.collection.mutable.Map(subjects.map(sub =>
-      sub -> sub.latest().collect { case (c, id) if c._1.isDefined =>
-        groupKey(c).get -> id }.toMap): _*)
-    (1 to steps).foreach { step =>
-      val op = gen.op(model)
-      val (next, changed) = applyModel(model, op)
-      val want = bag(next.map(canon))
-      subjects.foreach { sub =>
-        def fail(what: String) = errs +=
-          s"seed $seed step $step ${if (sub.dv) "dv" else "cow"} $op: $what"
-        val v = sub.run(op)
-        v.foreach(sub.versions(_) = next)
-        val now = sub.latest()
-        if (bag(now.map(_._1)) != want)
-          fail(s"latest rows ${now.map(_._1)} differ from the model $next")
-        if (now.map(_._2).distinct.size != now.size)
-          fail(s"row ids repeat: ${now.map(_._2)}")
-        val idsNow = now.collect { case (c, id) if c._1.isDefined =>
-          groupKey(c).get -> id }.toMap
-        ids(sub).foreach { case (k, id) =>
-          if (idsNow.get(k).exists(_ != id))
-            fail(s"key $k changed row id $id -> ${idsNow(k)}")
+    try {
+      var model = gen.initial()
+      val subjects = Seq(new Subject(dv = true, dir, model),
+        new Subject(dv = false, dir, model))
+      // per step: the op, the model rows after it and the (pre, post)
+      // pairs it changed; per subject: the version each step left
+      val trail = Seq.newBuilder[(Op, Vector[R], Seq[(Option[R], Option[R])])]
+      val at = subjects.map(sub => sub ->
+        scala.collection.mutable.ArrayBuffer(sub.versions.keys.last)).toMap
+      (1 to steps).foreach { _ =>
+        val op = gen.op(model)
+        val (next, changed) = applyModel(model, op)
+        trail += ((op, next, changed))
+        subjects.foreach { sub =>
+          val v = sub.run(op)
+          v.foreach(sub.versions(_) = next)
+          at(sub) += v.getOrElse(at(sub).last)
         }
-        ids(sub) = idsNow
-        val got = v.map(sub.changes).getOrElse(Seq.empty)
-        if (changeView(got) != changeView(expectedChanges(changed)))
-          fail(s"tableChanges = $got, model ${expectedChanges(changed)}")
-        if (bag(sub.replicaRows()) != bag(next.map(canon).filter(_._1.isDefined)))
-          fail("the replica differs from the model on non-NULL keys")
+        model = next
       }
-      model = next
-    }
-    subjects.foreach { sub =>
-      val all = sub.allVersions()
-      sub.versions.foreach { case (ver, rows) =>
-        if (bag(all.getOrElse(ver, Seq.empty)) != bag(rows.map(canon)))
-          errs += s"seed $seed ${if (sub.dv) "dv" else "cow"}: " +
-            s"readVersion($ver) = ${all.get(ver)}, model $rows"
+      val ops = trail.result()
+      val errs = Seq.newBuilder[String]
+      subjects.foreach { sub =>
+        val name = if (sub.dv) "dv" else "cow"
+        val vs = at(sub).toSeq
+        val withIds = sub.rowsWithIds(vs.distinct)
+        val stepped = vs.zip(vs.tail).collect { case (a, b) if b != a => b }
+        val cdf = sub.changes(stepped)
+        def ids(v: Long): Map[Option[Long], Long] =
+          withIds(v).collect { case (c, id) if c._1.isDefined =>
+            groupKey(c) -> id }.toMap
+        ops.zipWithIndex.foreach { case ((op, next, changed), i) =>
+          def fail(what: String) =
+            errs += s"seed $seed step ${i + 1} $name $op: $what"
+          val (pre, now) = (vs(i), vs(i + 1))
+          val rows = withIds(now)
+          if (bag(rows.map(_._1)) != bag(next.map(canon)))
+            fail(s"rows ${rows.map(_._1)} differ from the model $next")
+          if (rows.map(_._2).distinct.size != rows.size)
+            fail(s"row ids repeat: ${rows.map(_._2)}")
+          val (before, after) = (ids(pre), ids(now))
+          before.foreach { case (k, id) =>
+            if (after.get(k).exists(_ != id))
+              fail(s"key $k changed row id $id -> ${after(k)}")
+          }
+          val got = if (now == pre) Seq.empty else cdf.getOrElse(now, Seq.empty)
+          if (changeView(got) != changeView(expectedChanges(changed)))
+            fail(s"tableChanges = $got, model ${expectedChanges(changed)}")
+        }
+        val all = sub.allVersions()
+        sub.versions.foreach { case (ver, rows) =>
+          if (bag(all.getOrElse(ver, Seq.empty)) != bag(rows.map(canon)))
+            errs += s"seed $seed $name: readVersion($ver) = ${all.get(ver)}, " +
+              s"model $rows"
+        }
+        if (bag(sub.replicaRows()) != bag(model.map(canon).filter(_._1.isDefined)))
+          errs += s"seed $seed $name: the replica differs from the model " +
+            "on non-NULL keys"
       }
-    }
-    errs.result()
+      errs.result()
+    } finally deleteTree(dir.toFile)
+  }
+
+  private def deleteTree(f: java.io.File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(deleteTree))
+    f.delete()
   }
 
   test("deletion-vector and copy-on-write tables agree with the model " +
@@ -315,7 +346,7 @@ class TxnLakeDifferentialSpec extends SparkSpec {
       scala.concurrent.Future(sequence(seed, steps = 3)))
     val errs = try scala.concurrent.Await.result(
       scala.concurrent.Future.sequence(runs),
-      scala.concurrent.duration.Duration(600, "s")).flatten
+      scala.concurrent.duration.Duration(1800, "s")).flatten
     finally pool.shutdown()
     assert(errs.isEmpty, errs.take(5).mkString("\n"))
   }
@@ -325,31 +356,37 @@ class TxnLakeDifferentialSpec extends SparkSpec {
   test("a copy-on-write delete's change feed returns -0.0 and NaN keys " +
     "as stored") {
     import spark.implicits._
-    val t = Files.createTempDirectory("txnlake_diff_min").resolve("t").toString
-    TxnLake.commit(spark, Seq((-0.0, "a"), (Double.NaN, "b"), (1.0, "c"))
-      .toDF("k", "s").coalesce(1), t, "append")
-    TxnLake.setDeletionVectors(spark, t, enabled = false)
-    val v = TxnLake.deleteWhere(spark, t, col("s") =!= "c").get
-    val keys = TxnLake.tableChanges(spark, t, v - 1, v, "k")
-      .select("k").as[Double].collect()
-      .map(java.lang.Double.doubleToLongBits).toSet
-    assert(keys == Set(-0.0, Double.NaN)
-      .map(java.lang.Double.doubleToLongBits), s"got $keys")
+    val dir = Files.createTempDirectory("txnlake_diff_min")
+    val t = dir.resolve("t").toString
+    try {
+      TxnLake.commit(spark, Seq((-0.0, "a"), (Double.NaN, "b"), (1.0, "c"))
+        .toDF("k", "s").coalesce(1), t, "append")
+      TxnLake.setDeletionVectors(spark, t, enabled = false)
+      val v = TxnLake.deleteWhere(spark, t, col("s") =!= "c").get
+      val keys = TxnLake.tableChanges(spark, t, v - 1, v, "k")
+        .select("k").as[Double].collect()
+        .map(java.lang.Double.doubleToLongBits).toSet
+      assert(keys == Set(-0.0, Double.NaN)
+        .map(java.lang.Double.doubleToLongBits), s"got $keys")
+    } finally deleteTree(dir.toFile)
   }
 
   test("a NULL-keyed row's change surfaces as a delete plus an insert, " +
     "never as an all-NULL insert") {
     import spark.implicits._
-    val t = Files.createTempDirectory("txnlake_diff_min").resolve("t").toString
-    TxnLake.commit(spark, Seq((Option.empty[Long], "a"), (Some(1L), "b"))
-      .toDF("k", "s").coalesce(1), t, "append")
-    TxnLake.setDeletionVectors(spark, t, enabled = false)
-    val v = TxnLake.updateWhere(spark, t, col("s") === "a",
-      Map("s" -> lit("A"))).get
-    val hop = TxnLake.tableChanges(spark, t, v - 1, v, "k")
-      .select("k", "s", "change_type").as[(Option[Long], String, String)]
-      .collect().toSet
-    assert(hop == Set((None, "a", "delete"), (None, "A", "insert")),
-      s"got $hop")
+    val dir = Files.createTempDirectory("txnlake_diff_min")
+    val t = dir.resolve("t").toString
+    try {
+      TxnLake.commit(spark, Seq((Option.empty[Long], "a"), (Some(1L), "b"))
+        .toDF("k", "s").coalesce(1), t, "append")
+      TxnLake.setDeletionVectors(spark, t, enabled = false)
+      val v = TxnLake.updateWhere(spark, t, col("s") === "a",
+        Map("s" -> lit("A"))).get
+      val hop = TxnLake.tableChanges(spark, t, v - 1, v, "k")
+        .select("k", "s", "change_type").as[(Option[Long], String, String)]
+        .collect().toSet
+      assert(hop == Set((None, "a", "delete"), (None, "A", "insert")),
+        s"got $hop")
+    } finally deleteTree(dir.toFile)
   }
 }

@@ -531,6 +531,39 @@ class TxnLakeDvSpec extends SparkSpec {
     assert(rowsOf(capped) == rowsOf(dv))
   }
 
+  test("a DV MERGE whose NOT MATCHED BY SOURCE clause claims more rows " +
+    "than the cap takes copy-on-write and leaves no unreferenced data or " +
+    "sidecar dir") {
+    import spark.implicits._
+    val (dv, capped) = (freshTable(), freshTable())
+    twoFileTable(dv); twoFileTable(capped)
+    def merge(t: String) = TxnLake.mergeIntoClauses(spark,
+      Seq((5L, "S5")).toDF("k", "v"), t, "k",
+      matched = Seq(TxnLake.MergeUpdate(Map("v" -> TxnLake.sourceCol("v")))),
+      notMatchedBySource = Seq(TxnLake.MergeDelete(Some(col("k") >= 90L))))
+    merge(dv)
+    assert(TxnLake.deletionVectors(spark, dv).values.map(_.rows).sum == 11L,
+      "uncapped: 5's old image and the ten rows from 90 are masked")
+    // one source key fits the cap; the eleven claimable rows do not
+    spark.conf.set("graft.probe.maxDriverKeys", "5")
+    try {
+      val preFiles = TxnLake.snapshotFiles(spark, capped).map(_.path).toSet
+      merge(capped)
+      assert(TxnLake.deletionVectors(spark, capped).isEmpty &&
+        (preFiles -- TxnLake.snapshotFiles(spark, capped).map(_.path).toSet)
+          .size == 2, "both files rewrite: the key's and the clause's")
+    } finally spark.conf.unset("graft.probe.maxDriverKeys")
+    assert(rowsOf(capped) == rowsOf(dv))
+    val referenced = (0L to TxnLake.latestVersion(spark, capped).get)
+      .flatMap(v => TxnLake.snapshotFiles(spark, capped, Some(v)))
+      .map(_.path.split("/").take(2).mkString("/")).toSet
+    val dataDirs = new java.io.File(capped, "data").listFiles()
+      .map(d => s"data/${d.getName}").toSet
+    assert(dataDirs == referenced, s"data dirs $dataDirs vs $referenced")
+    assert(!new java.io.File(capped, "_dv").exists() ||
+      new java.io.File(capped, "_dv").list().isEmpty, "no sidecar dir")
+  }
+
   test("the deletionVectors property: on for new tables, off when an " +
     "entry lacks it, flipped by the ALTER, copied by clone, restored by " +
     "restore") {

@@ -43,7 +43,8 @@ import scala.util.chaining._
   *                                app → batch map and the
   *                                `deletionVectors` write mode (Delta's
   *                                `delta.enableDeletionVectors`: true
-  *                                from the founding entry on; absent
+  *                                from the founding entry on unless a
+  *                                founding merge asks for false; absent
   *                                reads false)
   *   <table>/_txn_log/v<N>.ckpt   periodic checkpoint: the fully-resolved
   *                                file list AS OF version N, so readers
@@ -3120,7 +3121,11 @@ object TxnLake extends LakeFormat {
     * columns under the logged read schema; rows the clauses did not
     * assign read NULL; pre-merge versions still time-travel under their
     * own (narrower) logged schema. Off (default), an unknown column is
-    * refused loudly. */
+    * refused loudly.
+    *
+    * `deletionVectors` is the write mode a FOUNDING merge gives the new
+    * table (Delta's `delta.enableDeletionVectors` at CREATE); a merge
+    * into an existing table ignores it. */
   def mergeIntoClauses(spark: SparkSession, source: DataFrame, table: String,
                        key: String,
                        matched: Seq[MergeAction] = Seq.empty,
@@ -3129,10 +3134,12 @@ object TxnLake extends LakeFormat {
                        maxAttempts: Int = 10,
                        txn: Option[(String, Long)] = None,
                        evolveSchema: Boolean = false,
-                       gcTxnPrefixes: Seq[String] = Seq.empty): Option[Long] =
+                       gcTxnPrefixes: Seq[String] = Seq.empty,
+                       deletionVectors: Boolean = true): Option[Long] =
     mergeIntoClausesImpl(spark, source, table, key, matched, notMatched,
       notMatchedBySource, maxAttempts, txn,
-      evolveSchema = evolveSchema, gcTxnPrefixes = gcTxnPrefixes)
+      evolveSchema = evolveSchema, gcTxnPrefixes = gcTxnPrefixes,
+      foundDvMode = deletionVectors)
 
   /** The merge key pass, in an object of its own: Spark's closure
     * cleaner reads the bytecode of the class that defines each RDD
@@ -3251,7 +3258,8 @@ object TxnLake extends LakeFormat {
                                             evolveSchema: Boolean = false,
                                             gcTxnPrefixes: Seq[String] =
                                               Seq.empty,
-                                            uniqueKeys: Boolean = false): Option[Long] = {
+                                            uniqueKeys: Boolean = false,
+                                            foundDvMode: Boolean = true): Option[Long] = {
     import org.apache.spark.sql.functions.{coalesce, col, count, lit, when}
     require(matched.nonEmpty || notMatched.nonEmpty
       || notMatchedBySource.nonEmpty,
@@ -3418,7 +3426,8 @@ object TxnLake extends LakeFormat {
           // whose answer the marker path ignores.
           if (txn.isDefined || !labeled("probe")(ins.isEmpty))
             Some(commitImpl(spark, ins, table, "merge", txn, base,
-              removePaths = Some(Seq.empty), gcTxnPrefixes = gcTxnPrefixes))
+              removePaths = Some(Seq.empty), gcTxnPrefixes = gcTxnPrefixes,
+              setDvMode = Some(foundDvMode)))
           else None
         case Some(b) =>
           val snap = pinned(spark, table, b)

@@ -54,6 +54,13 @@ import graft.sources.TxnLake
   * the diff's keys scope to, so a daily full refresh whose actual
   * delta is small stays cheap on the replica side.
   *
+  * The feed founds its replica COPY-ON-WRITE (deletion vectors off):
+  * nothing compacts a replica, and a merge-on-read hop adds one file
+  * and rewrites the sidecar of every file it masks, so each hop would
+  * scan, mask and log more files than the one before.
+  * [[TxnLake.setDeletionVectors]] turns them on for a replica that is
+  * optimized.
+  *
   * Source SCHEMA EVOLUTION is refused loudly BY DEFAULT, never applied
   * silently (the Delta posture: CDF consumers follow evolution only
   * with autoMerge explicitly on): a hop whose feed carries a column
@@ -241,7 +248,8 @@ final class TxnReplicaFeed(source: String, replica: String, appId: String,
           Some(col("__op") =!= "D"))),
         txn = Some(txn),
         evolveSchema = followSchema,
-        gcTxnPrefixes = gcTxnPrefixes).nonEmpty
+        gcTxnPrefixes = gcTxnPrefixes,
+        deletionVectors = false).nonEmpty
     }
   }
 }

@@ -46,6 +46,34 @@ class TxnReplicaFeedSpec extends SparkSpec {
     assert(new TxnReplicaFeed(src, rep, "repl", "k").poll(spark) == 0)
   }
 
+  test("the feed founds its replica copy-on-write: update hops mask " +
+    "nothing and the replica's file count stays flat") {
+    import spark.implicits._
+    val (src, rep) = fresh()
+    TxnLake.commit(spark,
+      (0L until 100L).map(i => (i, s"v$i")).toDF("k", "v").coalesce(1),
+      src, "append")
+    val feed = new TxnReplicaFeed(src, rep, "repl", "k")
+    assert(feed.poll(spark) == 1)
+    val filesPre = TxnLake.snapshotFiles(spark, rep).size
+    (0 until 4).foreach { i =>
+      TxnLake.mergeInto(spark, Seq((i * 10L, s"u$i")).toDF("k", "v"),
+        src, "k")
+      assert(feed.poll(spark) == 1)
+    }
+    assert(TxnLake.deletionVectors(spark, src).nonEmpty,
+      "fixture: the source merges on read")
+    assert(TxnLake.deletionVectors(spark, rep).isEmpty)
+    assert(TxnLake.snapshotFiles(spark, rep).size == filesPre)
+    assert(rows(rep) == rows(src))
+    // the ALTER still turns the replica's own merges on read
+    TxnLake.setDeletionVectors(spark, rep, enabled = true)
+    TxnLake.mergeInto(spark, Seq((1L, "w")).toDF("k", "v"), src, "k")
+    assert(feed.poll(spark) == 1)
+    assert(TxnLake.deletionVectors(spark, rep).nonEmpty)
+    assert(rows(rep) == rows(src))
+  }
+
   test("maintenance hops advance the marker with an empty merge — " +
     "replica data untouched") {
     import spark.implicits._
@@ -84,8 +112,6 @@ class TxnReplicaFeedSpec extends SparkSpec {
     }
     val feed = new TxnReplicaFeed(src, rep, "repl", "k")
     assert(feed.poll(spark) == 4)
-    // the carry-verbatim assertion below is about copy-on-write layout
-    TxnLake.setDeletionVectors(spark, rep, enabled = false)
     val repPre = TxnLake.latestVersion(spark, rep).get
     val repFilesPre = TxnLake.snapshotFiles(spark, rep).map(_.path).toSet
     // the reference-shaped daily job: recompute EVERYTHING, overwrite —
